@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON metric line. The JSON is printed to stdout AND written to
@@ -14,35 +13,21 @@ import org.apache.spark.sql.SparkSession
   * the standard stable point estimate for a cold-cache-free machine.
   * `value` is the sum of the per-query minima; the raw per-pass totals ride
   * along in `pass_totals` so a single-pass figure stays reconstructable.
+  * Single-query timing: `SPARK_GRAFT_BENCH_ONLY=<q> SPARK_GRAFT_BENCH_PASSES=<n>`
+  * — `pass_totals` then holds that query's time in each pass.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_BENCH_COLD=1 (r21 verdict tasks 1a/2): one pass, both
-    // cache layers off (ModelCache stays unset, which also disables
-    // StageCache) — every query computes its declared result from the
-    // parquet inputs with nothing amortized, the number a core-count
-    // scaling comparison can trust. Default mode is unchanged
-    // (min-of-3, caches on) so round-over-round comparisons stay
-    // apples-to-apples; per-query PASS-1 times additionally land in
-    // bench_result.json ("queries_pass1") every run so cold-to-cold can
-    // be compared without a separate invocation.
+    // SPARK_GRAFT_BENCH_COLD=1: one pass — every query computes its
+    // declared result from the parquet inputs with nothing amortized,
+    // the number a core-count scaling comparison can trust. Per-query
+    // PASS-1 times also land in bench_result.json ("queries_pass1")
+    // every run, so cold-to-cold compares need no separate invocation.
     val cold = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
     val passes =
       if (cold) 1 else sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // persist one-time tuning/training artifacts across bench JVMs, keyed
-    // on the corpus files' fingerprint (graft.operators.ModelCache) — a
-    // fresh process's pass 1 then costs near a warm pass
-    if (!cold) graft.operators.ModelCache.enableDefaultIfUnset()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warmup: spin up executors + codegen + parquet footer reads once,
     // including the events nanos conversion path (the previously-slowest
     // "query" was really this warmup cost).
@@ -121,10 +106,9 @@ object Bench {
       if (failed.contains(k)) "\"" + k + "\":\"err\"" else "\"" + k + "\":" + v
     }.mkString("{", ",", "}")
     // per-query PASS-1 (cold within this JVM) times, full precision —
-    // the r21 verdict's measurement-honesty ask: StageCache/ModelCache
-    // population costs land in pass 1, so this map is the number that
-    // includes every query's own stage builds; the min-of-n map above
-    // is the steady-state number. Both ride bench_result.json.
+    // pass 1 pays every in-JVM memo build (model training, tuning,
+    // sketches), so this map includes them; the min-of-n map above is
+    // the steady-state number. Both ride bench_result.json.
     val pass1 = names.indices.map { i =>
       val (t, ok) = times.head(i)
       if (ok) "\"" + names(i) + "\":" + t

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase profiler for the per-query fixed floor (r21 verdict task 5):
   * splits one query invocation into (build, plan, execute) wall times —
   * build = the query function call (DataFrame construction incl. any
@@ -17,16 +15,7 @@ object ProfileOne {
     val passes = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    graft.operators.ModelCache.enableDefaultIfUnset()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // per-job timing (set SPARK_GRAFT_PROFILE_JOBS=1): job id, duration,
     // #tasks, callsite — attributes a query's wall time to its jobs
     if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")) {

@@ -290,10 +290,6 @@ object AnnTuning {
   private val lshMemo = new java.util.concurrent.ConcurrentHashMap[String, LazyMemo[Tuned[LshConfig]]]()
   private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[String, LazyMemo[Tuned[IvfConfig]]]()
 
-  private def memoized[T](
-      map: java.util.concurrent.ConcurrentHashMap[String, LazyMemo[T]],
-      key: String)(thunk: => T): T = LazyMemo.memoized(map, key)(thunk)
-
   /** Tuned LSH config for a corpus, memoized on `key` (e.g. the sf dir):
     * deterministic sample → per-config stats → choose. maxSample=500
     * bounds tuning to ~125k sampled pairs per config regardless of corpus
@@ -303,19 +299,15 @@ object AnnTuning {
                recallTarget: Double = 0.9, budgetFraction: Double = 0.25,
                maxSample: Int = 500,
                ladder: Seq[LshConfig] = LshLadder): Tuned[LshConfig] =
-    memoized(lshMemo, s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}") {
-      ModelCache.cached("lsh",
-          s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}", e)(
-          ModelStore.loadLsh(spark, _))(ModelStore.saveLsh(spark, _, _)) {
-        val n = e.count()
-        val stats = lshStats(spark, sampleVectors(e, maxSample), ladder)
-        val picked = choose(stats, recallTarget, budgetFraction)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"[graft] tuned LSH for $key (n=$n): $picked from " +
-            stats.map(s => f"${s.config}->(frac=${s.candidateFraction}%.3f,rec=${s.estRecall}%.2f)")
-              .mkString(", "))
-        Tuned(picked, n)
-      }
+    LazyMemo.memoized(lshMemo, s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}") {
+      val n = e.count()
+      val stats = lshStats(spark, sampleVectors(e, maxSample), ladder)
+      val picked = choose(stats, recallTarget, budgetFraction)
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"[graft] tuned LSH for $key (n=$n): $picked from " +
+          stats.map(s => f"${s.config}->(frac=${s.candidateFraction}%.3f,rec=${s.estRecall}%.2f)")
+            .mkString(", "))
+      Tuned(picked, n)
     }
 
   /** Tuned IVF config for a corpus, memoized on `key`. */
@@ -323,19 +315,15 @@ object AnnTuning {
                recallTarget: Double = 0.65, budgetFraction: Double = 0.25,
                maxSample: Int = 500,
                ladder: Seq[IvfConfig] = IvfLadder): Tuned[IvfConfig] =
-    memoized(ivfMemo, s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}") {
-      ModelCache.cached("ivf",
-          s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}", e)(
-          ModelStore.loadIvf(spark, _))(ModelStore.saveIvf(spark, _, _)) {
-        val n = e.count()
-        val stats = ivfStats(spark, e, sampleVectors(e, maxSample), ladder)
-        val picked = choose(stats, recallTarget, budgetFraction)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"[graft] tuned IVF for $key (n=$n): $picked from " +
-            stats.map(s => f"${s.config}->(frac=${s.candidateFraction}%.3f,rec=${s.estRecall}%.2f)")
-              .mkString(", "))
-        Tuned(picked, n)
-      }
+    LazyMemo.memoized(ivfMemo, s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}") {
+      val n = e.count()
+      val stats = ivfStats(spark, e, sampleVectors(e, maxSample), ladder)
+      val picked = choose(stats, recallTarget, budgetFraction)
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"[graft] tuned IVF for $key (n=$n): $picked from " +
+          stats.map(s => f"${s.config}->(frac=${s.candidateFraction}%.3f,rec=${s.estRecall}%.2f)")
+            .mkString(", "))
+      Tuned(picked, n)
     }
 
   /** Seed the LSH memo with a persisted decision ([[ModelStore.loadLsh]])

@@ -151,22 +151,6 @@ object BpeTrain {
     cur
   }
 
-  /** Merge-table (de)serialization for the ModelCache disk layer —
-    * tab/newline framed (the declared query's symbols are alnum; a
-    * generic caller persisting exotic symbols should bring its own
-    * codec).
-    */
-  def toBytes(ms: Seq[Merge]): Array[Byte] =
-    ms.map(m => s"${m.rank}\t${m.left}\t${m.right}\t${m.count}")
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  def fromBytes(b: Array[Byte]): Seq[Merge] =
-    new String(b, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").iterator.filter(_.nonEmpty).map { line =>
-        val Array(r, le, ri, c) = line.split("\t", 4)
-        Merge(r.toInt, le, ri, c.toLong)
-      }.toSeq
-
   /** Release a round's checkpointed blocks eagerly (the loop holds only
     * the newest table; ConnectedComponents' block-freeing discipline).
     */

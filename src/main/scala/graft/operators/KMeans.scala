@@ -75,16 +75,8 @@ object KMeans {
     * after the first should pay ZERO training jobs (PqIndex's contract;
     * same putIfAbsent-lazy-holder lock discipline).
     */
-  def fitMemoized(key: String, vectors: DataFrame, k: Int, iters: Int): Model = {
-    // disk-backed second level (Bench/Verify only — see ModelCache):
-    // centroids+wcss persist; assignments re-derive lazily for THESE
-    // vectors with zero training actions
-    LazyMemo.memoized(memo, s"$key|$k|$iters")(
-      ModelCache.cached("kmeans", s"$key|$k|$iters",
-        vectors)(ModelStore.loadKMeans(vectors.sparkSession, _, vectors))(
-        ModelStore.saveKMeans(vectors.sparkSession, _, _))(
-        fit(vectors, k, iters)))
-  }
+  def fitMemoized(key: String, vectors: DataFrame, k: Int, iters: Int): Model =
+    LazyMemo.memoized(memo, s"$key|$k|$iters")(fit(vectors, k, iters))
 
   /** Test seam: force retrains (a memo hit would make determinism pins
     * vacuous) — PqIndex.clearMemo's twin.

@@ -1,18 +1,18 @@
 package graft.operators
 
 /** The one lazy-holder memo shared by every model trainer (KMeans,
-  * PqIndex, AnnTuning — previously three verbatim copies, r18 review):
+  * PqIndex, AnnTuning) and the per-corpus memos of the declared queries:
   * `putIfAbsent` publishes the HOLDER, and the `lazy val` runs the thunk
   * under the holder's own initialization lock, so concurrent callers of
   * the same key share exactly one training run (the round-4 fix — a
   * plain computeIfAbsent would hold the map's bin lock across a
   * multi-second Spark training action).
   */
-private[operators] final class LazyMemo[T](thunk: () => T) {
+private[graft] final class LazyMemo[T](thunk: () => T) {
   lazy val value: T = thunk()
 }
 
-private[operators] object LazyMemo {
+private[graft] object LazyMemo {
   /** Memoize `thunk` under `key` in `map` — one evaluation per key,
     * concurrent duplicate holders discarded unevaluated. */
   def memoized[T](

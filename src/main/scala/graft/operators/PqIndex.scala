@@ -27,14 +27,8 @@ object PqIndex {
     * (e.g. the sf dir or a test tag) — deterministic inputs make the
     * memoized model equal to a fresh retrain.
     */
-  def train(key: String, nv: DataFrame, m: Int, k: Int, iters: Int): Model = {
-    // disk-backed second level (Bench/Verify only — see ModelCache)
-    LazyMemo.memoized(memo, s"$key|$m|$k|$iters")(
-      ModelCache.cached("pq", s"$key|$m|$k|$iters",
-        nv)(ModelStore.loadPq(nv.sparkSession, _))(
-        ModelStore.savePq(nv.sparkSession, _, _))(
-        doTrain(nv, m, k, iters)))
-  }
+  def train(key: String, nv: DataFrame, m: Int, k: Int, iters: Int): Model =
+    LazyMemo.memoized(memo, s"$key|$m|$k|$iters")(doTrain(nv, m, k, iters))
 
   /** Test seam: drop every memoized model (e.g. to pin that a RETRAIN is
     * deterministic, which a memo hit would vacuously pass) — the same

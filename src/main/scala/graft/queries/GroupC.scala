@@ -56,7 +56,7 @@ object GroupC {
   def shingles(spark: SparkSession, sfDir: String): DataFrame =
     // r22: a Tables.fanned repartition was A/B'd here and REVERTED —
     // the kernel is cheap enough that the extra exchange + 32-task
-    // scheduling cost more than the serial explode saves (BenchOne
+    // scheduling cost more than the serial explode saves (single-query
     // min-of-5 at c32: d30 2.40 bare vs 5.21 fanned; the win sites are
     // the heavy regex chains, see d100/csvRoundTrip)
     shinglesOf(Tables(spark, sfDir, "documents"))
@@ -1557,20 +1557,16 @@ object GroupC {
   /** The sitemap-DISCOVERED frame (domain, norm_url): locs walked,
     * canonicalized, deduped, anti-joined against the corpus's canonical
     * URLs — the frontier contribution d98 unions with d95's outlink
-    * source. StageCache-persisted per corpus (d95Frontier's policy) so
-    * the declared census and the union compose share ONE
-    * materialization. */
+    * source. */
   private[queries] def c17Fresh(spark: SparkSession,
                                 sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#c17_fresh") {
-      c17Hosts(spark, sfDir)
-        .select(col("domain"), explode(col("locs")).as("loc"))
-        .select(col("domain"), urlNormalize(col("loc")).as("norm_url"))
-        .filter(col("norm_url").isNotNull)
-        .distinct()
-        .join(c17Corpus(spark, sfDir).select("norm_url"),
-          Seq("norm_url"), "left_anti")
-    }
+    c17Hosts(spark, sfDir)
+      .select(col("domain"), explode(col("locs")).as("loc"))
+      .select(col("domain"), urlNormalize(col("loc")).as("norm_url"))
+      .filter(col("norm_url").isNotNull)
+      .distinct()
+      .join(c17Corpus(spark, sfDir).select("norm_url"),
+        Seq("norm_url"), "left_anti")
 
   def c17SitemapDiscover(spark: SparkSession, sfDir: String): DataFrame = {
     val fresh = c17Fresh(spark, sfDir)

@@ -1,8 +1,12 @@
 package graft.queries
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.operators.LazyMemo
 
 /** Group D — scale-path extensions of the Group C LLM-pipeline surface:
   * the sketch/bucketed formulations a 100 TB corpus needs where Group C's
@@ -57,17 +61,11 @@ object GroupD {
         expr("transform(sequence(0, size(ts) - 3), " +
           "i -> xxhash64(concat_ws(' ', ts[i], ts[i+1], ts[i+2])))")).as("sh"))
 
-  def d1Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    // the verified near-dup pair list is the hub frame of the whole
-    // cluster family — d1 reports it, d14/d31 label components over it,
-    // d46 keeps best per component — so under the drivers'
-    // [[graft.operators.StageCache]] policy it persists once per corpus
-    // (specs keep exercising the raw plan; the cache is value-identical
-    // by the no-RNG discipline)
-    graft.operators.StageCache.persisted(s"$sfDir#d1_pairs")(
-      d1PairsRaw(spark, sfDir))
-
-  private def d1PairsRaw(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The verified near-dup pair list — the hub frame of the whole
+    * cluster family: d1 reports it, d14/d31 label components over it,
+    * d46 keeps best per component.
+    */
+  def d1Pairs(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val arrs = shingleArrays(spark, sfDir)
     val sigs = arrs.select(col("doc_id"),
@@ -619,22 +617,15 @@ object GroupD {
     * query feeds it d1's verified pair graph and attaches component sizes.
     */
   def d14DedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // the labeled-cluster frame is itself a shared stage (d46 keeps best
-    // per cluster over exactly this output), and the labeling is an
-    // ITERATIVE propagation — the most re-derivation-hostile shape there
-    // is — so it rides the StageCache policy like d1Pairs above
-    val clustered = graft.operators.StageCache.persisted(
-        s"$sfDir#d14_clusters") {
-      val pairs = d1Pairs(spark, sfDir).select("doc_a", "doc_b")
-      val labels = graft.operators.ConnectedComponents
-        .label(pairs, src = "doc_a", dst = "doc_b")
-      val sizes = labels.groupBy("component")
-        .agg(count(lit(1)).as("cluster_size"))
-      labels.join(sizes, "component")
-        .select(col("id").as("doc_id"), col("component").as("cluster_id"),
-          col("cluster_size"))
-    }
-    clustered.orderBy("doc_id")
+    val pairs = d1Pairs(spark, sfDir).select("doc_a", "doc_b")
+    val labels = graft.operators.ConnectedComponents
+      .label(pairs, src = "doc_a", dst = "doc_b")
+    val sizes = labels.groupBy("component")
+      .agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, "component")
+      .select(col("id").as("doc_id"), col("component").as("cluster_id"),
+        col("cluster_size"))
+      .orderBy("doc_id")
   }
 
   /** d15: deterministic stratified train/val/test split — the 80/10/10
@@ -1092,17 +1083,12 @@ object GroupD {
       : (DataFrame, graft.operators.KMeans.Model) = {
     val emb = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     // the sizing count is memoized with the model (review finding: a
-    // memo-hit serving pass must not pay a corpus scan just to derive k);
-    // lazy-holder publication so the count job never runs inside a CHM
-    // bin lock (AnnTuning's round-4 discipline)
-    val fresh = new Memo(() => emb.count())
-    val prior = corpusNMemo.putIfAbsent(sfDir, fresh)
-    val n = (if (prior != null) prior else fresh).value
+    // memo-hit serving pass must not pay a corpus scan just to derive k)
+    val n = LazyMemo.memoized(corpusNMemo, sfDir)(emb.count())
     val k = math.max(8, math.min(4096, (n / 64).toInt))
     (emb, graft.operators.KMeans.fitMemoized(s"kmeans|$sfDir|$k", emb, k, iters = 3))
   }
-  private val corpusNMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Memo[Long]]()
+  private val corpusNMemo = new ConcurrentHashMap[String, LazyMemo[Long]]()
 
   def d27KMeans(spark: SparkSession, sfDir: String): DataFrame = {
     val (emb, model) = corpusKMeans(spark, sfDir)
@@ -1244,17 +1230,11 @@ object GroupD {
     */
   /** d22's stage frames (gate survivors, post-dedup kept, post-quota
     * capped) — shared by the declared pipeline query and d56's funnel.
-    * Under the drivers' [[graft.operators.StageCache]] policy each stage
-    * is persisted once per corpus and every later consumer (d22's own
-    * second reference to gate, d56's six counts, repeated bench passes)
-    * reads the materialization — the round-12 verdict's "long-lived-
-    * cluster persist policy" closing the measured d22+d56 recompute pair;
-    * without the policy (specs) the frames stay raw declarative plans
-    * and the AQE exchange-reuse pin keeps covering the runtime sharing.
+    * The frames are declarative plans; the AQE exchange-reuse pin covers
+    * the runtime sharing of d22's second reference to gate.
     */
   private def pipelineStages(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.operators.StageCache
     val docs = Tables(spark, sfDir, "documents")
     // The tiny groupBy is an OPTIMIZER BARRIER, not an aggregation need
     // (doc_id is unique): a filter on `repetitive` written directly over
@@ -1264,36 +1244,30 @@ object GroupD {
     // stage at sf0.1 vs ~1 s with the barrier. Predicates cannot push
     // through an aggregate, so the HOFs evaluate once per doc and the
     // barrier's shuffle carries one (id, bool) row per doc.
-    val gate = StageCache.persisted(s"$sfDir#d22_gate") {
-      d18Repetition(spark, sfDir)
-        .groupBy("doc_id").agg(first("repetitive").as("repetitive"))
-        .filter(!col("repetitive"))
-        .select("doc_id")
-    }
-    val kept = StageCache.persisted(s"$sfDir#d22_kept") {
-      // "gate before dedup" is enforced by restricting the pair graph to
-      // gated endpoints BEFORE labeling: a pair's Jaccard doesn't depend
-      // on other documents, so pairs-among-survivors ≡ rerunning d1 on
-      // the gated corpus. Without this, a cluster whose min-id canonical
-      // is repetitive would lose every member (the canonical to the gate,
-      // the rest to dupDrops) instead of keeping its best clean member.
-      val gatedPairs = d1Pairs(spark, sfDir).select("doc_a", "doc_b")
-        .join(gate.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .join(gate.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-      val labels = graft.operators.ConnectedComponents
-        .label(gatedPairs, src = "doc_a", dst = "doc_b")
-      val dupDrops = labels.filter(col("component") =!= col("id"))
-        .select(col("id").as("doc_id"))
-      docs.join(gate, "doc_id")
-        .join(dupDrops, Seq("doc_id"), "left_anti")
-    }
+    val gate = d18Repetition(spark, sfDir)
+      .groupBy("doc_id").agg(first("repetitive").as("repetitive"))
+      .filter(!col("repetitive"))
+      .select("doc_id")
+    // "gate before dedup" is enforced by restricting the pair graph to
+    // gated endpoints BEFORE labeling: a pair's Jaccard doesn't depend
+    // on other documents, so pairs-among-survivors ≡ rerunning d1 on
+    // the gated corpus. Without this, a cluster whose min-id canonical
+    // is repetitive would lose every member (the canonical to the gate,
+    // the rest to dupDrops) instead of keeping its best clean member.
+    val gatedPairs = d1Pairs(spark, sfDir).select("doc_a", "doc_b")
+      .join(gate.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+      .join(gate.withColumnRenamed("doc_id", "doc_b"), "doc_b")
+    val labels = graft.operators.ConnectedComponents
+      .label(gatedPairs, src = "doc_a", dst = "doc_b")
+    val dupDrops = labels.filter(col("component") =!= col("id"))
+      .select(col("id").as("doc_id"))
+    val kept = docs.join(gate, "doc_id")
+      .join(dupDrops, Seq("doc_id"), "left_anti")
     val wQuota = Window.partitionBy("lang", "source")
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    val capped = StageCache.persisted(s"$sfDir#d22_capped") {
-      kept
-        .withColumn("rk", row_number().over(wQuota))
-        .filter(col("rk") <= 5)
-    }
+    val capped = kept
+      .withColumn("rk", row_number().over(wQuota))
+      .filter(col("rk") <= 5)
     (gate, kept, capped)
   }
 
@@ -1349,13 +1323,9 @@ object GroupD {
     */
   def d31DedupClustersStar(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = d1Pairs(spark, sfDir).select("doc_a", "doc_b")
-    // r22 (r21 verdict task 1): the r21 StageCache entry here was
-    // SINGLE-consumer — d31 is its only reader, so the cache shared
-    // nothing across queries and only memoised d31's own near-final
-    // labels across bench passes (measurement, not speed). Dropped; the
-    // labels frame is localCheckpoint-backed per execution inside
-    // labelByStars, so the double reference below (sizes + join) still
-    // computes the contraction exactly once per run.
+    // the labels frame is localCheckpoint-backed per execution inside
+    // labelByStars, so the double reference below (sizes + join)
+    // computes the contraction exactly once per run
     val labels = graft.operators.ConnectedComponents
       .labelByStars(pairs, src = "doc_a", dst = "doc_b")
     val sizes = labels.groupBy("component").agg(count(lit(1)).as("cluster_size"))
@@ -1506,7 +1476,7 @@ object GroupD {
     * touches full floats only for the top-C shortlist. Both models are
     * REUSED from the corpus's standing artifacts (the tuned IVF
     * (stride, probes) under `ivf|…`, the PQ codebooks under `pq|…` —
-    * AnnTuning/PqIndex memo + ModelCache), so composing them trains
+    * AnnTuning/PqIndex memos), so composing them trains
     * NOTHING new: the same lifecycle story as d54, at query time.
     *
     * Scale shape: stage 1 is candidate-bounded (probes/⌈n/stride⌉ of the
@@ -1998,14 +1968,8 @@ object GroupD {
     graft.functions.GraftFunctions.register(spark)
     val occ = bigramOccurrences(Tables(spark, sfDir, "documents"))
       .withColumn("h", xxhash64(col("lang"), col("w1"), col("w2")))
-    // disk-backed second level under the memo (Bench/Verify only):
-    // sketch bytes persist via ModelStore, keyed on the documents files
-    val bytes = cmsBytes(s"cms|$sfDir")(
-      graft.operators.ModelCache.cached("cms", s"cms|$sfDir",
-          Tables(spark, sfDir, "documents"))(
-          graft.operators.ModelStore.loadSketch(spark, _))(
-          graft.operators.ModelStore.saveSketch(spark, _, _))(
-        graft.functions.CmsCount.serialized(occ.select("h"), "h")))
+    val bytes = LazyMemo.memoized(cmsMemo, s"cms|$sfDir")(
+      graft.functions.CmsCount.serialized(occ.select("h"), "h"))
     occ
       .withColumn("est", call_function(
         graft.functions.GraftFunctions.CmsCountName, lit(bytes), col("h")))
@@ -2016,17 +1980,7 @@ object GroupD {
       .orderBy("doc_id")
   }
 
-  private final class Memo[T](thunk: () => T) { lazy val value: T = thunk() }
-  private val cmsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Memo[Array[Byte]]]()
-  /** One sketch build per corpus key (the putIfAbsent-lazy-holder lock
-    * discipline shared with AnnTuning/PqIndex/KMeans).
-    */
-  private def cmsBytes(key: String)(build: => Array[Byte]): Array[Byte] = {
-    val fresh = new Memo(() => build)
-    val prior = cmsMemo.putIfAbsent(key, fresh)
-    (if (prior != null) prior else fresh).value
-  }
+  private val cmsMemo = new ConcurrentHashMap[String, LazyMemo[Array[Byte]]]()
 
   /** d42: robust outlier flagging — the data-quality pass that catches
     * truncated fragments and runaway concatenations by LENGTH, per
@@ -2371,11 +2325,9 @@ object GroupD {
   def d44ContaminationReport(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables(spark, sfDir, "documents")
     val sh = GroupC.shingles(spark, sfDir)
-    val fresh = new Memo(() =>
+    val benchRows = LazyMemo.memoized(corpusNMemo, s"d44bench|$sfDir")(
       sh.join(docs.filter(col("source") === "src0").select("doc_id"), "doc_id")
         .count())
-    val prior = corpusNMemo.putIfAbsent(s"d44bench|$sfDir", fresh)
-    val benchRows = (if (prior != null) prior else fresh).value
     contaminationReportOf(docs, sh,
       useBloom = benchRows > d44BroadcastRowCap(spark))
   }
@@ -2846,7 +2798,7 @@ object GroupD {
     * on synthetic shifted batches.
     *
     * Scale shape: the model is the standing asset (zero training actions
-    * on a memo hit; ModelStore persists it across JVMs); assignment is
+    * on a memo hit); assignment is
     * one broadcast-centroid scan per side; p95 is a model-sized stat
     * action (d36's discipline); everything after the per-cluster
     * aggregates is k-sized report arithmetic.
@@ -2855,9 +2807,7 @@ object GroupD {
     val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
     val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
-    val fresh = new Memo(() => ref.count())
-    val prior = corpusNMemo.putIfAbsent(s"drift|$sfDir", fresh)
-    val n = (if (prior != null) prior else fresh).value
+    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
     val k = math.max(8, math.min(4096, (n / 64).toInt))
     val model = graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3)
     embeddingDriftOf(ref, delta, model.centroids)
@@ -2910,9 +2860,7 @@ object GroupD {
     val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
     val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
-    val fresh = new Memo(() => ref.count())
-    val prior = corpusNMemo.putIfAbsent(s"drift|$sfDir", fresh)
-    val n = (if (prior != null) prior else fresh).value
+    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
     val k = math.max(8, math.min(4096, (n / 64).toInt))
     val model = graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3)
     maintainOf(spark, ref, delta, model.centroids)
@@ -2979,13 +2927,11 @@ object GroupD {
     val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
     val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
-    val freshN = new Memo(() => ref.count())
-    val priorN = corpusNMemo.putIfAbsent(s"drift|$sfDir", freshN)
-    val n = (if (priorN != null) priorN else freshN).value
+    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
     val k = math.max(8, math.min(4096, (n / 64).toInt))
     val standing =
       graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3)
-    val fresh = new Memo(() => {
+    val (dir, children) = LazyMemo.memoized(maintainedMemo, s"maint|$sfDir") {
       val report = embeddingDriftOf(ref, delta, standing.centroids).collect()
       val res = graft.operators.CellMaintenance.splitCells(
         e, standing.centroids, flaggedCells(report).toSeq)
@@ -2993,9 +2939,7 @@ object GroupD {
       graft.operators.ModelStore.saveKMeans(spark, dir,
         graft.operators.CellMaintenance.toModel(e, res))
       (dir, res.children)
-    })
-    val prior = maintainedMemo.putIfAbsent(s"maint|$sfDir", fresh)
-    val (dir, children) = (if (prior != null) prior else fresh).value
+    }
     val loaded = graft.operators.ModelStore.loadKMeans(spark, dir, e)
     val roleRows = loaded.centroids.indices.map { c =>
       if (children.contains(c)) (c, "split_a", c)
@@ -3012,8 +2956,8 @@ object GroupD {
         col("parent").cast("int").as("parent"))
       .orderBy("cluster")
   }
-  private val maintainedMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Memo[(String, Map[Int, (Int, Int)])]]()
+  private val maintainedMemo =
+    new ConcurrentHashMap[String, LazyMemo[(String, Map[Int, (Int, Int)])]]()
 
   /** d55: dataset snapshot diff — the versioning audit run between two
     * corpus releases before retraining: which documents were ADDED,
@@ -3101,16 +3045,7 @@ object GroupD {
     * inner join on refV), as are sub-2-token docs (no bigrams).
     */
   def d58LmScore(spark: SparkSession, sfDir: String): DataFrame =
-    lmScoredOf(spark, sfDir).orderBy("doc_id")
-
-  /** The corpus's scored frame under the StageCache policy — d58 and d61
-    * share ONE materialization per corpus (the round-12 verdict's d61
-    * score-frame-reuse item); raw plan when the policy is off.
-    */
-  private def lmScoredOf(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d58_scored") {
-      lmScored(Tables(spark, sfDir, "documents"))
-    }
+    lmScore(Tables(spark, sfDir, "documents"))
 
   /** d58's body on an arbitrary (doc_id, text, lang, source) frame —
     * reusable in specs (hand-computed mini-corpora pin the arithmetic).
@@ -3164,7 +3099,8 @@ object GroupD {
       size(GroupC.tokens(col("text"))).cast("long").as("n_tokens"))
     val w = Window.partitionBy("lang")
       .orderBy(col("lm_score_fp").desc, col("doc_id"))
-    lmScoredOf(spark, sfDir).select("doc_id", "lang", "lm_score_fp")
+    lmScored(Tables(spark, sfDir, "documents"))
+      .select("doc_id", "lang", "lm_score_fp")
       .join(toks, "doc_id")
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("cum_before",
@@ -3570,12 +3506,7 @@ object GroupD {
     * normalization) would fold into the same cuts array scan-side.
     */
   def d74CdcChunks(spark: SparkSession, sfDir: String): DataFrame =
-    // the chunk table is the shared hub of the CDC family (d75 consumes
-    // it for cross-doc dedup accounting) and its 5M-window hash pass is
-    // the cost — one materialization per corpus under the StageCache
-    // policy (d1Pairs' rule; specs exercise the raw plan)
-    graft.operators.StageCache.persisted(s"$sfDir#d74_chunks")(
-      cdcChunksOf(Tables(spark, sfDir, "documents")))
+    cdcChunksOf(Tables(spark, sfDir, "documents"))
 
   /** d74's body on an arbitrary (doc_id, text) frame — reusable in specs
     * (tiling and edit-stability want hand-built corpora).
@@ -3692,7 +3623,7 @@ object GroupD {
     * reconstructed text through the compare.
     *
     * Scale shape: chunk pieces re-derive by substring against the
-    * doc-keyed text join (no second window pass — d74's cached frame
+    * doc-keyed text join (no second window pass — d74's chunk frame
     * carries offsets); the only text shuffle is the per-doc piece
     * collect, doc-bounded by construction, and the reassembly is one
     * array_sort over ≤ chunks-per-doc structs. Shared-key build side is
@@ -3812,24 +3743,14 @@ object GroupD {
 
   /** d78's construct→decode stage: one (doc_id, dhash) row per parseable
     * image — split out so specs/tools can probe the decode separately
-    * from the banding join.
+    * from the banding join. It ends in a lazy checkpoint: its consumers
+    * (the d78 pair build, d83's incremental probe/standing split, d90's
+    * decode census) read the materialized (doc_id, 8-byte dhash) rows,
+    * and the checkpoint leaf supersedes the second repartition
+    * barrier's anti-inline job for them (the barrier stays for the plan
+    * shape).
     */
-  /** r21: the hashed frame is itself a StageCache entry behind a lazy
-    * checkpoint — three declared consumers derive from it (the d78_pairs
-    * hub build, d83's incremental probe/standing split, d90's decode
-    * census), and without the entry each of them re-ran the
-    * construct+decode per bench pass (the pairs hub caches PAIRS, not
-    * the decode stage). The materialized rows are (doc_id, 8-byte
-    * dhash); the checkpoint leaf also supersedes the second repartition
-    * barrier's anti-inline job for consumers (the barrier stays for the
-    * raw/spec plan shape).
-    */
-  def d78Hashed(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d78_hashed") {
-      d78HashedRaw(spark, sfDir).localCheckpoint(false)
-    }
-
-  private def d78HashedRaw(spark: SparkSession, sfDir: String): DataFrame = {
+  def d78Hashed(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables(spark, sfDir, "documents")
       .select(col("doc_id"), expr(bmpBitsExpr).as("bits"))
@@ -3857,6 +3778,7 @@ object GroupD {
       // dhash) rows here means construct+decode runs once per doc, and
       // the self-join's two sides REUSE this one exchange.
       .repartition(col("doc_id"))
+      .localCheckpoint(false)
   }
 
   /** d79: IMAGE RESIZE — the real pixel transform the multimodal
@@ -3924,14 +3846,9 @@ object GroupD {
 
   /** d78's verified pair list without the presentation sort — the hub
     * frame d80's component labeling consumes (d1Pairs/d14's shape at the
-    * image modality); StageCache'd so the construct+decode+band pass
-    * pays once per corpus.
+    * image modality).
     */
-  def d78Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d78_pairs")(
-      d78PairsRaw(spark, sfDir))
-
-  private def d78PairsRaw(spark: SparkSession, sfDir: String): DataFrame = {
+  def d78Pairs(spark: SparkSession, sfDir: String): DataFrame = {
     val hashed = d78Hashed(spark, sfDir)
     val bands = hashed.select(col("doc_id"), col("dhash"),
       posexplode(expr(
@@ -3963,10 +3880,7 @@ object GroupD {
     * text has it (pairs → clusters → keep/remove decisions): connected
     * components over d78's verified pair list, labeled by the iterative
     * [[graft.operators.ConnectedComponents]] propagation (min-id label,
-    * delta-bounded rounds), with per-cluster sizes attached. Both the
-    * pair hub and the labeled frame ride the StageCache policy
-    * (iterative propagation is the most re-derivation-hostile shape
-    * there is — d14's argument verbatim).
+    * delta-bounded rounds), with per-cluster sizes attached.
     *
     * Scale shape: inherited — pair volume is band-collision-bounded
     * (d78), propagation shuffles only (id, label) pairs per round with
@@ -3974,18 +3888,15 @@ object GroupD {
     * the component key.
     */
   def d80ImageClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    val clustered = graft.operators.StageCache.persisted(
-        s"$sfDir#d80_clusters") {
-      val pairs = d78Pairs(spark, sfDir).select("doc_a", "doc_b")
-      val labels = graft.operators.ConnectedComponents
-        .label(pairs, src = "doc_a", dst = "doc_b")
-      val sizes = labels.groupBy("component")
-        .agg(count(lit(1)).as("cluster_size"))
-      labels.join(sizes, "component")
-        .select(col("id").as("doc_id"), col("component").as("cluster_id"),
-          col("cluster_size"))
-    }
-    clustered.orderBy("doc_id")
+    val pairs = d78Pairs(spark, sfDir).select("doc_a", "doc_b")
+    val labels = graft.operators.ConnectedComponents
+      .label(pairs, src = "doc_a", dst = "doc_b")
+    val sizes = labels.groupBy("component")
+      .agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, "component")
+      .select(col("id").as("doc_id"), col("component").as("cluster_id"),
+        col("cluster_size"))
+      .orderBy("doc_id")
   }
 
   /** d81: IMAGE keep-best — d46's representative election at the image
@@ -3999,7 +3910,7 @@ object GroupD {
     * (the header walk), not from the arithmetic — the decode is in the
     * gate.
     *
-    * Scale shape: d80's cached cluster frame join a scan-side dims
+    * Scale shape: d80's cluster frame joins a scan-side dims
     * decode; the election is one WindowGroupLimit-shaped rank per
     * cluster over cluster-sized groups.
     */
@@ -4086,23 +3997,12 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$WavHeaderHex', $wavSamplesHex)))"
 
-  /** d82's verified pair list without the presentation sort — StageCache'd
-    * (d78Pairs' policy) so c10's dedup-volume card reuses the one
-    * construct+decode+band pass instead of re-running it.
-    */
   /** d82's construct→decode stage (d78Hashed's shape at the audio
     * modality) — split out in r19 so d94's funnel can census the decode
-    * without re-opening the banding join. */
+    * without re-opening the banding join. Lazy checkpoint like
+    * d78Hashed: the 1 KB-per-doc sample construction dominates the
+    * modality's cost. */
   private[queries] def d82Hashed(spark: SparkSession, sfDir: String)
-      : DataFrame =
-    // r21: StageCache + lazy checkpoint like d78Hashed — the pair hub
-    // build and d94's decode census both derive from this frame, and the
-    // 1 KB-per-doc sample construction dominates the modality's cost
-    graft.operators.StageCache.persisted(s"$sfDir#d82_hashed") {
-      d82HashedRaw(spark, sfDir).localCheckpoint(false)
-    }
-
-  private def d82HashedRaw(spark: SparkSession, sfDir: String)
       : DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables(spark, sfDir, "documents")
@@ -4112,26 +4012,26 @@ object GroupD {
       .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
         .WavEnergyHashName}(content)").as("ehash"))
       .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+      .localCheckpoint(false)
   }
 
-  private[queries] def d82Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d82_pairs") {
-      val hashed = d82Hashed(spark, sfDir)
-      val bands = hashed.select(col("doc_id"), col("ehash"),
-        posexplode(expr(
-          "transform(sequence(0, 3), t -> shiftright(ehash, t * 16) & 65535L)"))
-          .as(Seq("band", "key")))
-      bands.as("x").hint("merge")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          // null-tolerant on purpose — see d78PairsRaw
-          expr("cast(bit_count(coalesce(x.ehash, 0L) ^ coalesce(y.ehash, 0L))" +
-            " as bigint)").as("hamming"))
-        .filter(col("hamming") <= 3L)
-        .distinct()
-    }
+  private[queries] def d82Pairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val hashed = d82Hashed(spark, sfDir)
+    val bands = hashed.select(col("doc_id"), col("ehash"),
+      posexplode(expr(
+        "transform(sequence(0, 3), t -> shiftright(ehash, t * 16) & 65535L)"))
+        .as(Seq("band", "key")))
+    bands.as("x").hint("merge")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        // null-tolerant on purpose — see d78Pairs
+        expr("cast(bit_count(coalesce(x.ehash, 0L) ^ coalesce(y.ehash, 0L))" +
+          " as bigint)").as("hamming"))
+      .filter(col("hamming") <= 3L)
+      .distinct()
+  }
 
   def d82AudioDedup(spark: SparkSession, sfDir: String): DataFrame =
     d82Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4234,35 +4134,33 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$PngHeaderHex', $pngPixelsHex, '$PngTrailerHex')))"
 
-  /** d84's verified pair list without the presentation sort — StageCache'd
-    * (d78Pairs' policy) so c10's dedup-volume card reuses the one
-    * construct+decode+band pass instead of re-running it.
+  /** d84's verified pair list without the presentation sort — c10's
+    * dedup-volume card consumes it too.
     */
-  private[queries] def d84Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d84_pairs") {
-      graft.functions.GraftFunctions.register(spark)
-      val hashed = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), expr(pngBitsExpr).as("bits"))
-        .repartition(col("doc_id")) // construction barrier (d78's lesson)
-        .select(col("doc_id"), expr(pngContentExpr).as("content"))
-        .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-          .PngDhashName}(content)").as("dhash"))
-        .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
-      val bands = hashed.select(col("doc_id"), col("dhash"),
-        posexplode(expr(
-          "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-          .as(Seq("band", "key")))
-      bands.as("x").hint("merge")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          // null-tolerant on purpose — see d78PairsRaw
-          expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-            " as bigint)").as("hamming"))
-        .filter(col("hamming") <= 3L)
-        .distinct()
-    }
+  private[queries] def d84Pairs(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    val hashed = Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), expr(pngBitsExpr).as("bits"))
+      .repartition(col("doc_id")) // construction barrier (d78's lesson)
+      .select(col("doc_id"), expr(pngContentExpr).as("content"))
+      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
+        .PngDhashName}(content)").as("dhash"))
+      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+    val bands = hashed.select(col("doc_id"), col("dhash"),
+      posexplode(expr(
+        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
+        .as(Seq("band", "key")))
+    bands.as("x").hint("merge")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        // null-tolerant on purpose — see d78Pairs
+        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
+          " as bigint)").as("hamming"))
+      .filter(col("hamming") <= 3L)
+      .distinct()
+  }
 
   def d84PngDedup(spark: SparkSession, sfDir: String): DataFrame =
     d84Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4326,21 +4224,11 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$Y4mHeaderHex', $y4mFramesHex)))"
 
-  /** d85's verified pair list without the presentation sort — StageCache'd
-    * (d78Pairs' policy) so c10's dedup-volume card reuses the one
-    * construct+decode+band pass instead of re-running it.
-    */
   /** d85's construct→decode stage (d78Hashed's shape at the video
     * modality) — split out in r19 so d94's funnel can census the decode
-    * without re-opening the banding join. */
+    * without re-opening the banding join. Lazy checkpoint
+    * (d82Hashed's note). */
   private[queries] def d85Hashed(spark: SparkSession, sfDir: String)
-      : DataFrame =
-    // r21: StageCache + lazy checkpoint (d82Hashed's note)
-    graft.operators.StageCache.persisted(s"$sfDir#d85_hashed") {
-      d85HashedRaw(spark, sfDir).localCheckpoint(false)
-    }
-
-  private def d85HashedRaw(spark: SparkSession, sfDir: String)
       : DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables(spark, sfDir, "documents")
@@ -4350,26 +4238,26 @@ object GroupD {
       .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
         .Y4mEnvelopeHashName}(content)").as("vhash"))
       .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+      .localCheckpoint(false)
   }
 
-  private[queries] def d85Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d85_pairs") {
-      val hashed = d85Hashed(spark, sfDir)
-      val bands = hashed.select(col("doc_id"), col("vhash"),
-        posexplode(expr(
-          "transform(sequence(0, 3), t -> shiftright(vhash, t * 16) & 65535L)"))
-          .as(Seq("band", "key")))
-      bands.as("x").hint("merge")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          // null-tolerant on purpose — see d78PairsRaw
-          expr("cast(bit_count(coalesce(x.vhash, 0L) ^ coalesce(y.vhash, 0L))" +
-            " as bigint)").as("hamming"))
-        .filter(col("hamming") <= 3L)
-        .distinct()
-    }
+  private[queries] def d85Pairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val hashed = d85Hashed(spark, sfDir)
+    val bands = hashed.select(col("doc_id"), col("vhash"),
+      posexplode(expr(
+        "transform(sequence(0, 3), t -> shiftright(vhash, t * 16) & 65535L)"))
+        .as(Seq("band", "key")))
+    bands.as("x").hint("merge")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        // null-tolerant on purpose — see d78Pairs
+        expr("cast(bit_count(coalesce(x.vhash, 0L) ^ coalesce(y.vhash, 0L))" +
+          " as bigint)").as("hamming"))
+      .filter(col("hamming") <= 3L)
+      .distinct()
+  }
 
   def d85VideoDedup(spark: SparkSession, sfDir: String): DataFrame =
     d85Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4413,38 +4301,36 @@ object GroupD {
       s"unhex(concat('$BmpHeaderHex', $bmpPixelsHex)), " +
       s"unhex(concat('$PngHeaderHex', $pngPixelsHex, '$PngTrailerHex'))))"
 
-  /** d86's verified pair list without the presentation sort — StageCache'd
-    * (d78Pairs' policy) so c10's dedup-volume card reuses the one
-    * construct+decode+band pass instead of re-running it.
+  /** d86's verified pair list without the presentation sort — c10's
+    * dedup-volume card consumes it too.
     */
-  private[queries] def d86Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d86_pairs") {
-      graft.functions.GraftFunctions.register(spark)
-      val fns = graft.functions.GraftFunctions
-      val hashed = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), expr(xfmtBitsExpr).as("bits"))
-        .repartition(col("doc_id")) // construction barrier (d78's lesson)
-        .select(col("doc_id"), expr(xfmtContentExpr).as("content"))
-        // format-agnostic hash: each decode refuses the other container at
-        // its signature bytes, so this is one real decode per asset
-        .select(col("doc_id"), expr(s"coalesce(${fns.BmpDhashName}(content), " +
-          s"${fns.PngDhashName}(content))").as("dhash"))
-        .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
-      val bands = hashed.select(col("doc_id"), col("dhash"),
-        posexplode(expr(
-          "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-          .as(Seq("band", "key")))
-      bands.as("x").hint("merge")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          // null-tolerant on purpose — see d78PairsRaw
-          expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-            " as bigint)").as("hamming"))
-        .filter(col("hamming") <= 3L)
-        .distinct()
-    }
+  private[queries] def d86Pairs(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    val fns = graft.functions.GraftFunctions
+    val hashed = Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), expr(xfmtBitsExpr).as("bits"))
+      .repartition(col("doc_id")) // construction barrier (d78's lesson)
+      .select(col("doc_id"), expr(xfmtContentExpr).as("content"))
+      // format-agnostic hash: each decode refuses the other container at
+      // its signature bytes, so this is one real decode per asset
+      .select(col("doc_id"), expr(s"coalesce(${fns.BmpDhashName}(content), " +
+        s"${fns.PngDhashName}(content))").as("dhash"))
+      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+    val bands = hashed.select(col("doc_id"), col("dhash"),
+      posexplode(expr(
+        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
+        .as(Seq("band", "key")))
+    bands.as("x").hint("merge")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        // null-tolerant on purpose — see d78Pairs
+        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
+          " as bigint)").as("hamming"))
+      .filter(col("hamming") <= 3L)
+      .distinct()
+  }
 
   def d86CrossFormatDedup(spark: SparkSession, sfDir: String): DataFrame =
     d86Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4531,35 +4417,33 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$GifHeaderHex', $gifCodesHex, '$GifTrailerHex')))"
 
-  /** d87's verified pair list without the presentation sort — StageCache'd
-    * (d78Pairs' policy) so c10's dedup-volume card reuses the one
-    * construct+decode+band pass instead of re-running it.
+  /** d87's verified pair list without the presentation sort — c10's
+    * dedup-volume card consumes it too.
     */
-  private[queries] def d87Pairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d87_pairs") {
-      graft.functions.GraftFunctions.register(spark)
-      val hashed = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), expr(gifBitsExpr).as("bits"))
-        .repartition(col("doc_id")) // construction barrier (d78's lesson)
-        .select(col("doc_id"), expr(gifContentExpr).as("content"))
-        .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-          .GifDhashName}(content)").as("dhash"))
-        .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
-      val bands = hashed.select(col("doc_id"), col("dhash"),
-        posexplode(expr(
-          "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-          .as(Seq("band", "key")))
-      bands.as("x").hint("merge")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          // null-tolerant on purpose — see d78PairsRaw
-          expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-            " as bigint)").as("hamming"))
-        .filter(col("hamming") <= 3L)
-        .distinct()
-    }
+  private[queries] def d87Pairs(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    val hashed = Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), expr(gifBitsExpr).as("bits"))
+      .repartition(col("doc_id")) // construction barrier (d78's lesson)
+      .select(col("doc_id"), expr(gifContentExpr).as("content"))
+      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
+        .GifDhashName}(content)").as("dhash"))
+      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+    val bands = hashed.select(col("doc_id"), col("dhash"),
+      posexplode(expr(
+        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
+        .as(Seq("band", "key")))
+    bands.as("x").hint("merge")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        // null-tolerant on purpose — see d78Pairs
+        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
+          " as bigint)").as("hamming"))
+      .filter(col("hamming") <= 3L)
+      .distinct()
+  }
 
   def d87GifDedup(spark: SparkSession, sfDir: String): DataFrame =
     d87Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4637,18 +4521,9 @@ object GroupD {
 
   /** d88's feature frame: (doc_id, centered 72-dim grid-luma vector as
     * array<double>; NULL for junk) — split out so d89 and the spec's LSH
-    * scale twin consume the identical features. StageCache'd (d78Pairs'
-    * policy) since r18: the declared anchor (d88), its production twin
-    * (d89) and the anchor's own 3 self-references all read the ONE
-    * construct+decode+center pass per corpus instead of re-deriving it
-    * per plan reference.
+    * scale twin consume the identical features.
     */
   private[queries] def d88Features(spark: SparkSession, sfDir: String)
-      : DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d88_features")(
-      d88FeaturesRaw(spark, sfDir))
-
-  private def d88FeaturesRaw(spark: SparkSession, sfDir: String)
       : DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables(spark, sfDir, "documents")
@@ -4728,8 +4603,8 @@ object GroupD {
   /** d90: the MEDIA pipeline composed END TO END — d22's audit twin at
     * the image modality (the r16/r17 review's carried ask): one lazily
     * built plan that chains decode ([[d78Hashed]]) → verified near-dup
-    * pairs ([[d78Pairs]], the StageCache hub) → connected-component
-    * clusters ([[d80ImageClusters]], cached) → resolution keep-best
+    * pairs ([[d78Pairs]]) → connected-component
+    * clusters ([[d80ImageClusters]]) → resolution keep-best
     * ([[d81ImageKeepBest]]) and reports a d56-style FUNNEL row per
     * stage (docs in / docs out / dropped) with c10's volume columns
     * (pair count, cluster count, largest cluster) attached on the rows
@@ -4740,8 +4615,7 @@ object GroupD {
     * `keep` column, not arithmetic.
     *
     * Scale shape: five 1-row partial aggregates over frames the
-    * pipeline already defines (two of them StageCache'd hubs), cross-
-    * joined broadcast into ONE metrics row, then the 4 stage rows
+    * pipeline already defines, cross-joined broadcast into ONE metrics row, then the 4 stage rows
     * inline-exploded from that single row — the metrics subplans
     * evaluate once regardless of how many stages report them, and the
     * report is 4 rows at any corpus size.
@@ -4872,15 +4746,11 @@ object GroupD {
     * both-sides-recompute shape d100 already barriers (six scans in the
     * un-barriered physical plan, plans/r21/d93_url_pipeline_e2e_before
     * .txt). In production the barrier is the canonical-URL table a
-    * pipeline lands anyway. (r22: the r21 StageCache entry on top of
-    * the barrier was single-consumer and is dropped — verdict task 1.)
+    * pipeline lands anyway.
     */
   def d93UrlPipelineE2e(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables(spark, sfDir, "documents")
-    // r22 (r21 verdict task 1): StageCache dropped — d93 was the only
-    // consumer of the r21 `d93_normed` entry, so the cache only served
-    // d93's own frame back across bench passes. The lazy-checkpoint
-    // barrier (the real fix: 6 scans → 1 per execution) stays.
+    // the lazy-checkpoint barrier: 6 scans → 1 per execution
     val normed = docs
       .select(col("doc_id"), col("n_chars"), GroupC.d92Url.as("url"))
       .select(col("doc_id"), col("n_chars"),
@@ -4918,7 +4788,7 @@ object GroupD {
   /** d94: the audio/video pipeline e2e compose (r19) — d90's funnel at
     * the two media modalities that had pairs but no composed lifecycle:
     * decode (WAV sample walk / Y4M frame walk, refusing junk) → banded
-    * Hamming pairs (d82/d85's cached hubs) → connected-component
+    * Hamming pairs (the d82/d85 pair hubs) → connected-component
     * clusters → keep-best, per modality, as ONE lazily built plan whose
     * report is 8 rows (2 modalities × 4 stages) at any corpus size.
     * The keep-best election at these modalities is the min-id
@@ -4930,16 +4800,12 @@ object GroupD {
     * bytes).
     *
     * Scale shape: d90's verbatim — each modality's metrics are 1-row
-    * partial aggregates over the StageCache'd pair hub (the
-    * construct+decode+band pass pays once per corpus across queries)
-    * cross-joined broadcast into one metrics row and inline-exploded
-    * into the 4 stage rows; the component labeling shuffles only
-    * (id, label) pairs per delta-bounded round, StageCache'd per
-    * modality (iterative propagation is the most re-derivation-hostile
-    * shape there is — d80's argument). The decode census re-runs the
-    * scan-side decode once (d90's nDec precedent — the hub caches
-    * PAIRS, and a census column on the hub would widen every consumer
-    * for one count).
+    * partial aggregates over the pair hub cross-joined broadcast into
+    * one metrics row and inline-exploded into the 4 stage rows; the
+    * component labeling shuffles only (id, label) pairs per
+    * delta-bounded round. The decode census re-runs the scan-side
+    * decode once (d90's nDec precedent — a census column on the pair
+    * hub would widen every consumer for one count).
     */
   def d94AvPipelineE2e(spark: SparkSession, sfDir: String): DataFrame = {
     val nDocs = Tables(spark, sfDir, "documents")
@@ -4948,10 +4814,8 @@ object GroupD {
                  pairs: DataFrame): DataFrame = {
       val nDec = hashed.agg(count(col(hashCol)).as("n_dec"))
       val nPairs = pairs.agg(count(lit(1)).as("n_pairs"))
-      val clAgg = graft.operators.StageCache.persisted(
-          s"$sfDir#d94_${tag}_clusters")(
-        graft.operators.ConnectedComponents
-          .label(pairs.select("doc_a", "doc_b"), src = "doc_a", dst = "doc_b"))
+      val clAgg = graft.operators.ConnectedComponents
+        .label(pairs.select("doc_a", "doc_b"), src = "doc_a", dst = "doc_b")
         .groupBy("component").agg(count(lit(1)).as("sz"))
         // coalesce(sum, 0) not bare sum (the r16 c10 finding at this
         // shape): over a PAIRLESS corpus the cluster frame is empty and
@@ -5008,14 +4872,6 @@ object GroupD {
     * table StreamUrlDedup maintains, streamed once per frontier pass
     * and never self-joined.
     */
-  /** The frontier's per-URL frame — (norm_url, domain) of every
-    * canonical outlink target NOT already a corpus page — d95's body
-    * before its census, shared with d97's fetch-plan compose so the two
-    * cannot drift. Under the drivers' [[graft.operators.StageCache]]
-    * policy the frame persists once per corpus (the d22/d56 discipline):
-    * the discovery pass and the schedule it feeds share ONE
-    * materialization, exactly what a production crawl does with its
-    * frontier table between passes. */
   /** The frontier DIFF body over any `html` link-source frame: extract
     * every href, canonicalize, dedup, anti-join the corpus's own
     * canonical URLs, attach the registered domain — ONE definition
@@ -5047,13 +4903,16 @@ object GroupD {
   private def corpusUrls(docs: DataFrame): DataFrame =
     docs.select(GroupC.urlNormalize(GroupC.c13Url).as("norm_url"))
 
-  private[graft] def d95Frontier(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.StageCache.persisted(s"$sfDir#d95_frontier") {
-      val docs = Tables.fanned(spark, sfDir, "documents")
-      frontierDiffOver(
-        docs.select(GroupC.partsHtml(GroupC.frontierParts).as("html")),
-        corpusUrls(docs))
-    }
+  /** The frontier's per-URL frame — (norm_url, domain) of every
+    * canonical outlink target NOT already a corpus page — d95's body
+    * before its census, shared with d97's fetch-plan compose so the two
+    * cannot drift. */
+  private[graft] def d95Frontier(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = Tables.fanned(spark, sfDir, "documents")
+    frontierDiffOver(
+      docs.select(GroupC.partsHtml(GroupC.frontierParts).as("html")),
+      corpusUrls(docs))
+  }
 
   def d95FrontierDiscovery(spark: SparkSession, sfDir: String): DataFrame =
     d95Frontier(spark, sfDir)
@@ -5099,10 +4958,6 @@ object GroupD {
     // markup+URL construction chain (the both-sides-recompute shape the
     // r20 verdict flagged). In production the barrier is the cleaned-
     // corpus table stage 0 lands anyway (d100's argument).
-    // r22 (r21 verdict task 1): StageCache dropped — d96 was the only
-    // consumer of the r21 `d96_base` entry (d99 builds its own base
-    // from walked WARC bytes), so the cache only memoised d96's own
-    // stage across bench passes. The lazy-checkpoint barrier stays.
     val base = docs.select(col("doc_id"),
       GroupC.markupClean(GroupC.partsHtml(GroupC.c11Parts))
         .as("clean_text"),
@@ -5193,18 +5048,14 @@ object GroupD {
     // does NOT help (filters push through exchanges); the LAZY
     // localCheckpoint is the fix — a LogicalRDD leaf predicate pushdown
     // stops at, computing the walk exactly once on first action and
-    // serving every funnel branch from the checkpoint. StageCache (the
-    // d95/c17 hub policy) additionally shares that materialization
-    // across calls under Bench/Verify.
-    val base = graft.operators.StageCache.persisted(s"$sfDir#d99_base") {
-      val walked = GroupC.warcWalk(docs.select(col("doc_id"),
-        GroupC.c16BlobWith(GroupC.d92Url, GroupC.c11Html).as("warc")))
-      walked.select(col("doc_id"),
-        GroupC.markupClean(col("payload")).as("clean_text"),
-        GroupC.urlNormalize(
-          regexp_extract(col("hdr3"), GroupC.WarcUriP, 1)).as("norm_url"))
-        .localCheckpoint(false)
-    }
+    // serving every funnel branch from the checkpoint.
+    val walked = GroupC.warcWalk(docs.select(col("doc_id"),
+      GroupC.c16BlobWith(GroupC.d92Url, GroupC.c11Html).as("warc")))
+    val base = walked.select(col("doc_id"),
+      GroupC.markupClean(col("payload")).as("clean_text"),
+      GroupC.urlNormalize(
+        regexp_extract(col("hdr3"), GroupC.WarcUriP, 1)).as("norm_url"))
+      .localCheckpoint(false)
     crawlIngestFunnel(docs, base)
   }
 
@@ -5236,27 +5087,19 @@ object GroupD {
     // measured 10.1 → 7.9 s isolated at sf0.1 with the one
     // materialization (in production the page bytes are TABLE data,
     // not a construction, so the barrier is exactly the cleaned-corpus
-    // materialization a real pipeline lands anyway). StageCache
-    // additionally shares it across the driver's hash + min-of-3 bench
-    // passes (the d99_base layering).
-    val cleaned = graft.operators.StageCache
-      .persisted(s"$sfDir#d100_cleaned") {
-        Tables.fanned(spark, sfDir, "documents")
-          .select(col("doc_id"), GroupC.frontierHtml.as("html"))
-          .select(col("doc_id"), col("html"),
-            GroupC.markupClean(col("html")).as("text"))
-          .localCheckpoint(false)
-      }
+    // materialization a real pipeline lands anyway).
+    val cleaned = Tables.fanned(spark, sfDir, "documents")
+      .select(col("doc_id"), GroupC.frontierHtml.as("html"))
+      .select(col("doc_id"), col("html"),
+        GroupC.markupClean(col("html")).as("text"))
+      .localCheckpoint(false)
     // r21: the gated frontier is itself a barrier — the shared
     // [[fetchPlanOver]] tail references its frontier TWICE (the URL
     // rows and the domains-sized DISTINCT hosts build side), and
     // without a barrier both references re-derive the whole
     // gopher-join + outlink-normalize + anti-join subtree (the entire
     // diff chain appears twice in plans/r21/d100_gated_frontier_plan_
-    // before.txt, operators 1-20 vs 21-44). r22 (r21 verdict task 1):
-    // the r21 StageCache entry here was single-consumer (only d100
-    // reads it) and is dropped — the barrier is the real fix; the
-    // cache only served d100's own frontier back across bench passes.
+    // before.txt, operators 1-20 vs 21-44).
     val keepers = cleaned.join(
       gopherOver(cleaned.select(col("doc_id"), col("text")))
         .filter(col("keep")).select("doc_id"),
@@ -5429,22 +5272,19 @@ object GroupD {
 
   /** d98: the frontier's SOURCE union (r20) — the two discovery inputs a
     * crawler actually merges, censused with provenance: d95's outlink
-    * discoveries (the SHARED StageCache'd [[d95Frontier]] body) and
-    * c17's sitemap discoveries (the SHARED StageCache'd
-    * [[GroupC.c17Fresh]] body), unioned under a `source` tag and
+    * discoveries (the SHARED [[d95Frontier]] body) and c17's sitemap
+    * discoveries (the SHARED [[GroupC.c17Fresh]] body), unioned under a
+    * `source` tag and
     * censused per registered domain — per-source distinct counts, the
     * distinct total (honest about overlap: a URL both sources surface
     * counts once), and the lexicographically first URL as the
     * deterministic representative. The compose that makes the sitemap
     * leg actually FEED the frontier rather than stand beside it.
     *
-    * Scale shape: both operands are the standing discovery frames their
-    * declared queries persist (one materialization per corpus across
-    * the census + this union — a production crawl's frontier table
+    * Scale shape: both operands are the standing discovery frames of
+    * their declared queries (a production crawl's frontier table
     * between passes); the union ships (domain, norm_url, tag) strings
-    * only; the census is one partial agg on the domain key. At 100 TB
-    * nothing here re-derives — the cost is the one groupBy over frames
-    * already paid for.
+    * only; the census is one partial agg on the domain key.
     */
   def d98FrontierSources(spark: SparkSession, sfDir: String): DataFrame = {
     val outlink = d95Frontier(spark, sfDir)
@@ -5475,12 +5315,9 @@ object GroupD {
     * Y4M), NULL where a metric doesn't apply — the d68 data-card
     * discipline of showing structure rather than dropping it.
     *
-    * Scale shape: every pair source is the modality's StageCache'd hub
-    * (d78Pairs' policy — the construct+decode+band pass pays once per
-    * corpus ACROSS queries, so the card costs five pair-frame aggs and
-    * one cluster agg, not five re-decodes); each per-modality census is
-    * a partial agg to ONE row cross-joined broadcast — nothing
-    * corpus-sized moves.
+    * Scale shape: every pair source is the modality's pair hub; each
+    * per-modality census is a partial agg to ONE row cross-joined
+    * broadcast — nothing corpus-sized moves.
     */
   def c10MediaDedupCard(spark: SparkSession, sfDir: String): DataFrame = {
     val nullLong = lit(null).cast("long")
@@ -5598,10 +5435,8 @@ object GroupD {
     * Training memoizes per corpus (AnnTuning's one-time-build rule).
     */
   /** The corpus's trained BPE merge table (8 rounds), shared by d63's
-    * training report and d73's encode pass — one training per corpus via
-    * the memo, disk-backed through ModelStore under the ModelCache gate
-    * (a fresh JVM's pass 1 reloads instead of re-running the rounds,
-    * d41's sketch discipline).
+    * training report and d73's encode pass — one training per corpus
+    * per JVM via the memo.
     */
   private def trainedBpeMerges(spark: SparkSession,
       sfDir: String): Seq[graft.operators.BpeTrain.Merge] = {
@@ -5610,13 +5445,8 @@ object GroupD {
       .select(explode(GroupC.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("wc"))
-    bpeMerges(s"bpe|$sfDir")(
-      graft.operators.ModelCache.cached("bpe", s"bpe|$sfDir", docs)(
-          p => graft.operators.BpeTrain.fromBytes(
-            graft.operators.ModelStore.loadSketch(spark, p)))(
-          (p, m) => graft.operators.ModelStore.saveSketch(spark, p,
-            graft.operators.BpeTrain.toBytes(m)))(
-        graft.operators.BpeTrain.train(words, merges = 8)))
+    LazyMemo.memoized(bpeMemo, s"bpe|$sfDir")(
+      graft.operators.BpeTrain.train(words, merges = 8))
   }
 
   def d63BpeTrain(spark: SparkSession, sfDir: String): DataFrame = {
@@ -5668,19 +5498,8 @@ object GroupD {
       .orderBy("doc_id")
   }
 
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, Memo[Seq[graft.operators.BpeTrain.Merge]]]()
-  /** One BPE training per corpus key (the putIfAbsent-lazy-holder lock
-    * discipline shared with cmsBytes/AnnTuning/PqIndex/KMeans).
-    */
-  private def bpeMerges(key: String)(
-      build: => Seq[graft.operators.BpeTrain.Merge])
-      : Seq[graft.operators.BpeTrain.Merge] = {
-    val fresh = new Memo(() => build)
-    val prior = bpeMemo.putIfAbsent(key, fresh)
-    (if (prior != null) prior else fresh).value
-  }
+  private val bpeMemo = new ConcurrentHashMap[
+    String, LazyMemo[Seq[graft.operators.BpeTrain.Merge]]]()
   private[graft] def clearBpeMemo(): Unit = bpeMemo.clear()
 
   /** d62: contrastive pair mining — the hard-negative selection an

@@ -73,16 +73,13 @@ object Tables {
 
   /** [[fanned]] with the table's registered key. */
   def fanned(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    fanned(spark, sfDir, name, fanKey(name))
-
-  /** A/B toggle for the fan-out (dev measurement only): set
-    * SPARK_GRAFT_NO_FAN=1 to make [[fanned]] a pass-through. */
-  private val noFan = sys.env.get("SPARK_GRAFT_NO_FAN").contains("1")
+    fanned(spark, sfDir, name, fanKey.getOrElse(name,
+      throw new IllegalArgumentException(s"no fan key registered for " +
+        s"table '$name' — add it to Tables.fanKey")))
 
   def fanned(spark: SparkSession, sfDir: String, name: String,
              key: String): DataFrame = {
     val df = apply(spark, sfDir, name)
-    if (noFan) return df
     val p = spark.sparkContext.defaultParallelism
     val path = s"$sfDir/$name.parquet"
     var parts = scanPartsMemo.get(path)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** d10 LSH parameter sweep (r21 verdict task 6): for each (tables, bits)
   * config, check DROP-SET EQUALITY against d9's exact plan at the given
@@ -13,15 +13,7 @@ import org.apache.spark.sql.SparkSession
 object TuneD10 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import org.apache.spark.sql.functions._
     val exact = GroupD.d9DedupEmbedding(spark, sfDir)
       .select("vec_id").collect().map(_.getLong(0)).toSet

@@ -139,6 +139,23 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(jobs.isEmpty, s"serving installed tuning decisions ran Spark jobs: $jobs")
   }
 
+  test("d41 sketch and d63 merges: a repeat build on the same corpus trains nothing") {
+    import graft.queries.GroupD
+    // both queries train eagerly at build time; the first builds fill the
+    // memos (or hit entries an earlier suite filled)
+    GroupD.d41BigramNoveltyCms(spark, sf)
+    GroupD.d63BpeTrain(spark, sf)
+    val jobs = jobsDuring {
+      GroupD.d41BigramNoveltyCms(spark, sf)
+      GroupD.d63BpeTrain(spark, sf)
+    }
+    assert(jobs.isEmpty, s"a repeat d41/d63 build ran Spark jobs: $jobs")
+    // non-vacuous: with the BPE memo dropped, the same build does train
+    GroupD.clearBpeMemo()
+    val retrain = jobsDuring { GroupD.d63BpeTrain(spark, sf) }
+    assert(retrain.nonEmpty, "a fresh d63 build must run its training jobs")
+  }
+
   test("sketch bytes round-trip exactly (CMS estimates identical)") {
     import org.apache.spark.util.sketch.CountMinSketch
     val occ = Tables(spark, sf, "documents")
