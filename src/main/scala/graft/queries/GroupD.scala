@@ -840,6 +840,11 @@ object GroupD {
     // once, fanned by the id repartition). Replaces the r21
     // lazy-checkpoint barrier, which under AQE materializes with
     // UnknownPartitioning and forces both join-side exchanges back.
+    // The shape needs spark.sql.adaptive.enabled and
+    // spark.sql.exchange.reuse (both default on): without them the explode
+    // runs once per join side. Results stay exact either way (the
+    // levenshtein filter re-verifies), so PlanShapeSpec pins the reuse and
+    // both configs against the final adaptive plan.
     val par = spark.sparkContext.defaultParallelism
     val variants = cust
       .repartition(par, col("id"))
@@ -985,7 +990,8 @@ object GroupD {
     // WORSE (3.2-5.0 s): filter pushdown below the keyed exchange
     // breaks subtree reuse, and requireAllClusterKeysForCoPartition
     // re-adds the exchanges; the bound filter fused into this single
-    // join probe loop is cheaper than four scheduled join stages.
+    // join probe loop is cheaper than four scheduled join stages. Same
+    // AQE + exchange-reuse dependency as d24, pinned in PlanShapeSpec.
     val par = spark.sparkContext.defaultParallelism
     val variants = cust
       .repartition(par, col("id"))

@@ -16,22 +16,25 @@ object Tables {
     * metastore instead of re-inferring per query; this memo is that
     * catalog: METADATA only (a StructType per path — never rows), keyed
     * by the full file path, populated from the first real inference in
-    * this JVM. The fixtures are immutable within a process, and the
-    * cached schema is exactly what inference under the session's
-    * legacy-nanos flag produced, so `.schema(s)` reads are
+    * this JVM. The fixtures are immutable within a process. Inference
+    * depends on the reading session's legacy-nanos flag (INT64 nanosecond
+    * timestamps infer as LongType under it and are refused without it),
+    * so the key carries that flag too: a session is only ever served a
+    * schema inferred under its own flag, and `.schema(s)` reads are
     * byte-identical to inferred reads.
     */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), org.apache.spark.sql.types.StructType]()
 
   /** Load one driver-generated parquet table (TESTDATA.md). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val cached = schemaMemo.get(path)
+    val key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean)
+    val cached = schemaMemo.get(key)
     if (cached != null) spark.read.schema(cached).parquet(path)
     else {
       val df = spark.read.parquet(path)
-      schemaMemo.putIfAbsent(path, df.schema)
+      schemaMemo.putIfAbsent(key, df.schema)
       df
     }
   }

@@ -1,11 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
+import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.Charset
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType, TimestampNTZType, TimestampType}
 
@@ -21,10 +22,11 @@ import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType,
   *
   * Two paths with different fidelity/scale trade-offs:
   *   - [[writeSingleFile]] — the reference's one-file-per-table output,
-  *     byte-faithful: rows are assembled by the engine (distributed,
-  *     codegen'd `concat_ws`) and written as text, so the NULL sentinel
-  *     stays unquoted exactly like the reference's writer; the header and
-  *     any non-UTF-8 encoding are applied at the single-file boundary.
+  *     byte-faithful: records are assembled by the engine (distributed,
+  *     codegen'd `concat_ws`), so the NULL sentinel stays unquoted exactly
+  *     like the reference's writer, and one task writes the header and the
+  *     records once, in the configured encoding, like the reference's
+  *     single `TextWriter` (src/CSVDestinationWriter.cs:17-45).
   *     The only deviation is deliberate: embedded quotes are `""`-escaped
   *     where the reference emits malformed CSV (SURVEY.md §2.4.1).
   *   - [[writeDir]] — the 100 TB path: a partitioned directory written by
@@ -85,7 +87,7 @@ object CsvWrite {
         case _: DecimalType => cultured(c.cast("string"))
         case _ => c.cast("string")
       }
-      regexp_replace(formatted, "[\\r\\n]", "").as(f.name)
+      translate(formatted, "\r\n", "").as(f.name)
     }
     df.select(cols: _*)
   }
@@ -99,7 +101,7 @@ object CsvWrite {
   /** One reference-format record per row, as a single string column:
     * non-null values quoted (embedded quotes doubled), nulls as the bare
     * sentinel, fields joined by the delimiter. Runs distributed and
-    * codegen'd — the single-file part is only the final concatenation.
+    * codegen'd; [[writeSingleFile]]'s one task only streams the records.
     */
   private[sources] def referenceRecords(df: DataFrame, dialect: CsvDialect,
       culture: String = ""): DataFrame = {
@@ -107,9 +109,7 @@ object CsvWrite {
     val formatted = formatForWrite(df, culture)
     val fields: Seq[Column] = formatted.schema.fieldNames.map { n =>
       when(col(n).isNull, lit(dialect.nullSentinel))
-        .otherwise(concat(lit(q),
-          regexp_replace(col(n), java.util.regex.Pattern.quote(q),
-            java.util.regex.Matcher.quoteReplacement(q + q)), lit(q)))
+        .otherwise(concat(lit(q), replace(col(n), lit(q), lit(q + q)), lit(q)))
     }
     formatted.select(concat_ws(dialect.delimiter, fields: _*).as("value"))
   }
@@ -122,52 +122,45 @@ object CsvWrite {
   }
 
   /** Fidelity-mode write: exactly one `<table>[suffix].csv` file in `dir`,
-    * like the reference (src/CSVDestinationWriter.cs:17-33, 61-62). The
-    * row bytes match the reference's writer (bare NULL, quoteAll); the
-    * header and the configured encoding are applied while concatenating
-    * the single part file on the driver. Only for small outputs.
+    * like the reference (src/CSVDestinationWriter.cs:17-33, 61-62), in ONE
+    * Dataset action: a single `coalesce(1)` task streams the header and the
+    * records, in the dialect's encoding, into a hidden file in `dir` named
+    * by its task attempt, and the driver renames that file atomically onto
+    * the destination. No row reaches the driver; on failure no file of this
+    * call remains. Executors must see `dir` at the same path.
     */
   def writeSingleFile(df: DataFrame, dir: String, table: String,
                       dialect: CsvDialect = CsvDialect(),
                       timestampSuffix: Option[String] = None,
                       culture: String = ""): Path = {
-    val destDir = Paths.get(dir)
+    val destDir = Paths.get(dir).toAbsolutePath
     Files.createDirectories(destDir) // reference auto-creates (:61-62)
-    val tmp = Files.createTempDirectory(destDir, s".$table-stage")
+    val dest = destDir.resolve(timestampSuffix.fold(s"$table.csv")(ts => s"$table[$ts].csv"))
+    val (stageDir, prefix) = (destDir.toString, s".$table-${UUID.randomUUID()}-")
+    val header = Option.when(dialect.hasHeader)(headerLine(df, dialect))
     try {
-      referenceRecords(df, dialect, culture).coalesce(1)
-        .write.mode("overwrite").text(tmp.toString)
-      // the listing stream must CLOSE (r18 review — CsvCatalog's rule):
-      // unclosed DirectoryStreams leak one fd per exported table until GC
-      val listing = Files.list(tmp)
-      val part =
-        try listing.iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-        finally listing.close()
-      val name = timestampSuffix match {
-        case Some(ts) => s"$table[$ts].csv"
-        case None     => s"$table.csv"
-      }
-      val dest = destDir.resolve(name)
-      val cs = Charset.forName(dialect.encoding)
-      val in = new BufferedReader(new InputStreamReader(
-        Files.newInputStream(part), Charset.forName("UTF-8")))
-      val out = new BufferedWriter(new OutputStreamWriter(
-        Files.newOutputStream(dest), cs))
-      try {
-        if (dialect.hasHeader) { out.write(headerLine(df, dialect)); out.write("\n") }
-        var line = in.readLine()
-        while (line != null) { out.write(line); out.write("\n"); line = in.readLine() }
-      } finally { in.close(); out.close() }
-      dest
+      val staged = referenceRecords(df, dialect, culture).coalesce(1).as(Encoders.STRING)
+        .mapPartitions { records =>
+          val f = Paths.get(stageDir, s"$prefix${TaskContext.get().taskAttemptId()}.stage")
+          Iterator.single(writeLines(f, header.iterator ++ records, dialect.encoding).toString)
+        }(Encoders.STRING).collect()
+      // an empty local relation plans as a zero-partition scan: no task runs
+      val file = if (staged.nonEmpty) Paths.get(staged(0))
+        else writeLines(destDir.resolve(s"${prefix}driver.stage"), header.iterator, dialect.encoding)
+      Files.move(file, dest, StandardCopyOption.ATOMIC_MOVE)
     } finally {
-      if (Files.exists(tmp)) {
-        val walk = Files.walk(tmp)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.deleteIfExists)
-        finally walk.close()
-      }
+      val leftovers = Files.newDirectoryStream(destDir, (p: Path) => p.getFileName.toString.startsWith(prefix))
+      try leftovers.forEach(p => Files.deleteIfExists(p)) finally leftovers.close()
     }
   }
+
+  /** Writes `lines`, each ended by `\n`, to the new file `f` in `encoding`;
+    * deletes `f` if anything fails, including the upstream iterator. */
+  private def writeLines(f: Path, lines: Iterator[String], encoding: String): Path =
+    try {
+      val out = new BufferedWriter(new OutputStreamWriter(
+        Files.newOutputStream(f, StandardOpenOption.CREATE_NEW), Charset.forName(encoding)))
+      try lines.foreach { l => out.write(l); out.write('\n') } finally out.close()
+      f
+    } catch { case t: Throwable => Files.deleteIfExists(f); throw t }
 }

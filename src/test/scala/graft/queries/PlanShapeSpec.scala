@@ -390,6 +390,24 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected the gate and kept stages to be reused (>= 2), got $reused\n$p")
   }
 
+  test("d24/d57: the two vh-keyed repartition subtrees run as ONE reused shuffle") {
+    // the single-explode shape (GroupD d24FuzzyJoin / d57FuzzyJoin2) holds
+    // only while AQE and exchange reuse are on: pin those configs, then
+    // execute and read the final adaptive plan, where the second join side
+    // is a reuse of the first side's vh-keyed repartition
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.exchange.reuse") == "true")
+    for (q <- Seq("d24_fuzzy_join", "d57_fuzzy_join2")) {
+      val df = graft.SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      val reused = p.linesIterator.count(l =>
+        (l.contains("ReusedExchange") || l.contains("ReusedQueryStage")) &&
+          l.contains("hashpartitioning(vh#"))
+      assert(reused >= 1, s"$q: the vh-keyed repartition is not reused\n$p")
+    }
+  }
+
   test("d19: benchmark-source predicate and column pruning reach the parquet scan") {
     val p = plan("d19_decontaminate")
     assert(p.contains("PushedFilters: [IsNotNull(source)"),
