@@ -62,25 +62,10 @@ case class NearestCentroid(left: Expression, right: Expression)
   override def nullSafeEval(v: Any, cs: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
     val cents = cs.asInstanceOf[ArrayData]
-    val k = cents.numElements()
-    val dim = x.numElements()
-    if (k == 0) return null
-    var bestC = -1
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < k) {
-      val cv = cents.getArray(c)
-      if (cv == null || cv.numElements() != dim) return null
-      var d = 0.0
-      var i = 0
-      while (i < dim) {
-        val t = x.getDouble(i) - cv.getDouble(i)
-        d += t * t
-        i += 1
-      }
-      if (d < bestD) { bestD = d; bestC = c }
-      c += 1
-    }
+    val cvs = Array.tabulate(cents.numElements())(cents.getArray)
+    if (cvs.isEmpty || cvs.exists(cv => cv == null || cv.numElements() != x.numElements()))
+      return null
+    val (bestC, bestD) = NearestCentroid.nearest(x.toDoubleArray(), cvs.map(_.toDoubleArray()))
     new GenericInternalRow(Array[Any](bestC, bestD)): InternalRow
   }
 
@@ -124,4 +109,32 @@ case class NearestCentroid(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid =
     copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroid {
+
+  /** The one argmin definition, shared by the interpreted path and the
+    * driver-side k-means trainer (the generated code spells out the same
+    * loop): per centroid a left-to-right squared-difference fold, and a
+    * strict `<` keeps the EARLIEST minimal centroid. Returns (cluster, d2);
+    * callers guarantee a non-empty model whose centroids match `x`'s length.
+    */
+  def nearest(x: Array[Double], cents: Array[Array[Double]]): (Int, Double) = {
+    var bestC = -1
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cents.length) {
+      val cv = cents(c)
+      var d = 0.0
+      var i = 0
+      while (i < x.length) {
+        val t = x(i) - cv(i)
+        d += t * t
+        i += 1
+      }
+      if (d < bestD) { bestD = d; bestC = c }
+      c += 1
+    }
+    (bestC, bestD)
+  }
 }

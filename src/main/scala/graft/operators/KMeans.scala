@@ -1,33 +1,33 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JDec, RoundingMode}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed Lloyd k-means over an embedding column — the semantic
+/** Deterministic Lloyd k-means over an embedding column — the semantic
   * clustering / domain-discovery step of a training-data pipeline (cluster
   * then inspect/filter/rebalance by cluster). Deterministic end to end,
   * unlike textbook k-means:
   *
-  *  - **Seeding**: per-hash-bucket min (k buckets over
-  *    `xxhash64(vec_id)`, min-vec_id vector each — a plain partial
-  *    aggregate, NO global sort at any corpus size) once the input can
-  *    occupy the buckets w.h.p. (n ≥ 16k); tiny inputs keep the
-  *    k evenly-rank-spaced `row_number` fallback. No RNG, no dense-id
-  *    assumption in either regime.
-  *  - **Centroid update**: per-dimension means are aggregated in
-  *    `decimal(25,10)`, so they are EXACT and summation-order independent;
-  *    double-sum means differ in ulps across partitionings, which flips
-  *    boundary assignments between runs.
-  *  - **Assignment**: argmin over (distance², cluster id) struct ordering —
-  *    exact ties break toward the lower cluster id instead of
-  *    partition order.
+  *  - **Seeding**: per-hash-bucket min (k buckets over `xxhash64(vec_id)`,
+  *    the min-vec_id vector each) once the input can occupy the buckets
+  *    w.h.p. (n ≥ 16k); tiny inputs keep k evenly-rank-spaced vectors in
+  *    vec_id order. No RNG, no dense-id assumption in either regime.
+  *  - **Centroid update**: per-dimension means in `decimal(25,10)`, so they
+  *    are EXACT and summation-order independent.
+  *  - **Assignment**: argmin over (distance², cluster id) — exact ties
+  *    break toward the lower cluster id.
   *
-  * Scale mechanics: each iteration is one assignment scan (k fused
-  * distance folds per row, no shuffle) plus one posexplode + partial-agg
-  * shuffle of (cluster, dim) cells — shuffle rows ∝ k·dim·partitions,
-  * independent of corpus size. The ONLY driver materialization is the
-  * k×dim centroid model (same contract as AnnTuning's sampled stats);
-  * assignments never leave the executors.
+  * Scale mechanics: training is ONE Spark job — a top-(256·k) collect of
+  * the non-null embeddings by (xxhash64(vec_id), vec_id), Faiss's
+  * `max_points_per_centroid` bound, so the whole input whenever n ≤ 256·k
+  * — and Lloyd runs on the driver over those primitive arrays. The
+  * distributed loop it replaces (a count, a seeding aggregate, then an
+  * assignment scan plus a (cluster, dim) shuffle per iteration) paid job
+  * overhead, not compute, and is kept as the test reference it must match
+  * bit for bit. Assignments are a lazy [[assignWith]] projection over the
+  * caller's whole frame and never leave the executors.
   */
 object KMeans {
 
@@ -45,19 +45,11 @@ object KMeans {
     * with ONE scan and no training actions (the d33/AnnTuning serving
     * discipline). Output: (vec_id, embedding, cluster, d2).
     *
-    * Mechanism history (both prior forms measured and retired): the
-    * literal-centroid expression TREE costs O(k·dim) driver
-    * codegen/compile (~2 s of plan time at k=31 — the round-8
-    * dead-end), and the broadcast-rows + min-struct argmin AGGREGATE
-    * (rounds 8–9) pays a full ~n-row exchange per assignment. Since
-    * round 9 assignment is one stateless projection through the native
-    * codegen'd [[graft.functions.NearestCentroid]] expression — the
-    * k×dim model rides as a plan literal (constant PLAN size), the scan
-    * is exchange-free, and the same plan serves batch and streaming
-    * (StreamDrift). Arithmetic is bit-identical to both retired forms:
-    * left-to-right squared-diff fold after float→double widening, strict
-    * `<` keeping the earliest centroid = the (d2 asc, cluster asc)
-    * tie-break (pinned in NearestCentroidSpec and KMeansSpec).
+    * One stateless, exchange-free projection through the native
+    * [[graft.functions.NearestCentroid]] expression with the k×dim model as
+    * one plan literal (constant plan size; the same plan serves batch and
+    * streaming). The expression documents the two retired mechanisms; its
+    * argmin is [[graft.functions.NearestCentroid.nearest]]'s.
     */
   def assignWith(vectors: DataFrame, cents: Array[Array[Double]]): DataFrame = {
     graft.functions.GraftFunctions.register(vectors.sparkSession)
@@ -70,11 +62,9 @@ object KMeans {
         col("__nc.cluster").as("cluster"), col("__nc.d2").as("d2"))
   }
 
-  /** Fit once per `key`, then serve the model from the memo — training is
-    * `iters` driver-coordinated aggregate actions, so a bench/serving pass
-    * after the first should pay ZERO training jobs (PqIndex's contract;
-    * same putIfAbsent-lazy-holder lock discipline).
-    */
+  /** Fit once per `key` (one collect job plus driver-side Lloyd), then
+    * serve the model from the memo: a later pass pays ZERO training jobs
+    * (PqIndex's contract; same putIfAbsent-lazy-holder lock discipline). */
   def fitMemoized(key: String, vectors: DataFrame, k: Int, iters: Int): Model =
     LazyMemo.memoized(memo, s"$key|$k|$iters")(fit(vectors, k, iters))
 
@@ -95,85 +85,103 @@ object KMeans {
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, LazyMemo[Model]]()
 
-  /** Nearest-centroid id and its squared distance for every row —
-    * training's per-iteration assignment, same native-expression
-    * projection as [[assignWith]] (bit-identical by construction; the
-    * retired literal-tree form is documented there).
-    */
-  private def assign(vectors: DataFrame, cents: Array[Array[Double]]): DataFrame =
-    assignWith(vectors, cents)
+  /** Faiss's default `max_points_per_centroid`: training reads ≤ 256·k points. */
+  private val PointsPerCentroid = 256
 
-  /** Run `iters` Lloyd iterations with deterministic rank-spaced seeding;
-    * k may be reduced if the input has fewer vectors than clusters.
+  /** Training rows in (xxhash64(vec_id), vec_id) order; `vecs(i)` is vector `ids(i)`. */
+  private[operators] final case class Points(
+      ids: Array[Long], hashes: Array[Long], vecs: Array[Array[Double]])
+
+  /** ONE Spark job: the non-null embeddings with the lowest (xxhash64(vec_id),
+    * vec_id), at most 256·k of them — a deterministic sample that is the
+    * whole input whenever n ≤ 256·k; `vec_id` must be an int or long column.
+    * A dimension mismatch throws, naming the vec_id and both sizes.
+    */
+  private[operators] def trainingPoints(vectors: DataFrame, k: Int): Points = {
+    import vectors.sparkSession.implicits._
+    val rows = vectors.where(col("embedding").isNotNull)
+      .select(col("vec_id"), xxhash64(col("vec_id")).as("h"),
+        col("embedding").cast("array<double>"))
+      .orderBy("h", "vec_id").limit(PointsPerCentroid * k)
+      .as[(Long, Long, Array[Double])].collect()
+    rows.find(_._3.length != rows(0)._3.length).foreach { case (id, _, v) =>
+      throw new IllegalArgumentException("k-means needs a fixed-dimension input: " +
+        s"vec_id $id has ${v.length} elements, vec_id ${rows(0)._1} has ${rows(0)._3.length}")
+    }
+    Points(rows.map(_._1), rows.map(_._2), rows.map(_._3))
+  }
+
+  /** `iters` Lloyd iterations over `p` on the driver, bit-identical to the
+    * retired distributed trainer: the seeding regimes above, `nearest`'s
+    * argmin, and Spark's `avg` over [[decimalUnits]] — an exact sum,
+    * divided at scale 39 then rounded to scale 14, both HALF_UP. k may be
+    * reduced if `p` has fewer points.
+    */
+  private[operators] def lloyd(p: Points, k: Int, iters: Int)
+      : (Array[Array[Double]], Seq[Double]) = {
+    val n = p.vecs.length
+    require(n > 0, "cannot cluster an empty relation")
+    val kEff = math.min(k, n)
+    var cents: Array[Array[Double]] =
+      if (n >= 16L * kEff) {
+        val seed = Array.fill(kEff)(-1)
+        for (i <- 0 until n) {
+          val b = java.lang.Math.floorMod(p.hashes(i), kEff.toLong).toInt
+          if (seed(b) < 0 || p.ids(i) < p.ids(seed(b))) seed(b) = i
+        }
+        seed.filter(_ >= 0).map(p.vecs(_))
+      } else {
+        val byId = p.ids.indices.sortBy(p.ids(_))
+        (0 until n by math.max(1, n / kEff)).take(kEff).map(r => p.vecs(byId(r))).toArray
+      }
+    val units = p.vecs.map(_.map(decimalUnits)) // converted once per fit
+    val wcss = Seq.newBuilder[Double]
+    for (_ <- 1 to iters) {
+      val sums = Array.fill(cents.length, cents(0).length)(JDec.ZERO)
+      val counts = new Array[Long](cents.length)
+      var w = 0.0
+      for (i <- 0 until n) {
+        val (c, d2) = graft.functions.NearestCentroid.nearest(p.vecs(i), cents)
+        w += d2
+        if (c >= 0) {
+          counts(c) += 1
+          val s = sums(c)
+          for (j <- s.indices) s(j) = s(j).add(JDec.valueOf(units(i)(j), 10))
+        }
+      }
+      wcss += w
+      // empty clusters keep their previous centroid
+      cents = cents.indices.map { c =>
+        if (counts(c) == 0) cents(c)
+        else sums(c).map(_.divide(JDec.valueOf(counts(c)), 39, RoundingMode.HALF_UP)
+          .setScale(14, RoundingMode.HALF_UP).doubleValue)
+      }.toArray
+    }
+    (cents, wcss.result())
+  }
+
+  /** `cast(x as decimal(25,10))`'s unscaled value: Spark rounds
+    * `Double.toString(x)` HALF_UP to scale 10. That string and x's exact
+    * value, scaled by 1e10, both lie within 2 ulps of `a`, so unless a
+    * half-unit lies that close they round alike and the string is skipped.
+    * Fails unless |x| < 9.2e8.
+    */
+  private[operators] def decimalUnits(x: Double): Long = {
+    val a = math.abs(x * 1e10)
+    val f = a - math.floor(a)
+    if (a < (1L << 50) && math.abs(f - 0.5) > 16 * math.ulp(a))
+      math.signum(x).toLong * (math.floor(a).toLong + (if (f > 0.5) 1 else 0))
+    else new JDec(java.lang.Double.toString(x)).setScale(10, RoundingMode.HALF_UP)
+      .unscaledValue.longValueExact
+  }
+
+  /** Run `iters` Lloyd iterations on the driver over [[trainingPoints]];
+    * the model's assignments are the lazy [[assignWith]] projection over
+    * all of `vectors` (a NULL embedding gets a NULL cluster).
     */
   def fit(vectors: DataFrame, k: Int, iters: Int): Model = {
     require(k >= 1 && iters >= 1, "k and iters must be positive")
-    // accept array<float> AND array<double> embeddings (r18 review):
-    // assignWith already casts to array<double>, but the seeding
-    // collects read Seq[Float] and ClassCastException'd on a double
-    // column — the cast is scoped to the collects (float→double is
-    // exact, so float corpora train identically; Model.assignments
-    // keeps the caller's embedding type)
-    val seedVec = col("embedding").cast("array<double>")
-    val n = vectors.count()
-    require(n > 0, "cannot cluster an empty relation")
-    val kEff = math.min(k.toLong, n).toInt
-    // Seeding (deterministic, two regimes):
-    //  - production (n ≥ 16·kEff): per-hash-bucket min — each vector
-    //    hashes to one of kEff buckets, the min-vec_id vector per bucket
-    //    seeds it. ONE partial aggregate whose exchange is kEff cells; no
-    //    global sort at any corpus size (the round-10 candidate #1 swap).
-    //    Empty buckets at 16× occupancy are ~e⁻¹⁶ per bucket; a shortfall
-    //    just yields fewer seeds, which every downstream step tolerates.
-    //  - tiny inputs (n < 16·kEff — spec corpora, k ≈ n edges): the
-    //    rank-stride window, where bucket occupancy is not w.h.p. and a
-    //    global sort over n rows is free anyway.
-    var cents: Array[Array[Double]] =
-      if (n >= 16L * kEff) {
-        vectors
-          .withColumn("__b",
-            pmod(xxhash64(col("vec_id")), lit(kEff.toLong)).cast("int"))
-          .groupBy("__b")
-          .agg(min(struct(col("vec_id"), seedVec.as("embedding"))).as("s"))
-          .orderBy("__b")
-          .select(col("s.embedding"))
-          .collect()
-          .map(_.getSeq[Double](0).toArray)
-      } else {
-        val w = org.apache.spark.sql.expressions.Window.orderBy("vec_id")
-        val stride = math.max(1L, n / kEff)
-        vectors
-          .withColumn("__rn", row_number().over(w))
-          .filter((col("__rn") - 1) % stride === 0)
-          .orderBy("vec_id").limit(kEff)
-          .select(seedVec.as("embedding"))
-          .collect()
-          .map(_.getSeq[Double](0).toArray)
-      }
-    val wcss = Seq.newBuilder[Double]
-    for (_ <- 1 to iters) {
-      val assigned = assign(vectors, cents)
-      // ONE aggregate per iteration: the k×dim centroid cells carry the
-      // per-cluster WCSS along (sum_d2 repeats per pos — redundant but
-      // k×dim rows are model-sized, so a second pass would cost more).
-      val cells = assigned
-        .select(col("cluster"), col("d2"), posexplode(col("embedding")))
-        .groupBy("cluster", "pos")
-        .agg(avg(col("col").cast("decimal(25,10)")).as("mean"),
-          sum("d2").as("sum_d2"), count(lit(1)).as("n"))
-        .collect()
-      // row layout: (cluster, pos, mean, sum_d2, n)
-      wcss += cells.groupBy(_.getInt(0)).map { case (_, rows) =>
-        rows.head.getDouble(3) // sum_d2 repeats per pos within a cluster
-      }.sum
-      val byCluster = cells.groupBy(_.getInt(0)).map { case (cid, rows) =>
-        cid -> rows.sortBy(_.getInt(1))
-          .map(_.getDecimal(2).doubleValue()).toArray
-      }
-      // empty clusters keep their previous centroid
-      cents = cents.zipWithIndex.map { case (c, i) => byCluster.getOrElse(i, c) }
-    }
-    Model(cents, wcss.result(),
-      assign(vectors, cents).select("vec_id", "cluster"))
+    val (cents, wcss) = lloyd(trainingPoints(vectors, k), k, iters)
+    Model(cents, wcss, assignWith(vectors, cents).select("vec_id", "cluster"))
   }
 }

@@ -1,17 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Product-quantization codebooks for an embedding corpus: the vector
   * space is cut into `M` contiguous subspaces and each subspace gets a
-  * `K`-entry codebook trained by [[KMeans]] on that slice. The model is
-  * driver-sized (M·K·sub doubles — the same "only the model reaches the
-  * driver" contract as [[KMeans]] and [[AnnTuning]]) and MEMOIZED per
-  * corpus key: training is a one-time cost (it lands in a bench's first
-  * pass, like AnnTuning's sampled tuning), while every later use embeds
-  * the codebooks as plan literals. Same lock discipline as AnnTuning's
-  * round-4 fix: `putIfAbsent` publishes a lazy holder so the multi-job
+  * `K`-entry codebook trained by [[KMeans.lloyd]] on that slice. Training
+  * is ONE Spark job (the corpus's [[KMeans.trainingPoints]] collect, which
+  * rejects a mixed-dimension corpus) plus driver-side Lloyd on slices of
+  * those arrays for all M subspaces. The model is M·K·sub doubles,
+  * MEMOIZED per corpus key, and every later use embeds the codebooks as
+  * plan literals. `putIfAbsent` publishes a lazy holder so
   * training never runs inside a ConcurrentHashMap bin lock, and the key
   * carries every parameter the model depends on.
   */
@@ -44,22 +43,14 @@ object PqIndex {
     memo.put(s"$key|$m|$k|$iters", new LazyMemo(() => model))
 
   private def doTrain(nv: DataFrame, m: Int, k: Int, iters: Int): Model = {
-    val dimRow = nv.select(max(size(col("nvec"))), min(size(col("nvec")))).collect()(0)
-    require(!dimRow.isNullAt(0),
+    val pts = KMeans.trainingPoints(nv.select(col("vec_id"), col("nvec").as("embedding")), k)
+    require(pts.vecs.nonEmpty,
       "cannot train PQ codebooks on an empty corpus (no normalizable vectors)")
-    val dim = dimRow.getInt(0)
-    // a mixed-dimension corpus would pass the divisibility gate yet slice
-    // short/misaligned subvectors, silently degrading codes — fail fast
-    require(dimRow.getInt(1) == dim,
-      s"PQ needs a fixed-dimension corpus; saw sizes ${dimRow.getInt(1)}..$dim")
+    val dim = pts.vecs(0).length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    val books = (0 until m).map { i =>
-      KMeans.fit(
-        nv.select(col("vec_id"),
-          expr(s"slice(nvec, ${i * sub + 1}, $sub)").as("embedding")),
-        k = k, iters = iters).centroids
-    }
-    Model(dim, sub, books)
+    Model(dim, sub, (0 until m).map { i =>
+      KMeans.lloyd(pts.copy(vecs = pts.vecs.map(_.slice(i * sub, (i + 1) * sub))), k, iters)._1
+    })
   }
 }

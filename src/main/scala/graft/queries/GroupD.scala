@@ -1078,9 +1078,10 @@ object GroupD {
     * final-assignment self-consistency, and full coverage.
     */
   /** The corpus's shared k-means model (d27 + d39): trained once per
-    * corpus and served from the memo (round 8 — d33's discipline; repeat
-    * runs re-derive assignments in ONE scan with zero training actions;
-    * deterministic fit ⇒ memo == retrain, pinned via the clearMemo seam).
+    * corpus (one collect job plus driver-side Lloyd) and served from the
+    * memo (round 8 — d33's discipline; repeat runs re-derive assignments
+    * in ONE scan with zero training jobs; deterministic fit ⇒ memo ==
+    * retrain, pinned via the clearMemo seam).
     * k grows with the corpus at a CONSTANT ~64-vector target cluster size
     * (SemDeDup's k ∝ n regime) with a floor of 8 — so within-cluster
     * pairwise work in d39 stays LINEAR (n/64 clusters × 64² pairs = 64n).
@@ -1372,8 +1373,8 @@ object GroupD {
       M: Int = 4, K: Int = 16, C: Int = 50): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val nv = pqNormalized(e)
-    // one-time training per corpus (memoized; the codebooks are
-    // driver-sized), then code assignment + reconstruction FUSE into a
+    // one-time training per corpus (memoized; one collect job, the
+    // codebooks are driver-sized), then code assignment + reconstruction FUSE into a
     // single projection over codebook literals — a bench/serving pass
     // after the first never runs a training job (AnnTuning's discipline)
     val model = graft.operators.PqIndex.train(key, nv, M, K, iters = 2)
@@ -1413,7 +1414,7 @@ object GroupD {
     typedLit(model.codebooks(m).map(_.toSeq).toSeq)
 
   /** PQ code assignment over codebook literals: per subspace, the
-    * argmin-by-(d2, j) code (KMeans.assign's exact tie-break) from the
+    * argmin-by-(d2, j) code (NearestCentroid.nearest's exact tie-break) from the
     * `nvec` column — an M-int array, the 4-byte payload a PQ store
     * shuffles and persists. Shared by d33 (fused with decode) and d60
     * (shuffled through the candidate join). r21: the argmin runs as the

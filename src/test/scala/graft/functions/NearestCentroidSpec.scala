@@ -7,7 +7,7 @@ import graft.TestSpark
 
 /** Native nearest-centroid expression: bit-identical to the batch
   * KMeans.assignWith argmin, earliest-centroid tie-break, loud NULLs on
-  * malformed models, codegen/eval agreement.
+  * malformed models, codegen/eval/driver-argmin agreement.
   */
 class NearestCentroidSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -57,7 +57,14 @@ class NearestCentroidSpec extends AnyFunSuite {
       val out = e.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
       s"[[${out.getInt(0)},${out.getDouble(1)}]]"
     }
+    // the driver trainer's argmin over plain arrays
+    val viaDriver = rows.map { r =>
+      val (c, d2) = NearestCentroid.nearest(r.getSeq[Double](1).toArray,
+        cents.map(_.toArray).toArray)
+      s"[[$c,$d2]]"
+    }
     assert(viaCodegen.sameElements(viaEval))
+    assert(viaCodegen.sameElements(viaDriver))
   }
 
   test("equidistant centroids tie-break to the EARLIEST (assignWith's rule)") {

@@ -69,7 +69,7 @@ class KMeansSpec extends AnyFunSuite {
     }
   }
 
-  test("serving assignWith (broadcast argmin) equals training's literal-centroid assign") {
+  test("model assignments equal assignWith over the returned centroids") {
     val m = KMeans.fit(vectors, k = 8, iters = 2)
     val trained = m.assignments.collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -77,7 +77,7 @@ class KMeansSpec extends AnyFunSuite {
       .select("vec_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(trained.nonEmpty && served == trained,
-      "the two assignment mechanisms must agree bit-for-bit")
+      "the model's lazy assignments must be assignWith over its centroids")
   }
 
   test("memoized fit serves the cached model; a cleared retrain is identical") {
@@ -97,5 +97,29 @@ class KMeansSpec extends AnyFunSuite {
     val m = KMeans.fit(tiny, k = 8, iters = 1)
     assert(m.centroids.length == 3)
     assert(m.assignments.select("cluster").distinct().count() == 3)
+  }
+
+  test("NULL embeddings are skipped in training and get a NULL cluster") {
+    import spark.implicits._
+    val df = Seq((0L, None), (1L, Some(Array(0.0, 0.0))), (2L, Some(Array(1.0, 1.0))),
+      (3L, Some(Array(5.0, 5.0))), (4L, Some(Array(6.0, 6.0))))
+      .toDF("vec_id", "embedding")
+    val m = KMeans.fit(df, k = 2, iters = 2)
+    assert(m.centroids.map(_.toSeq).toSeq == Seq(Seq(0.5, 0.5), Seq(5.5, 5.5)))
+    val got = m.assignments.collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(got == Map(0L -> None, 1L -> Some(0), 2L -> Some(0), 3L -> Some(1), 4L -> Some(1)))
+  }
+
+  test("a dimension mismatch fails naming the vec_id and both sizes") {
+    import spark.implicits._
+    val df = Seq((1L, Array(0.0, 0.0)), (2L, Array(1.0, 1.0)), (3L, Array(5.0, 5.0)),
+      (4L, Array(6.0))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](KMeans.fit(df, k = 2, iters = 1))
+    // the first row in training order sets the expected size: vec 4 is
+    // named either as the offender or as that first row
+    val msg = e.getMessage
+    assert(msg.contains("fixed-dimension") && msg.contains("vec_id 4 has") &&
+      msg.contains("has 1") && msg.contains("has 2"), msg)
   }
 }

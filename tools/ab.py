@@ -11,8 +11,11 @@ there on its first perfbench run. Then, for seeds 1..N, ``perfbench/run.py
 so that drift of the host hits both sides alike. Each tree runs its own
 ``perfbench``. For every metric the report gives each side's median and
 quartiles, the ratio of the medians, how many pairs the change lost (the
-better direction taken from ``BENCHMARK.json``) and the ratio change/base of
-every pair. Files are written only under ``--dir`` and the two
+better direction taken from ``BENCHMARK.json``), for each end-to-end metric a
+verdict (``gain``: the change won at least 9 in 10 pairs and the median gap
+exceeds the base's interquartile range; ``regressed``: worse than the
+metric's ``BENCHMARK.json`` bound; ``flat`` otherwise) and the ratio
+change/base of every pair. Files are written only under ``--dir`` and the two
 trees' ``.bench_build/``. Exits 1 when any run fails or is incorrect.
 """
 import argparse
@@ -62,18 +65,38 @@ def bench(tree, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
+def quartiles(xs):
+    """[q1, median, q3] of xs; the quartiles need at least two values."""
+    return statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+
+
 def spread(xs):
-    """median [q1 q3] of xs; the quartiles need at least two values."""
-    q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0], xs[0], xs[0]]
+    """median [q1 q3] of xs."""
+    q = quartiles(xs)
     return f"{q[1]:.4g} [{q[0]:.4g} {q[2]:.4g}]"
 
 
-def directions():
-    """metric -> True when higher is better, from BENCHMARK.json."""
+def metric_specs():
+    """(metric -> True when higher is better, end-to-end metric -> bound), from BENCHMARK.json."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    return {m["name"]: m["better"] == "higher"
-            for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+    higher = {m["name"]: m["better"] == "higher"
+              for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+    return higher, {m["name"]: m["bound"] for m in spec.get("end_to_end", [])}
+
+
+def verdict(vals, up, bound):
+    """`gain` when the change won at least 9 in 10 pairs and the median gap exceeds the
+    base's q3 - q1; `regressed` when the median is worse than the base's by more than
+    `bound` (relative); `flat` otherwise."""
+    base, change = (list(side) for side in zip(*vals))
+    mb, mc = statistics.median(base), statistics.median(change)
+    better = mc - mb if up else mb - mc
+    if mb and -better / abs(mb) > bound:
+        return "regressed"
+    won = sum((c > b) if up else (c < b) for b, c in vals)
+    q1, _, q3 = quartiles(base)
+    return "gain" if 10 * won >= 9 * len(vals) and better > q3 - q1 else "flat"
 
 
 def main():
@@ -100,11 +123,11 @@ def main():
             runs[side].append(r if ok else None)
             got = {k: round(v["value"], 4) for k, v in r["metrics"].items()} if r else "failed"
             print(f"ab: seed {seed} {side}: {got}", file=sys.stderr)
-    higher = directions()
+    higher, bounds = metric_specs()
     pairs = [(b, c) for b, c in zip(runs["base"], runs["change"]) if b and c]
     names = sorted({k for b, c in pairs for k in b["metrics"]})
     print("metric: median [q1 q3] base -> change, median ratio, pairs the change lost, "
-          "per-pair change/base")
+          "verdict (end-to-end metrics), per-pair change/base")
     for name in names:
         vals = [(b["metrics"][name]["value"], c["metrics"][name]["value"]) for b, c in pairs
                 if name in b["metrics"] and name in c["metrics"]]
@@ -113,8 +136,9 @@ def main():
         mb, mc = (statistics.median(side) for side in zip(*vals))
         up = higher.get(name, False)
         slower = sum((c < b) if up else (c > b) for b, c in vals)
+        judged = f"{verdict(vals, up, bounds[name])}, " if name in bounds else ""
         print(f"{name}: {spread([b for b, _ in vals])} -> {spread([c for _, c in vals])}, "
-              f"{mc / mb if mb else float('nan'):.3f}, lost {slower}/{len(vals)}, "
+              f"{mc / mb if mb else float('nan'):.3f}, lost {slower}/{len(vals)}, {judged}"
               + " ".join(f"{c / b:.3f}" if b else "nan" for b, c in vals))
     if bad:
         print(f"ab: {bad} run(s) failed or were incorrect", file=sys.stderr)
