@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumn
+
+import graft.functions.UrlCanon
 
 /** Group C — LLM-data-pipeline operators (SURVEY.md §2.3 Group C; the
   * BASELINE north-star surface): deduplication, near-dup detection,
@@ -803,10 +806,13 @@ object GroupC {
   private[queries] def c13Url: Column =
     expr(c13UrlSql(e => s"CAST($e AS STRING)"))
 
-  /** The normalization kernel's patterns — one set of constants feeds
-    * both engines ([.]/[?] classes instead of backslash escapes, so the
+  /** The normalization rules as regex patterns — the DuckDB oracle's
+    * spelling ([[c13NormCtes]], [[urlDomainSql]]) and, under Java regex,
+    * the test reference the [[graft.functions.UrlCanon]] scan is diffed
+    * against ([.]/[?] classes instead of backslash escapes, so the
     * literals survive every quoting layer identically; all valid and
-    * semantically identical under Java regex and RE2). End anchors are
+    * semantically identical under Java regex and RE2 except for `.` on
+    * the line terminators RE2 does not treat as one). End anchors are
     * `\z` (end of INPUT in both engines), not `$`: Java's default `$`
     * also matches before a trailing line terminator where RE2's does
     * not — `\z` removes that latent divergence for adversarial inputs
@@ -833,17 +839,16 @@ object GroupC {
   private[queries] val UrlDomainP   = "([^.]+[.][^.]+)\\z"
   private[queries] val UrlMultiColonP = ":[^:]*:"
 
-  private def urlHostNorm(u: Column): Column =
-    regexp_replace(regexp_replace(
-      lower(regexp_extract(u, UrlHostportP, 1)), UrlPortStripP, ""),
-      UrlWwwP, "")
-
   /** Canonical URL from a raw one: lowercase scheme+host, strip `www.`,
     * drop the port iff it is the scheme's default (443/https, 80/http),
     * strip a trailing `/index.html` to `/`, drop tracking params
     * (`utm_*`, `fbclid`, `gclid`, `ref`) and the `?` itself when nothing
-    * survives, drop the fragment. Pure codegen'd regexp chain — a
-    * scan-side projection, reusable in front of any URL-keyed dedup.
+    * survives, drop the fragment. One codegen'd char scan
+    * ([[graft.functions.UrlCanon]], no regex) — a scan-side projection,
+    * reusable in front of any URL-keyed dedup, cheap wherever Catalyst
+    * copies it (a pushed-down filter, a join condition). It equals the
+    * regexp chain over the `Url*P` patterns above (the oracle's
+    * [[c13NormCtes]] spelling) on every input; UrlCanonDiffSpec pins it.
     *
     * REFUSED with NULL (the decoder discipline — junk never silently
     * canonicalizes to a colliding degenerate value; a NULL key drops
@@ -857,31 +862,7 @@ object GroupC {
     * adversarial corpus and spec-pinned on the constructed one).
     */
   def urlNormalize(u: Column): Column =
-    when(urlRefused(u), lit(null)).otherwise(urlNormalizeAccepted(u))
-
-  private[queries] def urlRefused(u: Column): Column =
-    regexp_extract(u, UrlSchemeP, 1) === "" ||
-      regexp_extract(regexp_extract(u, UrlHostportP, 1),
-        UrlMultiColonP, 0) =!= ""
-
-  private def urlNormalizeAccepted(u: Column): Column = {
-    val scheme = lower(regexp_extract(u, UrlSchemeP, 1))
-    val hostport = lower(regexp_extract(u, UrlHostportP, 1))
-    val port = regexp_extract(hostport, UrlPortP, 1)
-    val portN = when(port === "" ||
-        (scheme === "https" && port === "443") ||
-        (scheme === "http" && port === "80"), lit(""))
-      .otherwise(concat(lit(":"), port))
-    val rest = regexp_extract(u, UrlRestP, 1)
-    val path0 = regexp_extract(rest, UrlPathP, 1)
-    val path = when(path0 === "", lit("/"))
-      .otherwise(regexp_replace(path0, UrlIndexP, "/"))
-    val qN = regexp_replace(
-      regexp_replace(regexp_extract(rest, UrlQueryP, 1), UrlTrackingP, ""),
-      UrlLeadAmpP, "")
-    concat(scheme, lit("://"), urlHostNorm(u), portN, path,
-      when(qN === "", lit("")).otherwise(concat(lit("?"), qN)))
-  }
+    ExpressionColumn.map(u)(UrlCanon(_, toDomain = false))
 
   /** Registered domain (last two host labels, after lowering and
     * stripping port + `www.`) — the per-host balancing key (d91).
@@ -894,9 +875,7 @@ object GroupC {
     * prevent; note [[urlNormalize]] still ACCEPTS these hosts — they
     * canonicalize fine, they just don't balance). */
   def urlDomain(u: Column): Column =
-    when(urlRefused(u), lit(null))
-      .otherwise(nullif(regexp_extract(urlHostNorm(u), UrlDomainP, 1),
-        lit("")))
+    ExpressionColumn.map(u)(UrlCanon(_, toDomain = true))
 
   /** c13: URL canonicalization — the declared query: construct each
     * doc's URL, emit the raw URL, its canonical form, and the registered

@@ -4749,7 +4749,7 @@ object GroupD {
     * The normalized frame sits behind the d100-rule lazy-checkpoint
     * barrier (r21, the r20 verdict's fix): the funnel's four metric
     * branches plus both keep-window subtrees otherwise EACH re-derive
-    * the construct+normalize regex chain from the scan — the
+    * the construct+normalize projection from the scan — the
     * both-sides-recompute shape d100 already barriers (six scans in the
     * un-barriered physical plan, plans/r21/d93_url_pipeline_e2e_before
     * .txt). In production the barrier is the canonical-URL table a
@@ -4890,15 +4890,6 @@ object GroupD {
     htmlFrame
       .select(explode(regexp_extract_all(col("html"),
         lit(GroupC.HrefP), lit(1))).as("url"))
-      // r22: dedup the RAW hrefs BEFORE the canonicalization chain —
-      // normalize is deterministic, so distinct∘normalize∘distinct =
-      // distinct∘normalize, and the corpus's link graph repeats each
-      // target many times (~14× at sf0.1): the ~25-regex chain (which
-      // the pushed-down isNotNull additionally evaluates twice per row
-      // — the d30-family inline trap, visible as a Filter below the
-      // Project in plans/r22) ran 18 CPU-s per pass on repeats; one
-      // map-side-partial distinct of raw strings is far cheaper.
-      .distinct()
       .select(GroupC.urlNormalize(col("url")).as("norm_url"))
       .filter(col("norm_url").isNotNull)
       .distinct()

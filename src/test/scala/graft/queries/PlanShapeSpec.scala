@@ -446,6 +446,23 @@ class PlanShapeSpec extends AnyFunSuite {
       "c14 must not join or aggregate")
   }
 
+  test("c13/d92/d95: URL canonicalization plans as the UrlCanon scan, not a regex chain") {
+    // the kernel must survive into the optimized plan wherever Catalyst
+    // copies it (d95: pushed-down filter, join key, projection), and no
+    // call site may fall back to the retired regexp chain
+    import graft.functions.UrlCanon.{DomainName, NormalizeName}
+    for ((q, kernels) <- Seq(
+        "c13_url_normalize" -> Seq(NormalizeName, DomainName),
+        "d92_url_dedup" -> Seq(NormalizeName),
+        "d95_frontier_discovery" -> Seq(NormalizeName, DomainName))) {
+      val p = graft.SparkEntry.queries(q)(spark, sf)
+        .queryExecution.optimizedPlan.toString
+      kernels.foreach(k => assert(p.contains(s"$k("), s"$q lost $k:\n$p"))
+      assert(!p.contains(GroupC.UrlHostportP) && !p.contains(GroupC.UrlTrackingP),
+        s"$q still evaluates the URL regex chain:\n$p")
+    }
+  }
+
   test("d97: robots parse is HOST-grouped; cap prunes map-side; one sort feeds both windows") {
     // c15's scale note made structural (r20): the robots construct+parse
     // must consume the domains-sized DISTINCT frame — at 100 TB the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.queries.UrlKernelFuzzSpec.corpus
 
 /** Fuzz pins for the URL normalization kernel (c13/d91/d92): crawled
   * URLs are an adversarial surface, and the kernel's library contract is
@@ -13,32 +14,11 @@ import graft.TestSpark
   * input. The corpus is seeded-deterministic (no run-to-run flake):
   * random ASCII heavy in URL metacharacters, real-ish prefixes, embedded
   * NUL/newline/unicode, truncations, and pathological repetitions.
+  * Acceptance is the retired regex chain's refusal rule
+  * ([[UrlRegexReference.urlRefused]]), which the kernel must keep.
   */
 class UrlKernelFuzzSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def corpus: Seq[String] = {
-    val rnd = new scala.util.Random(0x18c13L)
-    val meta = ":/?#&=.%@[]\\ \n\t\u0000\u00e9中"
-    val alnum = "abcXYZ019-_~"
-    def randStr(n: Int): String =
-      (0 until n).map { _ =>
-        val pool = if (rnd.nextBoolean()) meta else alnum
-        pool(rnd.nextInt(pool.length))
-      }.mkString
-    val prefixes = Seq("", "http://", "HTTPS://", "ftp://", "//", ":",
-      "http:/", "http:", "a://", "http://:", "http://?", "http://#",
-      "http://h:", "http://h:99999999999999999999/",
-      "http://WWW.", "http://www.www.", "http://h/index.html",
-      "http://h?utm_", "http://h?utm_a=", "http://h?&&&",
-      "http://h?a=1&utm_b=2&", "http://h#", "http://h:80:80/")
-    val repeats = Seq("http://" + "w." * 500 + "x", "http://h/" + "a" * 2000,
-      "http://h?" + "utm_a=1&" * 400, "http://h" + ":80" * 300)
-    val rand = (0 until 1500).map(_ => randStr(1 + rnd.nextInt(60)))
-    val seeded = (0 until 1500).map(_ =>
-      prefixes(rnd.nextInt(prefixes.length)) + randStr(rnd.nextInt(40)))
-    rand ++ seeded ++ prefixes ++ repeats
-  }
 
   test("url kernel: never throws; refusal total; idempotent on accepted; deterministic") {
     import spark.implicits._
@@ -48,7 +28,7 @@ class UrlKernelFuzzSpec extends AnyFunSuite {
       val out = df.select($"id", $"url",
           GroupC.urlNormalize($"url").as("n"),
           GroupC.urlDomain($"url").as("d"))
-        .withColumn("accepted", !GroupC.urlRefused($"url"))
+        .withColumn("accepted", !UrlRegexReference.urlRefused($"url"))
         .cache()
       try {
         out.count() // never throws across the whole corpus
@@ -73,5 +53,31 @@ class UrlKernelFuzzSpec extends AnyFunSuite {
           out2.exceptAll(out.select("id", "n")).isEmpty)
       } finally out.unpersist()
     } finally df.unpersist()
+  }
+}
+
+object UrlKernelFuzzSpec {
+  /** The seeded adversarial corpus, shared with UrlCanonDiffSpec. */
+  def corpus: Seq[String] = {
+    val rnd = new scala.util.Random(0x18c13L)
+    val meta = ":/?#&=.%@[]\\ \n\t\u0000\u00e9中"
+    val alnum = "abcXYZ019-_~"
+    def randStr(n: Int): String =
+      (0 until n).map { _ =>
+        val pool = if (rnd.nextBoolean()) meta else alnum
+        pool(rnd.nextInt(pool.length))
+      }.mkString
+    val prefixes = Seq("", "http://", "HTTPS://", "ftp://", "//", ":",
+      "http:/", "http:", "a://", "http://:", "http://?", "http://#",
+      "http://h:", "http://h:99999999999999999999/",
+      "http://WWW.", "http://www.www.", "http://h/index.html",
+      "http://h?utm_", "http://h?utm_a=", "http://h?&&&",
+      "http://h?a=1&utm_b=2&", "http://h#", "http://h:80:80/")
+    val repeats = Seq("http://" + "w." * 500 + "x", "http://h/" + "a" * 2000,
+      "http://h?" + "utm_a=1&" * 400, "http://h" + ":80" * 300)
+    val rand = (0 until 1500).map(_ => randStr(1 + rnd.nextInt(60)))
+    val seeded = (0 until 1500).map(_ =>
+      prefixes(rnd.nextInt(prefixes.length)) + randStr(rnd.nextInt(40)))
+    rand ++ seeded ++ prefixes ++ repeats
   }
 }

@@ -2,13 +2,15 @@
 """Paired A/B of the working tree against a base git revision on perfbench.
 
     python3 tools/ab.py --base <rev> --dir <base-checkout-dir> \\
-        [--workload csv_jobs] [--pairs 10] [--seconds 10]
+        [--workload csv_jobs] [--pairs 10] [--first-seed 1] [--seconds 10]
 
 Run from the repository root. The base revision's tree is extracted into
 ``--dir`` (``git archive``; reused while it holds the same commit) and builds
-there on its first perfbench run. Then, for seeds 1..N, ``perfbench/run.py
---trace 0`` runs once in each tree, the order alternating from seed to seed
-so that drift of the host hits both sides alike. Each tree runs its own
+there on its first perfbench run. Then, for seeds S..S+N-1 (``--first-seed``
+S, default 1, so a claim can be re-checked on seeds held out during
+development), ``perfbench/run.py --trace 0`` runs once in each tree, the base
+first on odd seeds and the change first on even ones, so that drift of the
+host hits both sides alike. Each tree runs its own
 ``perfbench``. For every metric the report gives each side's median and
 quartiles, the ratio of the medians, how many pairs the change lost (the
 better direction taken from ``BENCHMARK.json``), for each end-to-end metric a
@@ -105,16 +107,19 @@ def main():
     ap.add_argument("--dir", required=True, help="directory for the base checkout")
     ap.add_argument("--workload", default="csv_jobs")
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--seconds", type=float, default=10)
     a = ap.parse_args()
     base_dir = os.path.abspath(a.dir)
     if os.path.commonpath([base_dir, ROOT]) == ROOT:
         sys.exit("ab: --dir must lie outside the working tree")
     sha = checkout(a.base, base_dir)
-    print(f"ab: base {sha[:12]} in {base_dir}; {a.pairs} pairs of {a.workload}", file=sys.stderr)
+    seeds = range(a.first_seed, a.first_seed + a.pairs)
+    print(f"ab: base {sha[:12]} in {base_dir}; {a.pairs} pairs of {a.workload}, "
+          f"seeds {seeds.start}..{seeds.stop - 1}", file=sys.stderr)
     runs = {"base": [], "change": []}
     bad = 0
-    for seed in range(1, a.pairs + 1):
+    for seed in seeds:
         order = [("base", base_dir), ("change", ROOT)]
         for side, tree in order if seed % 2 else reversed(order):
             r = bench(tree, a.workload, seed, a.seconds)
