@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.LazyMemo
+import graft.operators.{LazyMemo, PerceptualDedup}
 
 /** Group D — scale-path extensions of the Group C LLM-pipeline surface:
   * the sketch/bucketed formulations a 100 TB corpus needs where Group C's
@@ -3708,24 +3708,102 @@ object GroupD {
       "130B0000130B0000" +
       "0000000000000000"
 
-  /** The 64 comparison bits of doc_id's constructed pattern: family base
-    * bit (double middle-square mix — measured zero cross-family pairs at
-    * 5 000 docs where one squaring round still left 844 structural
-    * near-collisions) XOR a run of `doc_id mod 4` per-doc flips starting
-    * at position `doc_id mod 61` — all bigint arithmetic the oracle
-    * repeats verbatim, with every intermediate reduced below √(2⁶³) so
-    * neither engine's multiplication can overflow at any scale factor.
+  /** One media modality's constructed corpus, stated once for Spark and
+    * the DuckDB oracle: the 64 comparison bits of doc_id's pattern are a
+    * family base bit — shared by `fam` consecutive doc_ids, a double
+    * middle-square mix of ((doc_id div fam)·mult + k·kMult + add) mod
+    * 1000000007 (measured zero cross-family pairs at 5 000 docs where
+    * one squaring round still left 844 structural near-collisions) —
+    * XOR a run of `doc_id mod widthMod` per-doc flips starting at
+    * position `doc_id mod window`. All bigint arithmetic, with every
+    * intermediate reduced below √(2⁶³) so neither engine's
+    * multiplication can overflow at any scale factor.
     */
-  private val bmpBitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((((doc_id div 4) * 1000003L + k * 7919L + 12345L) % 1000000007L)" +
-      " * (((doc_id div 4) * 1000003L + k * 7919L + 12345L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 4) * 1000003L + k * 7919L + 12345L) % 1000000007L)" +
-      " * (((doc_id div 4) * 1000003L + k * 7919L + 12345L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L" +
-      " + IF(k >= doc_id % 61 AND k < doc_id % 61 + doc_id % 4, 1L, 0L))" +
-      " % 2L))"
+  private final case class MediaFamily(fam: Long, mult: Long, kMult: Long,
+      add: Long, window: Long, widthMod: Long) {
+
+    /** Spark SQL: the pattern as a 64-element array of 0L/1L. */
+    def bitsExpr: String = {
+      val x = s"(((doc_id div $fam) * ${mult}L + k * ${kMult}L + ${add}L)" +
+        " % 1000000007L)"
+      val sq = s"($x * $x % 2147483647L)"
+      s"transform(sequence(0L, 63L), k -> (($sq * $sq % 2147483647L" +
+        s" div 1024L % 2L + IF(k >= doc_id % $window" +
+        s" AND k < doc_id % $window + doc_id % $widthMod, 1L, 0L)) % 2L))"
+    }
+
+    /** DuckDB: the same bits as (doc_id, k, b) rows over relation `d`. */
+    def bitsCte(name: String): String =
+      s"""$name AS (
+         |  SELECT doc_id, k,
+         |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
+         |       // 1024 % 2
+         |     + CASE WHEN k >= doc_id % $window AND k < doc_id % $window + doc_id % $widthMod
+         |            THEN 1 ELSE 0 END) % 2 AS b
+         |  FROM (SELECT doc_id, k,
+         |          ((doc_id // $fam) * $mult + k * $kMult + $add)
+         |            % 1000000007 AS x
+         |        FROM d, range(64) t(k)))""".stripMargin
+
+    /** DuckDB: the hub's pair oracle — every pair of parseable docs
+      * within Hamming 3, computed from the bits directly (it never sees
+      * bytes). */
+    def pairOracleSql: String =
+      s"""WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
+         |${bitsCte("bits")},
+         |h AS (
+         |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
+         |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
+         |           AS hamming
+         |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
+         |ORDER BY doc_a, doc_b""".stripMargin
+  }
+
+  // each modality's mixer constants are distinct so the families cluster
+  // differently; PNG flips up to 4 bits per doc, the others up to 3
+  private val BmpFamily = MediaFamily(4, 1000003, 7919, 12345, 61, 4)
+  private val WavFamily = MediaFamily(5, 999983, 8263, 54321, 59, 4)
+  private val PngFamily = MediaFamily(6, 1000033, 7489, 13579, 57, 5)
+  private val Y4mFamily = MediaFamily(7, 999979, 9001, 11213, 53, 4)
+  private val XfmtFamily = MediaFamily(4, 1000099, 7591, 24680, 51, 4)
+  private val GifFamily = MediaFamily(8, 1000121, 7723, 97531, 47, 4)
+
+  /** The construct→decode head every media hub shares (d79 and d88's
+    * features too): one (doc_id, `out`) row per doc, where `out` is
+    * `decode` over the bytes `content` renders from the `bits` array.
+    * Two barriers shape it:
+    *   - the CONSTRUCTION barrier after `bits`: without it
+    *     CollapseProject inlines the 64-element `bits` transform into
+    *     each of the construction walk's ~128 array references and the
+    *     interpreted HOF re-evaluates it per reference (measured 49 s at
+    *     sf0.1 for d78; 1.3 s with the barrier). It carries tiny
+    *     (doc_id, 64×long) rows and exists only on the synthetic-bytes
+    *     side — the real pipeline reads `content` from parquet and
+    *     starts at the decode;
+    *   - the DECODE-ONCE barrier after the decode: downstream the band
+    *     transform and both join sides reference the decoded column —
+    *     inlined, every reference would rebuild the bytes and re-decode
+    *     them. Materialized here, construct+decode runs once per doc and
+    *     a self-join's two sides reuse this one exchange.
+    * There is deliberately NO isNotNull filter on the decoded column: it
+    * would push through the barrier and land next to the bits/content
+    * projections, where predicate inlining rebuilds and re-decodes the
+    * bytes once per reference (measured 25 s of the original 27 s at
+    * sf0.1). Unparseable rows (NULL hash) produce NULL band keys and die
+    * in the inner equi-join with zero extra code.
+    */
+  private def decoded(spark: SparkSession, sfDir: String, bits: String,
+      content: String, decode: String, out: String = "hash"): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), expr(bits).as("bits"))
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), expr(content).as("content"))
+      .select(col("doc_id"), expr(decode).as(out))
+      .repartition(col("doc_id"))
+  }
 
   /** The 8 storage rows (bottom row first) as hex: each logical row is a
     * luma walk from 128 stepping −10 on a 1-bit, +10 on a 0-bit, so
@@ -3748,45 +3826,18 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$BmpHeaderHex', $bmpPixelsHex)))"
 
-  /** d78's construct→decode stage: one (doc_id, dhash) row per parseable
-    * image — split out so specs/tools can probe the decode separately
-    * from the banding join. It ends in a lazy checkpoint: its consumers
-    * (the d78 pair build, d83's incremental probe/standing split, d90's
-    * decode census) read the materialized (doc_id, 8-byte dhash) rows,
-    * and the checkpoint leaf supersedes the second repartition
-    * barrier's anti-inline job for them (the barrier stays for the plan
-    * shape).
+  /** d78's construct→decode stage: one (doc_id, hash) row per doc (NULL
+    * for junk) — split out so d83's incremental probe/standing split and
+    * d90's decode census read it without the banding join. It ends in a
+    * lazy checkpoint: its consumers read the materialized (doc_id,
+    * 8-byte hash) rows, and the checkpoint leaf supersedes the
+    * decode-once barrier's anti-inline job for them (the barrier stays
+    * for the plan shape).
     */
-  def d78Hashed(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(bmpBitsExpr).as("bits"))
-      // CONSTRUCTION-ONLY barrier: without it CollapseProject inlines the
-      // 64-element `bits` transform into each of the pixel walk's ~128
-      // array references and the interpreted HOF re-evaluates it per
-      // reference (measured 49 s at sf0.1; 1.3 s with the barrier). The
-      // exchange carries 5 000 tiny (doc_id, 64×long) rows and exists
-      // only on the synthetic-bytes side — the real pipeline reads
-      // `content` from parquet and starts at the decode below.
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), expr(bmpContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .BmpDhashName}(content)").as("dhash"))
-      // NO isNotNull filter here, deliberately: a Filter on `dhash`
-      // pushes through the repartition barrier below it and lands
-      // adjacent to the bits/content projections, where predicate
-      // inlining rebuilds and re-decodes the bytes once per reference —
-      // measured 25 s of the original 27 s at sf0.1. Unparseable rows
-      // (NULL dhash) produce NULL band keys and die in the inner
-      // equi-join with zero extra code.
-      // second barrier: downstream the band transform and both join
-      // sides reference `dhash` — inlined, every reference would rebuild
-      // the bytes and re-decode them. Materializing the (doc_id, 8-byte
-      // dhash) rows here means construct+decode runs once per doc, and
-      // the self-join's two sides REUSE this one exchange.
-      .repartition(col("doc_id"))
+  def d78Hashed(spark: SparkSession, sfDir: String): DataFrame =
+    decoded(spark, sfDir, BmpFamily.bitsExpr, bmpContentExpr,
+      s"${graft.functions.GraftFunctions.BmpDhashName}(content)")
       .localCheckpoint(false)
-  }
 
   /** d79: IMAGE RESIZE — the real pixel transform the multimodal
     * mandate's resize step called for ([[graft.functions.BmpResize]]:
@@ -3831,16 +3882,11 @@ object GroupD {
       s"unhex(concat('$Bmp18HeaderHex', $bmp18PixelsHex)))"
 
   def d79ImageResize(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val resized = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(bmpBitsExpr).as("bits"))
-      .repartition(col("doc_id")) // d78's construction barrier
-      .select(col("doc_id"), expr(bmp18ContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .BmpResizeName}(content, 9, 8)").as("resized"))
-      // materialize the resized bytes once: the dims walks and the dHash
-      // below each reference them several times
-      .repartition(col("doc_id"))
+    // the decode-once barrier materializes the resized bytes once: the
+    // dims walks and the dHash below each reference them several times
+    val resized = decoded(spark, sfDir, BmpFamily.bitsExpr, bmp18ContentExpr,
+      s"${graft.functions.GraftFunctions.BmpResizeName}(content, 9, 8)",
+      out = "resized")
     graft.multimodal.Multimodal.imageDimsPlan(resized, "resized")
       .select(col("doc_id"),
         col("img_format").as("r_format"),
@@ -3855,29 +3901,8 @@ object GroupD {
     * frame d80's component labeling consumes (d1Pairs/d14's shape at the
     * image modality).
     */
-  def d78Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val hashed = d78Hashed(spark, sfDir)
-    val bands = hashed.select(col("doc_id"), col("dhash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-        .as(Seq("band", "key")))
-    bands.as("x").hint("merge")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        // coalesce is a semantic no-op (matched rows always carry
-        // non-null hashes — a NULL hash yields NULL band keys and never
-        // survives the equi-join) but it is NULL-TOLERANT, so constraint
-        // inference cannot derive `isnotnull(dhash)` from this predicate
-        // and push it below the barriers — where the inlined
-        // reconstruction costs 25 s at sf0.1 (same pathology as the
-        // removed explicit filter, see d78Hashed).
-        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-          " as bigint)").as("hamming"))
-      .filter(col("hamming") <= 3L)
-      .distinct()
-  }
+  def d78Pairs(spark: SparkSession, sfDir: String): DataFrame =
+    PerceptualDedup.selfPairs(d78Hashed(spark, sfDir), maxDist = 3)
 
   def d78ImageDedup(spark: SparkSession, sfDir: String): DataFrame =
     d78Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -3924,7 +3949,7 @@ object GroupD {
   def d81ImageKeepBest(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val mixed = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(bmpBitsExpr).as("bits"))
+      .select(col("doc_id"), expr(BmpFamily.bitsExpr).as("bits"))
       .repartition(col("doc_id")) // d78's construction barrier
       .select(col("doc_id"), expr(
         s"IF(doc_id % 2 = 0, $bmp18ContentExpr, $bmpContentExpr)")
@@ -3964,17 +3989,6 @@ object GroupD {
     * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
     * predicate so no inferred filter re-derives the decode at the scan.
     */
-  private val wavBitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((((doc_id div 5) * 999983L + k * 8263L + 54321L) % 1000000007L)" +
-      " * (((doc_id div 5) * 999983L + k * 8263L + 54321L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 5) * 999983L + k * 8263L + 54321L) % 1000000007L)" +
-      " * (((doc_id div 5) * 999983L + k * 8263L + 54321L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L" +
-      " + IF(k >= doc_id % 59 AND k < doc_id % 59 + doc_id % 4, 1L, 0L))" +
-      " % 2L))"
-
   // RIFF/WAVE + fmt(PCM mono 16-bit 8 kHz) + data(1040 B = 520 samples)
   private val WavHeaderHex: String =
     "52494646" + "34040000" + "57415645" +
@@ -4004,41 +4018,18 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$WavHeaderHex', $wavSamplesHex)))"
 
-  /** d82's construct→decode stage (d78Hashed's shape at the audio
-    * modality) — split out in r19 so d94's funnel can census the decode
-    * without re-opening the banding join. Lazy checkpoint like
+  /** d82's construct→decode stage — split out so d94's funnel can census
+    * the decode without re-opening the banding join. Lazy checkpoint like
     * d78Hashed: the 1 KB-per-doc sample construction dominates the
     * modality's cost. */
   private[queries] def d82Hashed(spark: SparkSession, sfDir: String)
-      : DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(wavBitsExpr).as("bits"))
-      .repartition(col("doc_id")) // construction barrier (d78's lesson)
-      .select(col("doc_id"), expr(wavContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .WavEnergyHashName}(content)").as("ehash"))
-      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+      : DataFrame =
+    decoded(spark, sfDir, WavFamily.bitsExpr, wavContentExpr,
+      s"${graft.functions.GraftFunctions.WavEnergyHashName}(content)")
       .localCheckpoint(false)
-  }
 
-  private[queries] def d82Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val hashed = d82Hashed(spark, sfDir)
-    val bands = hashed.select(col("doc_id"), col("ehash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), t -> shiftright(ehash, t * 16) & 65535L)"))
-        .as(Seq("band", "key")))
-    bands.as("x").hint("merge")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        // null-tolerant on purpose — see d78Pairs
-        expr("cast(bit_count(coalesce(x.ehash, 0L) ^ coalesce(y.ehash, 0L))" +
-          " as bigint)").as("hamming"))
-      .filter(col("hamming") <= 3L)
-      .distinct()
-  }
+  private[queries] def d82Pairs(spark: SparkSession, sfDir: String): DataFrame =
+    PerceptualDedup.selfPairs(d82Hashed(spark, sfDir), maxDist = 3)
 
   def d82AudioDedup(spark: SparkSession, sfDir: String): DataFrame =
     d82Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4065,12 +4056,10 @@ object GroupD {
       : DataFrame = {
     val hashed = d78Hashed(spark, sfDir)
     val delta = hashed.filter(expr("(doc_id div 4) % 3 = 0"))
-      .toDF("id", "hash")
     val base = hashed.filter(expr("(doc_id div 4) % 3 != 0"))
-      .toDF("id", "hash")
-    val dups = graft.operators.PerceptualDedup.dupIds(delta, base, maxDist = 3)
-    delta.select(col("id").as("doc_id"))
-      .join(dups.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
+    val dups = PerceptualDedup.dupIds(delta, base, maxDist = 3)
+    delta.select("doc_id")
+      .join(dups, Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
   }
 
@@ -4096,17 +4085,6 @@ object GroupD {
     * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
     * predicate so no inferred filter re-derives the decode at the scan.
     */
-  private val pngBitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((((doc_id div 6) * 1000033L + k * 7489L + 13579L) % 1000000007L)" +
-      " * (((doc_id div 6) * 1000033L + k * 7489L + 13579L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 6) * 1000033L + k * 7489L + 13579L) % 1000000007L)" +
-      " * (((doc_id div 6) * 1000033L + k * 7489L + 13579L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L" +
-      " + IF(k >= doc_id % 57 AND k < doc_id % 57 + doc_id % 5, 1L, 0L))" +
-      " % 2L))"
-
   /** PNG preamble through the IDAT stored-block header: signature, IHDR
     * (9×8, depth 8, grayscale, no interlace; CRCs zeroed — the decode
     * verifies meaning, not checksums), IDAT length 0x5B = zlib hdr (2) +
@@ -4144,30 +4122,11 @@ object GroupD {
   /** d84's verified pair list without the presentation sort — c10's
     * dedup-volume card consumes it too.
     */
-  private[queries] def d84Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val hashed = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(pngBitsExpr).as("bits"))
-      .repartition(col("doc_id")) // construction barrier (d78's lesson)
-      .select(col("doc_id"), expr(pngContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .PngDhashName}(content)").as("dhash"))
-      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
-    val bands = hashed.select(col("doc_id"), col("dhash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-        .as(Seq("band", "key")))
-    bands.as("x").hint("merge")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        // null-tolerant on purpose — see d78Pairs
-        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-          " as bigint)").as("hamming"))
-      .filter(col("hamming") <= 3L)
-      .distinct()
-  }
+  private[queries] def d84Pairs(spark: SparkSession, sfDir: String): DataFrame =
+    PerceptualDedup.selfPairs(
+      decoded(spark, sfDir, PngFamily.bitsExpr, pngContentExpr,
+        s"${graft.functions.GraftFunctions.PngDhashName}(content)"),
+      maxDist = 3)
 
   def d84PngDedup(spark: SparkSession, sfDir: String): DataFrame =
     d84Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4193,17 +4152,6 @@ object GroupD {
     * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
     * predicate so no inferred filter re-derives the decode at the scan.
     */
-  private val y4mBitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((((doc_id div 7) * 999979L + k * 9001L + 11213L) % 1000000007L)" +
-      " * (((doc_id div 7) * 999979L + k * 9001L + 11213L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 7) * 999979L + k * 9001L + 11213L) % 1000000007L)" +
-      " * (((doc_id div 7) * 999979L + k * 9001L + 11213L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L" +
-      " + IF(k >= doc_id % 53 AND k < doc_id % 53 + doc_id % 4, 1L, 0L))" +
-      " % 2L))"
-
   /** `YUV4MPEG2 W4 H4 F25:1 Ip A1:1 Cmono\n` — a 4×4 mono stream, 16
     * luma bytes per frame.
     */
@@ -4231,40 +4179,17 @@ object GroupD {
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"unhex(concat('$Y4mHeaderHex', $y4mFramesHex)))"
 
-  /** d85's construct→decode stage (d78Hashed's shape at the video
-    * modality) — split out in r19 so d94's funnel can census the decode
-    * without re-opening the banding join. Lazy checkpoint
+  /** d85's construct→decode stage — split out so d94's funnel can census
+    * the decode without re-opening the banding join. Lazy checkpoint
     * (d82Hashed's note). */
   private[queries] def d85Hashed(spark: SparkSession, sfDir: String)
-      : DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(y4mBitsExpr).as("bits"))
-      .repartition(col("doc_id")) // construction barrier (d78's lesson)
-      .select(col("doc_id"), expr(y4mContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .Y4mEnvelopeHashName}(content)").as("vhash"))
-      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+      : DataFrame =
+    decoded(spark, sfDir, Y4mFamily.bitsExpr, y4mContentExpr,
+      s"${graft.functions.GraftFunctions.Y4mEnvelopeHashName}(content)")
       .localCheckpoint(false)
-  }
 
-  private[queries] def d85Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val hashed = d85Hashed(spark, sfDir)
-    val bands = hashed.select(col("doc_id"), col("vhash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), t -> shiftright(vhash, t * 16) & 65535L)"))
-        .as(Seq("band", "key")))
-    bands.as("x").hint("merge")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        // null-tolerant on purpose — see d78Pairs
-        expr("cast(bit_count(coalesce(x.vhash, 0L) ^ coalesce(y.vhash, 0L))" +
-          " as bigint)").as("hamming"))
-      .filter(col("hamming") <= 3L)
-      .distinct()
-  }
+  private[queries] def d85Pairs(spark: SparkSession, sfDir: String): DataFrame =
+    PerceptualDedup.selfPairs(d85Hashed(spark, sfDir), maxDist = 3)
 
   def d85VideoDedup(spark: SparkSession, sfDir: String): DataFrame =
     d85Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4291,17 +4216,6 @@ object GroupD {
     * hash) shuffle rows only, null-tolerant hamming predicate so no
     * inferred filter re-derives the decodes at the scan.
     */
-  private val xfmtBitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((((doc_id div 4) * 1000099L + k * 7591L + 24680L) % 1000000007L)" +
-      " * (((doc_id div 4) * 1000099L + k * 7591L + 24680L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 4) * 1000099L + k * 7591L + 24680L) % 1000000007L)" +
-      " * (((doc_id div 4) * 1000099L + k * 7591L + 24680L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L" +
-      " + IF(k >= doc_id % 51 AND k < doc_id % 51 + doc_id % 4, 1L, 0L))" +
-      " % 2L))"
-
   private[queries] val xfmtContentExpr: String =
     s"IF(doc_id % 17 = 0, unhex('00112233'), " +
       s"IF(doc_id % 2 = 0, " +
@@ -4312,31 +4226,13 @@ object GroupD {
     * dedup-volume card consumes it too.
     */
   private[queries] def d86Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val fns = graft.functions.GraftFunctions
-    val hashed = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(xfmtBitsExpr).as("bits"))
-      .repartition(col("doc_id")) // construction barrier (d78's lesson)
-      .select(col("doc_id"), expr(xfmtContentExpr).as("content"))
-      // format-agnostic hash: each decode refuses the other container at
-      // its signature bytes, so this is one real decode per asset
-      .select(col("doc_id"), expr(s"coalesce(${fns.BmpDhashName}(content), " +
-        s"${fns.PngDhashName}(content))").as("dhash"))
-      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
-    val bands = hashed.select(col("doc_id"), col("dhash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-        .as(Seq("band", "key")))
-    bands.as("x").hint("merge")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        // null-tolerant on purpose — see d78Pairs
-        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-          " as bigint)").as("hamming"))
-      .filter(col("hamming") <= 3L)
-      .distinct()
+    // format-agnostic hash: each decode refuses the other container at
+    // its signature bytes, so this is one real decode per asset
+    PerceptualDedup.selfPairs(
+      decoded(spark, sfDir, XfmtFamily.bitsExpr, xfmtContentExpr,
+        s"coalesce(${fns.BmpDhashName}(content), ${fns.PngDhashName}(content))"),
+      maxDist = 3)
   }
 
   def d86CrossFormatDedup(spark: SparkSession, sfDir: String): DataFrame =
@@ -4364,17 +4260,6 @@ object GroupD {
     * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
     * predicate so no inferred filter re-derives the decode at the scan.
     */
-  private val gifBitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((((doc_id div 8) * 1000121L + k * 7723L + 97531L) % 1000000007L)" +
-      " * (((doc_id div 8) * 1000121L + k * 7723L + 97531L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 8) * 1000121L + k * 7723L + 97531L) % 1000000007L)" +
-      " * (((doc_id div 8) * 1000121L + k * 7723L + 97531L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L" +
-      " + IF(k >= doc_id % 47 AND k < doc_id % 47 + doc_id % 4, 1L, 0L))" +
-      " % 2L))"
-
   /** GIF preamble through the one data sub-block's size byte: signature,
     * 9×8 logical screen with a 32-entry global gray table (entry i =
     * 8i, so palette luma is monotone in the index), image descriptor,
@@ -4427,30 +4312,11 @@ object GroupD {
   /** d87's verified pair list without the presentation sort — c10's
     * dedup-volume card consumes it too.
     */
-  private[queries] def d87Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val hashed = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(gifBitsExpr).as("bits"))
-      .repartition(col("doc_id")) // construction barrier (d78's lesson)
-      .select(col("doc_id"), expr(gifContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .GifDhashName}(content)").as("dhash"))
-      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
-    val bands = hashed.select(col("doc_id"), col("dhash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), t -> shiftright(dhash, t * 16) & 65535L)"))
-        .as(Seq("band", "key")))
-    bands.as("x").hint("merge")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        // null-tolerant on purpose — see d78Pairs
-        expr("cast(bit_count(coalesce(x.dhash, 0L) ^ coalesce(y.dhash, 0L))" +
-          " as bigint)").as("hamming"))
-      .filter(col("hamming") <= 3L)
-      .distinct()
-  }
+  private[queries] def d87Pairs(spark: SparkSession, sfDir: String): DataFrame =
+    PerceptualDedup.selfPairs(
+      decoded(spark, sfDir, GifFamily.bitsExpr, gifContentExpr,
+        s"${graft.functions.GraftFunctions.GifDhashName}(content)"),
+      maxDist = 3)
 
   def d87GifDedup(spark: SparkSession, sfDir: String): DataFrame =
     d87Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4478,7 +4344,7 @@ object GroupD {
     * provably dups and pass — the monotone-gate contract (d83's),
     * which also keeps NULL handling out of the join (no isnotnull
     * filter for constraint inference to push below the barriers —
-    * d78Hashed's lesson).
+    * [[decoded]]'s lesson).
     *
     * ORACLE-ANCHOR pair source — never run the quadratic at production
     * sf: the exact BLOCK-PAIR (triangle) equi-join is d9's declared
@@ -4531,15 +4397,10 @@ object GroupD {
     * scale twin consume the identical features.
     */
   private[queries] def d88Features(spark: SparkSession, sfDir: String)
-      : DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(d88BitsExpr).as("bits"))
-      .repartition(col("doc_id")) // construction barrier (d78's lesson)
-      .select(col("doc_id"), expr(d88ContentExpr).as("content"))
-      .select(col("doc_id"), expr(s"${graft.functions.GraftFunctions
-        .GridLumaCellsName}(content)").as("cells"))
-      .repartition(col("doc_id")) // decode-once barrier (d78's lesson)
+      : DataFrame =
+    decoded(spark, sfDir, d88BitsExpr, d88ContentExpr,
+      s"${graft.functions.GraftFunctions.GridLumaCellsName}(content)",
+      out = "cells")
       // all values are exact small integers carried as doubles, so the
       // total and the centered products are EXACT (≪ 2⁵³) — the oracle
       // repeats the same arithmetic on integers and gets the same doubles
@@ -4552,7 +4413,6 @@ object GroupD {
         expr("transform(cells, x -> x * 72D - tot)").as("v"))
       .repartition(col("doc_id")) // feature-once barrier: both triangle
       // sides below reference v
-  }
 
   /** d89: d88's PRODUCTION path, declared — the SAME decoded grid-luma
     * feature column ([[d88Features]]) through [[dedupEmbeddingLsh]]'s
@@ -4630,8 +4490,7 @@ object GroupD {
   def d90MediaPipelineE2e(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables(spark, sfDir, "documents")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val nDec = d78Hashed(spark, sfDir)
-      .agg(count(col("dhash")).as("n_dec"))
+    val nDec = d78Hashed(spark, sfDir).agg(count(col("hash")).as("n_dec"))
     val nPairs = d78Pairs(spark, sfDir).agg(count(lit(1)).as("n_pairs"))
     val clAgg = d80ImageClusters(spark, sfDir).agg(
       countDistinct(col("cluster_id")).as("n_clusters"),
@@ -4817,9 +4676,9 @@ object GroupD {
   def d94AvPipelineE2e(spark: SparkSession, sfDir: String): DataFrame = {
     val nDocs = Tables(spark, sfDir, "documents")
       .agg(count(lit(1)).as("n_docs"))
-    def modality(tag: String, hashed: DataFrame, hashCol: String,
-                 pairs: DataFrame): DataFrame = {
-      val nDec = hashed.agg(count(col(hashCol)).as("n_dec"))
+    def modality(tag: String, hashed: DataFrame, pairs: DataFrame)
+        : DataFrame = {
+      val nDec = hashed.agg(count(col("hash")).as("n_dec"))
       val nPairs = pairs.agg(count(lit(1)).as("n_pairs"))
       val clAgg = graft.operators.ConnectedComponents
         .label(pairs.select("doc_a", "doc_b"), src = "doc_a", dst = "doc_b")
@@ -4852,9 +4711,8 @@ object GroupD {
           .as("r"))
         .select(col("modality"), col("r.*"))
     }
-    modality("audio_wav", d82Hashed(spark, sfDir), "ehash",
-        d82Pairs(spark, sfDir))
-      .unionByName(modality("video_y4m", d85Hashed(spark, sfDir), "vhash",
+    modality("audio_wav", d82Hashed(spark, sfDir), d82Pairs(spark, sfDir))
+      .unionByName(modality("video_y4m", d85Hashed(spark, sfDir),
         d85Pairs(spark, sfDir)))
       .withColumn("dropped", col("docs_in") - col("docs_out"))
       .orderBy("modality", "stage")
@@ -4888,9 +4746,11 @@ object GroupD {
   private def frontierDiffOver(htmlFrame: DataFrame,
                                corpus: DataFrame): DataFrame =
     htmlFrame
-      .select(explode(regexp_extract_all(col("html"),
-        lit(GroupC.HrefP), lit(1))).as("url"))
-      .select(GroupC.urlNormalize(col("url")).as("norm_url"))
+      // canonicalize inside the generator: a Project of urlNormalize over
+      // the exploded href lets the isNotNull filter below be pushed
+      // beneath it, substituting and so running the kernel twice per href
+      .select(explode(transform(regexp_extract_all(col("html"),
+        lit(GroupC.HrefP), lit(1)), GroupC.urlNormalize(_))).as("norm_url"))
       .filter(col("norm_url").isNotNull)
       .distinct()
       .join(corpus.select("norm_url"), Seq("norm_url"), "left_anti")
@@ -5819,29 +5679,15 @@ object GroupD {
       |FROM ranked
       |ORDER BY doc_id""".stripMargin
 
-  /** d78's pair oracle, shared with d80's component labeling (the
-    * d14-over-c2 nesting pattern): Hamming ≤ 3 over the arithmetically
-    * re-derived 64-bit patterns.
+  /** One modality's bits + verified-pairs CTE pair for the c10 oracle,
+    * from the same [[MediaFamily]] its dedup query runs on. The pair CTE
+    * is MATERIALIZED: `pbmp` feeds the recursive component labeling,
+    * where DuckDB would otherwise re-evaluate the pair join on every
+    * recursion step, and the volume rows read each pair CTE 2–3 times.
     */
-  /** One modality's bits + verified-pairs CTE pair for the c10 oracle —
-    * the same doc_id arithmetic each dedup query's own oracle states
-    * inline, parameterized by the modality's mixer constants so the five
-    * corpora stay in lockstep with their queries.
-    */
-  private def modalityPairCtes(tag: String, fam: Long, mult: Long,
-      kMult: Long, add: Long, window: Long, widthMod: Long): String =
-    s"""b$tag AS (
-       |  SELECT doc_id, k,
-       |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-       |       // 1024 % 2
-       |     + CASE WHEN k >= doc_id % $window
-       |             AND k < doc_id % $window + doc_id % $widthMod
-       |            THEN 1 ELSE 0 END) % 2 AS b
-       |  FROM (SELECT doc_id, k,
-       |          ((doc_id // $fam) * $mult + k * $kMult + $add)
-       |            % 1000000007 AS x
-       |        FROM d, range(64) t(k))),
-       |p$tag AS (
+  private def modalityPairCtes(tag: String, f: MediaFamily): String =
+    s"""${f.bitsCte(s"b$tag")},
+       |p$tag AS MATERIALIZED (
        |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b
        |  FROM b$tag a JOIN b$tag c ON a.k = c.k AND a.doc_id < c.doc_id
        |  GROUP BY 1, 2
@@ -5866,7 +5712,7 @@ object GroupD {
     }
     s"""WITH RECURSIVE d AS (
        |  SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-       |${modalityPairCtes("bmp", 4, 1000003, 7919, 12345, 61, 4)},
+       |${modalityPairCtes("bmp", BmpFamily)},
        |edges AS (
        |  SELECT doc_a AS s, doc_b AS dd FROM pbmp
        |  UNION ALL SELECT doc_b AS s, doc_a AS dd FROM pbmp),
@@ -5880,11 +5726,11 @@ object GroupD {
        |  SELECT doc_id, MIN(root) AS cluster_id FROM reach GROUP BY doc_id),
        |sizes AS (
        |  SELECT cluster_id, COUNT(*) AS sz FROM comp GROUP BY cluster_id),
-       |${modalityPairCtes("png", 6, 1000033, 7489, 13579, 57, 5)},
-       |${modalityPairCtes("gif", 8, 1000121, 7723, 97531, 47, 4)},
-       |${modalityPairCtes("wav", 5, 999983, 8263, 54321, 59, 4)},
-       |${modalityPairCtes("y4m", 7, 999979, 9001, 11213, 53, 4)},
-       |${modalityPairCtes("x", 4, 1000099, 7591, 24680, 51, 4)}
+       |${modalityPairCtes("png", PngFamily)},
+       |${modalityPairCtes("gif", GifFamily)},
+       |${modalityPairCtes("wav", WavFamily)},
+       |${modalityPairCtes("y4m", Y4mFamily)},
+       |${modalityPairCtes("x", XfmtFamily)}
        |SELECT * FROM (
        |${volumeRow("audio_wav", "pwav", cross = false, bmp = false)}
        |UNION ALL
@@ -5900,76 +5746,14 @@ object GroupD {
        |ORDER BY media_format""".stripMargin
   }
 
-  private val d78PairOracleSql: String =
-    """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-      |bits AS (
-      |  SELECT doc_id, k,
-      |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-      |       // 1024 % 2
-      |     + CASE WHEN k >= doc_id % 61 AND k < doc_id % 61 + doc_id % 4
-      |            THEN 1 ELSE 0 END) % 2 AS b
-      |  FROM (SELECT doc_id, k,
-      |          ((doc_id // 4) * 1000003 + k * 7919 + 12345)
-      |            % 1000000007 AS x
-      |        FROM d, range(64) t(k))),
-      |h AS (
-      |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-      |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
-      |           AS hamming
-      |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
-      |ORDER BY doc_a, doc_b""".stripMargin
-
-  /** d82/d85's pair oracles as shared vals (r19 — d94's funnel nests
-    * them as CTEs the way d90 nests d78's). */
-  private val d82PairOracleSql: String =
-    """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-      |bits AS (
-      |  SELECT doc_id, k,
-      |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-      |       // 1024 % 2
-      |     + CASE WHEN k >= doc_id % 59 AND k < doc_id % 59 + doc_id % 4
-      |            THEN 1 ELSE 0 END) % 2 AS b
-      |  FROM (SELECT doc_id, k,
-      |          ((doc_id // 5) * 999983 + k * 8263 + 54321)
-      |            % 1000000007 AS x
-      |        FROM d, range(64) t(k))),
-      |h AS (
-      |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-      |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
-      |           AS hamming
-      |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
-      |ORDER BY doc_a, doc_b""".stripMargin
-
-  private val d85PairOracleSql: String =
-    """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-      |bits AS (
-      |  SELECT doc_id, k,
-      |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-      |       // 1024 % 2
-      |     + CASE WHEN k >= doc_id % 53 AND k < doc_id % 53 + doc_id % 4
-      |            THEN 1 ELSE 0 END) % 2 AS b
-      |  FROM (SELECT doc_id, k,
-      |          ((doc_id // 7) * 999979 + k * 9001 + 11213)
-      |            % 1000000007 AS x
-      |        FROM d, range(64) t(k))),
-      |h AS (
-      |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-      |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
-      |           AS hamming
-      |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
-      |ORDER BY doc_a, doc_b""".stripMargin
-
   /** One modality's half of d94's oracle: the component labeling +
     * count CTEs over a nested pair oracle, every relation prefixed so
-    * the two modalities coexist in one WITH RECURSIVE. */
+    * the two modalities coexist in one WITH RECURSIVE. The pair CTE is
+    * MATERIALIZED (as in d80/d81/d90): un-materialized, DuckDB
+    * re-evaluates the nested pair join on every recursion step and runs
+    * out of temp space. */
   private def d94ModalityCtes(p: String, pairSql: String): String =
-    s"""${p}pairs AS (
+    s"""${p}pairs AS MATERIALIZED (
        |$pairSql),
        |${p}edges AS (
        |  SELECT doc_a AS s, doc_b AS d FROM ${p}pairs
@@ -6215,7 +5999,7 @@ object GroupD {
         |  md5(COALESCE(string_agg(CASE WHEN NOT shared THEN piece END, ''
         |    ORDER BY chunk_idx), '')) AS cleaned_md5
         |FROM fl GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "d78_image_dedup" -> d78PairOracleSql,
+    "d78_image_dedup" -> BmpFamily.pairOracleSql,
     // d88: the oracle re-derives the 72 grid-luma cells from the SAME
     // doc_id arithmetic the construction uses (prefix-sum walk over the
     // family base bits + the one-row shift), centers by the ×72 trick,
@@ -6377,8 +6161,8 @@ object GroupD {
     // rule — the constructed-bytes discipline end to end. The keep-best
     // survivor count equals n_clusters (ROW_NUMBER = 1 per cluster).
     "d90_media_pipeline_e2e" ->
-      s"""WITH RECURSIVE pairs AS (
-         |$d78PairOracleSql),
+      s"""WITH RECURSIVE pairs AS MATERIALIZED (
+         |${BmpFamily.pairOracleSql}),
          |edges AS (
          |  SELECT doc_a AS s, doc_b AS d FROM pairs
          |  UNION ALL
@@ -6417,8 +6201,8 @@ object GroupD {
          |    n_dec - n_clustered + n_clusters, NULL, NULL, NULL FROM m)
          |ORDER BY stage""".stripMargin,
     "d80_image_clusters" ->
-      s"""WITH RECURSIVE pairs AS (
-         |$d78PairOracleSql),
+      s"""WITH RECURSIVE pairs AS MATERIALIZED (
+         |${BmpFamily.pairOracleSql}),
          |edges AS (
          |  SELECT doc_a AS s, doc_b AS d FROM pairs
          |  UNION ALL
@@ -6438,17 +6222,8 @@ object GroupD {
          |FROM comp c JOIN sizes s USING (cluster_id)
          |ORDER BY doc_id""".stripMargin,
     "d79_image_resize" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-        |bits AS (
-        |  SELECT doc_id, k,
-        |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-        |       // 1024 % 2
-        |     + CASE WHEN k >= doc_id % 61 AND k < doc_id % 61 + doc_id % 4
-        |            THEN 1 ELSE 0 END) % 2 AS b
-        |  FROM (SELECT doc_id, k,
-        |          ((doc_id // 4) * 1000003 + k * 7919 + 12345)
-        |            % 1000000007 AS x
-        |        FROM d, range(64) t(k))),
+      s"""WITH d AS (SELECT doc_id FROM documents),
+        |${BmpFamily.bitsCte("bits")},
         |h AS (
         |  SELECT doc_id,
         |    CAST(SUM(CASE WHEN k < 32
@@ -6467,8 +6242,8 @@ object GroupD {
         |  END AS dhash_hex
         |FROM d JOIN h USING (doc_id) ORDER BY doc_id""".stripMargin,
     "d81_image_keep_best" ->
-      s"""WITH RECURSIVE pairs AS (
-         |$d78PairOracleSql),
+      s"""WITH RECURSIVE pairs AS MATERIALIZED (
+         |${BmpFamily.pairOracleSql}),
          |edges AS (
          |  SELECT doc_a AS s, doc_b AS d FROM pairs
          |  UNION ALL
@@ -6493,7 +6268,7 @@ object GroupD {
          |ORDER BY c.doc_id""".stripMargin,
     "d83_image_dedup_incremental" ->
       s"""WITH pairs AS (
-         |$d78PairOracleSql),
+         |${BmpFamily.pairOracleSql}),
          |delta AS (
          |  SELECT doc_id FROM documents WHERE (doc_id // 4) % 3 = 0)
          |SELECT d.doc_id FROM delta d
@@ -6502,77 +6277,20 @@ object GroupD {
          |  WHERE (p.doc_a = d.doc_id AND (p.doc_b // 4) % 3 <> 0)
          |     OR p.doc_b = d.doc_id)
          |ORDER BY d.doc_id""".stripMargin,
-    "d84_png_dedup" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-        |bits AS (
-        |  SELECT doc_id, k,
-        |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-        |       // 1024 % 2
-        |     + CASE WHEN k >= doc_id % 57 AND k < doc_id % 57 + doc_id % 5
-        |            THEN 1 ELSE 0 END) % 2 AS b
-        |  FROM (SELECT doc_id, k,
-        |          ((doc_id // 6) * 1000033 + k * 7489 + 13579)
-        |            % 1000000007 AS x
-        |        FROM d, range(64) t(k))),
-        |h AS (
-        |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-        |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
-        |           AS hamming
-        |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "d84_png_dedup" -> PngFamily.pairOracleSql,
     "c10_media_dedup_card" -> c10OracleSql,
-    "d87_gif_dedup" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-        |bits AS (
-        |  SELECT doc_id, k,
-        |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-        |       // 1024 % 2
-        |     + CASE WHEN k >= doc_id % 47 AND k < doc_id % 47 + doc_id % 4
-        |            THEN 1 ELSE 0 END) % 2 AS b
-        |  FROM (SELECT doc_id, k,
-        |          ((doc_id // 8) * 1000121 + k * 7723 + 97531)
-        |            % 1000000007 AS x
-        |        FROM d, range(64) t(k))),
-        |h AS (
-        |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-        |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
-        |           AS hamming
-        |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "d86_cross_format_dedup" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 17 <> 0),
-        |bits AS (
-        |  SELECT doc_id, k,
-        |    (((x * x % 2147483647) * (x * x % 2147483647) % 2147483647)
-        |       // 1024 % 2
-        |     + CASE WHEN k >= doc_id % 51 AND k < doc_id % 51 + doc_id % 4
-        |            THEN 1 ELSE 0 END) % 2 AS b
-        |  FROM (SELECT doc_id, k,
-        |          ((doc_id // 4) * 1000099 + k * 7591 + 24680)
-        |            % 1000000007 AS x
-        |        FROM d, range(64) t(k))),
-        |h AS (
-        |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-        |         SUM(CASE WHEN a.b <> c.b THEN 1 ELSE 0 END)::BIGINT
-        |           AS hamming
-        |  FROM bits a JOIN bits c ON a.k = c.k AND a.doc_id < c.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, hamming FROM h WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "d85_video_dedup" -> d85PairOracleSql,
-    "d82_audio_dedup" -> d82PairOracleSql,
+    "d87_gif_dedup" -> GifFamily.pairOracleSql,
+    "d86_cross_format_dedup" -> XfmtFamily.pairOracleSql,
+    "d85_video_dedup" -> Y4mFamily.pairOracleSql,
+    "d82_audio_dedup" -> WavFamily.pairOracleSql,
     // d94's oracle: both modalities' pair oracles nested as CTEs (the
     // d90 pattern twice, relation names prefixed), component labeling
     // re-derived recursively, and all 8 funnel rows assembled from
     // scalar counts — every stage count computed arithmetically from
     // doc_id, never trusting the decoders under test.
     "d94_av_pipeline_e2e" ->
-      s"""WITH RECURSIVE ${d94ModalityCtes("a", d82PairOracleSql)},
-         |${d94ModalityCtes("v", d85PairOracleSql)}
+      s"""WITH RECURSIVE ${d94ModalityCtes("a", WavFamily.pairOracleSql)},
+         |${d94ModalityCtes("v", Y4mFamily.pairOracleSql)}
          |SELECT modality, stage, docs_in, docs_out, n_pairs, n_clusters,
          |  max_cluster, docs_in - docs_out AS dropped
          |FROM (

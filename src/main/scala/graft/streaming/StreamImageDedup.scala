@@ -149,8 +149,9 @@ object StreamImageDedup {
         // definition with the declared d83 batch query, so gate and
         // query cannot drift): dup vs standing, or vs a smaller-id peer
         val dups = graft.operators.PerceptualDedup.dupIds(
-            bh.toDF("id", "hash"), standing.toDF("id", "hash"), maxDist)
-          .withColumnRenamed("id", "asset_id")
+            bh.toDF("doc_id", "hash"), standing.toDF("doc_id", "hash"),
+            maxDist)
+          .withColumnRenamed("doc_id", "asset_id")
         val kept = b0.join(dups, Seq("asset_id"), "left_anti")
           .localCheckpoint(true)
         // survivors' hashes come from bh by a semi-join — kept ⊆ b0 and

@@ -242,57 +242,45 @@ class PlanShapeSpec extends AnyFunSuite {
       "document text rode a shuffle:\n" + exchanges.mkString("\n"))
   }
 
-  test("d78: the pixel decode runs ONCE per join side — never re-derived at the scan") {
-    // the round-14 pathology pinned: an isnotnull(dhash) — explicit or
-    // inferred from the hamming predicate — pushes through the
-    // repartition barriers and re-inlines the whole construct+decode
-    // into a per-row scan filter (measured 25 of 27 s at sf0.1). The
-    // decode expression may appear once per join side, nowhere else.
-    val p = plan("d78_image_dedup")
-    val occurrences = "graft_bmp_dhash\\(".r.findAllMatchIn(p).length
-    assert(occurrences <= 2, s"decode expression appears $occurrences times")
-    assert(!p.contains("DataFilters: [isnotnull(graft_bmp_dhash"),
-      "inferred null filter re-derives the decode at the scan")
-  }
+  // The decode-once pin, one row per media hub: an isnotnull(hash) —
+  // explicit or inferred from the hamming predicate — pushes through the
+  // repartition barriers and re-inlines the whole construct+decode into a
+  // per-row scan filter (measured 25 of 27 s at sf0.1 for d78). Each
+  // decode expression may appear once per join side, nowhere else. d86's
+  // cross-format corpus runs BOTH native decodes under a coalesce (each
+  // refuses the other container at its signature), so the pin applies
+  // to each.
+  private val decodeOncePins = Seq(
+    ("d78: the pixel decode runs ONCE per join side — never re-derived at the scan",
+      "d78_image_dedup", Seq("graft_bmp_dhash")),
+    ("d82: the WAV sample decode runs ONCE per join side — never re-derived at the scan",
+      "d82_audio_dedup", Seq("graft_wav_ehash")),
+    ("d84: the PNG decode runs ONCE per join side — never re-derived at the scan",
+      "d84_png_dedup", Seq("graft_png_dhash")),
+    ("d85: the Y4M frame decode runs ONCE per join side — never re-derived at the scan",
+      "d85_video_dedup", Seq("graft_y4m_ehash")),
+    ("d86: both decodes run ONCE per join side; qualifying pairs cross the format boundary",
+      "d86_cross_format_dedup", Seq("graft_bmp_dhash", "graft_png_dhash")),
+    ("d87: the GIF LZW decode runs ONCE per join side — never re-derived at the scan",
+      "d87_gif_dedup", Seq("graft_gif_dhash")))
 
-  test("d84: the PNG decode runs ONCE per join side — never re-derived at the scan") {
-    // d78's pathology pin at the PNG leg: the inflate+unfilter decode is
-    // far more expensive than the BMP walk, so an inferred
-    // isnotnull(dhash) re-inlining it at the scan would hurt worse
-    val p = plan("d84_png_dedup")
-    val occurrences = "graft_png_dhash\\(".r.findAllMatchIn(p).length
-    assert(occurrences <= 2, s"decode expression appears $occurrences times")
-    assert(!p.contains("DataFilters: [isnotnull(graft_png_dhash"),
-      "inferred null filter re-derives the decode at the scan")
-  }
-
-  test("d87: the GIF LZW decode runs ONCE per join side — never re-derived at the scan") {
-    val p = plan("d87_gif_dedup")
-    val occurrences = "graft_gif_dhash\\(".r.findAllMatchIn(p).length
-    assert(occurrences <= 2, s"decode expression appears $occurrences times")
-    assert(!p.contains("DataFilters: [isnotnull(graft_gif_dhash"),
-      "inferred null filter re-derives the decode at the scan")
-  }
-
-  test("d86: both decodes run ONCE per join side; qualifying pairs cross the format boundary") {
-    // the cross-format corpus runs BOTH native decodes under a coalesce
-    // (each refuses the other container at its signature), so the d78
-    // pathology pin applies to each: one occurrence per join side max,
-    // and no inferred isnotnull filter re-deriving them at the scan
-    val p = plan("d86_cross_format_dedup")
-    for (fn <- Seq("graft_bmp_dhash", "graft_png_dhash")) {
+  for ((name, query, decodes) <- decodeOncePins) test(name) {
+    val p = plan(query)
+    for (fn <- decodes) {
       val occurrences = s"$fn\\(".r.findAllMatchIn(p).length
       assert(occurrences <= 2, s"$fn appears $occurrences times")
       assert(!p.contains(s"DataFilters: [isnotnull($fn"),
         s"inferred null filter re-derives $fn at the scan")
     }
-    // the claim under test: a BMP-rendered asset dedups against a
-    // PNG-rendered one — at least one verified pair spans the parity
-    // boundary (even doc_ids are BMP, odd are PNG)
-    val pairs = GroupD.d86CrossFormatDedup(spark, sf)
-      .select("doc_a", "doc_b").collect()
-    assert(pairs.exists(r => r.getLong(0) % 2 != r.getLong(1) % 2),
-      s"no cross-format pair among ${pairs.length} verified pairs")
+    if (query == "d86_cross_format_dedup") {
+      // the claim under test: a BMP-rendered asset dedups against a
+      // PNG-rendered one — at least one verified pair spans the parity
+      // boundary (even doc_ids are BMP, odd are PNG)
+      val pairs = GroupD.d86CrossFormatDedup(spark, sf)
+        .select("doc_a", "doc_b").collect()
+      assert(pairs.exists(r => r.getLong(0) % 2 != r.getLong(1) % 2),
+        s"no cross-format pair among ${pairs.length} verified pairs")
+    }
   }
 
   test("d55: snapshot diff is one full-outer SMJ on doc_id — no nested loop, no window") {
@@ -461,6 +449,22 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(!p.contains(GroupC.UrlHostportP) && !p.contains(GroupC.UrlTrackingP),
         s"$q still evaluates the URL regex chain:\n$p")
     }
+  }
+
+  test("d95: each exploded href is canonicalized once — no pushed-down filter copy") {
+    // the isnotnull(norm_url) filter must stay above the Generate that
+    // produces norm_url; pushed through a Project it would substitute a
+    // second graft_url_normalize call per href
+    import graft.functions.UrlCanon.NormalizeName
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val lp = graft.SparkEntry.queries("d95_frontier_discovery")(spark, sf)
+      .queryExecution.optimizedPlan
+    val anti = lp.collect { case j: Join if j.joinType == LeftAnti => j }
+    assert(anti.size == 1, s"expected the one frontier anti join:\n$lp")
+    val hrefSide = anti.head.left.toString
+    val calls = s"$NormalizeName\\(".r.findAllMatchIn(hrefSide).length
+    assert(calls == 1, s"href side calls $NormalizeName $calls times:\n$hrefSide")
   }
 
   test("d97: robots parse is HOST-grouped; cap prunes map-side; one sort feeds both windows") {
