@@ -5,7 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumn
 
+import graft.functions.MediaRender
 import graft.operators.{LazyMemo, PerceptualDedup}
 
 /** Group D — scale-path extensions of the Group C LLM-pipeline surface:
@@ -3689,25 +3691,14 @@ object GroupD {
     * share a base pattern with 0–3 per-doc bit flips, so real near-dup
     * structure exists at every scale factor.
     *
-    * Scale shape: construction+decode+banding are one scan-side
-    * projection (the real pipeline reads `content` from parquet — the
-    * plan from the decode on is identical); the only corpus-sized
+    * Scale shape: render+decode+banding are one scan-side projection
+    * (the real pipeline reads `content` from parquet — the plan from the
+    * decode on is identical); the only corpus-sized
     * shuffle carries (band, 16-bit key, 8-byte hash) rows — never
     * pixels; the self-join is band-bucketed like d1's, candidate volume
     * bounded by band-key collisions, and the merge hint shares one
     * exchange across both sides.
     */
-  // BITMAPFILEHEADER + BITMAPINFOHEADER for the constructed 9×8 24bpp
-  // bottom-up bitmap: "BM", file size 278, pixel offset 54, DIB 40,
-  // planes 1, BI_RGB, stride 28 (27 + 1 pad), image size 224
-  private val BmpHeaderHex: String =
-    "424D160100000000000036000000" +
-      "280000000900000008000000" +
-      "01001800" +
-      "00000000E0000000" +
-      "130B0000130B0000" +
-      "0000000000000000"
-
   /** One media modality's constructed corpus, stated once for Spark and
     * the DuckDB oracle: the 64 comparison bits of doc_id's pattern are a
     * family base bit — shared by `fam` consecutive doc_ids, a double
@@ -3719,18 +3710,14 @@ object GroupD {
     * intermediate reduced below √(2⁶³) so neither engine's
     * multiplication can overflow at any scale factor.
     */
-  private final case class MediaFamily(fam: Long, mult: Long, kMult: Long,
+  private[queries] final case class MediaFamily(fam: Long, mult: Long, kMult: Long,
       add: Long, window: Long, widthMod: Long) {
 
-    /** Spark SQL: the pattern as a 64-element array of 0L/1L. */
-    def bitsExpr: String = {
-      val x = s"(((doc_id div $fam) * ${mult}L + k * ${kMult}L + ${add}L)" +
-        " % 1000000007L)"
-      val sq = s"($x * $x % 2147483647L)"
-      s"transform(sequence(0L, 63L), k -> (($sq * $sq % 2147483647L" +
-        s" div 1024L % 2L + IF(k >= doc_id % $window" +
-        s" AND k < doc_id % $window + doc_id % $widthMod, 1L, 0L)) % 2L))"
-    }
+    /** Spark: the doc's bytes in `layout`, rendered by the native
+      * [[graft.functions.MediaRender]] from `doc_id`. */
+    def render(layout: String): Column =
+      ExpressionColumn.map(col("doc_id"))(
+        MediaRender(_, fam, mult, kMult, add, window, widthMod, layout))
 
     /** DuckDB: the same bits as (doc_id, k, b) rows over relation `d`. */
     def bitsCte(name: String): String =
@@ -3763,81 +3750,52 @@ object GroupD {
 
   // each modality's mixer constants are distinct so the families cluster
   // differently; PNG flips up to 4 bits per doc, the others up to 3
-  private val BmpFamily = MediaFamily(4, 1000003, 7919, 12345, 61, 4)
-  private val WavFamily = MediaFamily(5, 999983, 8263, 54321, 59, 4)
-  private val PngFamily = MediaFamily(6, 1000033, 7489, 13579, 57, 5)
-  private val Y4mFamily = MediaFamily(7, 999979, 9001, 11213, 53, 4)
-  private val XfmtFamily = MediaFamily(4, 1000099, 7591, 24680, 51, 4)
-  private val GifFamily = MediaFamily(8, 1000121, 7723, 97531, 47, 4)
+  private[queries] val BmpFamily = MediaFamily(4, 1000003, 7919, 12345, 61, 4)
+  private[queries] val WavFamily = MediaFamily(5, 999983, 8263, 54321, 59, 4)
+  private[queries] val PngFamily = MediaFamily(6, 1000033, 7489, 13579, 57, 5)
+  private[queries] val Y4mFamily = MediaFamily(7, 999979, 9001, 11213, 53, 4)
+  private[queries] val XfmtFamily = MediaFamily(4, 1000099, 7591, 24680, 51, 4)
+  private[queries] val GifFamily = MediaFamily(8, 1000121, 7723, 97531, 47, 4)
+  // d88: no flips (a width-1 modulus makes every run empty); each doc
+  // shifts one row's start instead (the `bmp_row_shift` layout)
+  private[queries] val D88Family = MediaFamily(4, 1000151, 7841, 86420, 1, 1)
 
   /** The construct→decode head every media hub shares (d79 and d88's
     * features too): one (doc_id, `out`) row per doc, where `out` is
-    * `decode` over the bytes `content` renders from the `bits` array.
-    * Two barriers shape it:
-    *   - the CONSTRUCTION barrier after `bits`: without it
-    *     CollapseProject inlines the 64-element `bits` transform into
-    *     each of the construction walk's ~128 array references and the
-    *     interpreted HOF re-evaluates it per reference (measured 49 s at
-    *     sf0.1 for d78; 1.3 s with the barrier). It carries tiny
-    *     (doc_id, 64×long) rows and exists only on the synthetic-bytes
-    *     side — the real pipeline reads `content` from parquet and
-    *     starts at the decode;
-    *   - the DECODE-ONCE barrier after the decode: downstream the band
-    *     transform and both join sides reference the decoded column —
-    *     inlined, every reference would rebuild the bytes and re-decode
-    *     them. Materialized here, construct+decode runs once per doc and
-    *     a self-join's two sides reuse this one exchange.
+    * `decode` over the bytes `content` renders — the scan, one projection,
+    * no exchange. Both calls are native and codegen'd, and each runs once
+    * per doc: the decode references `content` once (d86's coalesce twice,
+    * which keeps the render in its own projection). A consumer that
+    * references `out` many times, or reads it in several jobs,
+    * materializes it at its own call site (d78/d82/d85's lazy
+    * checkpoint).
     * There is deliberately NO isNotNull filter on the decoded column: it
-    * would push through the barrier and land next to the bits/content
-    * projections, where predicate inlining rebuilds and re-decodes the
-    * bytes once per reference (measured 25 s of the original 27 s at
-    * sf0.1). Unparseable rows (NULL hash) produce NULL band keys and die
+    * would push down beside the projection and re-derive render+decode
+    * per row in the filter (measured 25 s of the original 27 s at sf0.1
+    * for d78). Unparseable rows (NULL hash) produce NULL band keys and die
     * in the inner equi-join with zero extra code.
     */
-  private def decoded(spark: SparkSession, sfDir: String, bits: String,
-      content: String, decode: String, out: String = "hash"): DataFrame = {
+  private def decoded(spark: SparkSession, sfDir: String, content: Column,
+      decode: String, out: String = "hash"): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(bits).as("bits"))
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), expr(content).as("content"))
+      .select(col("doc_id"), content.as("content"))
       .select(col("doc_id"), expr(decode).as(out))
-      .repartition(col("doc_id"))
   }
-
-  /** The 8 storage rows (bottom row first) as hex: each logical row is a
-    * luma walk from 128 stepping −10 on a 1-bit, +10 on a 0-bit, so
-    * cell (r,c) > cell (r,c+1) iff bit r·8+c is set; pixels are BGR
-    * triples of the walk value plus the 1-byte stride pad. `bits` is the
-    * 64-element pattern array computed once per doc.
-    */
-  private val bmpPixelsHex: String = {
-    val step = "IF(bits[(7 - s) * 8 + c - 1] = 1L, -10L, 10L)"
-    "concat_ws('', transform(sequence(0, 7), s -> " +
-      "aggregate(sequence(1, 8), " +
-      "named_struct('v', 128L, 'hx', repeat('80', 3)), " +
-      s"(acc, c) -> named_struct(" +
-      s"'v', acc.v + $step, " +
-      s"'hx', concat(acc.hx, repeat(lpad(hex(acc.v + $step), 2, '0'), 3))), " +
-      "acc -> concat(acc.hx, '00'))))"
-  }
-
-  private[queries] val bmpContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$BmpHeaderHex', $bmpPixelsHex)))"
 
   /** d78's construct→decode stage: one (doc_id, hash) row per doc (NULL
     * for junk) — split out so d83's incremental probe/standing split and
-    * d90's decode census read it without the banding join. It ends in a
-    * lazy checkpoint: its consumers read the materialized (doc_id,
-    * 8-byte hash) rows, and the checkpoint leaf supersedes the
-    * decode-once barrier's anti-inline job for them (the barrier stays
-    * for the plan shape).
+    * d90's decode census read it without the banding join. [[d78Hashed]]
+    * ends in a lazy checkpoint: its consumers (the pair join's two sides,
+    * d83's two filters, d90's census) read the materialized (doc_id,
+    * 8-byte hash) rows instead of each re-running render+decode.
     */
-  def d78Hashed(spark: SparkSession, sfDir: String): DataFrame =
-    decoded(spark, sfDir, BmpFamily.bitsExpr, bmpContentExpr,
+  private[queries] def d78Head(spark: SparkSession, sfDir: String): DataFrame =
+    decoded(spark, sfDir, BmpFamily.render(MediaRender.Bmp),
       s"${graft.functions.GraftFunctions.BmpDhashName}(content)")
-      .localCheckpoint(false)
+
+  def d78Hashed(spark: SparkSession, sfDir: String): DataFrame =
+    d78Head(spark, sfDir).localCheckpoint(false)
 
   /** d79: IMAGE RESIZE — the real pixel transform the multimodal
     * mandate's resize step called for ([[graft.functions.BmpResize]]:
@@ -3854,37 +3812,13 @@ object GroupD {
     * Junk docs (≡ 0 mod 17) pin the refusal path: resize NULL,
     * downstream fields NULL.
     *
-    * Scale shape: one scan-side projection per stage with d78's
-    * materialization barriers (the HOF construction must not inline into
-    * downstream references); no joins, no aggregation — the resize pass
-    * is embarrassingly parallel at any corpus size, and at 100 TB reads
-    * `content` from parquet instead of constructing it.
+    * Scale shape: one scan-side render→resize projection, then the dims
+    * walk and the dHash over the resized bytes; no joins, no aggregation
+    * — the resize pass is embarrassingly parallel at any corpus size,
+    * and at 100 TB reads `content` from parquet instead of rendering it.
     */
-  private val Bmp18HeaderHex: String =
-    "424DB6030000000000003600000028000000120000001000000001001800" +
-      "0000000080030000130B0000130B00000000000000000000"
-
-  private val bmp18PixelsHex: String = {
-    // storage rows 0..15 bottom-up; logical row 15-s, walk row (15-s)/2;
-    // each walk pixel spans 2 columns (6 bytes) and each walk row 2 rows
-    val step = "IF(bits[((15 - s) div 2) * 8 + c - 1] = 1L, -10L, 10L)"
-    "concat_ws('', transform(sequence(0, 15), s -> " +
-      "aggregate(sequence(1, 8), " +
-      "named_struct('v', 128L, 'hx', repeat('80', 6)), " +
-      s"(acc, c) -> named_struct(" +
-      s"'v', acc.v + $step, " +
-      s"'hx', concat(acc.hx, repeat(lpad(hex(acc.v + $step), 2, '0'), 6))), " +
-      "acc -> concat(acc.hx, '0000'))))"
-  }
-
-  private[queries] val bmp18ContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$Bmp18HeaderHex', $bmp18PixelsHex)))"
-
   def d79ImageResize(spark: SparkSession, sfDir: String): DataFrame = {
-    // the decode-once barrier materializes the resized bytes once: the
-    // dims walks and the dHash below each reference them several times
-    val resized = decoded(spark, sfDir, BmpFamily.bitsExpr, bmp18ContentExpr,
+    val resized = decoded(spark, sfDir, BmpFamily.render(MediaRender.Bmp18),
       s"${graft.functions.GraftFunctions.BmpResizeName}(content, 9, 8)",
       out = "resized")
     graft.multimodal.Multimodal.imageDimsPlan(resized, "resized")
@@ -3947,15 +3881,8 @@ object GroupD {
     * cluster over cluster-sized groups.
     */
   def d81ImageKeepBest(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val mixed = Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), expr(BmpFamily.bitsExpr).as("bits"))
-      .repartition(col("doc_id")) // d78's construction barrier
-      .select(col("doc_id"), expr(
-        s"IF(doc_id % 2 = 0, $bmp18ContentExpr, $bmpContentExpr)")
-        .as("content"))
-      // barrier before the dims walk's many content references
-      .repartition(col("doc_id"))
+      .select(col("doc_id"), BmpFamily.render(MediaRender.Bmp18Bmp).as("content"))
     val dims = graft.multimodal.Multimodal.imageDimsPlan(mixed, "content")
       .select(col("doc_id"), (col("img_width") * col("img_height")).as("px"))
     val w = Window.partitionBy("cluster_id")
@@ -3985,48 +3912,20 @@ object GroupD {
     * re-derives the bits arithmetically and computes Hamming directly —
     * it never sees bytes.
     *
-    * Scale shape: d78's verbatim — construction barriers, scan-side
-    * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
-    * predicate so no inferred filter re-derives the decode at the scan.
+    * Scale shape: d78's verbatim — one scan-side render→decode
+    * projection, (band, key, hash) shuffle rows only, null-tolerant
+    * hamming predicate so no inferred filter re-derives the decode.
     */
-  // RIFF/WAVE + fmt(PCM mono 16-bit 8 kHz) + data(1040 B = 520 samples)
-  private val WavHeaderHex: String =
-    "52494646" + "34040000" + "57415645" +
-      "666D7420" + "10000000" + "0100" + "0100" +
-      "401F0000" + "803E0000" + "0200" + "1000" +
-      "64617461" + "10040000"
-
-  /** 65 windows × 8 identical LE samples: the walk starts at 10000 and
-    * steps −100 on a 1-bit, +100 on a 0-bit, so window k is strictly
-    * louder than k+1 exactly when bit k is set (range 3600–16400 —
-    * safely inside 16-bit signed).
-    */
-  private val wavSamplesHex: String = {
-    val step = "IF(bits[c - 1] = 1L, -100L, 100L)"
-    def le16(v: String) =
-      s"concat(substring(lpad(hex($v), 4, '0'), 3, 2), " +
-        s"substring(lpad(hex($v), 4, '0'), 1, 2))"
-    "aggregate(sequence(1, 64), " +
-      s"named_struct('v', 10000L, 'hx', repeat(${le16("10000L")}, 8)), " +
-      s"(acc, c) -> named_struct(" +
-      s"'v', acc.v + $step, " +
-      s"'hx', concat(acc.hx, repeat(${le16(s"acc.v + $step")}, 8))), " +
-      "acc -> acc.hx)"
-  }
-
-  private[queries] val wavContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$WavHeaderHex', $wavSamplesHex)))"
-
   /** d82's construct→decode stage — split out so d94's funnel can census
     * the decode without re-opening the banding join. Lazy checkpoint like
-    * d78Hashed: the 1 KB-per-doc sample construction dominates the
-    * modality's cost. */
+    * [[d78Hashed]]. */
+  private[queries] def d82Head(spark: SparkSession, sfDir: String): DataFrame =
+    decoded(spark, sfDir, WavFamily.render(MediaRender.Wav),
+      s"${graft.functions.GraftFunctions.WavEnergyHashName}(content)")
+
   private[queries] def d82Hashed(spark: SparkSession, sfDir: String)
       : DataFrame =
-    decoded(spark, sfDir, WavFamily.bitsExpr, wavContentExpr,
-      s"${graft.functions.GraftFunctions.WavEnergyHashName}(content)")
-      .localCheckpoint(false)
+    d82Head(spark, sfDir).localCheckpoint(false)
 
   private[queries] def d82Pairs(spark: SparkSession, sfDir: String): DataFrame =
     PerceptualDedup.selfPairs(d82Hashed(spark, sfDir), maxDist = 3)
@@ -4081,50 +3980,16 @@ object GroupD {
     * re-derives the bits arithmetically and computes Hamming directly —
     * it never sees bytes.
     *
-    * Scale shape: d78's verbatim — construction barriers, scan-side
-    * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
-    * predicate so no inferred filter re-derives the decode at the scan.
+    * Scale shape: d78's verbatim — one scan-side render→decode
+    * projection, (band, key, hash) shuffle rows only, null-tolerant
+    * hamming predicate so no inferred filter re-derives the decode.
     */
-  /** PNG preamble through the IDAT stored-block header: signature, IHDR
-    * (9×8, depth 8, grayscale, no interlace; CRCs zeroed — the decode
-    * verifies meaning, not checksums), IDAT length 0x5B = zlib hdr (2) +
-    * stored-block hdr (5: final, LEN=80 LE, NLEN) + 80 raw + adler (4).
-    */
-  private val PngHeaderHex: String =
-    "89504E470D0A1A0A" + "0000000D49484452" + "00000009" + "00000008" +
-      "0800000000" + "00000000" + "0000005B49444154" + "7801" +
-      "01" + "5000" + "AFFF"
-
-  /** Zeroed adler placeholder + IDAT CRC, then IEND. */
-  private val PngTrailerHex: String =
-    "00000000" + "00000000" + "00000000" + "49454E44" + "00000000"
-
-  /** The 8 scanlines TOP-DOWN (PNG row order): filter byte 0, then the
-    * luma walk from 128 stepping −10 on a 1-bit, +10 on a 0-bit — one
-    * byte per pixel (grayscale), so cell (r,c) > cell (r,c+1) iff bit
-    * r·8+c is set, same rule as the BMP rendering one byte-width over.
-    */
-  private val pngPixelsHex: String = {
-    val step = "IF(bits[s * 8 + c - 1] = 1L, -10L, 10L)"
-    "concat_ws('', transform(sequence(0, 7), s -> " +
-      "aggregate(sequence(1, 8), " +
-      "named_struct('v', 128L, 'hx', '0080'), " +
-      s"(acc, c) -> named_struct(" +
-      s"'v', acc.v + $step, " +
-      s"'hx', concat(acc.hx, lpad(hex(acc.v + $step), 2, '0'))), " +
-      "acc -> acc.hx)))"
-  }
-
-  private[queries] val pngContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$PngHeaderHex', $pngPixelsHex, '$PngTrailerHex')))"
-
   /** d84's verified pair list without the presentation sort — c10's
     * dedup-volume card consumes it too.
     */
   private[queries] def d84Pairs(spark: SparkSession, sfDir: String): DataFrame =
     PerceptualDedup.selfPairs(
-      decoded(spark, sfDir, PngFamily.bitsExpr, pngContentExpr,
+      decoded(spark, sfDir, PngFamily.render(MediaRender.Png),
         s"${graft.functions.GraftFunctions.PngDhashName}(content)"),
       maxDist = 3)
 
@@ -4148,45 +4013,20 @@ object GroupD {
     * ≡ 0 (mod 17) carry junk the frame walk must refuse. The oracle
     * re-derives the bits arithmetically — it never sees bytes.
     *
-    * Scale shape: d78's verbatim — construction barriers, scan-side
-    * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
-    * predicate so no inferred filter re-derives the decode at the scan.
+    * Scale shape: d78's verbatim — one scan-side render→decode
+    * projection, (band, key, hash) shuffle rows only, null-tolerant
+    * hamming predicate so no inferred filter re-derives the decode.
     */
-  /** `YUV4MPEG2 W4 H4 F25:1 Ip A1:1 Cmono\n` — a 4×4 mono stream, 16
-    * luma bytes per frame.
-    */
-  private val Y4mHeaderHex: String =
-    "595556344D50454732205734204834204632353A312049702041313A3120" +
-      "436D6F6E6F0A"
-
-  /** 65 `FRAME\n` + 16 constant luma bytes each: the walk starts at 128
-    * and steps −1 on a 1-bit, +1 on a 0-bit (range 64–192, safely inside
-    * a byte), so frame k's mean is strictly brighter than frame k+1's
-    * exactly when bit k is set.
-    */
-  private val y4mFramesHex: String = {
-    val step = "IF(bits[c - 1] = 1L, -1L, 1L)"
-    "aggregate(sequence(1, 64), " +
-      "named_struct('v', 128L, 'hx', concat('4652414D450A', repeat('80', 16))), " +
-      s"(acc, c) -> named_struct(" +
-      s"'v', acc.v + $step, " +
-      s"'hx', concat(acc.hx, '4652414D450A', " +
-      s"repeat(lpad(hex(acc.v + $step), 2, '0'), 16))), " +
-      "acc -> acc.hx)"
-  }
-
-  private[queries] val y4mContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$Y4mHeaderHex', $y4mFramesHex)))"
-
   /** d85's construct→decode stage — split out so d94's funnel can census
-    * the decode without re-opening the banding join. Lazy checkpoint
-    * (d82Hashed's note). */
+    * the decode without re-opening the banding join. Lazy checkpoint like
+    * [[d78Hashed]]. */
+  private[queries] def d85Head(spark: SparkSession, sfDir: String): DataFrame =
+    decoded(spark, sfDir, Y4mFamily.render(MediaRender.Y4m),
+      s"${graft.functions.GraftFunctions.Y4mEnvelopeHashName}(content)")
+
   private[queries] def d85Hashed(spark: SparkSession, sfDir: String)
       : DataFrame =
-    decoded(spark, sfDir, Y4mFamily.bitsExpr, y4mContentExpr,
-      s"${graft.functions.GraftFunctions.Y4mEnvelopeHashName}(content)")
-      .localCheckpoint(false)
+    d85Head(spark, sfDir).localCheckpoint(false)
 
   private[queries] def d85Pairs(spark: SparkSession, sfDir: String): DataFrame =
     PerceptualDedup.selfPairs(d85Hashed(spark, sfDir), maxDist = 3)
@@ -4211,17 +4051,11 @@ object GroupD {
     * hashes disagreed on the same pixels, every cross-format pair would
     * miss and the hash gate would fail.
     *
-    * Scale shape: d78's verbatim — construction barriers, scan-side
-    * decode (one real + one signature refusal per asset), (band, key,
-    * hash) shuffle rows only, null-tolerant hamming predicate so no
-    * inferred filter re-derives the decodes at the scan.
+    * Scale shape: d78's verbatim — one scan-side render→decode
+    * projection (one real decode + one signature refusal per asset),
+    * (band, key, hash) shuffle rows only, null-tolerant hamming predicate
+    * so no inferred filter re-derives the decodes.
     */
-  private[queries] val xfmtContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"IF(doc_id % 2 = 0, " +
-      s"unhex(concat('$BmpHeaderHex', $bmpPixelsHex)), " +
-      s"unhex(concat('$PngHeaderHex', $pngPixelsHex, '$PngTrailerHex'))))"
-
   /** d86's verified pair list without the presentation sort — c10's
     * dedup-volume card consumes it too.
     */
@@ -4230,7 +4064,7 @@ object GroupD {
     // format-agnostic hash: each decode refuses the other container at
     // its signature bytes, so this is one real decode per asset
     PerceptualDedup.selfPairs(
-      decoded(spark, sfDir, XfmtFamily.bitsExpr, xfmtContentExpr,
+      decoded(spark, sfDir, XfmtFamily.render(MediaRender.BmpPng),
         s"coalesce(${fns.BmpDhashName}(content), ${fns.PngDhashName}(content))"),
       maxDist = 3)
   }
@@ -4256,65 +4090,16 @@ object GroupD {
     * junk the decode must refuse. The oracle re-derives the bits
     * arithmetically — it never sees bytes.
     *
-    * Scale shape: d78's verbatim — construction barriers, scan-side
-    * decode, (band, key, hash) shuffle rows only, null-tolerant hamming
-    * predicate so no inferred filter re-derives the decode at the scan.
+    * Scale shape: d78's verbatim — one scan-side render→decode
+    * projection, (band, key, hash) shuffle rows only, null-tolerant
+    * hamming predicate so no inferred filter re-derives the decode.
     */
-  /** GIF preamble through the one data sub-block's size byte: signature,
-    * 9×8 logical screen with a 32-entry global gray table (entry i =
-    * 8i, so palette luma is monotone in the index), image descriptor,
-    * LZW min code size 5, sub-block length 0x6D (145 six-bit codes =
-    * 109 bytes).
-    */
-  private val GifHeaderHex: String = {
-    val gct = (0 until 32).map(i => f"${i * 8}%02X" * 3).mkString
-    "474946383961" + "09000800F40000" + gct +
-      "2C000000000900080000" + "05" + "6D"
-  }
-
-  /** End of the code stream: the 0 block terminator + the 3B trailer. */
-  private val GifTrailerHex: String = "003B"
-
-  /** The packed LZW code stream: row s walks a palette index from 16,
-    * −1 on a 1-bit, +1 on a 0-bit (range 8–24 inside the 32-entry
-    * table), every pixel preceded by CLEAR (32) and the stream closed
-    * by EOI (33), all 6-bit codes packed LSB-first — the GIF spec's
-    * uncompressed idiom, so cell (r,c) > (r,c+1) iff bit r·8+c is set.
-    */
-  private val gifCodesHex: String = {
-    val step = "IF(bits[s * 8 + c - 1] = 1L, -1L, 1L)"
-    val pixelCodes =
-      "flatten(transform(sequence(0, 7), s -> " +
-        "aggregate(sequence(1, 8), " +
-        "named_struct('v', 16L, 'arr', array(16L)), " +
-        s"(acc, c) -> named_struct('v', acc.v + $step, " +
-        s"'arr', concat(acc.arr, array(acc.v + $step))), " +
-        "acc -> acc.arr)))"
-    val codes =
-      s"concat(flatten(transform($pixelCodes, p -> array(32L, p))), array(33L))"
-    s"aggregate($codes, " +
-      "named_struct('acc', 0L, 'nb', 0L, 'hx', ''), " +
-      "(st, code) -> IF(st.nb + 6 >= 8, " +
-      "named_struct('acc', shiftright(st.acc | shiftleft(code, st.nb), 8), " +
-      "'nb', st.nb - 2L, " +
-      "'hx', concat(st.hx, " +
-      "lpad(hex((st.acc | shiftleft(code, st.nb)) % 256L), 2, '0'))), " +
-      "named_struct('acc', st.acc | shiftleft(code, st.nb), " +
-      "'nb', st.nb + 6L, 'hx', st.hx)), " +
-      "st -> IF(st.nb > 0L, concat(st.hx, lpad(hex(st.acc % 256L), 2, '0')), " +
-      "st.hx))"
-  }
-
-  private[queries] val gifContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$GifHeaderHex', $gifCodesHex, '$GifTrailerHex')))"
-
   /** d87's verified pair list without the presentation sort — c10's
     * dedup-volume card consumes it too.
     */
   private[queries] def d87Pairs(spark: SparkSession, sfDir: String): DataFrame =
     PerceptualDedup.selfPairs(
-      decoded(spark, sfDir, GifFamily.bitsExpr, gifContentExpr,
+      decoded(spark, sfDir, GifFamily.render(MediaRender.Gif),
         s"${graft.functions.GraftFunctions.GifDhashName}(content)"),
       maxDist = 3)
 
@@ -4343,7 +4128,7 @@ object GroupD {
     * junk the decode must refuse; with no features they are never
     * provably dups and pass — the monotone-gate contract (d83's),
     * which also keeps NULL handling out of the join (no isnotnull
-    * filter for constraint inference to push below the barriers —
+    * filter for constraint inference to push down to the decode —
     * [[decoded]]'s lesson).
     *
     * ORACLE-ANCHOR pair source — never run the quadratic at production
@@ -4357,48 +4142,17 @@ object GroupD {
     * for, pinned with measured-zero-missed-drops in PipelineOpsSpec
     * (the τ ≥ 0.8 pruning argument, fed by real pixel features instead
     * of synthetic vectors). Scale shape of
-    * everything before the pair source is d78's verbatim:
-    * construction barriers, one scan-side decode, feature rows of
-    * (doc_id, 72×8 B) are the only thing that shuffles.
+    * everything before the pair source is d78's verbatim: one
+    * scan-side render→decode projection, feature rows of (doc_id,
+    * 72×8 B) are the only thing that shuffles.
     */
-  private val d88BitsExpr: String =
-    "transform(sequence(0L, 63L), k -> " +
-      "((((doc_id div 4) * 1000151L + k * 7841L + 86420L) % 1000000007L)" +
-      " * (((doc_id div 4) * 1000151L + k * 7841L + 86420L) % 1000000007L)" +
-      " % 2147483647L)" +
-      " * ((((doc_id div 4) * 1000151L + k * 7841L + 86420L) % 1000000007L)" +
-      " * (((doc_id div 4) * 1000151L + k * 7841L + 86420L) % 1000000007L)" +
-      " % 2147483647L) % 2147483647L div 1024L % 2L)"
-
-  /** The 8 storage rows (bottom-up) of the d88 rendering: the d78 walk
-    * with a per-doc START offset on logical row `doc_id mod 8` — the
-    * whole row shifts by (doc_id mod 3) − 1, everything else is the
-    * family base. Values stay in [47, 209], inside a byte.
-    */
-  private val d88PixelsHex: String = {
-    val step = "IF(bits[(7 - s) * 8 + c - 1] = 1L, -10L, 10L)"
-    val start = "(128L + IF(7 - s = doc_id % 8, doc_id % 3 - 1L, 0L))"
-    "concat_ws('', transform(sequence(0, 7), s -> " +
-      "aggregate(sequence(1, 8), " +
-      s"named_struct('v', $start, " +
-      s"'hx', repeat(lpad(hex($start), 2, '0'), 3)), " +
-      s"(acc, c) -> named_struct(" +
-      s"'v', acc.v + $step, " +
-      s"'hx', concat(acc.hx, repeat(lpad(hex(acc.v + $step), 2, '0'), 3))), " +
-      "acc -> concat(acc.hx, '00'))))"
-  }
-
-  private[queries] val d88ContentExpr: String =
-    s"IF(doc_id % 17 = 0, unhex('00112233'), " +
-      s"unhex(concat('$BmpHeaderHex', $d88PixelsHex)))"
-
   /** d88's feature frame: (doc_id, centered 72-dim grid-luma vector as
     * array<double>; NULL for junk) — split out so d89 and the spec's LSH
     * scale twin consume the identical features.
     */
   private[queries] def d88Features(spark: SparkSession, sfDir: String)
       : DataFrame =
-    decoded(spark, sfDir, d88BitsExpr, d88ContentExpr,
+    decoded(spark, sfDir, D88Family.render(MediaRender.BmpRowShift),
       s"${graft.functions.GraftFunctions.GridLumaCellsName}(content)",
       out = "cells")
       // all values are exact small integers carried as doubles, so the
@@ -4408,7 +4162,7 @@ object GroupD {
         expr("aggregate(cells, 0D, (a, x) -> a + x)").as("tot"))
       .repartition(col("doc_id")) // total-once barrier: the transform
       // below references tot per element — inlined, the aggregate would
-      // re-fold the 72 cells once per output lane (the d78 HOF pathology)
+      // re-fold the 72 cells once per output lane
       .select(col("doc_id"),
         expr("transform(cells, x -> x * 72D - tot)").as("v"))
       .repartition(col("doc_id")) // feature-once barrier: both triangle
@@ -4428,9 +4182,9 @@ object GroupD {
     * equivalence on this corpus, the d10 discipline (d10 likewise
     * hash-matches d9's NOT-EXISTS oracle).
     *
-    * Scale shape: construction/decode/feature barriers inherited from
-    * [[d88Features]]; after them only (doc_id, band-key) and (doc_id,
-    * 72×8 B) rows shuffle; candidates are bucket-bounded, the exact
+    * Scale shape: the render→decode head and the total/feature
+    * barriers inherited from [[d88Features]]; after them only (doc_id,
+    * band-key) and (doc_id, 72×8 B) rows shuffle; candidates are bucket-bounded, the exact
     * cosine verify touches candidates only, and the keep rule is the
     * same anti-join tail. Linear in documents in the banded regime.
     */
@@ -4753,7 +4507,13 @@ object GroupD {
         lit(GroupC.HrefP), lit(1)), GroupC.urlNormalize(_))).as("norm_url"))
       .filter(col("norm_url").isNotNull)
       .distinct()
-      .join(corpus.select("norm_url"), Seq("norm_url"), "left_anti")
+      // null-safe key: an `=` key would infer isnotnull(norm_url) on the
+      // corpus side and push it below the fan-out repartition, where it
+      // substitutes and so runs the corpus-side kernel twice per doc; the
+      // href side is non-null, so the rows are the same
+      .as("f")
+      .join(corpus.select("norm_url").as("c"),
+        col("f.norm_url") <=> col("c.norm_url"), "left_anti")
       .select(col("norm_url"),
         GroupC.urlDomain(col("norm_url")).as("domain"))
 

@@ -3,6 +3,8 @@ package graft.queries
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.{CsvCatalog, CsvDialect, CsvWrite}
 
@@ -12,31 +14,30 @@ object Tables {
     * `spark.read.parquet(path)` re-infers the schema on EVERY call —
     * a footer read plus relation setup measured at ~0.08 s per call on
     * this box (ProfileMicro), paid by every query invocation of every
-    * bench pass. Production reads resolve the schema from a catalog /
-    * metastore instead of re-inferring per query; this memo is that
-    * catalog: METADATA only (a StructType per path — never rows), keyed
-    * by the full file path, populated from the first real inference in
-    * this JVM. The fixtures are immutable within a process. Inference
-    * depends on the reading session's legacy-nanos flag (INT64 nanosecond
-    * timestamps infer as LongType under it and are refused without it),
-    * so the key carries that flag too: a session is only ever served a
-    * schema inferred under its own flag, and `.schema(s)` reads are
-    * byte-identical to inferred reads.
+    * bench pass, and a schema-merge Spark job even for one file.
+    * Production reads resolve the schema from a catalog / metastore
+    * instead of re-inferring per query; this memo is that catalog:
+    * METADATA only (a StructType per path — never rows), keyed by the
+    * full file path, populated from the file's footer read on the driver
+    * ([[GraftParquetFooter]], no Spark job; a directory of part files,
+    * as the specs write, keeps Spark's inference). The fixtures are
+    * immutable within a process. Inference depends on the reading session's
+    * legacy-nanos flag (INT64 nanosecond timestamps infer as LongType
+    * under it and are refused without it), so the key carries that flag
+    * too: a session is only ever served a schema inferred under its own
+    * flag, and `.schema(s)` reads are byte-identical to inferred reads
+    * (TablesSpec).
     */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), StructType]()
 
   /** Load one driver-generated parquet table (TESTDATA.md). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean)
-    val cached = schemaMemo.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.putIfAbsent(key, df.schema)
-      df
-    }
+    val schema = schemaMemo.computeIfAbsent(key, _ =>
+      GraftParquetFooter.schema(spark, path).getOrElse(spark.read.parquet(path).schema))
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Scan-parallelism memo for [[fanned]]: planned scan partition count

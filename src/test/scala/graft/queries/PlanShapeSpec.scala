@@ -243,34 +243,47 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   // The decode-once pin, one row per media hub: an isnotnull(hash) —
-  // explicit or inferred from the hamming predicate — pushes through the
-  // repartition barriers and re-inlines the whole construct+decode into a
-  // per-row scan filter (measured 25 of 27 s at sf0.1 for d78). Each
-  // decode expression may appear once per join side, nowhere else. d86's
+  // explicit or inferred from the hamming predicate — pushes down beside
+  // the render→decode projection and re-derives the decode per row in a
+  // scan filter (measured 25 of 27 s at sf0.1 for d78). Each decode
+  // expression may appear once per join side, nowhere else. d86's
   // cross-format corpus runs BOTH native decodes under a coalesce (each
   // refuses the other container at its signature), so the pin applies
-  // to each.
+  // to each. d78/d82/d85 checkpoint their decoded frame, so their pair
+  // plans start at `Scan ExistingRDD` and show no decode at all: for
+  // them the pin reads the checkpointed frame's own plan, which must
+  // render and decode exactly once.
   private val decodeOncePins = Seq(
     ("d78: the pixel decode runs ONCE per join side — never re-derived at the scan",
-      "d78_image_dedup", Seq("graft_bmp_dhash")),
+      "d78_image_dedup", Seq("graft_bmp_dhash"), Some(GroupD.d78Head _)),
     ("d82: the WAV sample decode runs ONCE per join side — never re-derived at the scan",
-      "d82_audio_dedup", Seq("graft_wav_ehash")),
+      "d82_audio_dedup", Seq("graft_wav_ehash"), Some(GroupD.d82Head _)),
     ("d84: the PNG decode runs ONCE per join side — never re-derived at the scan",
-      "d84_png_dedup", Seq("graft_png_dhash")),
+      "d84_png_dedup", Seq("graft_png_dhash"), None),
     ("d85: the Y4M frame decode runs ONCE per join side — never re-derived at the scan",
-      "d85_video_dedup", Seq("graft_y4m_ehash")),
+      "d85_video_dedup", Seq("graft_y4m_ehash"), Some(GroupD.d85Head _)),
     ("d86: both decodes run ONCE per join side; qualifying pairs cross the format boundary",
-      "d86_cross_format_dedup", Seq("graft_bmp_dhash", "graft_png_dhash")),
+      "d86_cross_format_dedup", Seq("graft_bmp_dhash", "graft_png_dhash"), None),
     ("d87: the GIF LZW decode runs ONCE per join side — never re-derived at the scan",
-      "d87_gif_dedup", Seq("graft_gif_dhash")))
+      "d87_gif_dedup", Seq("graft_gif_dhash"), None))
 
-  for ((name, query, decodes) <- decodeOncePins) test(name) {
+  private def calls(plan: String, fn: String): Int =
+    s"$fn\\(".r.findAllMatchIn(plan).length
+
+  for ((name, query, decodes, head) <- decodeOncePins) test(name) {
     val p = plan(query)
     for (fn <- decodes) {
-      val occurrences = s"$fn\\(".r.findAllMatchIn(p).length
+      val occurrences = calls(p, fn)
       assert(occurrences <= 2, s"$fn appears $occurrences times")
       assert(!p.contains(s"DataFilters: [isnotnull($fn"),
         s"inferred null filter re-derives $fn at the scan")
+    }
+    for (h <- head) {
+      val hp = h(spark, sf).queryExecution.executedPlan.toString
+      for (fn <- graft.functions.MediaRender.Name +: decodes) {
+        val n = calls(hp, fn)
+        assert(n == 1, s"$query's checkpointed frame calls $fn $n times:\n$hp")
+      }
     }
     if (query == "d86_cross_format_dedup") {
       // the claim under test: a BMP-rendered asset dedups against a
@@ -280,6 +293,32 @@ class PlanShapeSpec extends AnyFunSuite {
         .select("doc_a", "doc_b").collect()
       assert(pairs.exists(r => r.getLong(0) % 2 != r.getLong(1) % 2),
         s"no cross-format pair among ${pairs.length} verified pairs")
+    }
+  }
+
+  test("media hubs: the render→decode head has no exchange and no lambda; one render per join side") {
+    // the native render replaced an interpreted transform/aggregate
+    // construction that needed a repartition barrier to stay un-inlined;
+    // neither may come back. The checkpointed heads are one projection
+    // over the scan; the self-join hubs render once per join side, and
+    // their only lambda is the banding generator's
+    import graft.functions.MediaRender
+    for ((hub, head) <- Seq("d78" -> GroupD.d78Head _, "d82" -> GroupD.d82Head _,
+        "d85" -> GroupD.d85Head _)) {
+      val hp = head(spark, sf).queryExecution.executedPlan.toString
+      assert(!hp.contains("Exchange") && !hp.contains("lambdafunction"),
+        s"$hub's head is not one scan-side projection:\n$hp")
+    }
+    for (q <- Seq("d79_image_resize", "d81_image_keep_best", "d84_png_dedup",
+        "d86_cross_format_dedup", "d87_gif_dedup")) {
+      val p = plan(q)
+      assert(!p.contains("REPARTITION_BY_COL"), s"$q repartitions its media head:\n$p")
+      val lambdaNodes = p.linesIterator.filter(_.contains("lambdafunction")).toList
+      assert(lambdaNodes.forall(_.contains("Generate")),
+        s"$q evaluates a lambda outside the banding generator:\n${lambdaNodes.mkString("\n")}")
+      val renders = calls(p, MediaRender.Name)
+      val sides = if (q.startsWith("d79") || q.startsWith("d81")) 1 else 2
+      assert(renders == sides, s"$q renders $renders times, expected $sides:\n$p")
     }
   }
 
@@ -465,6 +504,26 @@ class PlanShapeSpec extends AnyFunSuite {
     val hrefSide = anti.head.left.toString
     val calls = s"$NormalizeName\\(".r.findAllMatchIn(hrefSide).length
     assert(calls == 1, s"href side calls $NormalizeName $calls times:\n$hrefSide")
+  }
+
+  test("d95/d97: the frontier's corpus side canonicalizes once per doc — no inferred filter copy") {
+    // an `=` anti-join key infers isnotnull(norm_url) on the corpus side
+    // and pushes it below the fan-out repartition, where it substitutes
+    // a second graft_url_normalize call per doc; the null-safe key infers
+    // nothing
+    import graft.functions.UrlCanon.NormalizeName
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    for (q <- Seq("d95_frontier_discovery", "d97_fetch_plan")) {
+      val lp = graft.SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val anti = lp.collect { case j: Join if j.joinType == LeftAnti => j }
+      assert(anti.nonEmpty, s"$q: no frontier anti join:\n$lp")
+      for (j <- anti) {
+        val corpusSide = j.right.toString
+        val n = calls(corpusSide, NormalizeName)
+        assert(n == 1, s"$q: corpus side calls $NormalizeName $n times:\n$corpusSide")
+      }
+    }
   }
 
   test("d97: robots parse is HOST-grouped; cap prunes map-side; one sort feeds both windows") {

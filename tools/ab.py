@@ -2,7 +2,7 @@
 """Paired A/B of the working tree against a base git revision on perfbench.
 
     python3 tools/ab.py --base <rev> --dir <base-checkout-dir> \\
-        [--workload csv_jobs] [--pairs 10] [--first-seed 1] [--seconds 10]
+        [--workload csv_jobs] [--pairs 10] [--first-seed 1] [--seconds 10] [--ops]
 
 Run from the repository root. The base revision's tree is extracted into
 ``--dir`` (``git archive``; reused while it holds the same commit) and builds
@@ -17,12 +17,18 @@ better direction taken from ``BENCHMARK.json``), for each end-to-end metric a
 verdict (``gain``: the change won at least 9 in 10 pairs and the median gap
 exceeds the base's interquartile range; ``regressed``: worse than the
 metric's ``BENCHMARK.json`` bound; ``flat`` otherwise) and the ratio
-change/base of every pair. Files are written only under ``--dir`` and the two
-trees' ``.bench_build/``. Exits 1 when any run fails or is incorrect.
+change/base of every pair. With ``--ops`` it also reports every operation on
+its own: per run, the median wall time of the operation over the timed passes
+(from perfbench's ``p<pass>/<op> <wall>s`` stderr lines, the warm-up passes
+named in perfbench/README.md skipped), then the same paired summary over the
+runs, so a gain can be located in the operations that carry it. Files are
+written only under ``--dir`` and the two trees' ``.bench_build/``. Exits 1 when
+any run fails or is incorrect.
 """
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -30,6 +36,10 @@ import sys
 import tarfile
 
 ROOT = os.getcwd()
+
+# untimed warm-up passes per JVM, as perfbench/README.md names them
+WARMUP_PASSES = {"csv_jobs": 4, "queries": 2}
+OP_LINE = re.compile(r"^perfbench: p(\d+)/(\S+) ([0-9.]+)s untraced\b")
 
 
 def checkout(rev, dest):
@@ -55,8 +65,19 @@ def checkout(rev, dest):
     return sha
 
 
+def op_medians(stderr, workload):
+    """{operation: median wall seconds over the run's timed passes}."""
+    walls = {}
+    for line in stderr.splitlines():
+        m = OP_LINE.match(line)
+        if m and int(m.group(1)) >= WARMUP_PASSES[workload]:
+            walls.setdefault(m.group(2), []).append(float(m.group(3)))
+    return {op: statistics.median(ws) for op, ws in walls.items()}
+
+
 def bench(tree, workload, seed, seconds):
-    """One perfbench run in `tree`; its result line, or None on failure."""
+    """One perfbench run in `tree`: its result line with the per-operation
+    medians under "ops", or None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
@@ -64,7 +85,9 @@ def bench(tree, workload, seed, seconds):
     if not lines:
         sys.stderr.write(p.stderr[-2000:])
         return None
-    return json.loads(lines[-1])
+    r = json.loads(lines[-1])
+    r["ops"] = op_medians(p.stderr, workload)
+    return r
 
 
 def quartiles(xs):
@@ -109,6 +132,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--ops", action="store_true",
+                    help="also report each operation's paired median wall time")
     a = ap.parse_args()
     base_dir = os.path.abspath(a.dir)
     if os.path.commonpath([base_dir, ROOT]) == ROOT:
@@ -145,6 +170,18 @@ def main():
         print(f"{name}: {spread([b for b, _ in vals])} -> {spread([c for _, c in vals])}, "
               f"{mc / mb if mb else float('nan'):.3f}, lost {slower}/{len(vals)}, {judged}"
               + " ".join(f"{c / b:.3f}" if b else "nan" for b, c in vals))
+    if a.ops:
+        print("operation: median [q1 q3] of per-run timed-pass medians (s) base -> change, "
+              "median ratio, pairs the change lost, per-pair change/base")
+        for op in sorted({op for b, c in pairs for op in b["ops"]}):
+            vals = [(b["ops"][op], c["ops"][op]) for b, c in pairs
+                    if op in b["ops"] and op in c["ops"]]
+            if not vals:
+                continue
+            mb, mc = (statistics.median(side) for side in zip(*vals))
+            print(f"{op}: {spread([b for b, _ in vals])} -> {spread([c for _, c in vals])}, "
+                  f"{mc / mb if mb else float('nan'):.3f}, lost {sum(c > b for b, c in vals)}/"
+                  f"{len(vals)}, " + " ".join(f"{c / b:.3f}" if b else "nan" for b, c in vals))
     if bad:
         print(f"ab: {bad} run(s) failed or were incorrect", file=sys.stderr)
     return 1 if bad else 0
