@@ -17,12 +17,12 @@ object TuneReport {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val sample = AnnTuning.sampleVectors(e, 500)
     println(s"corpus: $sfDir, sample: ${sample.count()} of ${e.count()}")
-    val lsh = AnnTuning.lshStats(spark, sample)
+    val lsh = AnnTuning.lshStats(sample)
     println("LSH ladder (tables x bits +probes -> directed work fraction, est recall):")
     lsh.foreach(s => println(
       f"  ${s.config.tables}%2d x ${s.config.bits}%2d +${s.config.probes}%d -> frac=${s.candidateFraction}%.4f rec=${s.estRecall}%.3f"))
     println(s"  chosen: ${AnnTuning.choose(lsh, 0.9, 0.25)}")
-    val ivf = AnnTuning.ivfStats(spark, e, sample)
+    val ivf = AnnTuning.ivfStats(e, sample)
     println("IVF ladder (stride, probes -> scanned fraction, est recall):")
     ivf.foreach(s => println(
       f"  (${s.config.stride}%2d, ${s.config.probes}%d) -> frac=${s.candidateFraction}%.4f rec=${s.estRecall}%.3f"))

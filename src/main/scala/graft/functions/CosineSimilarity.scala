@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,220 +104,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration of graft's native expressions into a session's function
-  * registry, so `expr("graft_cosine(a, b)")` resolves like a builtin.
-  * Idempotent — call per query; temp functions are session-scoped.
-  */
-object GraftFunctions {
-  val CosineName = "graft_cosine"
-  val MinHashName = "graft_minhash64"
-  val LshKeysName = "graft_lsh_keys"
-  val LshProbeKeysName = "graft_lsh_probe_keys"
-  val SimHashName = "graft_simhash32"
-  val PlainDoubleName = "graft_plain_double"
-  val BloomName = "graft_bloom_contains"
-  val JpegDimsName = "graft_jpeg_dims"
-  val WebpDimsName = "graft_webp_dims"
-  val BmpDhashName = "graft_bmp_dhash"
-  val PngDhashName = "graft_png_dhash"
-  val GifDhashName = "graft_gif_dhash"
-  val BmpResizeName = "graft_bmp_resize"
-  val WavEnergyHashName = "graft_wav_ehash"
-  val Y4mEnvelopeHashName = "graft_y4m_ehash"
-  val JpegExifOrientationName = "graft_jpeg_exif_orientation"
-  val CmsCountName = "graft_cms_count"
-  val SigMatchName = "graft_sig_matches"
-  val WavMetaName = "graft_wav_meta"
-  val Mp4MetaName = "graft_mp4_meta"
-  val FlacMetaName = "graft_flac_meta"
-  val Mp3MetaName = "graft_mp3_meta"
-  val OpusMetaName = "graft_opus_meta"
-  val MkvMetaName = "graft_mkv_meta"
-  val NearestCentroidName = "graft_nearest_centroid"
-  val ShingleHashesName = "graft_shingle_hashes"
-  val GridLumaCellsName = "graft_grid_luma"
-  val MediaEnvelopeName = "graft_media_envelope"
-
-  /** Fixed seeded permutation constants for the 64-perm MinHash (a < 2³¹
-    * keeps the affine product inside a long; see [[MinHashSignature]]).
-    */
-  val (minhashA, minhashB): (Seq[Long], Seq[Long]) = {
-    val rnd = new scala.util.Random(42)
-    (Seq.fill(64)(1L + rnd.nextInt(Int.MaxValue - 1)),
-      Seq.fill(64)(rnd.nextInt(Int.MaxValue).toLong))
-  }
-
-  /** Literal int extraction shared by every registration taking scalar
-    * int parameters (one definition — review finding r14; the Long case
-    * range-checks instead of silently truncating).
-    */
-  private def intArg(fn: String)(e: Expression, name: String): Int = {
-    require(e.foldable, s"$fn: '$name' must be a literal")
-    e.eval() match {
-      case i: Int => i
-      case l: Long =>
-        require(l.isValidInt, s"$fn: '$name' out of int range: $l")
-        l.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn: '$name' must be an integer literal, got $other")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(CosineName,
-      { exprs =>
-        require(exprs.length == 2, s"$CosineName expects 2 arguments")
-        CosineSimilarity(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(NearestCentroidName,
-      { exprs =>
-        require(exprs.length == 2,
-          s"$NearestCentroidName expects (array<double>, array<array<double>>)")
-        NearestCentroid(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(MinHashName,
-      { exprs =>
-        require(exprs.length == 1, s"$MinHashName expects 1 argument")
-        MinHashSignature(exprs.head, minhashA, minhashB)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(SimHashName,
-      { exprs =>
-        require(exprs.length == 1, s"$SimHashName expects 1 argument")
-        SimHashSignature(exprs.head, 32)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(PlainDoubleName,
-      { exprs =>
-        require(exprs.length == 1, s"$PlainDoubleName expects 1 argument")
-        PlainDoubleString(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(LshKeysName,
-      { exprs =>
-        require(exprs.length == 3,
-          s"$LshKeysName expects (array<double>, tables, bits)")
-        val arg = intArg(LshKeysName) _
-        HyperplaneLshKeys(exprs.head,
-          arg(exprs(1), "tables"), arg(exprs(2), "bits"))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(LshProbeKeysName,
-      { exprs =>
-        require(exprs.length == 4,
-          s"$LshProbeKeysName expects (array<double>, tables, bits, probes)")
-        val arg = intArg(LshProbeKeysName) _
-        HyperplaneLshProbeKeys(exprs.head, arg(exprs(1), "tables"),
-          arg(exprs(2), "bits"), arg(exprs(3), "probes"))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(BloomName,
-      { exprs =>
-        require(exprs.length == 2, s"$BloomName expects (binary, bigint)")
-        BloomContains(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(JpegDimsName,
-      { exprs =>
-        require(exprs.length == 1, s"$JpegDimsName expects 1 argument")
-        JpegDims(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(WebpDimsName,
-      { exprs =>
-        require(exprs.length == 1, s"$WebpDimsName expects 1 argument")
-        WebpDims(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(BmpDhashName,
-      { exprs =>
-        require(exprs.length == 1, s"$BmpDhashName expects 1 argument")
-        BmpDhash(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(PngDhashName,
-      { exprs =>
-        require(exprs.length == 1, s"$PngDhashName expects 1 argument")
-        PngDhash(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(GifDhashName,
-      { exprs =>
-        require(exprs.length == 1, s"$GifDhashName expects 1 argument")
-        GifDhash(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(WavEnergyHashName,
-      { exprs =>
-        require(exprs.length == 1, s"$WavEnergyHashName expects 1 argument")
-        WavEnergyHash(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(Y4mEnvelopeHashName,
-      { exprs =>
-        require(exprs.length == 1, s"$Y4mEnvelopeHashName expects 1 argument")
-        Y4mEnvelopeHash(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(BmpResizeName,
-      { exprs =>
-        require(exprs.length == 3,
-          s"$BmpResizeName expects (binary, targetW, targetH)")
-        val arg = intArg(BmpResizeName) _
-        BmpResize(exprs.head, arg(exprs(1), "targetW"),
-          arg(exprs(2), "targetH"))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(JpegExifOrientationName,
-      { exprs =>
-        require(exprs.length == 1,
-          s"$JpegExifOrientationName expects 1 argument")
-        JpegExifOrientation(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(CmsCountName,
-      { exprs =>
-        require(exprs.length == 2, s"$CmsCountName expects (binary, bigint)")
-        CmsCount(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(SigMatchName,
-      { exprs =>
-        require(exprs.length == 2,
-          s"$SigMatchName expects (array<bigint>, array<bigint>)")
-        SigMatchCount(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(WavMetaName,
-      { exprs =>
-        require(exprs.length == 1, s"$WavMetaName expects 1 argument")
-        WavMeta(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(Mp4MetaName,
-      { exprs =>
-        require(exprs.length == 1, s"$Mp4MetaName expects 1 argument")
-        Mp4Meta(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(FlacMetaName,
-      { exprs =>
-        require(exprs.length == 1, s"$FlacMetaName expects 1 argument")
-        FlacMeta(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(Mp3MetaName,
-      { exprs =>
-        require(exprs.length == 1, s"$Mp3MetaName expects 1 argument")
-        Mp3Meta(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(OpusMetaName,
-      { exprs =>
-        require(exprs.length == 1, s"$OpusMetaName expects 1 argument")
-        OggOpusMeta(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(MkvMetaName,
-      { exprs =>
-        require(exprs.length == 1, s"$MkvMetaName expects 1 argument")
-        MkvMeta(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(ShingleHashesName,
-      { exprs =>
-        require(exprs.length == 1, s"$ShingleHashesName expects 1 argument")
-        ShingleHashes(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(GridLumaCellsName,
-      { exprs =>
-        require(exprs.length == 1, s"$GridLumaCellsName expects 1 argument")
-        GridLumaCells(exprs.head)
-      }, "built-in")
-    reg.createOrReplaceTempFunction(MediaEnvelopeName,
-      { exprs =>
-        require(exprs.length == 1, s"$MediaEnvelopeName expects 1 argument")
-        MediaEnvelope(exprs.head)
-      }, "built-in")
-  }
 }

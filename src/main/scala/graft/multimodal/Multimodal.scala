@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.GraftFunctions
+
 /** Multimodal (image/audio/video) column plumbing for a training-data
   * pipeline: media assets are opaque `binary` columns travelling next to a
   * typed metadata struct, and decode/feature-extract runs as a batched
@@ -197,7 +199,6 @@ object Multimodal {
     require(clashes.isEmpty,
       s"input columns collide with imageDimsPlan outputs/internals: " +
         s"${clashes.mkString(", ")} — rename them first")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val c = col(bytesCol)
     val len = length(c)
     val isPng = len >= 24 && hex(substring(c, 1, 8)) === "89504E470D0A1A0A" &&
@@ -221,10 +222,8 @@ object Multimodal {
     // expression; NULL result means "not WebP / truncated / corrupt"
     val wd = col("__graft_wd")
     val isWebp = wd.isNotNull
-    df.withColumn("__graft_jd", expr(
-        s"${graft.functions.GraftFunctions.JpegDimsName}($bytesCol)"))
-      .withColumn("__graft_wd", expr(
-        s"${graft.functions.GraftFunctions.WebpDimsName}($bytesCol)"))
+    df.withColumn("__graft_jd", GraftFunctions.jpegDims(c))
+      .withColumn("__graft_wd", GraftFunctions.webpDims(c))
       .withColumn("img_format",
         when(isPng, "png").when(isGif, "gif").when(isBmp, "bmp")
           .when(isWebp, "webp").when(isJpeg, "jpeg"))
@@ -242,8 +241,7 @@ object Multimodal {
       // must honor before touching pixels — JPEG-only by construction
       // (the other formats carry no standard orientation)
       .withColumn("img_orientation",
-        when(isJpeg, expr(s"${graft.functions.GraftFunctions
-          .JpegExifOrientationName}($bytesCol)").cast("long")))
+        when(isJpeg, GraftFunctions.jpegExifOrientation(c).cast("long")))
       .drop("__graft_jd", "__graft_wd")
   }
 
@@ -272,7 +270,6 @@ object Multimodal {
     require(clashes.isEmpty,
       s"input columns collide with mediaMetaPlan outputs/internals: " +
         s"${clashes.mkString(", ")} — rename them first")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // like imageDimsPlan's jpeg walk: evaluate each scan ONCE into a
     // column — CaseWhen branches sit outside codegen's subexpression
     // elimination, so inlining would re-walk the bytes per output column
@@ -293,18 +290,13 @@ object Multimodal {
     // walk, not the sniff — media_format and the audio columns may never
     // disagree about which parse won (review finding, round 13)
     val audio = coalesce(wav, flac, opus, when(mp4.isNull && mkv.isNull, mp3))
-    df.withColumn("__graft_wav", expr(
-        s"${graft.functions.GraftFunctions.WavMetaName}($bytesCol)"))
-      .withColumn("__graft_flac", expr(
-        s"${graft.functions.GraftFunctions.FlacMetaName}($bytesCol)"))
-      .withColumn("__graft_opus", expr(
-        s"${graft.functions.GraftFunctions.OpusMetaName}($bytesCol)"))
-      .withColumn("__graft_mp3", expr(
-        s"${graft.functions.GraftFunctions.Mp3MetaName}($bytesCol)"))
-      .withColumn("__graft_mp4", expr(
-        s"${graft.functions.GraftFunctions.Mp4MetaName}($bytesCol)"))
-      .withColumn("__graft_mkv", expr(
-        s"${graft.functions.GraftFunctions.MkvMetaName}($bytesCol)"))
+    val bytes = col(bytesCol)
+    df.withColumn("__graft_wav", GraftFunctions.wavMeta(bytes))
+      .withColumn("__graft_flac", GraftFunctions.flacMeta(bytes))
+      .withColumn("__graft_opus", GraftFunctions.opusMeta(bytes))
+      .withColumn("__graft_mp3", GraftFunctions.mp3Meta(bytes))
+      .withColumn("__graft_mp4", GraftFunctions.mp4Meta(bytes))
+      .withColumn("__graft_mkv", GraftFunctions.mkvMeta(bytes))
       // strict container parses (magic-anchored) outrank the mp3 frame
       // sniffer: an MP4 whose mdat embeds MPEG audio frames must still
       // classify as mp4

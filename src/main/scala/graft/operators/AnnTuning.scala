@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,13 +104,12 @@ object AnnTuning {
     * broadcast cross + window — the ground truth the recall estimate is
     * scored against.
     */
-  private def exactTop1(sample: DataFrame, spark: SparkSession): DataFrame = {
-    GraftFunctions.register(spark)
+  private def exactTop1(sample: DataFrame): DataFrame = {
     val q = sample.select(col("vec_id").as("qid"), col("v").as("qv"))
     val c = sample.select(col("vec_id").as("nnid"), col("v").as("nv"))
     val sims = q.join(broadcast(c), col("qid") =!= col("nnid"))
       .select(col("qid"), col("qv"), col("nnid"), col("nv"),
-        expr(s"${GraftFunctions.CosineName}(qv, nv)").as("s"))
+        GraftFunctions.cosine(col("qv"), col("nv")).as("s"))
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nnid"))
     sims.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select("qid", "qv", "nnid", "nv")
@@ -131,9 +130,8 @@ object AnnTuning {
     * [[graft.functions.HyperplaneLshProbeKeys]] — the same native keys
     * as the query path.
     */
-  def lshStats(spark: SparkSession, sampleIn: DataFrame,
+  def lshStats(sampleIn: DataFrame,
                configs: Seq[LshConfig] = LshLadder): Seq[ConfigStats[LshConfig]] = {
-    GraftFunctions.register(spark)
     // the sample is read ~3× per ladder rung (qKeyed, iKeyed, maxBucket)
     // — uncached, its upstream plan (hash filter over the full corpus)
     // re-scanned ~45× per tuning pass at the 15-rung default (r18
@@ -141,13 +139,12 @@ object AnnTuning {
     val sample = sampleIn.cache()
     val m = sample.count()
     val orderedPairs = m.toDouble * (m - 1)
-    val truth = exactTop1(sample, spark).cache()
+    val truth = exactTop1(sample).cache()
     try {
       val nTruth = truth.count().toDouble
       configs.map { cfg =>
-        def keysOf(name: String, probes: Int) = expr(
-          s"${GraftFunctions.LshProbeKeysName}($name, " +
-            s"${cfg.tables}, ${cfg.bits}, $probes)")
+        def keysOf(name: String, probes: Int) = GraftFunctions.lshProbeKeys(
+          col(name), cfg.tables, cfg.bits, probes)
         val qKeyed = sample.select(col("vec_id"),
           explode(keysOf("v", cfg.probes)).as("bkey"))
         val iKeyed = sample.select(col("vec_id"),
@@ -177,12 +174,11 @@ object AnnTuning {
     * Candidate fraction = mean probed-cell mass per query; est recall =
     * P(true top-1's assigned cell ∈ query's probed cells).
     */
-  def ivfStats(spark: SparkSession, corpus: DataFrame, sampleIn: DataFrame,
+  def ivfStats(corpus: DataFrame, sampleIn: DataFrame,
                configs: Seq[IvfConfig] = IvfLadder): Seq[ConfigStats[IvfConfig]] = {
-    GraftFunctions.register(spark)
     val sample = sampleIn.cache() // lshStats' r18 rule: one materialization
     val m = sample.count().toDouble
-    val truth = exactTop1(sample, spark)
+    val truth = exactTop1(sample)
       .select(col("qid"), col("nnid")).cache()
     try {
       val nTruth = truth.count().toDouble
@@ -191,7 +187,7 @@ object AnnTuning {
           .select(col("vec_id").as("cid"), col("v").as("cv"))
         val scored = sample.crossJoin(broadcast(cent))
           .select(col("vec_id"), col("cid"),
-            expr(s"${GraftFunctions.CosineName}(v, cv)").as("cs"))
+            GraftFunctions.cosine(col("v"), col("cv")).as("cs"))
         val wCell = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("cid"))
         val ranked = scored.withColumn("crn", row_number().over(wCell)).cache()
         try {
@@ -295,13 +291,13 @@ object AnnTuning {
     * bounds tuning to ~125k sampled pairs per config regardless of corpus
     * size.
     */
-  def tunedLsh(spark: SparkSession, e: DataFrame, key: String,
+  def tunedLsh(e: DataFrame, key: String,
                recallTarget: Double = 0.9, budgetFraction: Double = 0.25,
                maxSample: Int = 500,
                ladder: Seq[LshConfig] = LshLadder): Tuned[LshConfig] =
     LazyMemo.memoized(lshMemo, s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}") {
       val n = e.count()
-      val stats = lshStats(spark, sampleVectors(e, maxSample), ladder)
+      val stats = lshStats(sampleVectors(e, maxSample), ladder)
       val picked = choose(stats, recallTarget, budgetFraction)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"[graft] tuned LSH for $key (n=$n): $picked from " +
@@ -311,13 +307,13 @@ object AnnTuning {
     }
 
   /** Tuned IVF config for a corpus, memoized on `key`. */
-  def tunedIvf(spark: SparkSession, e: DataFrame, key: String,
+  def tunedIvf(e: DataFrame, key: String,
                recallTarget: Double = 0.65, budgetFraction: Double = 0.25,
                maxSample: Int = 500,
                ladder: Seq[IvfConfig] = IvfLadder): Tuned[IvfConfig] =
     LazyMemo.memoized(ivfMemo, s"$key|$recallTarget|$budgetFraction|$maxSample|${ladder.mkString(",")}") {
       val n = e.count()
-      val stats = ivfStats(spark, e, sampleVectors(e, maxSample), ladder)
+      val stats = ivfStats(e, sampleVectors(e, maxSample), ladder)
       val picked = choose(stats, recallTarget, budgetFraction)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"[graft] tuned IVF for $key (n=$n): $picked from " +

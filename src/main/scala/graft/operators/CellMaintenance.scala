@@ -52,7 +52,6 @@ object CellMaintenance {
     if (flaggedSorted.isEmpty)
       return SplitResult(cents.map(_.clone()), Map.empty)
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val members = KMeans.assignWith(corpus, cents)
       .filter(col("cluster").isin(flaggedSorted.map(Int.box): _*))
       .select(col("vec_id"), col("cluster"),
@@ -96,8 +95,7 @@ object CellMaintenance {
           seeds.toSeq.sortBy(_._1).map { case (c, (a, b)) => (c, a, b) })
           .toDF("cluster", "ca", "cb")
         val cells = members.join(broadcast(sdf), "cluster")
-          .withColumn("__nc", call_function(
-            graft.functions.GraftFunctions.NearestCentroidName,
+          .withColumn("__nc", graft.functions.GraftFunctions.nearestCentroid(
             col("v"), array(col("ca"), col("cb"))))
           .select(col("cluster"), col("__nc.cluster").as("sub"),
             posexplode(col("v")))

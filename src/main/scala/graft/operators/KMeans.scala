@@ -51,16 +51,13 @@ object KMeans {
     * streaming). The expression documents the two retired mechanisms; its
     * argmin is [[graft.functions.NearestCentroid.nearest]]'s.
     */
-  def assignWith(vectors: DataFrame, cents: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
+  def assignWith(vectors: DataFrame, cents: Array[Array[Double]]): DataFrame =
     vectors
-      .withColumn("__nc", call_function(
-        graft.functions.GraftFunctions.NearestCentroidName,
+      .withColumn("__nc", graft.functions.GraftFunctions.nearestCentroid(
         col("embedding").cast("array<double>"),
         typedLit(cents.map(_.toSeq).toSeq)))
       .select(col("vec_id"), col("embedding"),
         col("__nc.cluster").as("cluster"), col("__nc.d2").as("d2"))
-  }
 
   /** Fit once per `key` (one collect job plus driver-side Lloyd), then
     * serve the model from the memo: a later pass pays ZERO training jobs

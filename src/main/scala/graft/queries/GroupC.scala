@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExpressionColumn
 
-import graft.functions.UrlCanon
+import graft.functions.{GraftFunctions, UrlCanon}
 
 /** Group C — LLM-data-pipeline operators (SURVEY.md §2.3 Group C; the
   * BASELINE north-star surface): deduplication, near-dup detection,
@@ -70,13 +70,9 @@ object GroupC {
     * benchmark side) it avoids tokenizing the whole corpus just to join
     * most of it away.
     */
-  def shinglesOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    docs
-      .select(col("doc_id"), explode(org.apache.spark.sql.functions
-        .call_function(graft.functions.GraftFunctions.ShingleHashesName,
-          col("text"))).as("shingle"))
-  }
+  def shinglesOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(GraftFunctions.shingleHashes(col("text"))).as("shingle"))
 
   /** c1: exact deduplication — keep the smallest doc_id per identical text
     * (deterministic tiebreak, unlike dropDuplicates whose survivor is
@@ -157,23 +153,6 @@ object GroupC {
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jaccard"))
       .orderBy("doc_a", "doc_b")
 
-  /** Cosine similarity via the native codegen'd expression
-    * ([[graft.functions.CosineSimilarity]]): one fused loop per row,
-    * bit-equal with both the higher-order-fold formulation and DuckDB's
-    * `list_cosine_similarity` (incl. its [-1, 1] clamp). Callers must have
-    * registered [[graft.functions.GraftFunctions]] on the session.
-    */
-  def cosine(a: String, b: String): org.apache.spark.sql.Column =
-    expr(s"${graft.functions.GraftFunctions.CosineName}($a, $b)")
-
-  /** Column-expression overload (for computed operands, e.g. d60's
-    * decoded-codes reconstruction).
-    */
-  def cosine(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function(
-      graft.functions.GraftFunctions.CosineName, a, b)
-
   /** c3: brute-force cosine top-k against a fixed query vector (vec_id 0).
     * The one-row query side is broadcast; the scan side streams through a
     * codegen'd higher-order-function pipeline and TakeOrderedAndProject
@@ -181,7 +160,6 @@ object GroupC {
     * This is the exact baseline; d4 is the LSH-bucketed approximate path.
     */
   def c3SimilarityTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables(spark, sfDir, "embeddings")
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>").as("qv"))
@@ -189,7 +167,7 @@ object GroupC {
         col("embedding").cast("array<double>").as("v"))
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("label"),
-        round(cosine("v", "qv"), 6).as("sim"))
+        round(GraftFunctions.cosine(col("v"), col("qv")), 6).as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(20)
   }

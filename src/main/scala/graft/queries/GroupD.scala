@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExpressionColumn
 
-import graft.functions.MediaRender
+import graft.functions.{GraftFunctions, MediaRender}
 import graft.operators.{LazyMemo, PerceptualDedup}
 
 /** Group D — scale-path extensions of the Group C LLM-pipeline surface:
@@ -68,10 +68,9 @@ object GroupD {
     * d46 keeps best per component.
     */
   def d1Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val arrs = shingleArrays(spark, sfDir)
     val sigs = arrs.select(col("doc_id"),
-      expr(s"${graft.functions.GraftFunctions.MinHashName}(sh)").as("mh"))
+      GraftFunctions.minHash(col("sh")).as("mh"))
     val bands = sigs.select(col("doc_id"),
       posexplode(expr(
         "transform(sequence(0, 31), j -> xxhash64(j, mh[2*j], mh[2*j+1]))"))
@@ -115,7 +114,6 @@ object GroupD {
     * staying linear in documents.
     */
   def d2DedupSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, sfDir, "documents")
     val tw = docs
       .select(col("doc_id"), explode(GroupC.tokens(col("text"))).as("tok"))
@@ -126,7 +124,7 @@ object GroupD {
     val sigs = tw
       .groupBy("doc_id").agg(collect_list(struct(col("h"), col("cnt"))).as("hw"))
       .select(col("doc_id"),
-        expr(s"${graft.functions.GraftFunctions.SimHashName}(hw)").as("simhash"))
+        GraftFunctions.simHash32(col("hw")).as("simhash"))
     val bands = sigs.select(col("doc_id"), col("simhash"),
       posexplode(expr(
         "transform(sequence(0, 3), b -> (simhash >> (8 * b)) & 255)"))
@@ -151,14 +149,13 @@ object GroupD {
     * This is the multi-query generalization of c3's single-query top-k.
     */
   def d3KnnJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val sims = e.join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nn_id"),
-        GroupC.cosine("v", "qv").as("s"))
+        GraftFunctions.cosine(col("v"), col("qv")).as("s"))
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     sims.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5)
@@ -198,11 +195,11 @@ object GroupD {
   def d4AnnLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val tuned = graft.operators.AnnTuning.tunedLsh(spark, e, s"lsh|$sfDir")
+    val tuned = graft.operators.AnnTuning.tunedLsh(e, s"lsh|$sfDir")
     // the big-bucket guard engages only when the measured bucket stats say
     // a bucket would actually exceed the cap — otherwise the uncapped plan
     // keeps its single shared exchange (AnnTuning.effectiveCap)
-    annLsh(e, spark, tuned.config.tables, tuned.config.bits,
+    annLsh(e, tuned.config.tables, tuned.config.bits,
       graft.operators.AnnTuning.effectiveCap(tuned),
       probes = tuned.config.probes)
   }
@@ -219,8 +216,8 @@ object GroupD {
   def d13AnnTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val tuned = graft.operators.AnnTuning.tunedLsh(spark, e, s"lsh|$sfDir")
-    annLsh(e, spark, tuned.config.tables, tuned.config.bits,
+    val tuned = graft.operators.AnnTuning.tunedLsh(e, s"lsh|$sfDir")
+    annLsh(e, tuned.config.tables, tuned.config.bits,
       graft.operators.AnnTuning.effectiveCap(tuned),
       k = 5, queryPred = Some(col("vec_id") < 50),
       probes = tuned.config.probes)
@@ -239,10 +236,9 @@ object GroupD {
     * rows that carry two 64-double arrays would shuffle the whole corpus
     * once per colliding table (measured 67 s vs 4 s at sf0.1).
     */
-  private[queries] def lshCandidatePairs(e: DataFrame, spark: SparkSession,
+  private[queries] def lshCandidatePairs(e: DataFrame,
       tables: Int, bits: Int, bucketCap: Int,
       queryPred: Option[Column] = None, probes: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // table-QUALIFIED keys ((tbl << bits) | bucket — HyperplaneLshProbeKeys)
     // so the bucket equi-join runs on ONE 8-byte column; with probes > 0
     // the QUERY side additionally probes its cheapest perturbation buckets
@@ -250,8 +246,7 @@ object GroupD {
     // index size is unchanged and the tuner can buy recall with fewer
     // tables instead of more collisions)
     def keyed(p: Int) = e.select(col("vec_id"),
-      explode(expr(s"${graft.functions.GraftFunctions.LshProbeKeysName}" +
-        s"(v, $tables, $bits, $p)")).as("bkey"))
+      explode(GraftFunctions.lshProbeKeys(col("v"), tables, bits, p)).as("bkey"))
     val queries = queryPred.fold(keyed(probes))(keyed(probes).filter)
     val index = graft.operators.AnnTuning.capBucketsQualified(keyed(0), bucketCap)
     // skipping this distinct for duplicate-invariant consumers (top-1
@@ -266,16 +261,17 @@ object GroupD {
       .distinct()
   }
 
-  private[queries] def annLsh(e: DataFrame, spark: SparkSession,
+  private[queries] def annLsh(e: DataFrame,
       tables: Int, bits: Int, bucketCap: Int,
       k: Int = 1, queryPred: Option[Column] = None,
       probes: Int = 0): DataFrame = {
-    val cand = lshCandidatePairs(e, spark, tables, bits, bucketCap, queryPred,
+    val cand = lshCandidatePairs(e, tables, bits, bucketCap, queryPred,
       probes)
     val sims = cand
       .join(e.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
       .join(e.select(col("vec_id").as("nn_id"), col("v").as("nv")), Seq("nn_id"))
-      .select(col("qid"), col("nn_id"), GroupC.cosine("nv", "qv").as("s"))
+      .select(col("qid"), col("nn_id"),
+        GraftFunctions.cosine(col("nv"), col("qv")).as("s"))
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     val ranked = sims.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
     if (k == 1)
@@ -313,8 +309,8 @@ object GroupD {
   def d11AnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val tuned = graft.operators.AnnTuning.tunedIvf(spark, e, s"ivf|$sfDir")
-    annIvf(e, spark, tuned.config.stride, tuned.config.probes)
+    val tuned = graft.operators.AnnTuning.tunedIvf(e, s"ivf|$sfDir")
+    annIvf(e, tuned.config.stride, tuned.config.probes)
   }
 
   /** IVF-Flat top-1 on an arbitrary (vec_id, v) frame — d11's body,
@@ -326,13 +322,13 @@ object GroupD {
     * probes its `probes` nearest cells, candidates are the probed cells'
     * members.
     */
-  private[queries] def ivfCandidatePairs(e: DataFrame, spark: SparkSession,
+  private[queries] def ivfCandidatePairs(e: DataFrame,
       stride: Int, probes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cent = e.filter(pmod(col("vec_id"), lit(stride)) === 0)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     val scored = e.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("v"), col("cid"), GroupC.cosine("v", "cv").as("cs"))
+      .select(col("vec_id"), col("v"), col("cid"),
+        GraftFunctions.cosine(col("v"), col("cv")).as("cs"))
     val wCell = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("cid"))
     val ranked = scored.withColumn("crn", row_number().over(wCell))
     val assign = ranked.filter(col("crn") === 1)
@@ -344,13 +340,14 @@ object GroupD {
       .select("qid", "nn_id")
   }
 
-  private[queries] def annIvf(e: DataFrame, spark: SparkSession,
+  private[queries] def annIvf(e: DataFrame,
       stride: Int, probes: Int): DataFrame = {
-    val cand = ivfCandidatePairs(e, spark, stride, probes)
+    val cand = ivfCandidatePairs(e, stride, probes)
     val sims = cand
       .join(e.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
       .join(e.select(col("vec_id").as("nn_id"), col("v").as("nv")), Seq("nn_id"))
-      .select(col("qid"), col("nn_id"), GroupC.cosine("nv", "qv").as("s"))
+      .select(col("qid"), col("nn_id"),
+        GraftFunctions.cosine(col("nv"), col("qv")).as("s"))
     val wTop = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     sims.withColumn("rn", row_number().over(wTop))
       .filter(col("rn") === 1)
@@ -386,7 +383,6 @@ object GroupD {
     * saturates local[32].
     */
   def d9DedupEmbedding(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val B = 8
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
@@ -404,7 +400,7 @@ object GroupD {
     val dupIds = left
       .join(right, Seq("bi", "bj"))
       .filter(col("ida") =!= col("idb"))
-      .filter(GroupC.cosine("va", "vb") >= 0.3)
+      .filter(GraftFunctions.cosine(col("va"), col("vb")) >= 0.3)
       .select(greatest(col("ida"), col("idb")).as("dup")).distinct()
     e.join(dupIds, col("vec_id") === col("dup"), "left_anti")
       .select(col("vec_id"), col("label"))
@@ -430,8 +426,8 @@ object GroupD {
     * vectors in PipelineOpsSpec), where the identical plan shape scales
     * linearly in documents.
     *
-    * r22 parameter sweep (TuneD10, the r21 verdict's task 6 — "fewer
-    * tables × wider bands at equal recall"): measured NEGATIVE. At
+    * r22 parameter sweep (OPTIMIZATION_r22.md, the r21 verdict's task 6
+    * — "fewer tables × wider bands at equal recall"): measured NEGATIVE. At
     * sf0.1, 24×3 is the UNIQUE config in the sweep whose drop set
     * equals d9's exact answer (129 survivors); every cheaper config
     * loses drops (16×3 → 132 survivors at 1.49 s, 12×3 → 134, 12×4 →
@@ -442,14 +438,13 @@ object GroupD {
     dedupEmbeddingLsh(Tables(spark, sfDir, "embeddings")
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("v")),
-      spark, tables = 24, bits = 3, threshold = 0.3)
+      tables = 24, bits = 3, threshold = 0.3)
 
   /** LSH-candidate dedup on an arbitrary (vec_id, label, v) frame —
     * d10's body, reusable in specs against synthetic clustered corpora.
     */
-  private[queries] def dedupEmbeddingLsh(e: DataFrame, spark: SparkSession,
+  private[queries] def dedupEmbeddingLsh(e: DataFrame,
       tables: Int, bits: Int, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // NO pair-level distinct before the verify (r21): the cosine verify
     // is one fused codegen loop over broadcast-attached vectors, so
     // verifying every collision row and deduplicating only the final
@@ -462,8 +457,7 @@ object GroupD {
     // per duplicate candidate row, and the final idb distinct dedupes
     // at drop-set size, so the output is unchanged.
     val keyed = e.select(col("vec_id"), col("v"),
-      posexplode(expr(
-        s"${graft.functions.GraftFunctions.LshKeysName}(v, $tables, $bits)"))
+      posexplode(GraftFunctions.lshKeys(col("v"), tables, bits))
         .as(Seq("tbl", "bucket")))
     val cand = keyed.as("x")
       .join(keyed.as("y"),
@@ -473,7 +467,7 @@ object GroupD {
     val dupIds = cand
       .join(e.select(col("vec_id").as("ida"), col("v").as("va")), Seq("ida"))
       .join(e.select(col("vec_id").as("idb"), col("v").as("vb")), Seq("idb"))
-      .filter(GroupC.cosine("va", "vb") >= threshold)
+      .filter(GraftFunctions.cosine(col("va"), col("vb")) >= threshold)
       .select(col("idb")).distinct()
     e.join(dupIds, col("vec_id") === col("idb"), "left_anti")
       .select(col("vec_id"), col("label"))
@@ -798,7 +792,6 @@ object GroupD {
     * benchmark rides in a ~120 MB task-binary broadcast.
     */
   def d23BloomDecon(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, sfDir, "documents")
     // Shingle ONLY each side's documents (filter commutes with the per-doc
     // shingle computation): the two bloom-build actions and the probe pass
@@ -808,8 +801,7 @@ object GroupD {
     val bloomLit = lit(graft.functions.BloomContains.serialized(benchSh, "shingle"))
     val train = docs.filter(col("source") =!= "src0")
     val shared = GroupC.shinglesOf(train)
-      .filter(call_function(graft.functions.GraftFunctions.BloomName,
-        bloomLit, col("shingle")))
+      .filter(GraftFunctions.bloomContains(bloomLit, col("shingle")))
       .join(benchSh, "shingle")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
     train.join(shared, Seq("doc_id"), "left")
@@ -1364,16 +1356,15 @@ object GroupD {
     * top-5 overlap vs d3 and the 4-bit code range.
     */
   def d33AnnPq(spark: SparkSession, sfDir: String): DataFrame =
-    annPq(Tables(spark, sfDir, "embeddings"), spark, s"pq|$sfDir")
+    annPq(Tables(spark, sfDir, "embeddings"), s"pq|$sfDir")
 
   /** d33's body on an arbitrary (vec_id, embedding: array<float>) frame —
     * reusable in specs (the clustered-regime pin builds its own corpus,
     * the same pattern as [[annLsh]]). `key` scopes the memoized codebook
     * model ([[graft.operators.PqIndex]]) to the corpus.
     */
-  private[queries] def annPq(e: DataFrame, spark: SparkSession, key: String,
+  private[queries] def annPq(e: DataFrame, key: String,
       M: Int = 4, K: Int = 16, C: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nv = pqNormalized(e)
     // one-time training per corpus (memoized; one collect job, the
     // codebooks are driver-sized), then code assignment + reconstruction FUSE into a
@@ -1384,7 +1375,8 @@ object GroupD {
       .select(col("vec_id").as("qid"), col("nvec").cast("array<double>").as("qv"))
     val adc = nv.select(col("vec_id").as("nn_id"), pqReconExpr(model, M).as("rv"))
       .join(broadcast(q), col("nn_id") =!= col("qid"))
-      .select(col("qid"), col("nn_id"), GroupC.cosine("rv", "qv").as("adc"))
+      .select(col("qid"), col("nn_id"),
+        GraftFunctions.cosine(col("rv"), col("qv")).as("adc"))
     pqShortlistRerank(adc, nv, q, C)
   }
 
@@ -1433,9 +1425,7 @@ object GroupD {
       val slice = expr(
         s"transform(slice(nvec, ${m * model.sub + 1}, ${model.sub}), " +
           "x -> cast(x AS double))")
-      org.apache.spark.sql.functions.call_function(
-          graft.functions.GraftFunctions.NearestCentroidName,
-          slice, pqBookLit(model, m))
+      GraftFunctions.nearestCentroid(slice, pqBookLit(model, m))
         .getField("cluster")
     }: _*)
 
@@ -1470,7 +1460,8 @@ object GroupD {
       .join(nv.select(col("vec_id").as("nn_id"),
         col("nvec").cast("array<double>").as("nv")), "nn_id")
       .join(q, "qid")
-      .select(col("qid"), col("nn_id"), GroupC.cosine("nv", "qv").as("s"))
+      .select(col("qid"), col("nn_id"),
+        GraftFunctions.cosine(col("nv"), col("qv")).as("s"))
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     exact.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .select(col("qid"), col("nn_id"), round(col("s"), 6).as("sim"),
@@ -1497,21 +1488,19 @@ object GroupD {
     */
   def d60AnnIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables(spark, sfDir, "embeddings")
-    annIvfPq(e, spark, s"ivf|$sfDir", s"pq|$sfDir")
+    annIvfPq(e, s"ivf|$sfDir", s"pq|$sfDir")
   }
 
   /** d60's body on an arbitrary (vec_id, embedding) frame — reusable in
     * specs. `stride`/`probes` default to the corpus's tuned IVF config.
     */
-  private[queries] def annIvfPq(e: DataFrame, spark: SparkSession,
+  private[queries] def annIvfPq(e: DataFrame,
       ivfKey: String, pqKey: String, M: Int = 4, K: Int = 16,
       C: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ed = e.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    val tuned = graft.operators.AnnTuning.tunedIvf(spark, ed, ivfKey)
-    val cand = ivfCandidatePairs(ed, spark,
-        tuned.config.stride, tuned.config.probes)
+    val tuned = graft.operators.AnnTuning.tunedIvf(ed, ivfKey)
+    val cand = ivfCandidatePairs(ed, tuned.config.stride, tuned.config.probes)
       .filter(col("qid") < 50)
     val nv = pqNormalized(e)
     val model = graft.operators.PqIndex.train(pqKey, nv, M, K, iters = 2)
@@ -1526,7 +1515,7 @@ object GroupD {
         pqCodesExpr(model, M).as("codes")), "nn_id")
       .join(broadcast(q), "qid")
       .select(col("qid"), col("nn_id"),
-        GroupC.cosine(pqDecodeExpr(model, M, col("codes")), col("qv")).as("adc"))
+        GraftFunctions.cosine(pqDecodeExpr(model, M, col("codes")), col("qv")).as("adc"))
     pqShortlistRerank(adc, nv, q, C)
   }
 
@@ -1542,7 +1531,6 @@ object GroupD {
     * predicate to search under it.
     */
   def d35FilteredKnn(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -1551,7 +1539,7 @@ object GroupD {
     val sims = e.filter(col("label") === 1)
       .join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nn_id"),
-        GroupC.cosine("v", "qv").as("s"))
+        GraftFunctions.cosine(col("v"), col("qv")).as("s"))
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     sims.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5)
@@ -1590,12 +1578,12 @@ object GroupD {
     * Selectivity is ONE tiny aggregate (at serving scale: a catalog stat
     * or a sampled count); the policy then picks the plan above.
     */
-  private[queries] def filteredAnnLsh(e: DataFrame, spark: SparkSession,
+  private[queries] def filteredAnnLsh(e: DataFrame,
       key: String, k: Int = 5,
       queryPred: Column = col("vec_id") < 50): DataFrame =
     filteredAnnCore(
       e.filter(queryPred).select(col("vec_id").as("qid"), col("v").as("qv")),
-      e, spark, key, k, selectivity(e))
+      e, key, k, selectivity(e))
 
   /** The measured fraction of `e` satisfying its `matches` predicate —
     * ONE tiny aggregate (at serving scale: a catalog stat). Computed once
@@ -1612,20 +1600,14 @@ object GroupD {
     * [[graft.streaming.StreamSearch.servePolicy]].
     */
   private[graft] def filteredAnnCore(q: DataFrame, e: DataFrame,
-      spark: SparkSession, key: String, k: Int, sel: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(e.sparkSession)
-    // under foreachBatch the QUERY frame is bound to a session cloned at
-    // stream start (clones copy the registry, later registrations don't
-    // propagate) — the pre/post branches analyze keyed(q) against it
-    graft.functions.GraftFunctions.register(q.sparkSession)
+      key: String, k: Int, sel: Double): DataFrame = {
     val policy = filteredAnnPolicy(sel)
     val sims = policy match {
       case "brute" =>
         e.filter(col("matches"))
           .join(broadcast(q), col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("nn_id"),
-            GroupC.cosine("v", "qv").as("s"))
+            GraftFunctions.cosine(col("v"), col("qv")).as("s"))
       case _ =>
         val indexSide =
           (if (policy == "pre") e.filter(col("matches")) else e)
@@ -1634,12 +1616,10 @@ object GroupD {
         // the top-1 pairs the estimator scores, so tune with headroom
         // (0.95 top-1 target backs the ≥ 0.9 top-5 overlap pin)
         val tuned = graft.operators.AnnTuning.tunedLsh(
-          spark, indexSide, s"$key|$policy", recallTarget = 0.95)
+          indexSide, s"$key|$policy", recallTarget = 0.95)
         def keyed(df: DataFrame, p: Int) = df.select(col("vec_id"),
-          explode(expr(
-            s"${graft.functions.GraftFunctions.LshProbeKeysName}" +
-              s"(v, ${tuned.config.tables}, ${tuned.config.bits}, $p)"))
-            .as("bkey"))
+          explode(GraftFunctions.lshProbeKeys(col("v"),
+            tuned.config.tables, tuned.config.bits, p)).as("bkey"))
         val index = graft.operators.AnnTuning.capBucketsQualified(
           keyed(indexSide, 0), graft.operators.AnnTuning.effectiveCap(tuned))
         val cand0 = keyed(q.select(col("qid").as("vec_id"), col("qv").as("v")),
@@ -1660,7 +1640,8 @@ object GroupD {
         cand
           .join(q, Seq("qid"))
           .join(e.select(col("vec_id").as("nn_id"), col("v").as("nv")), Seq("nn_id"))
-          .select(col("qid"), col("nn_id"), GroupC.cosine("nv", "qv").as("s"))
+          .select(col("qid"), col("nn_id"),
+            GraftFunctions.cosine(col("nv"), col("qv")).as("s"))
     }
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     sims.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
@@ -1681,7 +1662,7 @@ object GroupD {
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), (col("label") === 1).as("matches"),
         col("embedding").cast("array<double>").as("v"))
-    filteredAnnLsh(e, spark, s"fann|$sfDir")
+    filteredAnnLsh(e, s"fann|$sfDir")
   }
 
   /** d37: d15's stratified split via SHARDED rank — the dominant-language
@@ -1754,7 +1735,6 @@ object GroupD {
     * (subset-of-d9, determinism, clustered-regime recall).
     */
   def d39SemDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (emb, model) = corpusKMeans(spark, sfDir)
     // semDedupDrops references the assignment three times (pair join both
     // sides + anti-join); localCheckpoint truncates the crossJoin+agg
@@ -1812,7 +1792,7 @@ object GroupD {
   private[queries] def semDedupDrops(assign: DataFrame,
       maxCluster: Int = SemDedupMaxCluster): DataFrame = {
     val dropped = semDedupPairs(assign, maxCluster)
-      .filter(GroupC.cosine("a.v", "b.v") >= 0.3)
+      .filter(GraftFunctions.cosine(col("a.v"), col("b.v")) >= 0.3)
       .select(col("a.vec_id").as("vec_id")).distinct()
     assign.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
@@ -1882,8 +1862,6 @@ object GroupD {
     * base doc or any smaller-id delta doc.
     */
   def incrementalDedupBatch(baseDocs: DataFrame, deltaDocs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(baseDocs.sparkSession)
-    graft.functions.GraftFunctions.register(deltaDocs.sparkSession)
     val all = baseDocs.select(col("doc_id"), col("text"))
       .unionByName(deltaDocs.select(col("doc_id"), col("text")))
     val sh = GroupC.shinglesOf(all).localCheckpoint(false)
@@ -1974,14 +1952,12 @@ object GroupD {
     * per corpus (AnnTuning's one-time-build discipline).
     */
   def d41BigramNoveltyCms(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val occ = bigramOccurrences(Tables(spark, sfDir, "documents"))
       .withColumn("h", xxhash64(col("lang"), col("w1"), col("w2")))
     val bytes = LazyMemo.memoized(cmsMemo, s"cms|$sfDir")(
       graft.functions.CmsCount.serialized(occ.select("h"), "h"))
     occ
-      .withColumn("est", call_function(
-        graft.functions.GraftFunctions.CmsCountName, lit(bytes), col("h")))
+      .withColumn("est", GraftFunctions.cmsCount(lit(bytes), col("h")))
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(when(col("est") < 5, 1L).otherwise(0L)).as("n_oov"))
@@ -2234,7 +2210,6 @@ object GroupD {
     * subset-of-d30 + measured recall pinned in PipelineOpsSpec.
     */
   def d43ContainmentMinhash(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // r22 (r21 verdict task 3): the r21 localCheckpoint barrier here is
     // REVERTED — the driver measured d43 1.25 → 1.55 s with it (the only
     // touched-and-regressed query of r21). Unlike d30, d43's plan
@@ -2282,8 +2257,7 @@ object GroupD {
     */
   private[queries] def d43Sigs(sh: DataFrame): DataFrame =
     sh.groupBy("doc_id").agg(
-      expr(s"${graft.functions.GraftFunctions.MinHashName}" +
-        "(collect_list(shingle))").as("mh"),
+      GraftFunctions.minHash(collect_list(col("shingle"))).as("mh"),
       count(lit(1)).as("n"))
 
   /** d43's signature screen on a (doc_a, doc_b) candidate frame against a
@@ -2302,8 +2276,7 @@ object GroupD {
       // interpreted per probed pair. Callers must pass [[d43Sigs]]-shaped
       // signatures (exploded-frame lineage); see that doc for the 33 s
       // inline trap the array frame re-triggers here.
-      .withColumn("jhat", call_function(
-          graft.functions.GraftFunctions.SigMatchName, col("mha"), col("mhb"))
+      .withColumn("jhat", GraftFunctions.sigMatches(col("mha"), col("mhb"))
         / expr("cast(size(mha) as double)"))
       .withColumn("chat",
         col("jhat") / (col("jhat") + 1.0) * (col("na") + col("nb")))
@@ -2369,12 +2342,9 @@ object GroupD {
     val joined =
       if (!useBloom) trainSh.join(broadcast(benchSh), "shingle")
       else {
-        graft.functions.GraftFunctions.register(docs.sparkSession)
         val bloomBytes = graft.functions.BloomContains.serialized(
           benchSh.select("shingle").distinct(), "shingle")
-        trainSh.filter(call_function(
-            graft.functions.GraftFunctions.BloomName,
-            lit(bloomBytes), col("shingle")))
+        trainSh.filter(GraftFunctions.bloomContains(lit(bloomBytes), col("shingle")))
           .join(benchSh, "shingle")
       }
     val pair = joined.groupBy("doc_id", "bench_id")
@@ -2515,15 +2485,13 @@ object GroupD {
     * d3/d13 pin the candidate trade's recall.
     */
   def d48LabelKnn(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     labelKnnOf(Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v")))
   }
 
   /** d48's body over an arbitrary (vec_id, label, v) frame — reusable in
-    * specs against synthetic labeled corpora. Callers must have
-    * registered [[graft.functions.GraftFunctions]] on the session.
+    * specs against synthetic labeled corpora.
     */
   private[queries] def labelKnnOf(e: DataFrame): DataFrame = {
     val B = 8
@@ -2542,7 +2510,7 @@ object GroupD {
       .filter(col("bi") =!= col("bj") || col("ida") < col("idb"))
       .filter(col("ida") =!= col("idb"))
       .select(col("ida"), col("la"), col("idb"), col("lb"),
-        GroupC.cosine("va", "vb").as("s"))
+        GraftFunctions.cosine(col("va"), col("vb")).as("s"))
     val sims = tri.select(explode(array(
         struct(col("ida").as("qid"), col("idb").as("nn_id"),
           col("lb").as("nn_label"), col("s")),
@@ -2600,11 +2568,10 @@ object GroupD {
     * vector — no stage materializes anything n²-shaped.
     */
   def d52LabelKnnAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     labelKnnAnnOf(Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v")),
-      spark, s"lsh|$sfDir")
+      s"lsh|$sfDir")
   }
 
   /** d52's body over an arbitrary (vec_id, label, v) frame — reusable in
@@ -2618,11 +2585,11 @@ object GroupD {
     * (IVF's regime) and a weakly-correlated one (coarse LSH's) each get
     * the candidate generator that is actually cheaper THERE.
     */
-  private[queries] def labelKnnAnnOf(e: DataFrame, spark: SparkSession,
+  private[queries] def labelKnnAnnOf(e: DataFrame,
       tuneKey: String, family: Option[String] = None): DataFrame = {
     val vecs = e.select("vec_id", "v")
-    lazy val lsh = graft.operators.AnnTuning.tunedLsh(spark, vecs, tuneKey)
-    lazy val ivf = graft.operators.AnnTuning.tunedIvf(spark, vecs,
+    lazy val lsh = graft.operators.AnnTuning.tunedLsh(vecs, tuneKey)
+    lazy val ivf = graft.operators.AnnTuning.tunedIvf(vecs,
       s"ivf-$tuneKey", recallTarget = 0.9)
     val pick = family.getOrElse {
       val (l, i) = (lsh.stats, ivf.stats)
@@ -2635,10 +2602,8 @@ object GroupD {
       else "lsh"
     }
     val cand = pick match {
-      case "ivf" => ivfCandidatePairs(vecs, spark,
-        ivf.config.stride, ivf.config.probes)
-      case _ => lshCandidatePairs(vecs, spark,
-        lsh.config.tables, lsh.config.bits,
+      case "ivf" => ivfCandidatePairs(vecs, ivf.config.stride, ivf.config.probes)
+      case _ => lshCandidatePairs(vecs, lsh.config.tables, lsh.config.bits,
         graft.operators.AnnTuning.effectiveCap(lsh),
         probes = lsh.config.probes)
     }
@@ -2647,7 +2612,7 @@ object GroupD {
       .join(e.select(col("vec_id").as("nn_id"), col("label").as("nn_label"),
         col("v").as("nv")), Seq("nn_id"))
       .select(col("qid"), col("nn_id"), col("nn_label"),
-        GroupC.cosine("nv", "qv").as("s"))
+        GraftFunctions.cosine(col("nv"), col("qv")).as("s"))
     voteTail(e, sims)
   }
 
@@ -2671,14 +2636,13 @@ object GroupD {
     * d37's ShardedOrder escape (rank = shard rank + broadcast offset).
     */
   def d49LabelPurity(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     labelPurityOf(Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v")))
   }
 
   /** d49's body over an arbitrary (vec_id, label, v) frame — reusable in
-    * specs. Callers must have registered GraftFunctions on the session.
+    * specs.
     */
   private[queries] def labelPurityOf(e: DataFrame): DataFrame = {
     val cent = e.select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
@@ -2688,7 +2652,8 @@ object GroupD {
       .agg(expr("transform(array_sort(collect_list(struct(i, m))), " +
         "s -> cast(s.m as double))").as("c"))
     val sims = e.join(broadcast(cent), "label")
-      .select(col("vec_id"), col("label"), GroupC.cosine("v", "c").as("s"))
+      .select(col("vec_id"), col("label"),
+        GraftFunctions.cosine(col("v"), col("c")).as("s"))
     val w = Window.partitionBy("label")
       .orderBy(col("s").asc_nulls_last, col("vec_id"))
     sims
@@ -3762,10 +3727,11 @@ object GroupD {
 
   /** The construct→decode head every media hub shares (d79 and d88's
     * features too): one (doc_id, `out`) row per doc, where `out` is
-    * `decode` over the bytes `content` renders — the scan, one projection,
-    * no exchange. Both calls are native and codegen'd, and each runs once
-    * per doc: the decode references `content` once (d86's coalesce twice,
-    * which keeps the render in its own projection). A consumer that
+    * `decode` over the bytes `content` renders (`decode` reads them as
+    * `col("content")`) — the scan, one projection, no exchange. Both
+    * calls are native and codegen'd, and each runs once per doc: the
+    * decode references `content` once (d86's coalesce twice, which keeps
+    * the render in its own projection). A consumer that
     * references `out` many times, or reads it in several jobs,
     * materializes it at its own call site (d78/d82/d85's lazy
     * checkpoint).
@@ -3776,12 +3742,10 @@ object GroupD {
     * in the inner equi-join with zero extra code.
     */
   private def decoded(spark: SparkSession, sfDir: String, content: Column,
-      decode: String, out: String = "hash"): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+      decode: Column, out: String = "hash"): DataFrame =
     Tables(spark, sfDir, "documents")
       .select(col("doc_id"), content.as("content"))
-      .select(col("doc_id"), expr(decode).as(out))
-  }
+      .select(col("doc_id"), decode.as(out))
 
   /** d78's construct→decode stage: one (doc_id, hash) row per doc (NULL
     * for junk) — split out so d83's incremental probe/standing split and
@@ -3792,7 +3756,7 @@ object GroupD {
     */
   private[queries] def d78Head(spark: SparkSession, sfDir: String): DataFrame =
     decoded(spark, sfDir, BmpFamily.render(MediaRender.Bmp),
-      s"${graft.functions.GraftFunctions.BmpDhashName}(content)")
+      GraftFunctions.bmpDhash(col("content")))
 
   def d78Hashed(spark: SparkSession, sfDir: String): DataFrame =
     d78Head(spark, sfDir).localCheckpoint(false)
@@ -3819,15 +3783,15 @@ object GroupD {
     */
   def d79ImageResize(spark: SparkSession, sfDir: String): DataFrame = {
     val resized = decoded(spark, sfDir, BmpFamily.render(MediaRender.Bmp18),
-      s"${graft.functions.GraftFunctions.BmpResizeName}(content, 9, 8)",
+      GraftFunctions.bmpResize(col("content"), 9, 8),
       out = "resized")
     graft.multimodal.Multimodal.imageDimsPlan(resized, "resized")
       .select(col("doc_id"),
         col("img_format").as("r_format"),
         col("img_width").as("r_w"),
         col("img_height").as("r_h"),
-        lpad(hex(expr(s"${graft.functions.GraftFunctions
-          .BmpDhashName}(resized)")), 16, "0").as("dhash_hex"))
+        lpad(hex(GraftFunctions.bmpDhash(col("resized"))), 16, "0")
+          .as("dhash_hex"))
       .orderBy("doc_id")
   }
 
@@ -3921,7 +3885,7 @@ object GroupD {
     * [[d78Hashed]]. */
   private[queries] def d82Head(spark: SparkSession, sfDir: String): DataFrame =
     decoded(spark, sfDir, WavFamily.render(MediaRender.Wav),
-      s"${graft.functions.GraftFunctions.WavEnergyHashName}(content)")
+      GraftFunctions.wavEnergyHash(col("content")))
 
   private[queries] def d82Hashed(spark: SparkSession, sfDir: String)
       : DataFrame =
@@ -3990,7 +3954,7 @@ object GroupD {
   private[queries] def d84Pairs(spark: SparkSession, sfDir: String): DataFrame =
     PerceptualDedup.selfPairs(
       decoded(spark, sfDir, PngFamily.render(MediaRender.Png),
-        s"${graft.functions.GraftFunctions.PngDhashName}(content)"),
+        GraftFunctions.pngDhash(col("content"))),
       maxDist = 3)
 
   def d84PngDedup(spark: SparkSession, sfDir: String): DataFrame =
@@ -4022,7 +3986,7 @@ object GroupD {
     * [[d78Hashed]]. */
   private[queries] def d85Head(spark: SparkSession, sfDir: String): DataFrame =
     decoded(spark, sfDir, Y4mFamily.render(MediaRender.Y4m),
-      s"${graft.functions.GraftFunctions.Y4mEnvelopeHashName}(content)")
+      GraftFunctions.y4mEnvelopeHash(col("content")))
 
   private[queries] def d85Hashed(spark: SparkSession, sfDir: String)
       : DataFrame =
@@ -4059,15 +4023,14 @@ object GroupD {
   /** d86's verified pair list without the presentation sort — c10's
     * dedup-volume card consumes it too.
     */
-  private[queries] def d86Pairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val fns = graft.functions.GraftFunctions
+  private[queries] def d86Pairs(spark: SparkSession, sfDir: String): DataFrame =
     // format-agnostic hash: each decode refuses the other container at
     // its signature bytes, so this is one real decode per asset
     PerceptualDedup.selfPairs(
       decoded(spark, sfDir, XfmtFamily.render(MediaRender.BmpPng),
-        s"coalesce(${fns.BmpDhashName}(content), ${fns.PngDhashName}(content))"),
+        coalesce(GraftFunctions.bmpDhash(col("content")),
+          GraftFunctions.pngDhash(col("content")))),
       maxDist = 3)
-  }
 
   def d86CrossFormatDedup(spark: SparkSession, sfDir: String): DataFrame =
     d86Pairs(spark, sfDir).orderBy("doc_a", "doc_b")
@@ -4100,7 +4063,7 @@ object GroupD {
   private[queries] def d87Pairs(spark: SparkSession, sfDir: String): DataFrame =
     PerceptualDedup.selfPairs(
       decoded(spark, sfDir, GifFamily.render(MediaRender.Gif),
-        s"${graft.functions.GraftFunctions.GifDhashName}(content)"),
+        GraftFunctions.gifDhash(col("content"))),
       maxDist = 3)
 
   def d87GifDedup(spark: SparkSession, sfDir: String): DataFrame =
@@ -4153,7 +4116,7 @@ object GroupD {
   private[queries] def d88Features(spark: SparkSession, sfDir: String)
       : DataFrame =
     decoded(spark, sfDir, D88Family.render(MediaRender.BmpRowShift),
-      s"${graft.functions.GraftFunctions.GridLumaCellsName}(content)",
+      GraftFunctions.gridLuma(col("content")),
       out = "cells")
       // all values are exact small integers carried as doubles, so the
       // total and the centered products are EXACT (≪ 2⁵³) — the oracle
@@ -4192,7 +4155,7 @@ object GroupD {
     dedupEmbeddingLsh(
       d88Features(spark, sfDir)
         .select(col("doc_id").as("vec_id"), lit("img").as("label"), col("v")),
-      spark, tables = 8, bits = 12, threshold = 0.95)
+      tables = 8, bits = 12, threshold = 0.95)
       .select(col("vec_id").as("doc_id"))
       .orderBy("doc_id")
 
@@ -4213,7 +4176,7 @@ object GroupD {
     val dupIds = left
       .join(right, Seq("bi", "bj"))
       .filter(col("ida") =!= col("idb"))
-      .filter(GroupC.cosine("va", "vb") >= 0.95)
+      .filter(GraftFunctions.cosine(col("va"), col("vb")) >= 0.95)
       .select(greatest(col("ida"), col("idb")).as("dup")).distinct()
     Tables(spark, sfDir, "documents")
       .select(col("doc_id"))
@@ -5133,7 +5096,6 @@ object GroupD {
     * honest answer, mirrored by the oracle.
     */
   def d62HardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -5143,7 +5105,7 @@ object GroupD {
     val sims = e.join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nn_id"),
         (col("label") === col("qlabel")).as("same"),
-        GroupC.cosine("v", "qv").as("s"))
+        GraftFunctions.cosine(col("v"), col("qv")).as("s"))
     val wRole = Window.partitionBy("qid", "same")
       .orderBy(col("s").desc, col("nn_id"))
     sims.withColumn("rn", row_number().over(wRole))

@@ -13,7 +13,7 @@ object Tables {
   /** Per-JVM parquet schema memo (r22, the per-query-floor fix): a bare
     * `spark.read.parquet(path)` re-infers the schema on EVERY call —
     * a footer read plus relation setup measured at ~0.08 s per call on
-    * this box (ProfileMicro), paid by every query invocation of every
+    * this box (OPTIMIZATION_r22.md), paid by every query invocation of every
     * bench pass, and a schema-merge Spark job even for one file.
     * Production reads resolve the schema from a catalog / metastore
     * instead of re-inferring per query; this memo is that catalog:

@@ -72,7 +72,6 @@ object CsvWrite {
     * the culture knob governs numerics only.
     */
   def formatForWrite(df: DataFrame, culture: String = ""): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val sep = cultureDecimalSeparator(culture)
     def cultured(c: Column): Column =
       if (sep != '.') translate(c, ".", sep.toString) else c
@@ -83,7 +82,7 @@ object CsvWrite {
         case TimestampType | TimestampNTZType | DateType =>
           date_format(c, TimestampPattern)
         case DoubleType | FloatType =>
-          cultured(expr(s"${graft.functions.GraftFunctions.PlainDoubleName}($quoted)"))
+          cultured(graft.functions.GraftFunctions.plainDouble(col(quoted)))
         case _: DecimalType => cultured(c.cast("string"))
         case _ => c.cast("string")
       }

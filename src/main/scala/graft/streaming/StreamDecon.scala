@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.GraftFunctions
 
 /** Streaming twin of d19/d23's decontamination: tag documents on an
   * unbounded ingest stream with their estimated benchmark-shingle overlap
@@ -36,22 +38,13 @@ import org.apache.spark.sql.functions._
   */
 object StreamDecon {
 
-  /** Per-row distinct shingle hashes — [[graft.functions.ShingleHashes]],
-    * bit-identical to the batch GroupC.shingles per-doc set (pinned in
-    * ShingleHashesSpec). Resolved via the function registry, so callers
-    * must register first (both entry points below do).
-    */
-  private def shingles(text: Column): Column =
-    call_function(graft.functions.GraftFunctions.ShingleHashesName, text)
-
   /** The benchmark side, built ONCE per benchmark release (a driver-side
     * action over the static benchmark relation — never the stream):
     * serialized bloom over the distinct benchmark shingles.
     */
   def benchmarkBloom(benchDocs: DataFrame, textCol: String = "text"): Array[Byte] = {
-    graft.functions.GraftFunctions.register(benchDocs.sparkSession)
     val distinctSh = benchDocs
-      .select(explode(shingles(col(textCol))).as("shingle"))
+      .select(explode(GraftFunctions.shingleHashes(col(textCol))).as("shingle"))
       .distinct()
     graft.functions.BloomContains.serialized(distinctSh, "shingle")
   }
@@ -62,10 +55,8 @@ object StreamDecon {
     */
   def tag(docs: DataFrame, bloomBytes: Array[Byte],
           textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val hits = filter(shingles(col(textCol)), s =>
-      call_function(graft.functions.GraftFunctions.BloomName,
-        lit(bloomBytes), s))
+    val hits = filter(GraftFunctions.shingleHashes(col(textCol)),
+      s => GraftFunctions.bloomContains(lit(bloomBytes), s))
     docs
       // NULL text shares no shingles: coalesce keeps the contract two-state
       // (the batch shingle frame drops null-text rows for the same reason),

@@ -33,14 +33,12 @@ object StreamDrift {
     */
   def assignTag(vectors: DataFrame, cents: Array[Array[Double]],
       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     require(!vectors.columns.contains("cluster") &&
       !vectors.columns.contains("d2") && !vectors.columns.contains("__nc"),
       "assignTag writes cluster/d2/__nc — rename colliding caller columns first")
     val centsLit: Column = typedLit(cents.map(_.toSeq).toSeq)
     vectors
-      .withColumn("__nc", call_function(
-        graft.functions.GraftFunctions.NearestCentroidName,
+      .withColumn("__nc", graft.functions.GraftFunctions.nearestCentroid(
         col(vecCol).cast("array<double>"), centsLit))
       .withColumn("cluster", col("__nc.cluster"))
       .withColumn("d2", col("__nc.d2"))

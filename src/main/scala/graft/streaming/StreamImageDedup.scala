@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -102,8 +102,8 @@ object StreamImageDedup {
     StandingStore.compactStore(spark, dir, Seq("asset_id", "dhash"),
       dedupKey = "asset_id")
 
-  /** `hashName` selects the perceptual 64-bit hash — the image decode by
-    * default; pass [[graft.functions.GraftFunctions.WavEnergyHashName]]
+  /** `hash` selects the perceptual 64-bit hash — the image decode by
+    * default; pass [[graft.functions.GraftFunctions.wavEnergyHash]]
     * and the SAME gate (same rule, same state shape, same durability)
     * serves an audio-ingest feed, because everything past the decode
     * operates on (id, 64-bit hash) only.
@@ -113,15 +113,13 @@ object StreamImageDedup {
             maxDist: Int = 3,
             standingStore: Option[String] = None,
             compactEvery: Int = 8,
-            hashName: String =
-              graft.functions.GraftFunctions.BmpDhashName): StreamingQuery = {
+            hash: Column => Column =
+              graft.functions.GraftFunctions.bmpDhash): StreamingQuery = {
     require(maxDist >= 0 && maxDist < 4,
       s"banded exactness needs maxDist < 4 (bands), got $maxDist")
-    val spark = base.sparkSession
-    graft.functions.GraftFunctions.register(spark)
 
     def hashed(df: DataFrame): DataFrame =
-      df.select(col("asset_id"), expr(s"$hashName(content)").as("dhash"))
+      df.select(col("asset_id"), hash(col("content")).as("dhash"))
         .filter(col("dhash").isNotNull)
 
     // the order-sensitive store protocol (restore adjudication, union

@@ -28,11 +28,6 @@ object StreamSearch {
     * boolean, v: array<double>). Queries need not satisfy the predicate.
     */
   def topKBatch(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    // inside foreachBatch the micro-batch frame carries a CLONED session;
-    // the joined plan analyzes against the corpus's (outer) session — the
-    // temp function must exist on both
-    graft.functions.GraftFunctions.register(queries.sparkSession)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // file replay / at-least-once sources can redeliver a qid within one
     // micro-batch; duplicate qid rows would duplicate sims rows and the
     // row_number window would then interleave them, returning ~k/2 distinct
@@ -41,7 +36,7 @@ object StreamSearch {
     val sims = corpus.filter(col("matches"))
       .join(broadcast(uniq), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nn_id"),
-        expr(s"${graft.functions.GraftFunctions.CosineName}(v, qv)").as("s"))
+        graft.functions.GraftFunctions.cosine(col("v"), col("qv")).as("s"))
     val w = Window.partitionBy("qid").orderBy(col("s").desc, col("nn_id"))
     sims.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("qid"), col("nn_id"), round(col("s"), 6).as("sim"),
@@ -73,13 +68,12 @@ object StreamSearch {
       key: String, queryName: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val sel = graft.queries.GroupD.selectivity(corpus)
-    val spark = corpus.sparkSession
     queries.writeStream
       .queryName(queryName)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         sink(graft.queries.GroupD.filteredAnnCore(
-          batch.toDF(), corpus, spark, key, k, sel), batchId)
+          batch.toDF(), corpus, key, k, sel), batchId)
       }
       .start()
   }

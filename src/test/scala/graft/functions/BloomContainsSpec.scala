@@ -22,9 +22,8 @@ class BloomContainsSpec extends AnyFunSuite {
     import spark.implicits._
     val keys = (1L to 5000L).map(i => i * 2654435761L).toDF("k")
     val bytes = BloomContains.serialized(keys, "k")
-    GraftFunctions.register(spark)
     val hits = keys
-      .filter(call_function(GraftFunctions.BloomName, lit(bytes), col("k")))
+      .filter(GraftFunctions.bloomContains(lit(bytes), col("k")))
       .count()
     assert(hits == 5000L, "bloom filter dropped an inserted key")
   }
@@ -33,10 +32,9 @@ class BloomContainsSpec extends AnyFunSuite {
     import spark.implicits._
     val inserted = (1L to 5000L).map(i => i * 2654435761L).toDF("k")
     val bytes = BloomContains.serialized(inserted, "k")
-    GraftFunctions.register(spark)
     val probes = (1L to 20000L).map(i => i * 1099511628211L + 7L).toDF("k")
     val fp = probes
-      .filter(call_function(GraftFunctions.BloomName, lit(bytes), col("k")))
+      .filter(GraftFunctions.bloomContains(lit(bytes), col("k")))
       .count()
     assert(fp < 20000L * 0.05, s"false-positive rate too high: $fp / 20000")
   }
@@ -45,12 +43,11 @@ class BloomContainsSpec extends AnyFunSuite {
     import spark.implicits._
     val keys = (1L to 200L).toDF("k")
     val bytes = BloomContains.serialized(keys, "k")
-    GraftFunctions.register(spark)
     val probe = (1L to 400L).toDF("k")
     def run(codegen: String): Seq[Long] = {
       spark.conf.set("spark.sql.codegen.factoryMode", codegen)
       try probe
-        .filter(call_function(GraftFunctions.BloomName, lit(bytes), col("k")))
+        .filter(GraftFunctions.bloomContains(lit(bytes), col("k")))
         .collect().map(_.getLong(0)).toSeq.sorted
       finally spark.conf.unset("spark.sql.codegen.factoryMode")
     }
@@ -58,14 +55,13 @@ class BloomContainsSpec extends AnyFunSuite {
   }
 
   test("a NULL literal sketch plans and yields NULL rows, no planning NPE (r18)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(1L, 2L).toDF("k")
-    val out = df.select(expr(
-      s"${GraftFunctions.BloomName}(CAST(NULL AS BINARY), k)").as("m"))
+    val out = df.select(
+      GraftFunctions.bloomContains(lit(null).cast("binary"), col("k")).as("m"))
     assert(out.collect().forall(_.isNullAt(0)))
-    val cms = df.select(expr(
-      s"${GraftFunctions.CmsCountName}(CAST(NULL AS BINARY), k)").as("c"))
+    val cms = df.select(
+      GraftFunctions.cmsCount(lit(null).cast("binary"), col("k")).as("c"))
     assert(cms.collect().forall(_.isNullAt(0)))
   }
 

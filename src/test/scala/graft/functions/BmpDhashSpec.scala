@@ -113,13 +113,12 @@ class BmpDhashSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val g = grid9x8((r, c) => (r * 31 + c * 17) % 211)
     val expected = BmpDhash.scan(bmp(g))
     val rows = Seq((1L, bmp(g)), (2L, Array[Byte](1, 2, 3)))
       .toDF("id", "content")
-      .selectExpr("id", s"${GraftFunctions.BmpDhashName}(content) AS dh")
+      .select($"id", GraftFunctions.bmpDhash($"content").as("dh"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) == expected.longValue())
     assert(rows(1).isNullAt(1))

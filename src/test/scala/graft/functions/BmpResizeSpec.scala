@@ -100,16 +100,14 @@ class BmpResizeSpec extends AnyFunSuite {
 
   test("resize → dHash equals direct dHash (the d79 contract); codegen parity") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val src = Array.tabulate(8, 9)((r, c) => gray((r * 31 + c * 17) % 211))
     val doubled = Array.tabulate(16, 18)((r, c) => src(r / 2)(c / 2))
     val direct = BmpDhash.scan(bmp(src))
     val rows = Seq((1L, bmp(doubled)), (2L, Array[Byte](9, 9)))
       .toDF("id", "content")
-      .selectExpr("id",
-        s"${GraftFunctions.BmpDhashName}(" +
-          s"${GraftFunctions.BmpResizeName}(content, 9, 8)) AS dh")
+      .select($"id",
+        GraftFunctions.bmpDhash(GraftFunctions.bmpResize($"content", 9, 8)).as("dh"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) == direct.longValue())
     assert(rows(1).isNullAt(1))

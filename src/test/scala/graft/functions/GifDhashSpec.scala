@@ -273,13 +273,12 @@ class GifDhashSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val bits = 0x0F0F0F0F0F0F0F0FL
     val rows = Seq((1L, gif(walkGrid32(bits), gctBits = 4, scale = 8,
         minCode = 5)), (2L, Array[Byte](3, 1)))
       .toDF("id", "content")
-      .selectExpr("id", s"${GraftFunctions.GifDhashName}(content) AS dh")
+      .select($"id", GraftFunctions.gifDhash($"content").as("dh"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) == bits)
     assert(rows(1).isNullAt(1))

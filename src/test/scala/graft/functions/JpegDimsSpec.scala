@@ -59,12 +59,11 @@ class JpegDimsSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val good = bytes(Seq(0xFF, 0xD8) ++ app0 ++ sof(0xC0, 7, 9): _*)
     val rows = Seq((1L, good), (2L, bytes(1, 2, 3, 4)))
       .toDF("id", "content")
-      .selectExpr("id", s"${GraftFunctions.JpegDimsName}(content) AS dims")
+      .select($"id", GraftFunctions.jpegDims($"content").as("dims"))
       .orderBy("id").collect()
     assert(rows(0).getSeq[Int](1) == Seq(9, 7))
     assert(rows(1).isNullAt(1))
@@ -130,15 +129,14 @@ class JpegDimsSpec extends AnyFunSuite {
 
   test("orientation: interpreted eval and codegen agree; imageDimsPlan carries it") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rotated = bytes(Seq(0xFF, 0xD8) ++ app0 ++
       exifApp1(6, little = true) ++ sof(0xC0, 7, 9): _*)
     val plain = bytes(Seq(0xFF, 0xD8) ++ app0 ++ sof(0xC0, 7, 9): _*)
     val rows = Seq((1L, rotated), (2L, plain))
       .toDF("id", "content")
-      .selectExpr("id",
-        s"${GraftFunctions.JpegExifOrientationName}(content) AS o")
+      .select($"id",
+        GraftFunctions.jpegExifOrientation($"content").as("o"))
       .orderBy("id").collect()
     assert(rows(0).getInt(1) == 6)
     assert(rows(1).isNullAt(1))

@@ -218,7 +218,6 @@ class MediaFeaturesSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val g = grid9x8((r, c) => (r * 31 + c * 17) % 211)
     val samples = Array.tabulate(65 * 8)(i => i % 3000)
@@ -226,9 +225,9 @@ class MediaFeaturesSpec extends AnyFunSuite {
         (1L, bmp(g)), (2L, png(g)), (3L, wav(samples)),
         (4L, Array[Byte](1, 2, 3)))
       .toDF("id", "content")
-      .selectExpr("id",
-        s"${GraftFunctions.GridLumaCellsName}(content) AS cells",
-        s"${GraftFunctions.MediaEnvelopeName}(content) AS env")
+      .select($"id",
+        GraftFunctions.gridLuma($"content").as("cells"),
+        GraftFunctions.mediaEnvelope($"content").as("env"))
       .orderBy("id").collect()
     assert(rows(0).getSeq[Double](1) == GridLumaCells.scan(bmp(g)).toSeq)
     assert(rows(0).isNullAt(2))

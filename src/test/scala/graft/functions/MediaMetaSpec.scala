@@ -364,7 +364,6 @@ class MediaMetaSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val wav = wavFile(fmtChunk(2, 44100, 16), dataChunk(176400))
     val mp4 = box("ftyp", ascii("isom")) ++ box("moov", mvhdV0(600, 1200))
@@ -375,12 +374,12 @@ class MediaMetaSpec extends AnyFunSuite {
     val rows = Seq((1L, wav), (2L, mp4), (3L, ascii("not media")),
         (4L, flac), (5L, mp3), (6L, opus))
       .toDF("id", "content")
-      .selectExpr("id",
-        s"${GraftFunctions.WavMetaName}(content) AS w",
-        s"${GraftFunctions.Mp4MetaName}(content) AS m",
-        s"${GraftFunctions.FlacMetaName}(content) AS f",
-        s"${GraftFunctions.Mp3MetaName}(content) AS p",
-        s"${GraftFunctions.OpusMetaName}(content) AS o")
+      .select($"id",
+        GraftFunctions.wavMeta($"content").as("w"),
+        GraftFunctions.mp4Meta($"content").as("m"),
+        GraftFunctions.flacMeta($"content").as("f"),
+        GraftFunctions.mp3Meta($"content").as("p"),
+        GraftFunctions.opusMeta($"content").as("o"))
       .orderBy("id").collect()
     assert(rows(0).getSeq[java.lang.Long](1) == Seq(44100L, 2L, 16L, 1000L))
     assert(rows(0).isNullAt(2) && rows(0).isNullAt(3))

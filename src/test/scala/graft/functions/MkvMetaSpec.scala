@@ -159,7 +159,6 @@ class MkvMetaSpec extends AnyFunSuite {
 
   test("eval/codegen parity through the SQL function") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val info = el(INFO, el(TSCALE, uint(1000000L)) ++ el(DURATION, f32(4000f)))
     val tracks = el(TRACKS,
@@ -167,8 +166,8 @@ class MkvMetaSpec extends AnyFunSuite {
     val good = header("webm") ++ el(SEGMENT, info ++ tracks)
     val df = Seq((1, good), (2, Array[Byte](9, 9, 9, 9, 9)))
       .toDF("i", "content")
-    val out = df.selectExpr("i",
-      s"${GraftFunctions.MkvMetaName}(content) as m").orderBy("i").collect()
+    val out = df.select($"i",
+      GraftFunctions.mkvMeta($"content").as("m")).orderBy("i").collect()
     assert(out(0).getSeq[Long](1) === Seq(4000L, 48000L, 2L, 640L, 480L, 2L))
     assert(out(1).isNullAt(1))
   }

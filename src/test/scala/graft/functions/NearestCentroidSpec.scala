@@ -13,11 +13,9 @@ class NearestCentroidSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def callWith(cents: Seq[Seq[Double]]) =
-    call_function(GraftFunctions.NearestCentroidName,
-      col("v"), typedLit(cents))
+    GraftFunctions.nearestCentroid(col("v"), typedLit(cents))
 
   private def vecs(n: Int, dim: Int, seed: Int) = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(seed)
     (0 until n).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian())))
@@ -68,7 +66,6 @@ class NearestCentroidSpec extends AnyFunSuite {
   }
 
   test("equidistant centroids tie-break to the EARLIEST (assignWith's rule)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, Array(0.0, 0.0))).toDF("vec_id", "v")
     // centroids 1 and 2 are both at distance 1 — index 1 must win
@@ -79,7 +76,6 @@ class NearestCentroidSpec extends AnyFunSuite {
   }
 
   test("empty model and dimension mismatch yield NULL, never a partial argmin") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, Array(1.0, 2.0))).toDF("vec_id", "v")
     assert(df.select(callWith(Seq.empty).as("nc")).head().isNullAt(0))

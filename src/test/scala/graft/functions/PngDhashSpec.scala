@@ -221,12 +221,11 @@ class PngDhashSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val bits = 0x0F0F0F0F0F0F0F0FL
     val rows = Seq((1L, png(walkGrid(bits))), (2L, Array[Byte](3, 1)))
       .toDF("id", "content")
-      .selectExpr("id", s"${GraftFunctions.PngDhashName}(content) AS dh")
+      .select($"id", GraftFunctions.pngDhash($"content").as("dh"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) == bits)
     assert(rows(1).isNullAt(1))

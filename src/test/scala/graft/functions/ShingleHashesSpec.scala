@@ -11,11 +11,10 @@ class ShingleHashesSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
   test("kernel set equals GroupC.shingles per doc on real sf0.001 documents") {
-    GraftFunctions.register(spark)
     val sf = "/root/testdata/sf0.001"
     val docs = graft.queries.Tables(spark, sf, "documents")
     val native = docs.select(col("doc_id"),
-        explode(call_function(GraftFunctions.ShingleHashesName, col("text")))
+        explode(GraftFunctions.shingleHashes(col("text")))
           .as("shingle"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sql = graft.queries.GroupC.shingles(spark, sf)
@@ -24,7 +23,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("edge shapes: punctuation runs, case, short docs, no-alnum, empty") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val texts = Seq(
       "The  QUICK--brown,fox;jumps!over the.lazy dog",
@@ -38,7 +36,7 @@ class ShingleHashesSpec extends AnyFunSuite {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val native = df.select(col("doc_id"),
-        call_function(GraftFunctions.ShingleHashesName, col("text")).as("sh"))
+        GraftFunctions.shingleHashes(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     // the declarative pipeline (GroupC.shinglesOf's exact expressions)
     val sql = graft.queries.GroupC.shinglesOf(df)
@@ -53,11 +51,10 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("interpreted eval and codegen agree (the expression contract)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq((1L, "alpha beta gamma delta"), (2L, "x"))
       .toDF("id", "text")
-      .selectExpr("id", s"${GraftFunctions.ShingleHashesName}(text) AS sh")
+      .select($"id", GraftFunctions.shingleHashes($"text").as("sh"))
       .orderBy("id").collect()
     assert(rows(0).getSeq[Long](1).length == 2)
     assert(rows(1).getSeq[Long](1).isEmpty)

@@ -118,12 +118,11 @@ class WavEnergyHashSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val bits = 0x5A5A5A5A5A5A5A5AL
     val rows = Seq((1L, wav(walkSamples(bits))), (2L, Array[Byte](3, 1)))
       .toDF("id", "content")
-      .selectExpr("id", s"${GraftFunctions.WavEnergyHashName}(content) AS eh")
+      .select($"id", GraftFunctions.wavEnergyHash($"content").as("eh"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) == bits)
     assert(rows(1).isNullAt(1))

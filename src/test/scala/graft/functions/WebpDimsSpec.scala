@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The WebP chunk walk ([[WebpDims.scan]]): all three bitstream layouts
   * (lossy VP8 bit-masked u16s, lossless VP8L packed u32, extended VP8X
   * u24 canvas), unknown-chunk skipping with even padding, and every
-  * refusal path — plus eval/codegen parity through the registered
-  * expression and the imageDimsPlan wiring.
+  * refusal path — plus eval/codegen parity through the typed Column
+  * and the imageDimsPlan wiring.
   */
 class WebpDimsSpec extends AnyFunSuite {
   private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
@@ -94,7 +94,6 @@ class WebpDimsSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree; imageDimsPlan classifies webp") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
         (1L, riff(chunk("VP8 ", vp8(640, 480)))),
@@ -103,7 +102,7 @@ class WebpDimsSpec extends AnyFunSuite {
         (4L, bytes(1, 2, 3, 4)))
       .toDF("id", "content")
     val exprRows = rows
-      .selectExpr("id", s"${GraftFunctions.WebpDimsName}(content) AS d")
+      .select($"id", GraftFunctions.webpDims($"content").as("d"))
       .orderBy("id").collect()
     assert(exprRows(0).getSeq[Int](1) == Seq(640, 480, 0))
     assert(exprRows(1).getSeq[Int](1) == Seq(12, 34, 1))

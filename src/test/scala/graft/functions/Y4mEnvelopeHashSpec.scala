@@ -117,12 +117,11 @@ class Y4mEnvelopeHashSpec extends AnyFunSuite {
 
   test("interpreted eval and codegen agree (the expression contract)") {
     val spark = graft.TestSpark.spark
-    GraftFunctions.register(spark)
     import spark.implicits._
     val bits = 0x5A5A5A5A5A5A5A5AL
     val rows = Seq((1L, y4m(walkFrames(bits))), (2L, Array[Byte](3, 1)))
       .toDF("id", "content")
-      .selectExpr("id", s"${GraftFunctions.Y4mEnvelopeHashName}(content) AS vh")
+      .select($"id", GraftFunctions.y4mEnvelopeHash($"content").as("vh"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) == bits)
     assert(rows(1).isNullAt(1))

@@ -186,7 +186,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("extracted features feed the similarity stack end-to-end") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val feats = Multimodal.extractFeatures(assets())
       .select(col("asset_id"), col("features").cast("array<double>").as("v"))
@@ -195,7 +194,7 @@ class MultimodalSpec extends AnyFunSuite {
     val pairs = feats.as("a")
       .join(feats.as("b"), col("a.asset_id") < col("b.asset_id"))
       .select(col("a.asset_id"), col("b.asset_id"),
-        expr(s"${graft.functions.GraftFunctions.CosineName}(a.v, b.v)").as("sim"))
+        graft.functions.GraftFunctions.cosine(col("a.v"), col("b.v")).as("sim"))
       .collect()
     assert(pairs.length == 3)
     // asset 3 has null content -> zero features -> cosine is undefined ->

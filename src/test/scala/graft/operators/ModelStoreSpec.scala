@@ -113,12 +113,11 @@ class ModelStoreSpec extends AnyFunSuite {
   }
 
   test("tuned LSH + IVF decisions round-trip exactly and serve with zero jobs") {
-    graft.functions.GraftFunctions.register(spark)
     AnnTuning.clearMemo()
     val e = vectors.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    val lsh = AnnTuning.tunedLsh(spark, e, "ms-ann-corpus", maxSample = 200)
-    val ivf = AnnTuning.tunedIvf(spark, e, "ms-ann-corpus", maxSample = 200)
+    val lsh = AnnTuning.tunedLsh(e, "ms-ann-corpus", maxSample = 200)
+    val ivf = AnnTuning.tunedIvf(e, "ms-ann-corpus", maxSample = 200)
     val dir = TestSpark.tempDir("ms-ann").toString
     ModelStore.saveLsh(spark, dir, lsh)
     ModelStore.saveIvf(spark, dir, ivf)
@@ -132,8 +131,8 @@ class ModelStoreSpec extends AnyFunSuite {
     var servedL: AnnTuning.Tuned[AnnTuning.LshConfig] = null
     var servedI: AnnTuning.Tuned[AnnTuning.IvfConfig] = null
     val jobs = jobsDuring {
-      servedL = AnnTuning.tunedLsh(spark, e, "ms-ann-corpus", maxSample = 200)
-      servedI = AnnTuning.tunedIvf(spark, e, "ms-ann-corpus", maxSample = 200)
+      servedL = AnnTuning.tunedLsh(e, "ms-ann-corpus", maxSample = 200)
+      servedI = AnnTuning.tunedIvf(e, "ms-ann-corpus", maxSample = 200)
     }
     assert((servedL eq lshLoaded) && (servedI eq ivfLoaded))
     assert(jobs.isEmpty, s"serving installed tuning decisions ran Spark jobs: $jobs")

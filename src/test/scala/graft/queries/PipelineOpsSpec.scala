@@ -90,7 +90,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val sf01 = "/root/testdata/sf0.01"
     val e = Tables(spark, sf01, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val stats = graft.operators.AnnTuning.lshStats(spark,
+    val stats = graft.operators.AnnTuning.lshStats(
       graft.operators.AnnTuning.sampleVectors(e, 500))
     val picked = graft.operators.AnnTuning.choose(stats, 0.9, 0.25)
     info(s"ladder: ${stats.map(s => f"${s.config}->(${s.candidateFraction}%.3f,${s.estRecall}%.2f)").mkString(", ")}")
@@ -129,7 +129,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         (c * 5L + m, unit(base.map(_ + 0.025 * rnd.nextGaussian()))))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "v")
-    val stats = graft.operators.AnnTuning.lshStats(spark, df)
+    val stats = graft.operators.AnnTuning.lshStats(df)
     val picked = graft.operators.AnnTuning.choose(stats, 0.9, 0.25)
     info(f"clustered chosen ${picked.config} fraction=${picked.candidateFraction}%.3f recall=${picked.estRecall}%.3f")
     assert(picked.estRecall >= 0.9, s"clustered recall miss: $picked")
@@ -137,7 +137,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // and the full operator at the tuned config actually achieves the
     // recall against driver-side brute force — probes included, so a
     // multiprobe winner is validated on the path production runs
-    val out = GroupD.annLsh(df, spark, picked.config.tables, picked.config.bits,
+    val out = GroupD.annLsh(df, picked.config.tables, picked.config.bits,
       graft.operators.AnnTuning.DefaultBucketCap,
       probes = picked.config.probes)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -154,7 +154,6 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("the big-bucket cap bounds index fan-out and keeps every query answered") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // adversarial skew: 200 near-identical vectors — every bucket of every
     // table contains essentially ALL of them
     val rnd = new scala.util.Random(99)
@@ -166,8 +165,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     val vecs = (0 until 200).map(i =>
       (i.toLong, unit(base.map(_ + 0.01 * rnd.nextGaussian()))))
     val df = spark.createDataFrame(vecs).toDF("vec_id", "v")
-    val keyed = df.select(col("vec_id"), posexplode(expr(
-      s"${graft.functions.GraftFunctions.LshKeysName}(v, 4, 4)"))
+    val keyed = df.select(col("vec_id"), posexplode(
+      graft.functions.GraftFunctions.lshKeys(col("v"), 4, 4))
       .as(Seq("tbl", "bucket")))
     val capped = graft.operators.AnnTuning.capBuckets(keyed, 10)
     val maxBucket = capped.groupBy("tbl", "bucket").count()
@@ -175,7 +174,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(maxBucket <= 10, s"cap violated: bucket of $maxBucket")
     // capped ANN: per-query candidates <= tables * cap, yet every query
     // still gets a top-1 answer (index subset is nonempty per hot bucket)
-    val out = GroupD.annLsh(df, spark, tables = 4, bits = 4, bucketCap = 10)
+    val out = GroupD.annLsh(df, tables = 4, bits = 4, bucketCap = 10)
     assert(out.count() == 200)
   }
 
@@ -184,7 +183,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (0L, Array.fill(64)(0.1)), (1L, Array.fill(64)(-0.1)),
       (2L, Array.tabulate(64)(i => if (i % 2 == 0) 0.2 else -0.2))))
       .toDF("vec_id", "v")
-    val s3 = graft.operators.AnnTuning.lshStats(spark, df3)
+    val s3 = graft.operators.AnnTuning.lshStats(df3)
     // candidateFraction is a work metric (incidences per ordered pair) —
     // finite and non-negative, but legitimately > 1 on coarse configs
     assert(s3.nonEmpty && s3.forall(s =>
@@ -193,7 +192,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         s.estRecall >= 0.0 && s.estRecall <= 1.0))
     graft.operators.AnnTuning.choose(s3, 0.9, 0.25) // must not throw
     val df1 = df3.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
-    val s1 = graft.operators.AnnTuning.lshStats(spark, df1)
+    val s1 = graft.operators.AnnTuning.lshStats(df1)
     assert(s1.forall(s => !s.candidateFraction.isNaN && !s.estRecall.isNaN))
   }
 
@@ -207,7 +206,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val n = graft.operators.AnnTuning.sampleVectors(sparse, 100).count()
     assert(n > 30 && n < 300, s"sparse-id sample collapsed to $n rows")
     // an empty corpus yields zeroed stats, not an NPE from the max-bucket agg
-    val s0 = graft.operators.AnnTuning.lshStats(spark, sparse.filter(col("vec_id") < 0))
+    val s0 = graft.operators.AnnTuning.lshStats(sparse.filter(col("vec_id") < 0))
     assert(s0.nonEmpty && s0.forall(s =>
       s.candidateFraction == 0.0 && s.maxBucketFraction == 0.0))
   }
@@ -257,7 +256,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         (c * 5L + m, unit(base.map(_ + 0.025 * rnd.nextGaussian()))))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "v")
-    val out = GroupD.annIvf(df, spark, stride = 7, probes = 2)
+    val out = GroupD.annIvf(df, stride = 7, probes = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def cos(a: Array[Double], b: Array[Double]): Double =
       a.zip(b).map { case (x, y) => x * y }.sum
@@ -326,7 +325,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       }
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "label", "v")
-    val out = GroupD.dedupEmbeddingLsh(df, spark, tables = 8, bits = 8, threshold = 0.9)
+    val out = GroupD.dedupEmbeddingLsh(df, tables = 8, bits = 8, threshold = 0.9)
       .collect().map(_.getLong(0)).toSeq
     // exact expectation by brute force on the driver (100 vectors)
     def cos(a: Array[Double], b: Array[Double]): Double =
@@ -337,9 +336,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(out == kept, s"LSH dedup diverged: got ${out.size}, want ${kept.size}")
     assert(kept.size == 20) // exactly the first member of each cluster survives
     // pruning: candidate pairs well under 10% of all pairs
-    graft.functions.GraftFunctions.register(spark)
-    val keyed = df.select(col("vec_id"), posexplode(expr(
-      s"${graft.functions.GraftFunctions.LshKeysName}(v, 8, 8)"))
+    val keyed = df.select(col("vec_id"), posexplode(
+      graft.functions.GraftFunctions.lshKeys(col("v"), 8, 8))
       .as(Seq("tbl", "bucket")))
     val nCand = keyed.as("x").join(keyed.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
@@ -371,9 +369,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     // junk docs (unparseable, NULL features) pass the gate
     assert(exact.exists(_ % 17 == 0))
     // pruning: candidate volume well under the all-pairs square
-    graft.functions.GraftFunctions.register(spark)
-    val keyed = feats.select(col("vec_id"), posexplode(expr(
-        s"${graft.functions.GraftFunctions.LshKeysName}(v, 8, 12)"))
+    val keyed = feats.select(col("vec_id"), posexplode(
+      graft.functions.GraftFunctions.lshKeys(col("v"), 8, 12))
       .as(Seq("tbl", "bucket")))
     val nCand = keyed.as("x").join(keyed.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
@@ -489,7 +486,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         (c * 5L + m, unit(base.map(_ + 0.025 * rnd.nextGaussian())).map(_.toFloat)))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val out = GroupD.annPq(df, spark, "pq|spec-clustered-4242")
+    val out = GroupD.annPq(df, "pq|spec-clustered-4242")
       .filter(org.apache.spark.sql.functions.col("rn") === 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def cos(a: Array[Float], b: Array[Float]): Double =
@@ -531,13 +528,13 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
     val all = dense ++ sparse
     val df = spark.createDataFrame(all).toDF("vec_id", "embedding")
-    val out = GroupD.annPq(df, spark, "pq|spec-dense-777").collect()
+    val out = GroupD.annPq(df, "pq|spec-dense-777").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     // bounded, complete, deterministic output under the skew
     val perQ = out.groupBy(_._1)
     assert(perQ.size == 50 && perQ.values.forall(_.length == 5),
       "every query answers exactly 5 under the dense cell")
-    val again = GroupD.annPq(df, spark, "pq|spec-dense-777").collect()
+    val again = GroupD.annPq(df, "pq|spec-dense-777").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     assert(out.toSeq == again.toSeq, "deterministic under ties")
     def cos(a: Array[Float], b: Array[Float]): Double =
@@ -636,7 +633,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val e = Tables(spark, sf01, "embeddings")
       .select(col("vec_id"), (pmod(col("vec_id"), lit(97)) === 0).as("matches"),
         col("embedding").cast("array<double>").as("v"))
-    val got = GroupD.filteredAnnLsh(e, spark, "fann|spec-brute", k = 3)
+    val got = GroupD.filteredAnnLsh(e, "fann|spec-brute", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     // exact reference: full scan over the matching subset
     val vecs = e.collect().map(r =>
@@ -662,7 +659,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val e = Tables(spark, sf01, "embeddings")
       .select(col("vec_id"), (col("label") <= 7).as("matches"),
         col("embedding").cast("array<double>").as("v"))
-    val rows = GroupD.filteredAnnLsh(e, spark, "fann|spec-post").collect()
+    val rows = GroupD.filteredAnnLsh(e, "fann|spec-post").collect()
     assert(rows.nonEmpty)
     val labels = Tables(spark, sf01, "embeddings")
       .select("vec_id", "label").collect()
@@ -863,7 +860,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     // 4 well-separated tight clusters, constant label per cluster, one
     // vector in cluster 0 deliberately mislabeled — every prediction must
     // be the cluster's geometric label, so agree=false exactly there
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(4242)
     val dim = 16
     def unit(v: Array[Double]) = {
@@ -892,7 +888,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     // the declared 100 TB trade: same vote contract, LSH candidate pool.
     // Clustered labeled corpus (pseudo-labeling's regime): 8 tight
     // clusters x 25, constant label per cluster, one planted mislabel.
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(5252)
     val dim = 32
     def unit(v: Array[Double]) = {
@@ -912,7 +907,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // BOTH candidate families must hold the agreement bar on their own,
     // and the measured route must reproduce one of them exactly
     val byFamily = Seq("lsh", "ivf").map { fam =>
-      val preds = GroupD.labelKnnAnnOf(e, spark, "lsh|spec-d52",
+      val preds = GroupD.labelKnnAnnOf(e, "lsh|spec-d52",
         family = Some(fam)).collect()
         .map(r => r.getLong(0) -> r.getInt(2)).toMap
       assert(preds.size >= (vecs.size * 9) / 10,
@@ -924,14 +919,14 @@ class PipelineOpsSpec extends AnyFunSuite {
         s"$fam agreement $agree/${common.size} below 0.9")
       fam -> preds
     }.toMap
-    val approx = GroupD.labelKnnAnnOf(e, spark, "lsh|spec-d52").collect()
+    val approx = GroupD.labelKnnAnnOf(e, "lsh|spec-d52").collect()
       .map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(byFamily.values.exists(_ == approx),
       "the measured route must pick one of the two families verbatim")
     // sub-quadratic: the candidate pool must be well under all-pairs
-    val tuned = graft.operators.AnnTuning.tunedLsh(spark,
+    val tuned = graft.operators.AnnTuning.tunedLsh(
       e.select("vec_id", "v"), "lsh|spec-d52")
-    val nCand = GroupD.lshCandidatePairs(e.select("vec_id", "v"), spark,
+    val nCand = GroupD.lshCandidatePairs(e.select("vec_id", "v"),
       tuned.config.tables, tuned.config.bits,
       graft.operators.AnnTuning.effectiveCap(tuned)).count()
     val n = vecs.size.toLong
@@ -939,13 +934,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(nCand <= n * (n - 1) / 2,
       s"candidate volume $nCand not sub-quadratic vs ${n * (n - 1)}")
     // deterministic across reruns
-    val again = GroupD.labelKnnAnnOf(e, spark, "lsh|spec-d52").collect()
+    val again = GroupD.labelKnnAnnOf(e, "lsh|spec-d52").collect()
       .map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(again == approx, "reruns must be identical")
   }
 
   test("d49 label purity: a planted far-out vector ranks worst in its label") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(5151)
     val dim = 16
     def unit(v: Array[Double]) = {
@@ -1146,7 +1140,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         (c * 5L + m, unit(base.map(_ + 0.025 * rnd.nextGaussian())).map(_.toFloat)))
     }
     val df = spark.createDataFrame(vecs).toDF("vec_id", "embedding")
-    val out = GroupD.annIvfPq(df, spark,
+    val out = GroupD.annIvfPq(df,
         "ivf|spec-clustered-6060", "pq|spec-clustered-6060")
       .filter(org.apache.spark.sql.functions.col("rn") === 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -99,7 +99,7 @@ class StreamImageDedupSpec extends AnyFunSuite {
     val got = scala.collection.mutable.Set[Long]()
     val q = StreamImageDedup.start(stream, base, "saudiodedup",
       (surv, _) => { got ++= surv.select("asset_id").collect().map(_.getLong(0)); () },
-      hashName = graft.functions.GraftFunctions.WavEnergyHashName)
+      hash = graft.functions.GraftFunctions.wavEnergyHash)
     try q.processAllAvailable() finally q.stop()
     assert(got.toSet == Set(41L, 42L), s"audio gate: $got")
   }
@@ -131,7 +131,7 @@ class StreamImageDedupSpec extends AnyFunSuite {
     val got = scala.collection.mutable.Set[Long]()
     val q = StreamImageDedup.start(stream, base, "svideodedup",
       (surv, _) => { got ++= surv.select("asset_id").collect().map(_.getLong(0)); () },
-      hashName = graft.functions.GraftFunctions.Y4mEnvelopeHashName)
+      hash = graft.functions.GraftFunctions.y4mEnvelopeHash)
     try q.processAllAvailable() finally q.stop()
     assert(got.toSet == Set(51L, 52L), s"video gate: $got")
   }

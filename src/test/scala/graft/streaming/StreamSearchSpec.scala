@@ -95,7 +95,7 @@ class StreamSearchSpec extends AnyFunSuite {
       assert(got.nonEmpty && got.map(_._1).toSet == Set(0L, 1L, 2L))
       // the routed batch plan gives the identical answer
       val batch = graft.queries.GroupD.filteredAnnCore(
-        vecs.filter(col("qid") < 3), corpus, spark, "fann|stream-spec",
+        vecs.filter(col("qid") < 3), corpus, "fann|stream-spec",
         k = 3, graft.queries.GroupD.selectivity(corpus)).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got.toSet == batch)
