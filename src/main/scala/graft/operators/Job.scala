@@ -86,9 +86,13 @@ final case class JobResult(ok: Boolean, results: Seq[MappingResult]) {
   * on success (R17, :355-361, :658-671).
   *
   * Each mapping compiles to one declarative Spark plan
-  * (scan → filter → project → sink) and runs as one distributed write
-  * action — the reference's single-threaded pull loop becomes a
-  * partitioned job per mapping.
+  * (scan → filter → project → sink) and runs as one Spark job — the
+  * reference's single-threaded pull loop (src/CSVProvider.cs:563-577)
+  * becomes one task per source split: [[CsvCatalog.readTable]] cuts a
+  * single source file into one split per core, and the
+  * single-file sink ([[CsvWrite.writeSingleFile]]) encodes each split's
+  * rows in its own task and joins the parts in file order, so parse,
+  * filter, casts, formatting and encoding run on every core.
   */
 object Job {
 
@@ -201,7 +205,7 @@ object Job {
     val renamed = df.toDF(o.columns.map(_.name): _*)
     o.columns.foldLeft(renamed) { (acc, c) =>
       c.castTo.fold(acc)(t =>
-        acc.withColumn(c.name, org.apache.spark.sql.functions.col(c.name).cast(t)))
+        acc.withColumn(c.name, CsvCatalog.column(c.name).cast(t)))
     }
   }
 

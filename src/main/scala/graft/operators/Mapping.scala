@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
-import graft.sources.DecimalMode
+import graft.sources.{CsvCatalog, DecimalMode}
 
 /** Predicate operators for row conditionals. The reference consumes the
   * framework's `Mapping.Conditionals` predicate set during the read loop
@@ -33,7 +33,7 @@ final case class Conditional(column: String, op: CondOp, values: Seq[String]) {
     // fail as a VALIDATION error naming the conditional (r18 review)
     require(op == CondOp.In || values.nonEmpty,
       s"conditional on '$column' ($op) has no value")
-    val c = col(column)
+    val c = CsvCatalog.column(column)
     op match {
       case CondOp.EqualTo     => c === values.head
       case CondOp.NotEqualTo  => c =!= values.head
@@ -81,7 +81,7 @@ final case class ColumnMapping(
   def toColumn: Column = {
     val base = (source, constant) match {
       case (_, Some(v))    => lit(v)
-      case (Some(s), None) => col(s)
+      case (Some(s), None) => CsvCatalog.column(s)
       case _               => throw new IllegalStateException
     }
     val converted = castTo match {

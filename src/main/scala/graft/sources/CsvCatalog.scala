@@ -3,10 +3,13 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.Charset
 import java.nio.file.{Files, Path, Paths}
+import java.util.Collections
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Raised when a header row repeats a non-empty column name — the reference
@@ -22,9 +25,10 @@ final class DuplicateHeaderException(table: String, dups: Seq[String])
   * model (src/CSVProvider.cs:155-198, 281-315, 641-656; SURVEY.md §1.1-§1.3).
   *
   * Scale note: only the single header line of each file is read on the
-  * driver (schema is metadata); the data read is a plain distributed
-  * `spark.read.csv` with an explicit schema, so Spark's vectorized CSV
-  * scan, partitioned splits, and filter/column pushdown all apply.
+  * driver (schema is metadata); the data read is Spark's CSV file source
+  * with an explicit schema, so filter and column pushdown apply. One file
+  * plans as one byte-range split per core ([[readTable]]), so even a file
+  * far below Spark's 4 MB per-file open cost is parsed on every core.
   */
 object CsvCatalog {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -93,6 +97,11 @@ object CsvCatalog {
     if (dot > 0) n.substring(0, dot) else n
   }
 
+  /** The column named exactly `name`. A CSV header may hold a `.` or a
+    * backtick, which `functions.col` would parse as a struct path or a
+    * quote, so the name is quoted whole. */
+  def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
   private def allStringSchema(names: Seq[String]): StructType =
     StructType(names.map(StructField(_, StringType, nullable = true)))
 
@@ -101,12 +110,23 @@ object CsvCatalog {
     * present) is skipped rather than re-inferred, and malformed-row policy
     * ([[MalformedMode]]) applies to data rows only.
     *
+    * The file plans as one byte-range split per core, so its
+    * parse (and everything narrow above it, up to the sink) runs on every
+    * core. Spark's line reader gives a line that crosses a split boundary
+    * to the split it starts in and drops the header only in the split at
+    * offset 0, so the rows are the same and, split by split, in file
+    * order. The relation is built on the caller's [[onSplitSession]] and
+    * handed back as a frame of the caller's own session; the file-source
+    * scan and its pushed filters are the same as a plain `spark.read.csv`.
+    *
     * Legacy encodings (UTF-16, windows-125x — R15) are transcoded to a
     * UTF-8 staging copy at the file boundary before the distributed read:
     * Spark's CSV line splitter is only reliable on UTF-8-compatible bytes,
-    * and the legacy-encoding feature exists for the reference's
-    * small-single-file integration mode, not the 100 TB path (which is
-    * UTF-8 throughout). Constraints of that staging copy: it is a
+    * and Spark 4.1's CSV reader rejects `charset=windows-1252` outright
+    * (INVALID_PARAMETER_VALUE.CHARSET), so a single-byte legacy file cannot
+    * be read in place. The legacy-encoding feature exists for the
+    * reference's small-single-file integration mode, not the 100 TB path
+    * (which is UTF-8 throughout). Constraints of that staging copy: it is a
     * DRIVER-LOCAL temp file (only visible to executors in local mode — on
     * a real cluster a legacy file would need staging to shared storage),
     * CRLF line endings are normalized to LF, and copies are CACHED per
@@ -120,11 +140,54 @@ object CsvCatalog {
     val dataFile =
       if (dialect.encoding.equalsIgnoreCase("UTF-8")) file
       else transcodeToUtf8(file, dialect.encoding)
-    spark.read
-      .options(dialect.readOptions + ("encoding" -> "UTF-8"))
-      .schema(allStringSchema(names))
-      .csv(dataFile.toString)
+    val relation = onSplitSession(spark) { split =>
+      split.read
+        .options(dialect.readOptions + ("encoding" -> "UTF-8"))
+        .schema(allStringSchema(names))
+        .csv(dataFile.toString)
+        .queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }.get
+    }
+    spark.baseRelationToDataFrame(relation)
   }
+
+  /** Caller session -> its split session. Weak keys: a caller session that
+    * is dropped takes its split session with it. */
+  private val splitSessions =
+    Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  /** Runs `build` on the caller's split session: one child of the caller
+    * (`newSession()`, made once per caller rather than per read), brought
+    * to the caller's modifiable runtime confs on every call, plus its own
+    * per-file open cost. Spark sizes a scan's splits from
+    * its relation's own session, has no per-read option for it, and cuts a
+    * file into splits of `max(openCost, (length + openCost) / n)` bytes, `n`
+    * being `spark.sql.files.minPartitionNum` or else the leaf-node default
+    * parallelism — never below the 4 MB default open cost. At an open cost
+    * of `n - 1` bytes that is `ceil(length / n)`: exactly `n` splits (at
+    * least 1 byte, since a zero split size fails the read of a one-byte
+    * file). The caller's confs are never written. A relation keeps the
+    * confs of the call that built it, so a conf the caller changes later (a
+    * scan setting such as `ignoreCorruptFiles`) reaches it only on the next
+    * read. This is the one place in the engine that writes a conf.
+    */
+  private def onSplitSession[T](caller: SparkSession)(build: SparkSession => T): T = {
+    val split = splitSessions.computeIfAbsent(caller, _.newSession())
+    split.synchronized {
+      def modifiable(s: SparkSession) =
+        s.conf.getAll.filter { case (k, _) => s.conf.isModifiable(k) }
+      val n = Seq("spark.sql.files.minPartitionNum", "spark.sql.leafNodeDefaultParallelism")
+        .flatMap(caller.conf.getOption).headOption
+        .fold(caller.sparkContext.defaultParallelism)(_.toInt)
+      val want = modifiable(caller) + (OpenCostKey -> math.max(1, n - 1).toString)
+      val have = modifiable(split)
+      have.keys.filterNot(want.contains).foreach(split.conf.unset)
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) split.conf.set(k, v) }
+      build(split)
+    }
+  }
+
+  private val OpenCostKey = "spark.sql.files.openCostInBytes"
 
   /** (source absolute path, encoding) -> (source mtime millis, staged copy). */
   private val transcodeCache =

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.Charset
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
 import org.apache.spark.TaskContext
@@ -24,9 +25,11 @@ import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType,
   *   - [[writeSingleFile]] — the reference's one-file-per-table output,
   *     byte-faithful: records are assembled by the engine (distributed,
   *     codegen'd `concat_ws`), so the NULL sentinel stays unquoted exactly
-  *     like the reference's writer, and one task writes the header and the
-  *     records once, in the configured encoding, like the reference's
-  *     single `TextWriter` (src/CSVDestinationWriter.cs:17-45).
+  *     like the reference's writer; every partition's task encodes its own
+  *     records in the configured encoding, and the driver joins the parts
+  *     in partition order into the bytes the reference's single
+  *     `TextWriter` writes (src/CSVDestinationWriter.cs:17-45): one header,
+  *     at most one byte-order mark, the rows in input order.
   *     The only deviation is deliberate: embedded quotes are `""`-escaped
   *     where the reference emits malformed CSV (SURVEY.md §2.4.1).
   *   - [[writeDir]] — the 100 TB path: a partitioned directory written by
@@ -76,13 +79,12 @@ object CsvWrite {
     def cultured(c: Column): Column =
       if (sep != '.') translate(c, ".", sep.toString) else c
     val cols: Seq[Column] = df.schema.fields.map { f =>
-      val quoted = "`" + f.name.replace("`", "``") + "`"
-      val c = col(f.name)
+      val c = CsvCatalog.column(f.name)
       val formatted = f.dataType match {
         case TimestampType | TimestampNTZType | DateType =>
           date_format(c, TimestampPattern)
         case DoubleType | FloatType =>
-          cultured(graft.functions.GraftFunctions.plainDouble(col(quoted)))
+          cultured(graft.functions.GraftFunctions.plainDouble(c))
         case _: DecimalType => cultured(c.cast("string"))
         case _ => c.cast("string")
       }
@@ -100,15 +102,16 @@ object CsvWrite {
   /** One reference-format record per row, as a single string column:
     * non-null values quoted (embedded quotes doubled), nulls as the bare
     * sentinel, fields joined by the delimiter. Runs distributed and
-    * codegen'd; [[writeSingleFile]]'s one task only streams the records.
+    * codegen'd; [[writeSingleFile]]'s tasks only encode the records.
     */
   private[sources] def referenceRecords(df: DataFrame, dialect: CsvDialect,
       culture: String = ""): DataFrame = {
     val q = dialect.quote
     val formatted = formatForWrite(df, culture)
     val fields: Seq[Column] = formatted.schema.fieldNames.map { n =>
-      when(col(n).isNull, lit(dialect.nullSentinel))
-        .otherwise(concat(lit(q), replace(col(n), lit(q), lit(q + q)), lit(q)))
+      val c = CsvCatalog.column(n)
+      when(c.isNull, lit(dialect.nullSentinel))
+        .otherwise(concat(lit(q), replace(c, lit(q), lit(q + q)), lit(q)))
     }
     formatted.select(concat_ws(dialect.delimiter, fields: _*).as("value"))
   }
@@ -122,11 +125,15 @@ object CsvWrite {
 
   /** Fidelity-mode write: exactly one `<table>[suffix].csv` file in `dir`,
     * like the reference (src/CSVDestinationWriter.cs:17-33, 61-62), in ONE
-    * Dataset action: a single `coalesce(1)` task streams the header and the
-    * records, in the dialect's encoding, into a hidden file in `dir` named
-    * by its task attempt, and the driver renames that file atomically onto
-    * the destination. No row reaches the driver; on failure no file of this
-    * call remains. Executors must see `dir` at the same path.
+    * Dataset action. Each partition's task encodes its records (partition 0
+    * also the header) in the dialect's encoding into its own part in a
+    * hidden staging directory in `dir`; the driver appends the later parts
+    * to the first in partition order, skipping their byte-order marks
+    * (Java's `UTF-16` encoder starts every stream with one), and renames the
+    * result atomically onto the destination. Partition order is input
+    * order, so the bytes are those of one writer over all rows. No row
+    * reaches the driver; on failure no file of this call remains. Executors
+    * must see `dir` at the same path.
     */
   def writeSingleFile(df: DataFrame, dir: String, table: String,
                       dialect: CsvDialect = CsvDialect(),
@@ -135,21 +142,59 @@ object CsvWrite {
     val destDir = Paths.get(dir).toAbsolutePath
     Files.createDirectories(destDir) // reference auto-creates (:61-62)
     val dest = destDir.resolve(timestampSuffix.fold(s"$table.csv")(ts => s"$table[$ts].csv"))
-    val (stageDir, prefix) = (destDir.toString, s".$table-${UUID.randomUUID()}-")
+    val stage = Files.createDirectory(destDir.resolve(s".$table-${UUID.randomUUID()}.stage"))
+    val (stageDir, encoding) = (stage.toString, dialect.encoding)
     val header = Option.when(dialect.hasHeader)(headerLine(df, dialect))
     try {
-      val staged = referenceRecords(df, dialect, culture).coalesce(1).as(Encoders.STRING)
+      val parts = referenceRecords(df, dialect, culture).as(Encoders.STRING)
         .mapPartitions { records =>
-          val f = Paths.get(stageDir, s"$prefix${TaskContext.get().taskAttemptId()}.stage")
-          Iterator.single(writeLines(f, header.iterator ++ records, dialect.encoding).toString)
-        }(Encoders.STRING).collect()
-      // an empty local relation plans as a zero-partition scan: no task runs
-      val file = if (staged.nonEmpty) Paths.get(staged(0))
-        else writeLines(destDir.resolve(s"${prefix}driver.stage"), header.iterator, dialect.encoding)
+          val ctx = TaskContext.get()
+          val lines = if (ctx.partitionId() == 0) header.iterator ++ records else records
+          if (!lines.hasNext) Iterator.empty
+          else Iterator.single(writeLines(
+            Paths.get(stageDir, s"part-${ctx.partitionId()}-${ctx.attemptNumber()}"),
+            lines, encoding).toString)
+        }(Encoders.STRING).collect().map(Paths.get(_))
+      // no part: no task ran (an empty local relation plans as a
+      // zero-partition scan), or there is neither a header nor a row
+      val file = parts.headOption.getOrElse(
+        writeLines(stage.resolve("driver"), header.iterator, encoding))
+      if (parts.length > 1) append(file, parts.tail, byteOrderMarkLength(encoding))
       Files.move(file, dest, StandardCopyOption.ATOMIC_MOVE)
-    } finally {
-      val leftovers = Files.newDirectoryStream(destDir, (p: Path) => p.getFileName.toString.startsWith(prefix))
-      try leftovers.forEach(p => Files.deleteIfExists(p)) finally leftovers.close()
+    } finally removeStage(stage)
+  }
+
+  /** Bytes `encoding` puts at the start of every stream it encodes. */
+  private def byteOrderMarkLength(encoding: String): Int = {
+    val cs = Charset.forName(encoding)
+    2 * "\n".getBytes(cs).length - "\n\n".getBytes(cs).length
+  }
+
+  /** Appends each of `parts`, minus its first `skip` bytes, to `first`. */
+  private def append(first: Path, parts: Seq[Path], skip: Int): Unit = {
+    val out = FileChannel.open(first, StandardOpenOption.APPEND)
+    try parts.foreach { p =>
+      val in = FileChannel.open(p)
+      try {
+        var pos = skip.toLong
+        while (pos < in.size) pos += in.transferTo(pos, in.size - pos, out)
+      } finally in.close()
+    } finally out.close()
+  }
+
+  /** Deletes the staging directory with everything in it. After a failed
+    * job a task may still be writing its part; a part created after the
+    * listing keeps the directory non-empty, so list and delete again. Once
+    * the directory is gone no task can create a part (parts are created
+    * only inside it, never with their parent), so nothing is left behind
+    * whenever the job's tasks end. */
+  private def removeStage(stage: Path): Unit = {
+    var removed = false
+    while (!removed) {
+      val parts = Files.newDirectoryStream(stage)
+      try parts.forEach(p => Files.deleteIfExists(p)) finally parts.close()
+      removed = try { Files.delete(stage); true }
+        catch { case _: DirectoryNotEmptyException => false }
     }
   }
 

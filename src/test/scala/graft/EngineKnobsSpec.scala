@@ -77,6 +77,26 @@ class EngineKnobsSpec extends AnyFunSuite {
       hits.mkString("engine code reaches a function by name:\n", "\n", ""))
   }
 
+  test("no engine source file writes a session conf outside CsvCatalog's split-session helper") {
+    val write = """\.conf\.(set|unset)\(|setConfString\(|unsetConf\(""".r
+    val helper = Paths.get("src/main/scala/graft/sources/CsvCatalog.scala")
+    // the lines of `def onSplitSession`, from its signature to its closing brace
+    val helperLines = {
+      val lines = Files.readAllLines(helper).asScala.toIndexedSeq
+      val first = lines.indexWhere(_.contains("def onSplitSession"))
+      assert(first >= 0, s"no onSplitSession in $helper")
+      val depths = lines.drop(first)
+        .scanLeft(0)((d, l) => d + l.count(_ == '{') - l.count(_ == '}')).tail
+      val end = depths.indexWhere(_ == 0, depths.indexWhere(_ > 0))
+      (first + 1) to (first + 1 + end)
+    }
+    val hits = for {
+      (file, no, code) <- engineCode
+      if write.findFirstIn(code).nonEmpty && !(file == helper && helperLines.contains(no))
+    } yield s"$file:$no: $code"
+    assert(hits.isEmpty, hits.mkString("engine code writes a session conf:\n", "\n", ""))
+  }
+
   test("building d84, d86, c3 and formatForWrite registers no graft_ function") {
     val spark = TestSpark.spark.newSession()
     val sf = "/root/testdata/sf0.001"

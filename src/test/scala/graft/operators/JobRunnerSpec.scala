@@ -125,6 +125,34 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(lines.get(1) == "\"1\";\"ann\"")
   }
 
+  test("column names with a dot or a backtick survive override, conditionals, casts and the write") {
+    val src = tempDir("jobsrc"); val dest = tempDir("jobdst")
+    csvFile(src, "prices.csv",
+      "id;price.usd;tag`x\n1;12.5;a\n2;3.25;b\n3;0.5;c\n4;NULL;d\n5;7.75;e\n")
+    val direct = Mapping("prices", "direct", Seq(
+      ColumnMapping(Some("id"), "id", castTo = Some(LongType)),
+      ColumnMapping(Some("price.usd"), "price.usd",
+        castTo = Some(org.apache.spark.sql.types.DoubleType)),
+      ColumnMapping(Some("tag`x"), "tag`x")),
+      conditionals = Seq(Conditional("price.usd", CondOp.GreaterThan, "1"),
+        Conditional("tag`x", CondOp.NotEqualTo, "b")))
+    val res = Job.run(spark, cfg(src, dest), Seq(direct), sleep = noSleep)
+    assert(res.ok, res.errors.mkString("; "))
+    assert(Files.readString(dest.resolve("direct.csv")) ==
+      "\"id\";\"price.usd\";\"tag`x\"\n\"1\";\"12.5\";\"a\"\n\"5\";\"7.75\";\"e\"\n")
+    // the edited schema renames to a dotted name and casts it
+    val edited = cfg(src, dest).copy(schemaOverrides = Seq(TableSchemaOverride("prices", Seq(
+      ColumnOverride("id"), ColumnOverride("net.price", Some(org.apache.spark.sql.types.DoubleType)),
+      ColumnOverride("tag`x")))))
+    val overridden = Mapping("prices", "overridden", Seq(
+      ColumnMapping(Some("id"), "id"), ColumnMapping(Some("net.price"), "net.price")),
+      conditionals = Seq(Conditional("net.price", CondOp.LessThan, "5")))
+    val res2 = Job.run(spark, edited, Seq(overridden), sleep = noSleep)
+    assert(res2.ok, res2.errors.mkString("; "))
+    assert(Files.readString(dest.resolve("overridden.csv")) ==
+      "\"id\";\"net.price\"\n\"2\";\"3.25\"\n\"3\";\"0.5\"\n")
+  }
+
   test("inactive mappings and mappings with no active columns are skipped") {
     val src = srcDir(); val dest = tempDir("jobdst")
     val res = Job.run(spark, cfg(src, dest),

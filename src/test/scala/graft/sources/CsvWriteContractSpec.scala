@@ -135,6 +135,36 @@ class CsvWriteContractSpec extends AnyFunSuite {
     assert(listing(dir).isEmpty)
   }
 
+  test("a failing last partition leaves no staged file, even from parts that end late (20 runs)") {
+    val dir = tempDir("contract")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      for (run <- 1 to 20) {
+        // partitions 0-2 complete; partition 1 writes its part only after
+        // the job has failed on the last row of partition 3, and misses the
+        // kill: it waits without sleeping, then clears its interrupt
+        val rows = spark.sparkContext.parallelize(1 to 400, 4)
+          .map(i => Row(if (i == 400) "x" else i.toString, "v"))
+          .mapPartitionsWithIndex { (p, it) =>
+            val all = it.toVector
+            if (p == 1) {
+              val until = System.nanoTime() + 300L * 1000 * 1000
+              while (System.nanoTime() < until) Thread.onSpinWait()
+              Thread.interrupted()
+            }
+            all.iterator
+          }
+        val bad = spark.createDataFrame(rows, strings(Nil).schema)
+          .select(col("a").cast("int").as("a"))
+        val e = intercept[Exception](CsvWrite.writeSingleFile(bad, dir.toString, "t"))
+        assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+        Thread.sleep(500) // the late part's task has ended
+        assert(listing(dir).isEmpty, s"run $run")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("an observation placed on the input delivers its metric") {
     val dir = tempDir("contract")
     val obs = Observation("csvwrite.rows")
