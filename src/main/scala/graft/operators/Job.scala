@@ -90,9 +90,10 @@ final case class JobResult(ok: Boolean, results: Seq[MappingResult]) {
   * reference's single-threaded pull loop (src/CSVProvider.cs:563-577)
   * becomes one task per source split: [[CsvCatalog.readTable]] cuts a
   * single source file into one split per core, and the
-  * single-file sink ([[CsvWrite.writeSingleFile]]) encodes each split's
-  * rows in its own task and joins the parts in file order, so parse,
-  * filter, casts, formatting and encoding run on every core.
+  * single-file sink ([[CsvWrite.writeSingleFileCounted]]) frames, encodes
+  * and counts each split's rows in its own task and joins the parts in
+  * file order, so parse, filter, casts, formatting and encoding run on
+  * every core, and the tasks' counts are the mapping's `rowsWritten`.
   */
 object Job {
 
@@ -255,21 +256,24 @@ object Job {
         val source = catalog.getOrElse(m.sourceTable,
           throw new IllegalArgumentException(
             s"source table '${m.sourceTable}' not found in ${files.map(_.getFileName)}"))
-        // ONE distributed action per mapping: rowsWritten is an observed
-        // metric collected DURING the write, not a separate count() that
+        // ONE distributed action per mapping: rowsWritten is counted DURING
+        // the write (by the single-file write tasks, or as an observed
+        // metric of the directory write), not by a separate count() that
         // would re-execute the whole scan/filter/project (and could diverge
         // from the written rows if the source changed between actions).
-        val obs = Observation(s"graft.job.${m.sourceTable}->${m.destTable}")
-        val out = m.compile(source).observe(obs, count(lit(1)).as("rows"))
-        val suffix = cfg.timestampSuffix
-          .orElse(if (cfg.autoTimestampSuffix) Some(CsvWrite.autoSuffix()) else None)
-        if (cfg.singleFileOutput)
-          CsvWrite.writeSingleFile(out, cfg.destFolder.toString, m.destTable,
-            cfg.destDialect, suffix, cfg.culture)
-        else
-          CsvWrite.writeDir(out, cfg.destFolder.resolve(m.destTable).toString,
-            cfg.destDialect, cfg.culture)
-        val rows = obs.get("rows").asInstanceOf[Long]
+        val out = m.compile(source)
+        val rows =
+          if (cfg.singleFileOutput) {
+            val suffix = cfg.timestampSuffix
+              .orElse(if (cfg.autoTimestampSuffix) Some(CsvWrite.autoSuffix()) else None)
+            CsvWrite.writeSingleFileCounted(out, cfg.destFolder.toString, m.destTable,
+              cfg.destDialect, suffix, cfg.culture)._2
+          } else {
+            val obs = Observation(s"graft.job.${m.sourceTable}->${m.destTable}")
+            CsvWrite.writeDir(out.observe(obs, count(lit(1)).as("rows")),
+              cfg.destFolder.resolve(m.destTable).toString, cfg.destDialect, cfg.culture)
+            obs.get("rows").asInstanceOf[Long]
+          }
         MappingResult(m.sourceTable, m.destTable, ok = true, rows, None)
       } catch {
         // NonFatal: an OOM or linkage error must propagate, not be folded

@@ -3,12 +3,14 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.Charset
 import java.nio.file.{Files, Path, Paths}
-import java.util.Collections
+import java.util.{Collections, Locale}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, NoopCache, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -62,11 +64,13 @@ object CsvCatalog {
     out.result()
   }
 
+  /** The file's first line, less one leading byte-order mark: a UTF-8 mark
+    * decodes to U+FEFF, which the data read drops too. */
   private def firstLine(file: Path, encoding: String): Option[String] = {
     val in = Files.newInputStream(file)
     try {
       val r = new BufferedReader(new InputStreamReader(in, Charset.forName(encoding)))
-      Option(r.readLine())
+      Option(r.readLine()).map(_.stripPrefix("\uFEFF"))
     } finally in.close()
   }
 
@@ -115,9 +119,15 @@ object CsvCatalog {
     * core. Spark's line reader gives a line that crosses a split boundary
     * to the split it starts in and drops the header only in the split at
     * offset 0, so the rows are the same and, split by split, in file
-    * order. The relation is built on the caller's [[onSplitSession]] and
-    * handed back as a frame of the caller's own session; the file-source
-    * scan and its pushed filters are the same as a plain `spark.read.csv`.
+    * order. The relation is built directly on the caller's
+    * [[onSplitSession]] and handed back as a frame of the caller's own
+    * session: a file index over the one literal path, Spark's CSV file
+    * format and the dialect's read options. That skips the data-source
+    * lookup and the glob expansion of `spark.read.csv`, so a name such as
+    * `t[20260101-1200000000000].csv` (a timestamped output of
+    * [[CsvWrite.writeSingleFile]]) or `u{1}.csv` is read as written; the
+    * duplicate-name check, the file-source scan and its pushed filters are
+    * those of a plain `spark.read.csv`.
     *
     * Legacy encodings (UTF-16, windows-125x — R15) are transcoded to a
     * UTF-8 staging copy at the file boundary before the distributed read:
@@ -137,18 +147,31 @@ object CsvCatalog {
     */
   def readTable(spark: SparkSession, file: Path, dialect: CsvDialect): DataFrame = {
     val names = columnNames(file, dialect)
+    checkDistinct(spark, names)
     val dataFile =
       if (dialect.encoding.equalsIgnoreCase("UTF-8")) file
       else transcodeToUtf8(file, dialect.encoding)
+    val options = dialect.readOptions + ("encoding" -> "UTF-8")
+    val schema = allStringSchema(names)
     val relation = onSplitSession(spark) { split =>
-      split.read
-        .options(dialect.readOptions + ("encoding" -> "UTF-8"))
-        .schema(allStringSchema(names))
-        .csv(dataFile.toString)
-        .queryExecution.analyzed
-        .collectFirst { case l: LogicalRelation => l.relation }.get
+      val index = new InMemoryFileIndex(split, Seq(new HadoopPath(dataFile.toUri)),
+        options, Some(schema), NoopCache, Some(PartitionSpec.emptySpec))
+      HadoopFsRelation(index, PartitionSpec.emptySpec.partitionColumns, schema,
+        None, new CSVFileFormat, options)(split)
     }
     spark.baseRelationToDataFrame(relation)
+  }
+
+  /** The duplicate-name check of a plain `spark.read`: names equal up to
+    * case (unless the session is case-sensitive), empty ones included, fail
+    * with COLUMN_ALREADY_EXISTS. */
+  private def checkDistinct(spark: SparkSession, names: Seq[String]): Unit = {
+    val key: String => String =
+      if (spark.sessionState.conf.caseSensitiveAnalysis) identity else _.toLowerCase(Locale.ROOT)
+    names.groupBy(key).collectFirst { case (k, ns) if ns.size > 1 => k }.foreach { k =>
+      throw new AnalysisException("COLUMN_ALREADY_EXISTS",
+        Map("columnName" -> ("`" + k.replace("`", "``") + "`")))
+    }
   }
 
   /** Caller session -> its split session. Weak keys: a caller session that

@@ -81,8 +81,8 @@ final case class CsvDialect(
     * ("NULL" — quoteAll covers the substituted nullValue string too;
     * probe-verified r18, spec-pinned in CsvWriteSpec); the reference's
     * bare-NULL byte shape is the single-file fidelity path's job
-    * ([[CsvWrite.writeSingleFile]], whose write tasks encode the
-    * referenceRecords rows in the dialect's encoding without these options).
+    * ([[CsvWrite.writeSingleFile]], whose write tasks frame and encode
+    * their records themselves, without these options).
     */
   def writeOptions: Map[String, String] = Map(
     "sep"        -> delimiter,

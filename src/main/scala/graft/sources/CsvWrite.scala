@@ -7,7 +7,9 @@ import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths, StandardCo
 import java.util.UUID
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType, TimestampNTZType, TimestampType}
 
@@ -23,13 +25,13 @@ import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType,
   *
   * Two paths with different fidelity/scale trade-offs:
   *   - [[writeSingleFile]] — the reference's one-file-per-table output,
-  *     byte-faithful: records are assembled by the engine (distributed,
-  *     codegen'd `concat_ws`), so the NULL sentinel stays unquoted exactly
-  *     like the reference's writer; every partition's task encodes its own
-  *     records in the configured encoding, and the driver joins the parts
-  *     in partition order into the bytes the reference's single
-  *     `TextWriter` writes (src/CSVDestinationWriter.cs:17-45): one header,
-  *     at most one byte-order mark, the rows in input order.
+  *     byte-faithful: every partition's task frames its own records from
+  *     the formatted rows, like the reference's writer (the NULL sentinel
+  *     unquoted), and encodes them in the configured encoding, and the
+  *     driver joins the parts in partition order into the bytes the
+  *     reference's single `TextWriter` writes
+  *     (src/CSVDestinationWriter.cs:17-45): one header, at most one
+  *     byte-order mark, the rows in input order.
   *     The only deviation is deliberate: embedded quotes are `""`-escaped
   *     where the reference emits malformed CSV (SURVEY.md §2.4.1).
   *   - [[writeDir]] — the 100 TB path: a partitioned directory written by
@@ -99,23 +101,6 @@ object CsvWrite {
     formatForWrite(df, culture).write.mode("overwrite")
       .options(dialect.writeOptions).csv(dir)
 
-  /** One reference-format record per row, as a single string column:
-    * non-null values quoted (embedded quotes doubled), nulls as the bare
-    * sentinel, fields joined by the delimiter. Runs distributed and
-    * codegen'd; [[writeSingleFile]]'s tasks only encode the records.
-    */
-  private[sources] def referenceRecords(df: DataFrame, dialect: CsvDialect,
-      culture: String = ""): DataFrame = {
-    val q = dialect.quote
-    val formatted = formatForWrite(df, culture)
-    val fields: Seq[Column] = formatted.schema.fieldNames.map { n =>
-      val c = CsvCatalog.column(n)
-      when(c.isNull, lit(dialect.nullSentinel))
-        .otherwise(concat(lit(q), replace(c, lit(q), lit(q + q)), lit(q)))
-    }
-    formatted.select(concat_ws(dialect.delimiter, fields: _*).as("value"))
-  }
-
   private def headerLine(df: DataFrame, dialect: CsvDialect): String = {
     val q = dialect.quote
     df.schema.fieldNames
@@ -125,42 +110,63 @@ object CsvWrite {
 
   /** Fidelity-mode write: exactly one `<table>[suffix].csv` file in `dir`,
     * like the reference (src/CSVDestinationWriter.cs:17-33, 61-62), in ONE
-    * Dataset action. Each partition's task encodes its records (partition 0
-    * also the header) in the dialect's encoding into its own part in a
-    * hidden staging directory in `dir`; the driver appends the later parts
-    * to the first in partition order, skipping their byte-order marks
-    * (Java's `UTF-16` encoder starts every stream with one), and renames the
-    * result atomically onto the destination. Partition order is input
-    * order, so the bytes are those of one writer over all rows. No row
-    * reaches the driver; on failure no file of this call remains. Executors
-    * must see `dir` at the same path.
+    * Spark job over the internal rows of [[formatForWrite]]'s frame. Each
+    * partition's task frames its records itself (every value quoted with
+    * embedded quotes doubled, NULL as the bare sentinel, fields joined by
+    * the delimiter), encodes them (partition 0 also the header) in the
+    * dialect's encoding into its own part in a hidden staging directory in
+    * `dir`, and returns the part with its record count; the driver appends
+    * the later parts to the first in partition order, skipping their
+    * byte-order marks (Java's `UTF-16` encoder starts every stream with
+    * one), and renames the result atomically onto the destination.
+    * Partition order is input order, so the bytes are those of one writer
+    * over all rows. No row reaches the driver; on failure no file of this
+    * call remains. The job runs as one SQL execution of the frame, so an
+    * `Observation` on `df` completes. Executors must see `dir` at the same
+    * path.
     */
   def writeSingleFile(df: DataFrame, dir: String, table: String,
                       dialect: CsvDialect = CsvDialect(),
                       timestampSuffix: Option[String] = None,
-                      culture: String = ""): Path = {
+                      culture: String = ""): Path =
+    writeSingleFileCounted(df, dir, table, dialect, timestampSuffix, culture)._1
+
+  /** [[writeSingleFile]], also returning the number of records written
+    * (the header line not counted): the sum of the write tasks' counts. */
+  def writeSingleFileCounted(df: DataFrame, dir: String, table: String,
+                             dialect: CsvDialect = CsvDialect(),
+                             timestampSuffix: Option[String] = None,
+                             culture: String = ""): (Path, Long) = {
     val destDir = Paths.get(dir).toAbsolutePath
     Files.createDirectories(destDir) // reference auto-creates (:61-62)
     val dest = destDir.resolve(timestampSuffix.fold(s"$table.csv")(ts => s"$table[$ts].csv"))
     val stage = Files.createDirectory(destDir.resolve(s".$table-${UUID.randomUUID()}.stage"))
-    val (stageDir, encoding) = (stage.toString, dialect.encoding)
+    val stageDir = stage.toString
     val header = Option.when(dialect.hasHeader)(headerLine(df, dialect))
     try {
-      val parts = referenceRecords(df, dialect, culture).as(Encoders.STRING)
-        .mapPartitions { records =>
+      val qe = formatForWrite(df, culture).queryExecution
+      val width = df.schema.length
+      val parts = SQLExecution.withNewExecutionId(qe, Some("writeSingleFile")) {
+        qe.toRdd.mapPartitions { rows =>
           val ctx = TaskContext.get()
-          val lines = if (ctx.partitionId() == 0) header.iterator ++ records else records
-          if (!lines.hasNext) Iterator.empty
-          else Iterator.single(writeLines(
-            Paths.get(stageDir, s"part-${ctx.partitionId()}-${ctx.attemptNumber()}"),
-            lines, encoding).toString)
-        }(Encoders.STRING).collect().map(Paths.get(_))
+          val head = if (ctx.partitionId() == 0) header else None
+          if (head.isEmpty && !rows.hasNext) Iterator.empty
+          else {
+            val f = Paths.get(stageDir, s"part-${ctx.partitionId()}-${ctx.attemptNumber()}")
+            Iterator.single(f.toString -> writeRecords(f, head, rows, width, dialect))
+          }
+        }.collect()
+      }
+      val (files, counts) = parts.map { case (f, n) => (Paths.get(f), n) }.toSeq.unzip
       // no part: no task ran (an empty local relation plans as a
       // zero-partition scan), or there is neither a header nor a row
-      val file = parts.headOption.getOrElse(
-        writeLines(stage.resolve("driver"), header.iterator, encoding))
-      if (parts.length > 1) append(file, parts.tail, byteOrderMarkLength(encoding))
-      Files.move(file, dest, StandardCopyOption.ATOMIC_MOVE)
+      val file = files.headOption.getOrElse {
+        val f = stage.resolve("driver")
+        writeRecords(f, header, Iterator.empty, width, dialect)
+        f
+      }
+      if (files.length > 1) append(file, files.tail, byteOrderMarkLength(dialect.encoding))
+      (Files.move(file, dest, StandardCopyOption.ATOMIC_MOVE), counts.sum)
     } finally removeStage(stage)
   }
 
@@ -198,13 +204,32 @@ object CsvWrite {
     }
   }
 
-  /** Writes `lines`, each ended by `\n`, to the new file `f` in `encoding`;
-    * deletes `f` if anything fails, including the upstream iterator. */
-  private def writeLines(f: Path, lines: Iterator[String], encoding: String): Path =
+  /** Writes `header`, then one reference-format record per row of `width`
+    * string fields, each line ended by `\n`, to the new file `f` in the
+    * dialect's encoding; returns the number of records. Deletes `f` if
+    * anything fails, including the upstream iterator. */
+  private def writeRecords(f: Path, header: Option[String], rows: Iterator[InternalRow],
+                           width: Int, dialect: CsvDialect): Long =
     try {
       val out = new BufferedWriter(new OutputStreamWriter(
-        Files.newOutputStream(f, StandardOpenOption.CREATE_NEW), Charset.forName(encoding)))
-      try lines.foreach { l => out.write(l); out.write('\n') } finally out.close()
-      f
+        Files.newOutputStream(f, StandardOpenOption.CREATE_NEW), Charset.forName(dialect.encoding)))
+      try {
+        val (q, qq, sep, nul) = (dialect.quote, dialect.quote * 2, dialect.delimiter, dialect.nullSentinel)
+        header.foreach { h => out.write(h); out.write('\n') }
+        var n = 0L
+        while (rows.hasNext) {
+          val row = rows.next()
+          var i = 0
+          while (i < width) {
+            if (i > 0) out.write(sep)
+            if (row.isNullAt(i)) out.write(nul)
+            else { out.write(q); out.write(row.getUTF8String(i).toString.replace(q, qq)); out.write(q) }
+            i += 1
+          }
+          out.write('\n')
+          n += 1
+        }
+        n
+      } finally out.close()
     } catch { case t: Throwable => Files.deleteIfExists(f); throw t }
 }

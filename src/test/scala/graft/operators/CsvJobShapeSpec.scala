@@ -4,7 +4,9 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
 import org.scalatest.funsuite.AnyFunSuite
@@ -69,6 +71,38 @@ class CsvJobShapeSpec extends AnyFunSuite {
     assert(jobs.size == 1, s"Job.run ran ${jobs.size} jobs: $jobs")
     assert(jobs.head.size == 1, s"stages: ${jobs.head}")
     assert(jobs.head.head == spark.sparkContext.defaultParallelism, s"tasks: ${jobs.head}")
+  }
+
+  test("the single-file write runs one job over the formatted rows: no object round trip, no CollectMetrics") {
+    val file = ordersFile(40000)
+    val cfg = JobConfig(tempDir("shape-out"), sourceFile = Some(file))
+    val mapping = Mapping("orders", "orders_out", Seq(
+      ColumnMapping(Some("id"), "id"), ColumnMapping(Some("region"), "region")),
+      conditionals = Seq(Conditional("region", CondOp.NotEqualTo, "r3")))
+    val plans = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      var result: JobResult = null
+      val jobs = jobsDuring { result = Job.run(spark, cfg, Seq(mapping), sleep = _ => ()) }
+      assert(result.ok, result.errors)
+      assert(jobs == Seq(Seq(spark.sparkContext.defaultParallelism)), s"jobs and their stages' tasks: $jobs")
+      // the listener bus keeps order: once the sentinel's count is seen,
+      // every execution of the job has been reported
+      eventually(timeout(Span(30, Seconds)), interval(Span(50, Milliseconds))) {
+        assert(plans.toArray.exists(_.asInstanceOf[(String, String)]._1 == "count"))
+      }
+      val writes = plans.toArray.map(_.asInstanceOf[(String, String)]).filter(_._1 != "count")
+      assert(writes.length == 1, writes.map(_._1).mkString(", "))
+      val plan = writes.head._2
+      assert(plan.contains("FileScan csv"), plan)
+      for (node <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject", "CollectMetrics"))
+        assert(!plan.contains(node), s"$node in the write's plan:\n$plan")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("readTable returns a frame of the caller's session and writes none of its confs") {

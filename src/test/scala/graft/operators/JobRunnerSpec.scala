@@ -319,4 +319,86 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(e.getSuppressed.nonEmpty,
       "fallback failure must carry the primary write error as suppressed")
   }
+
+  /** Lines of a written file below its header. */
+  private def dataLines(f: Path): Long = Files.readAllLines(f).size - 1L
+
+  test("Job.run reads source files whose names hold glob characters, in UTF-8 and windows-1252") {
+    for (encoding <- Seq("UTF-8", "windows-1252")) withClue(s"$encoding: ") {
+      val src = tempDir("jobsrc"); val dest = tempDir("jobdst")
+      csvFile(src, "t[20260101-1200000000000].csv", "id;name\n1;æble\n2;øl\n", encoding)
+      csvFile(src, "u{1}.csv", "id\n7\n", encoding)
+      val res = Job.run(spark,
+        cfg(src, dest).copy(sourceDialect = CsvDialect(encoding = encoding)), Seq(
+          Mapping("t[20260101-1200000000000]", "t_out",
+            Seq(ColumnMapping(Some("id"), "id"), ColumnMapping(Some("name"), "name"))),
+          Mapping("u{1}", "u_out", Seq(ColumnMapping(Some("id"), "id")))),
+        sleep = noSleep)
+      assert(res.ok, res.errors)
+      assert(res.results.map(_.rowsWritten) == Seq(2L, 1L))
+      assert(Files.readAllLines(dest.resolve("t_out.csv")).toArray.toSeq ==
+        Seq("\"id\";\"name\"", "\"1\";\"æble\"", "\"2\";\"øl\""))
+      assert(Files.readAllLines(dest.resolve("u_out.csv")).toArray.toSeq == Seq("\"id\"", "\"7\""))
+    }
+  }
+
+  test("a job reads another job's autoTimestampSuffix output") {
+    val src = srcDir(); val first = tempDir("jobdst"); val second = tempDir("jobdst")
+    assert(Job.run(spark, cfg(src, first).copy(autoTimestampSuffix = true),
+      mappings.take(1), sleep = noSleep).ok)
+    val out = graft.sources.CsvCatalog.sourceFiles(first).head
+    assert(out.getFileName.toString.matches("""customers_out\[\d{8}-\d{13}\]\.csv"""), out)
+    val res = Job.run(spark, JobConfig(second, sourceFile = Some(out), stabilitySleepMs = 1),
+      Seq(Mapping(graft.sources.CsvCatalog.stem(out), "again",
+        Seq(ColumnMapping(Some("key"), "key"), ColumnMapping(Some("name"), "name")))),
+      sleep = noSleep)
+    assert(res.ok, res.errors)
+    assert(res.results.head.rowsWritten == 3L)
+    assert(Files.readAllLines(second.resolve("again.csv")) == Files.readAllLines(out))
+  }
+
+  /** `rows` data lines `"i";"r<i % 7>"` under an `id;region` header. */
+  private def numbered(dir: Path, name: String, rows: Int): Path =
+    csvFile(dir, name, (0 until rows).map(i => s"\"$i\";\"r${i % 7}\"\n").mkString("id;region\n", "", ""))
+
+  test("rowsWritten counts the data lines when conditionals empty some splits") {
+    val src = tempDir("jobsrc"); val dest = tempDir("jobdst")
+    val f = numbered(src, "orders.csv", 4000)
+    assert(graft.sources.CsvCatalog.readTable(spark, f, CsvDialect()).rdd.getNumPartitions >= 2)
+    def kept(dest: String, c: Conditional) =
+      Mapping("orders", dest, Seq(ColumnMapping(Some("id"), "id")), conditionals = Seq(c))
+    val res = Job.run(spark, cfg(src, dest), Seq(
+      kept("head_out", Conditional("id", CondOp.LessThan, "100")),      // first split only
+      kept("tail_out", Conditional("id", CondOp.GreaterThan, "3899")),  // last split only
+      kept("mid_out", Conditional("region", CondOp.EqualTo, "r3"))), sleep = noSleep)
+    assert(res.ok, res.errors)
+    assert(res.results.map(_.rowsWritten) == Seq(100L, 100L, 571L))
+    for (r <- res.results)
+      assert(r.rowsWritten == dataLines(dest.resolve(s"${r.destTable}.csv")), r)
+  }
+
+  test("rowsWritten is 0 for a header-only result") {
+    val src = tempDir("jobsrc"); val dest = tempDir("jobdst")
+    numbered(src, "orders.csv", 4000)
+    val res = Job.run(spark, cfg(src, dest), Seq(Mapping("orders", "none_out",
+      Seq(ColumnMapping(Some("id"), "id")),
+      conditionals = Seq(Conditional("region", CondOp.EqualTo, "nowhere")))), sleep = noSleep)
+    assert(res.ok, res.errors)
+    assert(res.results.map(_.rowsWritten) == Seq(0L))
+    assert(Files.readAllLines(dest.resolve("none_out.csv")).toArray.toSeq == Seq("\"id\""))
+  }
+
+  test("rowsWritten counts each mapping's data lines under maxParallelMappings = 2") {
+    val src = tempDir("jobsrc"); val dest = tempDir("jobdst")
+    numbered(src, "a.csv", 3000)
+    numbered(src, "b.csv", 1234)
+    val res = Job.run(spark, cfg(src, dest).copy(maxParallelMappings = 2), Seq(
+      Mapping("a", "a_out", Seq(ColumnMapping(Some("id"), "id")),
+        conditionals = Seq(Conditional("region", CondOp.NotEqualTo, "r0"))),
+      Mapping("b", "b_out", Seq(ColumnMapping(Some("region"), "region")))), sleep = noSleep)
+    assert(res.ok, res.errors)
+    assert(res.results.map(_.rowsWritten) == Seq(2571L, 1234L))
+    for (r <- res.results)
+      assert(r.rowsWritten == dataLines(dest.resolve(s"${r.destTable}.csv")), r)
+  }
 }

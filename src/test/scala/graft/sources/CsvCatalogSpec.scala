@@ -89,4 +89,48 @@ class CsvCatalogSpec extends AnyFunSuite {
     assert(back.columns.toSeq == Seq("id", "v"))
     assert(back.count() == 100)
   }
+
+  private val Bom = "\uFEFF"
+
+  test("a UTF-8 byte-order mark is not part of the first header name") {
+    val spark = TestSpark.spark
+    val dir = tempDir("cat")
+    val f = csvFile(dir, "t.csv", s"${Bom}id;name\n1;alpha\n2;beta\n")
+    assert(CsvCatalog.columnNames(f, d) == Seq("id", "name"))
+    val df = CsvCatalog.readTable(spark, f, d)
+    assert(df.select(CsvCatalog.column("id")).collect().map(_.getString(0)).toSeq == Seq("1", "2"))
+    // readDir probes its column names from the first part the same way
+    val parts = tempDir("cat").resolve("parts")
+    java.nio.file.Files.createDirectory(parts)
+    csvFile(parts, "part-0.csv", s"${Bom}id;name\n1;alpha\n")
+    assert(CsvCatalog.readDir(spark, parts, d).columns.toSeq == Seq("id", "name"))
+  }
+
+  test("a UTF-8 byte-order mark before a headerless file's first row is dropped") {
+    val spark = TestSpark.spark
+    val dir = tempDir("cat")
+    val noHeader = d.copy(hasHeader = false)
+    val f = csvFile(dir, "t.csv", s"${Bom}1;alpha\n2;beta\n")
+    assert(CsvCatalog.columnNames(f, noHeader) == Seq("Column 1", "Column 2"))
+    val rows = CsvCatalog.readTable(spark, f, noHeader).collect().map(r => (r.getString(0), r.getString(1)))
+    assert(rows.toSeq == Seq("1" -> "alpha", "2" -> "beta"))
+  }
+
+  test("readTable reads file names with glob characters, in UTF-8 and windows-1252") {
+    val spark = TestSpark.spark
+    for (name <- Seq("t[20260101-1200000000000].csv", "u{1}.csv");
+         encoding <- Seq("UTF-8", "windows-1252")) withClue(s"$name, $encoding: ") {
+      val f = csvFile(tempDir("cat"), name, "id;name\n1;æble\n2;øl\n", encoding)
+      val df = CsvCatalog.readTable(spark, f, d.copy(encoding = encoding))
+      assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+        Seq("1" -> "æble", "2" -> "øl"))
+    }
+  }
+
+  test("readTable rejects header names equal up to case, as a plain read does") {
+    val spark = TestSpark.spark
+    val f = csvFile(tempDir("cat"), "t.csv", "id;ID\n1;2\n")
+    val e = intercept[org.apache.spark.sql.AnalysisException](CsvCatalog.readTable(spark, f, d))
+    assert(e.getCondition == "COLUMN_ALREADY_EXISTS", e.getMessage)
+  }
 }

@@ -17,8 +17,8 @@ import graft.operators.{ColumnMapping, CondOp, Conditional, Mapping}
   * driver must give the bytes of one `coalesce(1)` task, and a file read as
   * one split per core must give the rows of one split — for every
   * encoding (one BOM in UTF-16), header on and off, both cultures, sources
-  * of zero, one and fewer rows than cores, and empty leading and middle
-  * partitions.
+  * of zero, one and fewer rows than cores, empty leading and middle
+  * partitions, and adversarial strings next to typed columns.
   */
 class ParallelWriteDiffSpec extends AnyFunSuite {
   import ParallelWriteDiffSpec._
@@ -65,7 +65,24 @@ class ParallelWriteDiffSpec extends AnyFunSuite {
     "1 row" -> (() => frame(Seq(1))),
     "1 row after two empty partitions" -> (() => frame(Seq(0, 0, 1))),
     "fewer rows than cores" -> (() => frame(Seq.fill(cores)(1).updated(0, 0))),
-    "empty middle partitions" -> (() => frame(Seq(3, 0, 0, 2, 0, 4))))
+    "empty middle partitions" -> (() => frame(Seq(3, 0, 0, 2, 0, 4))),
+    "adversarial strings and typed columns" -> (() => adversarial))
+
+  /** WriteKernelDiffSpec's adversarial strings plus the literal sentinel
+    * and delimiters, one per row, next to typed columns, in 5 partitions. */
+  private def adversarial: DataFrame = {
+    val strings = WriteKernelDiffSpec.strings ++
+      Seq("NULL", "null", "\"NULL\"", ";", ";;", "a;\"b\";c", " NULL ")
+    val rows = strings.zipWithIndex.map { case (v, i) =>
+      def orNull[T](x: T): Any = if (i % 9 == 4) null else x
+      Row(v, orNull(i), orNull(i * 1000003L - 7), orNull(specialDoubles(i % specialDoubles.size)),
+        orNull((i * 0.37f - 5).toFloat), orNull(new java.math.BigDecimal(s"${i - 150}.${i % 1000}")),
+        orNull(java.sql.Date.valueOf(java.time.LocalDate.of(1999 + i % 40, 1 + i % 12, 1 + i % 28))),
+        orNull(LocalDateTime.of(2024, 2, 29, i % 24, i % 60, (i * 7) % 60, (i % 1000) * 1000000)),
+        orNull(i % 2 == 0))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 5), adversarialSchema)
+  }
 
   for ((what, df) <- sources)
     test(s"$what: the parallel write equals the single-task write in every dialect") {
@@ -153,6 +170,14 @@ object ParallelWriteDiffSpec {
     if (i % 3 == 0) null else java.lang.Double.valueOf(i * 1.25 - 3),
     if (i % 2 == 0) null
     else LocalDateTime.of(2024, 1, 1 + i % 28, i % 24, i % 60, i % 60, (i % 1000) * 1000000))
+
+  val adversarialSchema: StructType = StructType(Seq(
+    StructField("c;\"s\"", StringType), StructField("i", IntegerType), StructField("l", LongType),
+    StructField("d", DoubleType), StructField("f", FloatType), StructField("m", DecimalType(12, 3)),
+    StructField("day", DateType), StructField("ts", TimestampNTZType), StructField("b", BooleanType)))
+
+  val specialDoubles: Seq[Double] = Seq(0.0, -0.0, 1e-7, 123456.789, -2.5e21, 1e300,
+    Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue)
 
   /** Class and Spark error condition of every cause in the chain. */
   def causes(t: Throwable): List[String] =

@@ -6,14 +6,16 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 import java.util.UUID
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{concat, concat_ws, lit, replace, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The single-file CSV path that [[CsvWrite.writeSingleFile]] and
   * [[CsvCatalog.readTable]] replaced, kept as the differential reference:
   * one plain file-source read (one split for a file under Spark's 4 MB open
   * cost) and one `coalesce(1)` task that streams the header and every
-  * record into the staged file. Test-only.
+  * record, framed by the engine ([[referenceRecords]]), into the staged
+  * file. Test-only.
   */
 object SingleTaskWriteReference {
 
@@ -25,6 +27,21 @@ object SingleTaskWriteReference {
       .schema(StructType(CsvCatalog.columnNames(file, dialect)
         .map(StructField(_, StringType, nullable = true))))
       .csv(file.toString)
+
+  /** The former `CsvWrite.referenceRecords`: one reference-format record
+    * per row, as a single string column — non-null values quoted (embedded
+    * quotes doubled), nulls as the bare sentinel, fields joined by the
+    * delimiter — assembled by the engine. */
+  def referenceRecords(df: DataFrame, dialect: CsvDialect, culture: String = ""): DataFrame = {
+    val q = dialect.quote
+    val formatted = CsvWrite.formatForWrite(df, culture)
+    val fields: Seq[Column] = formatted.schema.fieldNames.map { n =>
+      val c = CsvCatalog.column(n)
+      when(c.isNull, lit(dialect.nullSentinel))
+        .otherwise(concat(lit(q), replace(c, lit(q), lit(q + q)), lit(q)))
+    }
+    formatted.select(concat_ws(dialect.delimiter, fields: _*).as("value"))
+  }
 
   private def headerLine(df: DataFrame, dialect: CsvDialect): String = {
     val q = dialect.quote
@@ -43,7 +60,7 @@ object SingleTaskWriteReference {
     val (stageDir, prefix) = (destDir.toString, s".$table-${UUID.randomUUID()}-")
     val header = Option.when(dialect.hasHeader)(headerLine(df, dialect))
     try {
-      val staged = CsvWrite.referenceRecords(df, dialect, culture).coalesce(1).as(Encoders.STRING)
+      val staged = referenceRecords(df, dialect, culture).coalesce(1).as(Encoders.STRING)
         .mapPartitions { records =>
           val f = Paths.get(stageDir, s"$prefix${TaskContext.get().taskAttemptId()}.stage")
           Iterator.single(writeLines(f, header.iterator ++ records, dialect.encoding).toString)

@@ -20,22 +20,9 @@ import graft.TestSpark
 class WriteKernelDiffSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val alphabet: IndexedSeq[String] =
-    Seq("a", "Z", " ", "\r", "\n", "\r\n", "\"", "'", "$", "\\", ".", "*", "[", "]", "(", ")",
-      "|", "^", "+", "?", "{", "}", "\\E", "\\Q", "$1", "\u00E9", "\u20AC", "\u0000", "\u2028",
-      "\uFEFF", "\uD83D\uDE00", "\uD834\uDD1E", ";", "\t").toIndexedSeq
-
-  private val fixed: Seq[String] = Seq(null, "", "\r", "\n", "\r\n", "\n\r", "\r\r\n\n",
-    "\uD83D\uDE00", "a\r\uD83D\uDE00\nb", "$ \\ . * [ ( |", "\"\"", "''", "$$", "\\\\", "\\Q\\E",
-    (0 until 256).map(_.toChar).mkString)
-
-  /** `fixed` plus 300 seeded strings of 0-12 tokens from `alphabet`. */
-  private lazy val corpus = {
-    val rnd = new scala.util.Random(20261017L)
-    val random = Seq.fill(300)(Seq.fill(rnd.nextInt(13))(alphabet(rnd.nextInt(alphabet.size))).mkString)
-    spark.createDataFrame(spark.sparkContext.parallelize((fixed ++ random).map(Row(_)), 3),
+  private lazy val corpus =
+    spark.createDataFrame(spark.sparkContext.parallelize(WriteKernelDiffSpec.strings.map(Row(_)), 3),
       StructType(Seq(StructField("c", StringType))))
-  }
 
   /** Rows where a new kernel and its old formulation disagree. */
   private def mismatches(pairs: Seq[(String, Column, Column)]): Seq[String] = {
@@ -66,5 +53,23 @@ class WriteKernelDiffSpec extends AnyFunSuite {
       })
     }.toSeq
     assert(bad.isEmpty, bad.take(5))
+  }
+}
+
+object WriteKernelDiffSpec {
+  private val alphabet: IndexedSeq[String] =
+    Seq("a", "Z", " ", "\r", "\n", "\r\n", "\"", "'", "$", "\\", ".", "*", "[", "]", "(", ")",
+      "|", "^", "+", "?", "{", "}", "\\E", "\\Q", "$1", "\u00E9", "\u20AC", "\u0000", "\u2028",
+      "\uFEFF", "\uD83D\uDE00", "\uD834\uDD1E", ";", "\t").toIndexedSeq
+
+  private val fixed: Seq[String] = Seq(null, "", "\r", "\n", "\r\n", "\n\r", "\r\r\n\n",
+    "\uD83D\uDE00", "a\r\uD83D\uDE00\nb", "$ \\ . * [ ( |", "\"\"", "''", "$$", "\\\\", "\\Q\\E",
+    (0 until 256).map(_.toChar).mkString)
+
+  /** The adversarial corpus: `fixed` plus 300 seeded strings of 0-12 tokens
+    * from `alphabet`. */
+  lazy val strings: Seq[String] = {
+    val rnd = new scala.util.Random(20261017L)
+    fixed ++ Seq.fill(300)(Seq.fill(rnd.nextInt(13))(alphabet(rnd.nextInt(alphabet.size))).mkString)
   }
 }
