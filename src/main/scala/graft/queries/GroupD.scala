@@ -1080,12 +1080,12 @@ object GroupD {
     * (SemDeDup's k ∝ n regime) with a floor of 8 — so within-cluster
     * pairwise work in d39 stays LINEAR (n/64 clusters × 64² pairs = 64n).
     */
-  private[queries] def corpusKMeans(spark: SparkSession, sfDir: String)
+  private[graft] def corpusKMeans(spark: SparkSession, sfDir: String)
       : (DataFrame, graft.operators.KMeans.Model) = {
     val emb = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    // the sizing count is memoized with the model (review finding: a
-    // memo-hit serving pass must not pay a corpus scan just to derive k)
-    val n = LazyMemo.memoized(corpusNMemo, sfDir)(emb.count())
+    // the sizing count comes from the memoized parquet footer (a memo-hit
+    // serving pass must not pay a corpus scan just to derive k)
+    val n = Tables.rowCount(spark, sfDir, "embeddings")
     val k = math.max(8, math.min(4096, (n / 64).toInt))
     (emb, graft.operators.KMeans.fitMemoized(s"kmeans|$sfDir|$k", emb, k, iters = 3))
   }

@@ -6,39 +6,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.LazyMemo
 import graft.sources.{CsvCatalog, CsvDialect, CsvWrite}
 
 /** Shared helpers for the declared query inventory (SURVEY.md §2.3). */
 object Tables {
-  /** Per-JVM parquet schema memo (r22, the per-query-floor fix): a bare
+  /** Per-JVM parquet footer memo (r22, the per-query-floor fix): a bare
     * `spark.read.parquet(path)` re-infers the schema on EVERY call —
     * a footer read plus relation setup measured at ~0.08 s per call on
     * this box (OPTIMIZATION_r22.md), paid by every query invocation of every
     * bench pass, and a schema-merge Spark job even for one file.
     * Production reads resolve the schema from a catalog / metastore
     * instead of re-inferring per query; this memo is that catalog:
-    * METADATA only (a StructType per path — never rows), keyed by the
-    * full file path, populated from the file's footer read on the driver
-    * ([[GraftParquetFooter]], no Spark job; a directory of part files,
-    * as the specs write, keeps Spark's inference). The fixtures are
-    * immutable within a process. Inference depends on the reading session's
-    * legacy-nanos flag (INT64 nanosecond timestamps infer as LongType
-    * under it and are refused without it), so the key carries that flag
+    * METADATA only (a StructType and a row count per path — never rows),
+    * keyed by the full file path, populated from the file's footer read on
+    * the driver ([[GraftParquetFooter]], no Spark job; a directory of part
+    * files, as the specs write, keeps Spark's inference, and [[rowCount]]
+    * counts it once). The fixtures are immutable within a process. Inference
+    * depends on the reading session's legacy-nanos flag (INT64
+    * nanosecond timestamps infer as LongType under it and are refused
+    * without it), so the key carries that flag
     * too: a session is only ever served a schema inferred under its own
     * flag, and `.schema(s)` reads are byte-identical to inferred reads
     * (TablesSpec).
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), StructType]()
+  private val footerMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), (StructType, Option[Long])]()
+
+  private def footer(spark: SparkSession, path: String): (StructType, Option[Long]) = {
+    val key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean)
+    footerMemo.computeIfAbsent(key, _ =>
+      GraftParquetFooter.read(spark, path) match {
+        case Some((schema, rows)) => (schema, Some(rows))
+        case None => (spark.read.parquet(path).schema, None)
+      })
+  }
 
   /** Load one driver-generated parquet table (TESTDATA.md). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean)
-    val schema = schemaMemo.computeIfAbsent(key, _ =>
-      GraftParquetFooter.schema(spark, path).getOrElse(spark.read.parquet(path).schema))
-    spark.read.schema(schema).parquet(path)
+    spark.read.schema(footer(spark, path)._1).parquet(path)
   }
+
+  /** Row count of one table: its footer's for a single file, no job; for a
+    * directory of part files, one `count()` job per (JVM, path), memoized. */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val path = s"$sfDir/$name.parquet"
+    footer(spark, path)._2.getOrElse(
+      LazyMemo.memoized(dirCountMemo, path)(apply(spark, sfDir, name).count()))
+  }
+  private val dirCountMemo = new java.util.concurrent.ConcurrentHashMap[String, LazyMemo[Long]]()
 
   /** Scan-parallelism memo for [[fanned]]: planned scan partition count
     * per path, so the under-parallelization probe (one `df.rdd`

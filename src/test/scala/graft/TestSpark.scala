@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
+import org.scalatest.time.{Milliseconds, Seconds, Span}
 
 /** One shared local session for the whole forked test JVM (suites run
   * sequentially in sbt's single forked process). Mirrors Verify/Bench
@@ -33,5 +37,31 @@ object TestSpark {
     val d = Files.createTempDirectory(prefix)
     d.toFile.deleteOnExit()
     d
+  }
+
+  /** Descriptions of the Spark jobs `body` submits, tagged by a dedicated
+    * job group (ModelStoreSpec's discipline: immune to async jobs from
+    * other sources; a sentinel action flushes the listener bus).
+    */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        seen.add(js.properties.getProperty("spark.jobGroup.id", "") + "|" +
+          js.properties.getProperty("spark.job.description", ""))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("__jobs_body", "counted window")
+      try body finally sc.clearJobGroup()
+      sc.setJobDescription("__jobs_post")
+      spark.range(1).count()
+      sc.setJobDescription(null)
+      eventually(timeout(Span(30, Seconds)), interval(Span(50, Milliseconds))) {
+        assert(seen.toArray.exists(_.toString.endsWith("|__jobs_post")))
+      }
+      seen.toArray.map(_.toString).filter(_.startsWith("__jobs_body|")).toSeq
+    } finally sc.removeSparkListener(l)
   }
 }

@@ -1,52 +1,24 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Milliseconds, Seconds, Span}
 
 import graft.TestSpark
+import graft.TestSpark.jobsDuring
 import graft.queries.Tables
 
 /** Cold training cost in Spark jobs: a k-means fit and a PQ codebook
   * train each launch exactly ONE job (the training-row collect), whatever
   * k, the iteration count or the number of subspaces — Lloyd runs on the
-  * driver.
+  * driver. The corpus k-means sizes k from the parquet footer's row
+  * count, so it adds no count job; over a directory of part files it
+  * counts once per path.
   */
 class TrainingJobCountSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def vectors = Tables(spark, "/root/testdata/sf0.001", "embeddings")
     .select("vec_id", "embedding")
-
-  /** Descriptions of the Spark jobs `body` submits, tagged by a dedicated
-    * job group (ModelStoreSpec's discipline: immune to async jobs from
-    * other sources; a sentinel action flushes the listener bus).
-    */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add(js.properties.getProperty("spark.jobGroup.id", "") + "|" +
-          js.properties.getProperty("spark.job.description", ""))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("__training_body", "cold training window")
-      try body finally sc.clearJobGroup()
-      sc.setJobDescription("__training_post")
-      spark.range(1).count()
-      sc.setJobDescription(null)
-      eventually(timeout(Span(30, Seconds)), interval(Span(50, Milliseconds))) {
-        assert(seen.toArray.exists(_.toString.endsWith("|__training_post")))
-      }
-      seen.toArray.map(_.toString).filter(_.startsWith("__training_body|")).toSeq
-    } finally sc.removeSparkListener(l)
-  }
 
   for (k <- Seq(3, 31); iters <- Seq(1, 3))
     test(s"a cold KMeans.fit (k=$k, iters=$iters) launches exactly one Spark job") {
@@ -55,6 +27,24 @@ class TrainingJobCountSpec extends AnyFunSuite {
       val jobs = jobsDuring(KMeans.fit(v, k, iters))
       assert(jobs.size == 1, s"fit ran ${jobs.size} jobs: $jobs")
     }
+
+  test("a cold corpusKMeans (d27, d39) launches exactly one Spark job: n comes from the footer") {
+    // a fresh copy of the fixture: a path no memo has seen
+    val dir = TestSpark.tempDir("cold-kmeans")
+    java.nio.file.Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    val jobs = jobsDuring(graft.queries.GroupD.corpusKMeans(spark, dir.toString))
+    assert(jobs.size == 1, s"corpusKMeans ran ${jobs.size} jobs: $jobs")
+  }
+
+  test("corpusKMeans over a directory of part files counts it once: a second call runs no job") {
+    val dir = TestSpark.tempDir("dir-kmeans")
+    vectors.repartition(2).write.parquet(dir.resolve("embeddings.parquet").toString)
+    val first = jobsDuring(graft.queries.GroupD.corpusKMeans(spark, dir.toString))
+    assert(first.size > 1, s"the first call ran ${first.size} jobs: $first")
+    val second = jobsDuring(graft.queries.GroupD.corpusKMeans(spark, dir.toString))
+    assert(second.isEmpty, s"the second call ran ${second.size} jobs: $second")
+  }
 
   test("a cold PqIndex.train (m=4) launches exactly one Spark job") {
     val nv = vectors.select(col("vec_id"),

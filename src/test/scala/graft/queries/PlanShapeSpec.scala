@@ -160,7 +160,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("d69: the Gopher gate is shuffle-free up to the presentation sort") {
     // SCALE.md's d69 claim made structural: one Exchange total (the
-    // range partitioning feeding the ORDER BY doc_id), nothing else —
+    // one feeding the ORDER BY doc_id: single-partition at fixture scale,
+    // where PresentationSort replaces the range partitioning), nothing else —
     // no aggregation, no window, no join may sneak a shuffle into the
     // scan-bound gate
     val p = plan("d69_gopher_rules")
@@ -390,7 +391,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("b32/d15/d20: window passes AND any aggregate ride ONE data shuffle") {
-    // the only other Exchange is the final ORDER BY's range partitioning
+    // the only other Exchange feeds the final ORDER BY (single-partition
+    // at fixture scale, where PresentationSort replaces the range
+    // partitioning)
     for (q <- Seq("b32_sessionize", "d15_stratified_split", "d20_pack_sequences")) {
       val p = plan(q)
       val exchanges = p.linesIterator.count(l =>

@@ -69,6 +69,18 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("the footer row count equals count() for every fixture table; a directory of part files counts") {
+    val written = TestSpark.tempDir("written-count").toString
+    TestSpark.spark.range(10).selectExpr("id AS doc_id").repartition(2)
+      .write.parquet(s"$written/documents.parquet")
+    val s = session(true)
+    for (dir <- fixtureDirs :+ written;
+         t <- new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted) {
+      val path = s"$dir/$t"
+      assert(Tables.rowCount(s, dir, t.stripSuffix(".parquet")) == s.read.parquet(path).count(), path)
+    }
+  }
+
   test("events without nanosAsLong keeps the actionable TIMESTAMP(NANOS) message") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
