@@ -1,8 +1,11 @@
 package graft
 
-/** Plan inspector: prints `.explain("formatted")` for the named declared
-  * queries (or all of them) — the review loop for shuffle counts, exchange
-  * reuse, pushdown, and codegen coverage.
+/** Plan inspector: runs each named declared query (or all of them) once,
+  * then prints its `.explain("formatted")`. Running first makes the print
+  * the final adaptive plan (`isFinalPlan=true`), with the query stages,
+  * coalesced shuffle reads and join strategies AQE chose at run time — the
+  * review loop for shuffle counts, exchange reuse, pushdown, and codegen
+  * coverage.
   *
   * Usage: tools/run_main.sh graft.Explain <sfDir> [query ...]
   */
@@ -15,7 +18,9 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      df.collect()
+      df.explain("formatted")
     }
     spark.stop()
   }

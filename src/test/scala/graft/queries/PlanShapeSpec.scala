@@ -9,14 +9,17 @@ import graft.TestSpark
   * un-push a filter, de-broadcast a dim, or reintroduce a nested-loop
   * join. Asserts on `queryExecution.executedPlan.toString` (the planned
   * shape — AQE may still refine exchanges at runtime, but the properties
-  * below are decided at planning).
+  * below are decided at planning). The plans come from
+  * `SparkEntry.declared`, the query functions as written: at fixture scale
+  * `SparkEntry.queries` plans most queries in one partition with no
+  * exchange (`SmallQueryPlan`), which is not the shape these pins describe.
   */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    graft.SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    graft.SparkEntry.declared(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("driver contract: every oracle key names a declared query") {
     val queries = graft.SparkEntry.queries.keySet
@@ -104,7 +107,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     def pin(name: String, groupKeys: Int, semis: Int): Unit = {
-      val lp = graft.SparkEntry.queries(name)(spark, sf)
+      val lp = graft.SparkEntry.declared(name)(spark, sf)
         .queryExecution.optimizedPlan
       val preAggs = lp.collect {
         case a: Aggregate if a.groupingExpressions.size == groupKeys => a
@@ -160,8 +163,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("d69: the Gopher gate is shuffle-free up to the presentation sort") {
     // SCALE.md's d69 claim made structural: one Exchange total (the
-    // one feeding the ORDER BY doc_id: single-partition at fixture scale,
-    // where PresentationSort replaces the range partitioning), nothing else —
+    // range partitioning feeding the ORDER BY doc_id), nothing else —
     // no aggregation, no window, no join may sneak a shuffle into the
     // scan-bound gate
     val p = plan("d69_gopher_rules")
@@ -204,7 +206,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the SCALE.md d60 claim made structural: the join that attaches the
     // corpus side to candidates must ship the M-int `codes` array — the
     // float `nvec` may only appear in the C-bounded rerank joins
-    val lp = graft.SparkEntry.queries("d60_ann_ivfpq")(spark, sf)
+    val lp = graft.SparkEntry.declared("d60_ann_ivfpq")(spark, sf)
       .queryExecution.optimizedPlan
     val joins = lp.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
@@ -391,9 +393,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("b32/d15/d20: window passes AND any aggregate ride ONE data shuffle") {
-    // the only other Exchange feeds the final ORDER BY (single-partition
-    // at fixture scale, where PresentationSort replaces the range
-    // partitioning)
+    // the only other Exchange is the final ORDER BY's range partitioning
     for (q <- Seq("b32_sessionize", "d15_stratified_split", "d20_pack_sequences")) {
       val p = plan(q)
       val exchanges = p.linesIterator.count(l =>
@@ -410,7 +410,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // query stages (the initial plan shows none), so execute first and
     // inspect the final adaptive plan; a plan change that ever splits
     // the stage subtrees turns a silent 2× recompute into a failure here
-    val df = graft.SparkEntry.queries("d56_pipeline_funnel")(spark, sf)
+    val df = graft.SparkEntry.declared("d56_pipeline_funnel")(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     val reused = p.linesIterator.count(l =>
@@ -428,7 +428,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.exchange.reuse") == "true")
     for (q <- Seq("d24_fuzzy_join", "d57_fuzzy_join2")) {
-      val df = graft.SparkEntry.queries(q)(spark, sf)
+      val df = graft.SparkEntry.declared(q)(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       val reused = p.linesIterator.count(l =>
@@ -485,7 +485,7 @@ class PlanShapeSpec extends AnyFunSuite {
         "c13_url_normalize" -> Seq(NormalizeName, DomainName),
         "d92_url_dedup" -> Seq(NormalizeName),
         "d95_frontier_discovery" -> Seq(NormalizeName, DomainName))) {
-      val p = graft.SparkEntry.queries(q)(spark, sf)
+      val p = graft.SparkEntry.declared(q)(spark, sf)
         .queryExecution.optimizedPlan.toString
       kernels.foreach(k => assert(p.contains(s"$k("), s"$q lost $k:\n$p"))
       assert(!p.contains(GroupC.UrlHostportP) && !p.contains(GroupC.UrlTrackingP),
@@ -500,7 +500,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import graft.functions.UrlCanon.NormalizeName
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    val lp = graft.SparkEntry.queries("d95_frontier_discovery")(spark, sf)
+    val lp = graft.SparkEntry.declared("d95_frontier_discovery")(spark, sf)
       .queryExecution.optimizedPlan
     val anti = lp.collect { case j: Join if j.joinType == LeftAnti => j }
     assert(anti.size == 1, s"expected the one frontier anti join:\n$lp")
@@ -518,7 +518,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.catalyst.plans.logical.Join
     for (q <- Seq("d95_frontier_discovery", "d97_fetch_plan")) {
-      val lp = graft.SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val lp = graft.SparkEntry.declared(q)(spark, sf).queryExecution.optimizedPlan
       val anti = lp.collect { case j: Join if j.joinType == LeftAnti => j }
       assert(anti.nonEmpty, s"$q: no frontier anti join:\n$lp")
       for (j <- anti) {
@@ -535,7 +535,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // difference between parsing billions of identical texts (docs) and
     // millions of distinct ones (hosts) — with decisions broadcast back.
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
-    val qe = graft.SparkEntry.queries("d97_fetch_plan")(spark, sf)
+    val qe = graft.SparkEntry.declared("d97_fetch_plan")(spark, sf)
       .queryExecution
     val parseNodes = qe.optimizedPlan.collect { case p: Project
       if p.projectList.exists(_.toString.contains("Disallow")) => p }
@@ -566,7 +566,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // groupBy frame, never the doc frame — at 100 TB a per-doc sitemap
     // construct would re-render the same XML docs/host times
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
-    val qe = graft.SparkEntry.queries("c17_sitemap_discover")(spark, sf)
+    val qe = graft.SparkEntry.declared("c17_sitemap_discover")(spark, sf)
       .queryExecution
     // the construct may live in a Project ABOVE the per-domain groupBy
     // or collapse INTO the Aggregate's own expressions (optimizer-
@@ -598,7 +598,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // both gopher-join sides re-run construct+markup — measured 10.1 vs
     // 7.9 s at sf0.1) and the schedule must keep d97's map-side cap and
     // broadcast-back shapes
-    val pp = graft.SparkEntry.queries("d100_gated_frontier_plan")(spark, sf)
+    val pp = graft.SparkEntry.declared("d100_gated_frontier_plan")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(pp.contains("ExistingRDD"),
       "the cleaned corpus must sit behind the lazy-checkpoint barrier " +

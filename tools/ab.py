@@ -17,7 +17,10 @@ better direction taken from ``BENCHMARK.json``), for each end-to-end metric a
 verdict (``gain``: the change won at least 9 in 10 pairs and the median gap
 exceeds the base's interquartile range; ``regressed``: worse than the
 metric's ``BENCHMARK.json`` bound; ``flat`` otherwise) and the ratio
-change/base of every pair. With ``--ops`` it also reports every operation on
+change/base of every pair. For each end-to-end metric it also gives the
+median change/base ratio of the pairs the base ran first and of those the
+change ran first, so an effect of the run order shows in the data (the
+verdict pools both). With ``--ops`` it also reports every operation on
 its own: per run, the median wall time of the operation over the timed passes
 (from perfbench's ``p<pass>/<op> <wall>s`` stderr lines, the warm-up passes
 named in perfbench/README.md skipped), then the same paired summary over the
@@ -154,7 +157,8 @@ def main():
             got = {k: round(v["value"], 4) for k, v in r["metrics"].items()} if r else "failed"
             print(f"ab: seed {seed} {side}: {got}", file=sys.stderr)
     higher, bounds = metric_specs()
-    pairs = [(b, c) for b, c in zip(runs["base"], runs["change"]) if b and c]
+    kept = [(seed, b, c) for seed, b, c in zip(seeds, runs["base"], runs["change"]) if b and c]
+    pairs = [(b, c) for _, b, c in kept]
     names = sorted({k for b, c in pairs for k in b["metrics"]})
     print("metric: median [q1 q3] base -> change, median ratio, pairs the change lost, "
           "verdict (end-to-end metrics), per-pair change/base")
@@ -170,6 +174,17 @@ def main():
         print(f"{name}: {spread([b for b, _ in vals])} -> {spread([c for _, c in vals])}, "
               f"{mc / mb if mb else float('nan'):.3f}, lost {slower}/{len(vals)}, {judged}"
               + " ".join(f"{c / b:.3f}" if b else "nan" for b, c in vals))
+    print("end-to-end metric by run order: median change/base ratio (pairs) with the base "
+          "run first (odd seeds), with the change run first (even seeds)")
+    for name in sorted(bounds):
+        line = []
+        for label, first in (("base first", 1), ("change first", 0)):
+            ratios = [c["metrics"][name]["value"] / b["metrics"][name]["value"] for seed, b, c in kept
+                      if seed % 2 == first and name in b["metrics"] and name in c["metrics"]
+                      and b["metrics"][name]["value"]]
+            line.append(f"{label} {statistics.median(ratios):.3f} ({len(ratios)})" if ratios
+                        else f"{label} - (0)")
+        print(f"{name}: " + ", ".join(line))
     if a.ops:
         print("operation: median [q1 q3] of per-run timed-pass medians (s) base -> change, "
               "median ratio, pairs the change lost, per-pair change/base")
