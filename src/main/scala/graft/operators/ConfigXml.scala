@@ -142,10 +142,9 @@ object ConfigXml {
       .parse(path.toFile)
     val root = doc.getDocumentElement
 
-    def one(tag: String): Element =
-      root.getElementsByTagName(tag).item(0).asInstanceOf[Element]
-    def attr(e: Element, name: String): Option[String] =
-      if (e.hasAttribute(name)) Some(e.getAttribute(name)) else None
+    def one(tag: String): Element = required(
+      Option(root.getElementsByTagName(tag).item(0)).map(_.asInstanceOf[Element]),
+      s"element <$tag>")
 
     val src = one("source")
     val opts = one("options")
@@ -153,26 +152,26 @@ object ConfigXml {
       .map(_.asInstanceOf[Element]).toSeq.flatMap { sch =>
         elems(sch, "table").map { te =>
           TableSchemaOverride(
-            table = te.getAttribute("name"),
+            table = need(te, "name"),
             columns = elems(te, "column").map { ce =>
-              ColumnOverride(ce.getAttribute("name"),
+              ColumnOverride(need(ce, "name"),
                 attr(ce, "castTo").map(DataType.fromDDL))
             })
         }
       }
     val cfg = JobConfig(
-      destFolder = Paths.get(one("destination").getAttribute("folder")),
+      destFolder = Paths.get(need(one("destination"), "folder")),
       sourceFile = attr(src, "file").map(Paths.get(_)),
       sourceFolder = attr(src, "folder").map(Paths.get(_)),
       sourceDialect = dialectOf(one("sourceDialect")),
       destDialect = dialectOf(one("destDialect")),
-      deleteSourceFiles = opts.getAttribute("deleteSourceFiles").toBoolean,
-      sourceStabilityCheck = opts.getAttribute("sourceStabilityCheck").toBoolean,
-      stabilitySleepMs = opts.getAttribute("stabilitySleepMs").toLong,
+      deleteSourceFiles = need(opts, "deleteSourceFiles").toBoolean,
+      sourceStabilityCheck = need(opts, "sourceStabilityCheck").toBoolean,
+      stabilitySleepMs = need(opts, "stabilitySleepMs").toLong,
       timestampSuffix = attr(opts, "timestampSuffix"),
       autoTimestampSuffix =
         attr(opts, "autoTimestampSuffix").exists(_.toBoolean),
-      singleFileOutput = opts.getAttribute("singleFileOutput").toBoolean,
+      singleFileOutput = need(opts, "singleFileOutput").toBoolean,
       schemaOverrides = schemaOverrides,
       culture = attr(opts, "culture").getOrElse(""),
       maxParallelMappings =
@@ -181,31 +180,44 @@ object ConfigXml {
 
     val mappings = elems(one("mappings"), "mapping").map { me =>
       Mapping(
-        sourceTable = me.getAttribute("sourceTable"),
-        destTable = me.getAttribute("destTable"),
+        sourceTable = need(me, "sourceTable"),
+        destTable = need(me, "destTable"),
         columns = elems(me, "column").map { c =>
           ColumnMapping(
             source = attr(c, "source"),
-            dest = c.getAttribute("dest"),
-            active = c.getAttribute("active").toBoolean,
+            dest = need(c, "dest"),
+            active = need(c, "active").toBoolean,
             constant = attr(c, "constant"),
             castTo = attr(c, "castTo").map(DataType.fromDDL),
-            decimalMode = decimalOf(c.getAttribute("decimalMode")),
+            decimalMode = decimalOf(need(c, "decimalMode")),
             timestampFormat = attr(c, "timestampFormat"),
           )
         },
         conditionals = elems(me, "conditional").map { c =>
           Conditional(
-            column = c.getAttribute("column"),
-            op = opOf(c.getAttribute("op")),
+            column = need(c, "column"),
+            op = opOf(need(c, "op")),
             values = elems(c, "value").map(_.getTextContent),
           )
         },
-        active = me.getAttribute("active").toBoolean,
+        active = need(me, "active").toBoolean,
       )
     }
     (cfg, mappings)
   }
+
+  private def attr(e: Element, name: String): Option[String] =
+    if (e.hasAttribute(name)) Some(e.getAttribute(name)) else None
+
+  /** A required attribute, named in the error when it is absent. */
+  private def need(e: Element, name: String): String =
+    required(attr(e, name), s"attribute $name on <${e.getTagName}>")
+
+  /** Every required piece goes through here, so a config that lacks one
+    * fails naming it rather than as a parse error on an empty string.
+    */
+  private def required[A](found: Option[A], what: => String): A =
+    found.getOrElse(throw new IllegalArgumentException(s"job config has no $what"))
 
   private def elems(parent: Element, tag: String): Seq[Element] = {
     val nl = parent.getElementsByTagName(tag)
@@ -214,16 +226,16 @@ object ConfigXml {
   }
 
   private def dialectOf(e: Element): CsvDialect = CsvDialect(
-    delimiter = e.getAttribute("delimiter"),
-    quote = e.getAttribute("quote"),
-    hasHeader = e.getAttribute("hasHeader").toBoolean,
-    nullSentinel = e.getAttribute("nullSentinel"),
-    encoding = e.getAttribute("encoding"),
-    malformed = e.getAttribute("malformed") match {
+    delimiter = need(e, "delimiter"),
+    quote = need(e, "quote"),
+    hasHeader = need(e, "hasHeader").toBoolean,
+    nullSentinel = need(e, "nullSentinel"),
+    encoding = need(e, "encoding"),
+    malformed = need(e, "malformed") match {
       case "drop" => MalformedMode.Drop
       case _      => MalformedMode.Fail
     },
-    decimalMode = decimalOf(e.getAttribute("decimalMode")),
+    decimalMode = decimalOf(need(e, "decimalMode")),
   )
 
   private def decimalOf(s: String): DecimalMode = s match {

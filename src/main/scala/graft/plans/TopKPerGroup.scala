@@ -42,7 +42,6 @@
   * the row-at-a-time pull loop, /root/reference/src/CSVProvider.cs:563) —
   * this operator is part of the beyond-reference analytics surface, built
   * on the documented extension points (`SparkStrategy`,
-  * `SparkSessionExtensions.injectPlannerStrategy`,
   * `experimental.extraStrategies`).
   */
 package org.apache.spark.sql.graft
@@ -50,15 +49,14 @@ package org.apache.spark.sql.graft
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.internal.config
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Descending, EqualTo, Expression, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, RowNumber, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode, UnsafeKVExternalSorter}
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.util.BoundedPriorityQueue
 
 /** Logical marker: keep the first `k` rows of each group under `orders`.
@@ -258,63 +256,6 @@ private[graft] final class TopKPartitionIterator(
   }
 }
 
-/** Optimizer rewrite: the canonical DataFrame top-k idiom
-  *
-  *   `withColumn("rn", row_number().over(w)).filter(rn <= k).drop("rn")`
-  *
-  * optimizes into [[TopKPerGroupNode]] — users keep writing the idiom and
-  * get the heap plan for free. Fires ONLY when the rewrite is provably
-  * transparent: the window computes exactly one expression (the
-  * row_number), the filter is a plain rank bound, the rank column is NOT
-  * in the output (a kept rank needs the window), the partition spec is
-  * non-empty (a global top-k is Spark's TakeOrderedAndProject territory),
-  * and the projection reads only the window child's columns. Everything
-  * else keeps its window plan — the rule is an optimization, never a
-  * semantics change. Opt-in via [[TopKPerGroup.registerRewrite]] or the
-  * builder-time [[GraftSparkExtensions]]; deliberately NOT bundled into
-  * [[TopKPerGroup.register]] so declared queries' plans don't depend on
-  * which query ran first in a shared session.
-  */
-object TopKWindowRewrite extends Rule[LogicalPlan] {
-  /** The k of a `rank <= k`-shaped predicate on `rn`, if that is what
-    * `cond` is.
-    */
-  private def rankBound(cond: Expression, rn: Attribute): Option[Int] = cond match {
-    case LessThanOrEqual(a: Attribute, Literal(k: Int, IntegerType))
-      if a.exprId == rn.exprId => Some(k)
-    // k > MinValue: `rn < Int.MinValue` must stay an (always-false)
-    // filter, not wrap to top-Int.MaxValue
-    case LessThan(a: Attribute, Literal(k: Int, IntegerType))
-      if a.exprId == rn.exprId && k > Int.MinValue => Some(k - 1)
-    case GreaterThanOrEqual(Literal(k: Int, IntegerType), a: Attribute)
-      if a.exprId == rn.exprId => Some(k)
-    // rn = 1 <=> rn <= 1 (row_number is 1-based and unique per group)
-    case EqualTo(a: Attribute, Literal(1, IntegerType))
-      if a.exprId == rn.exprId => Some(1)
-    case EqualTo(Literal(1, IntegerType), a: Attribute)
-      if a.exprId == rn.exprId => Some(1)
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // the heap plan's win region is small k (O(log k) inserts, k rows per
-    // group buffered); past this ceiling keep the window-sort plan, whose
-    // sort machinery is the better fit as k approaches the group size
-    val maxK = conf.getConfString(TopKPerGroup.RewriteMaxKKey,
-      TopKPerGroup.RewriteMaxKDefault.toString).toInt
-    plan.transformUp {
-      case Project(projectList, Filter(cond,
-          Window(Seq(alias @ Alias(WindowExpression(_: RowNumber, _), _)),
-            partitionSpec, orderSpec, child, _)))
-        if partitionSpec.nonEmpty && orderSpec.nonEmpty &&
-          rankBound(cond, alias.toAttribute).exists(b => b > 0 && b <= maxK) &&
-          projectList.forall(_.references.subsetOf(child.outputSet)) =>
-        Project(projectList, TopKPerGroupNode(partitionSpec, orderSpec,
-          rankBound(cond, alias.toAttribute).get, child))
-    }
-  }
-}
-
 /** User-facing construction + registration. */
 object TopKPerGroup {
   /** Per-task buffered-row budget before the exec leaves pure hash-of-
@@ -322,13 +263,6 @@ object TopKPerGroup {
     */
   val MaxBufferedRowsKey = "spark.graft.topk.maxBufferedRows"
   val MaxBufferedRowsDefault: Long = 1L << 20
-
-  /** Largest k [[TopKWindowRewrite]] converts — larger bounds keep the
-    * window-sort plan (review finding: an unbounded rewrite turned a
-    * spill-tested plan into a heap plan for any k a filter names).
-    */
-  val RewriteMaxKKey = "spark.graft.topk.rewriteMaxK"
-  val RewriteMaxKDefault: Int = 65536
 
   /** Logical-node constructor: resolves the named columns against `df`'s
     * analyzed output and wraps it in [[TopKPerGroupNode]]. `orderBy` is
@@ -365,49 +299,10 @@ object TopKPerGroup {
   }
 
   /** Same-session registration via the experimental strategy hook. */
-  def register(spark: SparkSession): Unit = {
+  private[graft] def register(spark: SparkSession): Unit = {
     val strategies = spark.experimental.extraStrategies
     if (!strategies.contains(TopKPerGroupStrategy)) {
       spark.experimental.extraStrategies = TopKPerGroupStrategy +: strategies
     }
   }
-
-  /** Opt-in window→heap rewrite (see [[TopKWindowRewrite]]); implies
-    * [[register]] — a rewritten node needs the strategy to plan.
-    */
-  def registerRewrite(spark: SparkSession): Unit = {
-    register(spark)
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(TopKWindowRewrite)) {
-      spark.experimental.extraOptimizations = TopKWindowRewrite +: opts
-    }
-  }
-
-  /** Undo [[registerRewrite]] — session-shared test harnesses restore the
-    * optimizer so other suites' plan pins stay deterministic.
-    */
-  def unregisterRewrite(spark: SparkSession): Unit = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopKWindowRewrite)
-  }
-}
-
-/** Builder-time injection for cluster deployments:
-  * `--conf spark.sql.extensions=org.apache.spark.sql.graft.GraftSparkExtensions`.
-  */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => TopKWindowRewrite)
-  }
-}
-
-object GraftSparkExtensions {
-  /** Test seam: the strategies an extensions instance would contribute
-    * (`buildPlannerStrategies` is `private[sql]`, so specs outside this
-    * package can't call it directly).
-    */
-  def plannedStrategies(ext: SparkSessionExtensions,
-                        spark: SparkSession): Seq[SparkStrategy] =
-    ext.buildPlannerStrategies(spark)
 }

@@ -861,12 +861,11 @@ object GroupB {
     * with O(n log k) bounded heaps, and the exchange carries at most k
     * rows per (group, upstream-partition) by construction — skew-proof
     * map-side limiting, the same contract as partial aggregation.
-    * TopKPlanSpec pins result-equality vs b10's window plan, the
+    * TopKPerGroupSpec pins result-equality vs b10's window plan, the
     * partial/final node pair around one exchange, and the absence of
     * Sort/Window below the operator.
     */
   def b37TopkNative(spark: SparkSession, sfDir: String): DataFrame = {
-    org.apache.spark.sql.graft.TopKPerGroup.register(spark)
     val orders = Tables(spark, sfDir, "orders")
       .select("o_custkey", "o_orderkey", "o_totalprice")
     org.apache.spark.sql.graft.TopKPerGroup(orders, Seq("o_custkey"),

@@ -1089,6 +1089,23 @@ object GroupD {
     val k = math.max(8, math.min(4096, (n / 64).toInt))
     (emb, graft.operators.KMeans.fitMemoized(s"kmeans|$sfDir|$k", emb, k, iters = 3))
   }
+
+  /** The drift family's inputs (d51, d53, d54): the embeddings, their
+    * reference (`vec_id mod 10 < 8`) and delta splits, and the standing
+    * k-means model trained on the reference only, memoized per corpus —
+    * the delta must not leak into the model it is judged against. k
+    * follows [[corpusKMeans]]'s sizing over the reference's memoized count.
+    */
+  private def driftModel(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame, DataFrame, graft.operators.KMeans.Model) = {
+    val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
+    val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
+    val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
+    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
+    val k = math.max(8, math.min(4096, (n / 64).toInt))
+    (e, ref, delta,
+      graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3))
+  }
   private val corpusNMemo = new ConcurrentHashMap[String, LazyMemo[Long]]()
 
   def d27KMeans(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2778,12 +2795,7 @@ object GroupD {
     * aggregates is k-sized report arithmetic.
     */
   def d51EmbeddingDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
-    val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
-    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
-    val k = math.max(8, math.min(4096, (n / 64).toInt))
-    val model = graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3)
+    val (_, ref, delta, model) = driftModel(spark, sfDir)
     embeddingDriftOf(ref, delta, model.centroids)
   }
 
@@ -2831,12 +2843,7 @@ object GroupD {
     * split loop touches only flagged members (persisted once).
     */
   def d53IvfMaintain(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
-    val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
-    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
-    val k = math.max(8, math.min(4096, (n / 64).toInt))
-    val model = graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3)
+    val (_, ref, delta, model) = driftModel(spark, sfDir)
     maintainOf(spark, ref, delta, model.centroids)
   }
 
@@ -2898,13 +2905,7 @@ object GroupD {
     * report is one k-cell aggregate. Nothing here retrains.
     */
   def d54MaintainedServe(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val ref = e.filter(pmod(col("vec_id"), lit(10)) < 8)
-    val delta = e.filter(pmod(col("vec_id"), lit(10)) >= 8)
-    val n = LazyMemo.memoized(corpusNMemo, s"drift|$sfDir")(ref.count())
-    val k = math.max(8, math.min(4096, (n / 64).toInt))
-    val standing =
-      graft.operators.KMeans.fitMemoized(s"drift|$sfDir|$k", ref, k, iters = 3)
+    val (e, ref, delta, standing) = driftModel(spark, sfDir)
     val (dir, children) = LazyMemo.memoized(maintainedMemo, s"maint|$sfDir") {
       val report = embeddingDriftOf(ref, delta, standing.centroids).collect()
       val res = graft.operators.CellMaintenance.splitCells(

@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Nor do they touch the session's function registry: every native
   * expression is a typed Column (`graft.functions.GraftFunctions`), so a
   * query registers nothing and resolves no `graft_` name by lookup.
+  * Their own session keys are pinned as a set, so a new `spark.graft.*`
+  * knob comes with an edit here.
   */
 class EngineKnobsSpec extends AnyFunSuite {
   private val enginePackages = Seq("operators", "queries", "functions",
@@ -41,6 +43,13 @@ class EngineKnobsSpec extends AnyFunSuite {
       if read.findAllMatchIn(allowed.foldLeft(code)(_.replace(_, ""))).nonEmpty
     } yield s"$file:$no: $code"
     assert(hits.isEmpty, hits.mkString("engine code reads env/props:\n", "\n", ""))
+  }
+
+  test("the engine's own session keys are exactly spark.graft.topk.maxBufferedRows") {
+    // every string literal that starts with the engine's key prefix
+    val key = """(?<=")spark\.graft\.[^"]*(?=")""".r
+    val keys = engineCode.flatMap { case (_, _, code) => key.findAllIn(code) }.toSet
+    assert(keys == Set("spark.graft.topk.maxBufferedRows"), keys.mkString(", "))
   }
 
   test("no engine source file registers a function or calls one by name") {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.{DoubleType, LongType, TimestampType}
@@ -80,5 +80,33 @@ class ConfigXmlSpec extends AnyFunSuite {
     val (back, ms) = ConfigXml.load(f)
     assert(back == simple)
     assert(ms.isEmpty)
+  }
+
+  /** Saves `cfg`, applies `edit` to the written text, loads it back and
+    * returns the load's error message.
+    */
+  private def loadError(edit: String => String): String = {
+    val f = tempDir("cfg").resolve("broken.xml")
+    ConfigXml.save(cfg, mappings, f)
+    val saved = Files.readString(f)
+    val broken = edit(saved)
+    assert(broken != saved, "the edit must remove something")
+    Files.writeString(f, broken)
+    intercept[IllegalArgumentException](ConfigXml.load(f)).getMessage
+  }
+
+  test("a missing singleFileOutput attribute names the attribute and its element") {
+    val msg = loadError(_.replaceFirst(""" singleFileOutput="[^"]*"""", ""))
+    assert(msg.contains("singleFileOutput") && msg.contains("<options>"), msg)
+  }
+
+  test("a missing stabilitySleepMs attribute names the attribute and its element") {
+    val msg = loadError(_.replaceFirst(""" stabilitySleepMs="[^"]*"""", ""))
+    assert(msg.contains("stabilitySleepMs") && msg.contains("<options>"), msg)
+  }
+
+  test("a missing options element names the element") {
+    val msg = loadError(_.replaceFirst("""(?s)<options[^>]*/>""", ""))
+    assert(msg.contains("<options>"), msg)
   }
 }

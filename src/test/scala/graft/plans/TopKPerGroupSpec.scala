@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{GraftSparkExtensions, TopKPerGroup, TopKPerGroupStrategy}
+import org.apache.spark.sql.graft.TopKPerGroup
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,10 +10,10 @@ import graft.queries.Tables
 
 /** The custom top-k-per-group operator (logical node + strategy +
   * partial/final heap execs): result-transparency against the window-rank
-  * formulation, the two-phase physical shape, and registration paths.
+  * formulation, the two-phase physical shape and the spill fallback.
   */
 class TopKPerGroupSpec extends AnyFunSuite {
-  private lazy val spark = { val s = TestSpark.spark; TopKPerGroup.register(s); s }
+  private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def native() = {
@@ -82,7 +82,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
     spark.conf.set(TopKPerGroup.MaxBufferedRowsKey, "4")
     try {
       val got = native()
-      val win = windowTopK(dropRank = true)
+      val win = windowTopK()
       assert(got.exceptAll(win).isEmpty && win.exceptAll(got).isEmpty,
         "spill-path result must match the window plan")
       assert(got.count() == win.count())
@@ -98,60 +98,12 @@ class TopKPerGroupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ambiguous"))
   }
 
-  test("builder-time extension injects the strategy") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftSparkExtensions().apply(ext)
-    assert(GraftSparkExtensions.plannedStrategies(ext, spark)
-      .contains(TopKPerGroupStrategy))
-  }
-
-  private def windowTopK(dropRank: Boolean) = {
+  private def windowTopK() = {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val ranked = Tables(spark, sf, "orders")
+    Tables(spark, sf, "orders")
       .select("o_custkey", "o_orderkey", "o_totalprice")
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-    if (dropRank) ranked.drop("rn") else ranked
-  }
-
-  test("opt-in rewrite turns the window-rank-filter idiom into the heap plan") {
-    TopKPerGroup.registerRewrite(spark)
-    try {
-      val rewritten = windowTopK(dropRank = true)
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert("TopKPerGroup \\[".r.findAllIn(plan).size == 2,
-        s"drop-rank idiom should heap-plan:\n$plan")
-      // transparent: same rows as the explicit operator
-      val explicit = native()
-      assert(rewritten.exceptAll(explicit).isEmpty &&
-        explicit.exceptAll(rewritten).isEmpty)
-      // a KEPT rank column needs the window — must NOT rewrite
-      val kept = windowTopK(dropRank = false)
-      assert(!kept.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        "rank in output must keep the window plan")
-    } finally TopKPerGroup.unregisterRewrite(spark)
-    // restored: the idiom window-plans again after unregister
-    assert(!windowTopK(dropRank = true)
-      .queryExecution.executedPlan.toString.contains("TopKPerGroup"))
-  }
-
-  test("rewrite skips k beyond the configured ceiling (window plan kept)") {
-    def bigK = {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables(spark, sf, "orders")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 1000000).drop("rn")
-    }
-    TopKPerGroup.registerRewrite(spark)
-    try {
-      assert(!bigK.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        "k=1e6 is past the default ceiling — the spill-tested window plan must stay")
-      spark.conf.set(TopKPerGroup.RewriteMaxKKey, "2000000")
-      try assert(bigK.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        "an explicitly raised ceiling re-enables the rewrite")
-      finally spark.conf.unset(TopKPerGroup.RewriteMaxKKey)
-    } finally TopKPerGroup.unregisterRewrite(spark)
+      .drop("rn")
   }
 }
